@@ -62,9 +62,9 @@ def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     The sandbox table is ONE parquet file -> a single scan task, which would
     run the entire pre-shuffle pipeline (shingle explode, md5 banks, bit
     votes) single-threaded. One cheap shuffle of the small text table
-    (hash-partitioned on doc_id) unlocks full-core parallelism. At production scale the source
-    table arrives in thousands of splits and this repartition would be
-    skipped (partition count >= cores)."""
+    (hash-partitioned on doc_id into defaultParallelism partitions)
+    unlocks full-core parallelism. The shuffle always runs, even when the
+    scan already has at least that many splits."""
     docs = _t(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     return docs.repartition(par, "doc_id")
@@ -73,7 +73,9 @@ def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _emb_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings, repartitioned for compute-heavy vector pipelines — same
     single-file-scan rationale as `_docs_wide`: without it the n x C
-    centroid-scoring stage (broadcast join + cosine folds) runs in ONE task."""
+    centroid-scoring stage (broadcast join + cosine folds) runs in ONE task.
+    Like `_docs_wide`, it always shuffles (hash on vec_id into
+    defaultParallelism partitions), whatever the scan's split count."""
     emb = _t(spark, sf_dir, "embeddings")
     par = spark.sparkContext.defaultParallelism
     return emb.repartition(par, "vec_id")
@@ -818,7 +820,7 @@ def q_neardup_components(spark, sf_dir):
 
 
 def q_minhash_lsh_pairs(spark, sf_dir):
-    # hash_fn="md5" (default): oracle-reproducible permutation hashes
+    # md5 permutation hashes: oracle-reproducible
     return dedup.minhash_lsh_pairs(_docs_wide(spark, sf_dir),
                                    min_est_jaccard=0.25)
 
@@ -941,7 +943,7 @@ def _minhash_oracle_sql(num_perms: int = dedup.MINHASH_PERMS,
                         bands: int = dedup.LSH_BANDS,
                         max_bucket: int = 256,
                         min_est_jaccard: float = 0.25) -> str:
-    """ANSI-SQL twin of dedup.minhash_lsh_pairs(hash_fn="md5"): 3-word
+    """ANSI-SQL twin of dedup.minhash_lsh_pairs: 3-word
     shingle md5 digests -> per-permutation min of the p%4-th 8-hex-char
     slice of md5(digest || ',' || p//4) -> banded buckets (md5 of the
     comma-joined band slice) -> capped self-join -> distinct pairs with

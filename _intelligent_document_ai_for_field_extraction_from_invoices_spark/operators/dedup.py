@@ -2,7 +2,7 @@
 
 - exact:   hash-groupBy (one shuffle on the digest, partial agg map-side)
 - n-gram:  shingle inverted index -> candidate pairs -> token Jaccard
-- MinHash: k seeded permutations (md5- or xxhash64-derived) -> banded LSH
+- MinHash: k seeded md5-derived permutations -> banded LSH
 - SimHash: 64-bit sign-aggregated token hashes — fully native exprs
   (explode tokens -> 64 conditional sums; no Python in the hot path)
 
@@ -18,8 +18,10 @@ unordered Window, which would buffer every row of the hottest key in one task
 
 from __future__ import annotations
 
+import re
 import threading
 import weakref
+from hashlib import md5
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,6 +31,8 @@ from .textstats import SPARK_SQL_WS_RUN, WS_RUN, word_ngrams
 
 MINHASH_PERMS = 16
 LSH_BANDS = 4  # 4 bands x 4 rows
+
+_WS_RE = re.compile(WS_RUN)
 
 # observability: connected_components records its last run here —
 # {"rounds": int, "fastpath": bool, "edge_counts": [symmetrized distinct
@@ -131,42 +135,54 @@ def _shingles(text_col: str, n: int):
     return F.transform(word_ngrams(words, n), F.md5)
 
 
+def _py_shingle_digests(text: str | None, n: int) -> list[str]:
+    """Distinct md5 hex digests of `text`'s n-word shingles in
+    first-occurrence order: the Python replay of
+    `array_distinct(_shingles(...))` that every Arrow-batched shingle
+    tier calls. Byte-exact: trim strips 0x20 only, Java split limit=-1 ==
+    re.split (WS_RUN's escapes mean the same bytes in Python re as in
+    Java regex, so the pattern is shared verbatim), shingles join on
+    single spaces, and NULL or fewer-than-n-words text yields nothing."""
+    if text is None:
+        return []
+    parts = _WS_RE.split(text.strip(" "))
+    seen: dict = {}
+    for i in range(len(parts) - n + 1):
+        seen.setdefault(md5(" ".join(parts[i:i + n]).encode()).hexdigest())
+    return list(seen)
+
+
+def _shingle_digest_stream_sql(df: DataFrame, key: str, text_col: str,
+                               n: int) -> DataFrame:
+    """(k, sh) stream of per-doc DISTINCT n-gram md5 digests as native
+    expressions: the short-shingle tier of `shingle_pairs`."""
+    return (
+        df.filter(F.size(F.split(F.trim(F.col(_bq(text_col))), WS_RUN)) >= n)
+        .select(F.col(_bq(key)).alias("k"),
+                F.explode(F.array_distinct(_shingles(text_col, n)))
+                .alias("sh"))
+    )
+
+
 def _shingle_digest_stream_pandas(df: DataFrame, key: str | None,
                                   text_col: str, n: int) -> DataFrame:
-    """(key, sh) stream of per-doc DISTINCT n-gram md5 digests — the
-    Arrow-batched twin of `explode(array_distinct(_shingles(...)))`
-    (r7 optimization): hashlib's C md5 over a plain Python shingle loop
-    replaces the interpreted zip_with/transform/array_distinct chain.
-    Byte-exact: trim strips 0x20 only, Java split limit=-1 == re.split,
-    single-space joins, docs with fewer than n words emit nothing, and
-    the per-doc distinct applies to the DIGESTS (exactly what
-    array_distinct saw). Pure string ops — pinned equal to the
-    expression tier by tests/test_dedup.py."""
-    import re  # noqa: PLC0415
-
+    """(k, sh) stream of per-doc DISTINCT n-gram md5 digests — the
+    Arrow-batched twin of `_shingle_digest_stream_sql` (r7 optimization):
+    hashlib's C md5 over `_py_shingle_digests` replaces the interpreted
+    zip_with/transform/array_distinct chain. `key=None` emits the bare
+    `sh` column. Pinned equal to the expression stream by
+    tests/test_dedup.py."""
     import pandas as pd  # noqa: PLC0415
 
-    ws_re = re.compile(WS_RUN)
     kt = df.schema[key].dataType.simpleString() if key is not None else None
 
     def run(batches):
-        from hashlib import md5  # noqa: PLC0415
-
         for pdf in batches:
             ks, shs = [], []
             for k_, text in zip(pdf["k"] if kt else pdf.index, pdf["t"]):
-                if text is None:
-                    continue
-                parts = ws_re.split(text.strip(" "))
-                if len(parts) < n:
-                    continue
-                seen = set()
-                for i in range(len(parts) - n + 1):
-                    d = md5(" ".join(parts[i:i + n]).encode()).hexdigest()
-                    if d not in seen:
-                        seen.add(d)
-                        ks.append(k_)
-                        shs.append(d)
+                for d in _py_shingle_digests(text, n):
+                    ks.append(k_)
+                    shs.append(d)
             out = {"sh": pd.Series(shs, dtype="object")}
             if kt:
                 out = {"k": pd.Series(ks, dtype="object"), **out}
@@ -180,10 +196,30 @@ def _shingle_digest_stream_pandas(df: DataFrame, key: str | None,
         .mapInPandas(run, schema=f"k {kt}, sh string")
 
 
+def _bucket_pairs(df: DataFrame, group_cols: list[str], a: str,
+                  b: str) -> DataFrame:
+    """(a, b) id pairs with a < b for every two `k` values sharing a
+    group: one `collect_list` per group, then a native nested-transform
+    upper-triangle explode. The caller bounds the group size first
+    (`_cap_hot_keys`), so the collect_list never buffers a hot key."""
+    buckets = (
+        df.groupBy(*group_cols).agg(F.collect_list("k").alias("ks"))
+        .filter(F.size("ks") >= 2)
+    )
+    return buckets.select(
+        F.explode(F.flatten(F.transform(
+            F.col("ks"),
+            lambda x: F.transform(
+                F.filter(F.col("ks"), lambda y: y > x),
+                lambda y: F.struct(x.alias(a), y.alias(b)),
+            ),
+        ))).alias("p")
+    ).select(f"p.{a}", f"p.{b}")
+
+
 def shingle_pairs(df: DataFrame, key: str = "doc_id", text_col: str = "text",
                   n: int = 3, min_shared: int = 2,
-                  max_bucket: int = 64,
-                  engine: str = "auto") -> DataFrame:
+                  max_bucket: int = 64) -> DataFrame:
     """Candidate near-dup pairs sharing >= min_shared distinct n-gram shingles.
 
     Inverted index WITHOUT a self-join: after the hot-shingle cap, each
@@ -193,43 +229,17 @@ def shingle_pairs(df: DataFrame, key: str = "doc_id", text_col: str = "text",
     no reliance on caching the stream. The cap (`_cap_hot_keys`) is what
     makes the collect_list safe: bucket size is bounded BEFORE buffering.
 
-    `engine`: "pandas" sources the digest stream from
-    `_shingle_digest_stream_pandas` (byte-exact); "sql" keeps the
-    native-expression stream. "auto" picks by chain depth: the
-    interpreted zip_with chain costs ~(n-1) array passes per doc, so
-    the Arrow twin pays off for long shingles (measured at sf1: n=8
-    contamination 1.9 -> 1.5 s warm, n=3 parity), while short shingles
-    keep the fully-native plan."""
-    if engine == "auto":
-        engine = "pandas" if n >= 5 else "sql"
-    if engine == "pandas":
-        ex = _shingle_digest_stream_pandas(df, key, text_col, n)
-    elif engine == "sql":
-        ex = (
-            df.filter(
-                F.size(F.split(F.trim(F.col(_bq(text_col))), WS_RUN)) >= n)
-            .select(F.col(_bq(key)).alias("k"),
-                    F.explode(F.array_distinct(_shingles(text_col, n)))
-                    .alias("sh"))
-        )
-    else:
-        raise ValueError(f"unknown shingle engine: {engine!r}")
-    capped = _cap_hot_keys(ex, ["sh"], max_bucket)
-    buckets = (
-        capped.groupBy("sh").agg(F.collect_list("k").alias("ks"))
-        .filter(F.size("ks") >= 2)
-    )
-    pairs = buckets.select(
-        F.explode(F.flatten(F.transform(
-            F.col("ks"),
-            lambda x: F.transform(
-                F.filter(F.col("ks"), lambda y: y > x),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        ))).alias("p")
-    )
+    The digest stream's tier follows from `n`: the interpreted zip_with
+    chain costs ~(n-1) array passes per doc, so long shingles (n >= 5)
+    take the byte-exact Arrow stream (`_shingle_digest_stream_pandas`;
+    measured at sf1: n=8 contamination 1.9 -> 1.5 s warm), while short
+    ones keep the fully-native stream, which won at n=3 (BENCH.md tier
+    census)."""
+    stream = (_shingle_digest_stream_pandas if n >= 5
+              else _shingle_digest_stream_sql)
+    capped = _cap_hot_keys(stream(df, key, text_col, n), ["sh"], max_bucket)
     return (
-        pairs.select("p.doc_a", "p.doc_b")
+        _bucket_pairs(capped, ["sh"], "doc_a", "doc_b")
         .groupBy("doc_a", "doc_b").agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
@@ -509,69 +519,44 @@ def _bq(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _perm_hash_sql(p: int, hash_fn: str) -> str:
-    """Seeded permutation hash of a shingle digest (SQL-expression string
-    over a column named `tok`).
+def minhash_signatures(df: DataFrame, key: str = "doc_id",
+                       text_col: str = "text",
+                       num_perms: int = MINHASH_PERMS,
+                       shingle_n: int = 3) -> DataFrame:
+    """MinHash signature per doc: min over its distinct n-word shingles of
+    perm_hash(shingle, seed_p) for each of `num_perms` seeded
+    permutations. Shingles (not unigrams) are the hashed features: unigram
+    sets over a small vocabulary are near-identical across documents,
+    which would collapse every LSH bucket into one giant skew bucket.
 
-    - "md5": each md5 of "<digest>,<seed_group>" yields FOUR independent
-      32-bit permutations (hex slices of the 128-bit digest), so 16 perms
-      cost 4 md5 calls per shingle, not 16. Byte-identical in any engine
-      with md5 (the DuckDB oracle reproduces it); min is taken over the
-      8-hex-char STRING (lexicographic == numeric for fixed-width hex).
-    - "xxhash64": Spark-native seeded 64-bit hash — cheapest at scale but
-      engine-internal, so not oracle-reproducible."""
-    if hash_fn == "md5":
-        return (f"substring(md5(concat_ws(',', tok, '{p // 4}')), "
-                f"{(p % 4) * 8 + 1}, 8)")
-    if hash_fn == "xxhash64":
-        return f"xxhash64(tok, {p})"
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    Each md5 of "<digest>,<seed_group>" yields FOUR independent 32-bit
+    permutations (hex slices of the 128-bit digest), so 16 perms cost 4
+    md5 calls per shingle, not 16; mins compare the 8-hex-char slices
+    lexicographically (== numeric for fixed-width hex). Pure string ops,
+    so the DuckDB oracle reproduces them.
 
-
-def _minhash_signatures_pandas(df: DataFrame, key: str, text_col: str,
-                               num_perms: int, shingle_n: int) -> DataFrame:
-    """Arrow-batched twin of the md5 SQL tier (r7 optimization): one
-    mapInPandas pass computes each doc's permutation mins directly —
-    hashlib's C md5 over the shingle stream replaces the interpreted
-    zip_with/transform chain AND the explode + 16-min-aggregate shuffle
-    (the signature never leaves the row). EXACTLY the SQL tier's bytes:
-    trim strips 0x20 only, the split keeps leading/trailing empties
-    (Java split limit=-1 == re.split), shingles join on single spaces,
-    digests/permutation hashes are md5 hex, mins compare the 8-hex-char
-    slices lexicographically (== numeric for fixed-width hex), and docs
-    with fewer than shingle_n words emit no row. Pure integer/string
-    ops — no float to drift — pinned equal to the SQL tier by
+    Plan shape: ONE Arrow-batched mapInPandas pass computes each doc's
+    permutation mins in-row with hashlib's C md5 (r7: no explode shuffle,
+    no interpreted HOF chain — measured ~2x the expression tier at sf1).
+    Docs with fewer than shingle_n words emit no row. Pinned
+    byte-identical to the native-expression reference
+    `_minhash_signatures_sql` by
     tests/test_dedup.py::test_minhash_signature_engines_identical."""
-    import re  # noqa: PLC0415
-
     import pandas as pd  # noqa: PLC0415
 
-    # WS_RUN's escapes (\t \n \f \r \x0B) mean the same bytes in Python
-    # re as in Java regex, so the pattern is shared verbatim
-    ws_re = re.compile(WS_RUN)
     kt = df.schema[key].dataType.simpleString()
     groups = (num_perms + 3) // 4
     slots = [(p // 4, (p % 4) * 8) for p in range(num_perms)]
 
     def run(batches):
-        from hashlib import md5  # noqa: PLC0415
-
         for pdf in batches:
             ks, sigs = [], []
             for k_, text in zip(pdf["k"], pdf["t"]):
-                if text is None:
-                    continue
-                parts = ws_re.split(text.strip(" "))
-                if len(parts) < shingle_n:
+                digests = _py_shingle_digests(text, shingle_n)
+                if not digests:
                     continue
                 mins = [None] * num_perms
-                seen = set()
-                for i in range(len(parts) - shingle_n + 1):
-                    g = " ".join(parts[i:i + shingle_n])
-                    if g in seen:
-                        continue
-                    seen.add(g)
-                    d = md5(g.encode()).hexdigest()
+                for d in digests:
                     hs = [md5(f"{d},{gi}".encode()).hexdigest()
                           for gi in range(groups)]
                     for p, (gi, off) in enumerate(slots):
@@ -593,38 +578,15 @@ def _minhash_signatures_pandas(df: DataFrame, key: str, text_col: str,
     return out.withColumnRenamed("k", key)
 
 
-def minhash_signatures(df: DataFrame, key: str = "doc_id",
-                       text_col: str = "text",
-                       num_perms: int = MINHASH_PERMS,
-                       shingle_n: int = 3,
-                       hash_fn: str = "md5",
-                       engine: str = "auto") -> DataFrame:
-    """MinHash signature per doc: min over n-word shingles of
-    perm_hash(shingle, seed_p) for each of `num_perms` seeded permutations —
-    all native exprs. Shingles (not unigrams) are the hashed features:
-    unigram sets over a small vocabulary are near-identical across documents,
-    which would collapse every LSH bucket into one giant skew bucket.
-
-    Plan shape: explode distinct shingles -> one min-aggregate per
-    permutation. The per-perm aggregates combine map-side (partial agg), so
-    the shuffle carries num_perms values per DOC — a posexplode formulation
-    would shuffle num_perms hashed rows per SHINGLE, ~16x the data.
-
-    `engine`: "sql" = the native-expression tier above (the only tier for
-    hash_fn="xxhash64" — Python has no exact xxhash64 twin); "pandas" =
-    one Arrow-batched pass computing the mins in-row via hashlib's C md5
-    (r7: no explode shuffle, no interpreted HOF chain — measured ~2x the
-    md5 tier's speed at sf1); "auto" picks pandas for md5. Both tiers are
-    byte-identical (string/integer ops only) and test-pinned."""
-    if engine == "auto":
-        engine = "pandas" if hash_fn == "md5" else "sql"
-    if engine == "pandas":
-        if hash_fn != "md5":
-            raise ValueError("pandas minhash tier requires hash_fn='md5'")
-        return _minhash_signatures_pandas(df, key, text_col, num_perms,
-                                          shingle_n)
-    if engine != "sql":
-        raise ValueError(f"unknown minhash engine: {engine!r}")
+def _minhash_signatures_sql(df: DataFrame, key: str = "doc_id",
+                            text_col: str = "text",
+                            num_perms: int = MINHASH_PERMS,
+                            shingle_n: int = 3) -> DataFrame:
+    """Native-expression reference for `minhash_signatures`: explode
+    distinct shingles -> one md5 per seed group -> one min-aggregate per
+    permutation. Kept as the test reference because it splits words with
+    Spark's own WS_RUN regex (the DuckDB oracle's whitespace split keeps
+    "z\\x0bw" as one word)."""
     toks = df.filter(
         F.size(F.split(F.trim(F.col(_bq(text_col))), WS_RUN)) >= shingle_n
     ).select(
@@ -633,22 +595,16 @@ def minhash_signatures(df: DataFrame, key: str = "doc_id",
             F.array_distinct(_shingles(text_col, shingle_n))
         ).alias("tok"),
     )
-    # per-permutation expressions are SQL strings parsed JVM-side: building
-    # ~150 Column objects from Python costs ~1 s of py4j round-trips per
-    # query (same lesson as simhash_signatures)
-    if hash_fn == "md5":
-        # one projection computes each seed-group md5 exactly once per
-        # shingle row (explicit sharing — no reliance on codegen CSE)
-        toks = toks.selectExpr("k", *[
-            f"md5(concat_ws(',', tok, '{g}')) AS h{g}"
-            for g in range((num_perms + 3) // 4)
-        ])
-        slot = [f"substring(h{p // 4}, {(p % 4) * 8 + 1}, 8)"
-                for p in range(num_perms)]
-    else:
-        slot = [_perm_hash_sql(p, hash_fn) for p in range(num_perms)]
+    # per-permutation expressions are SQL strings parsed JVM-side:
+    # building ~150 Column objects from Python costs ~1 s of py4j
+    # round-trips per query (same lesson as simhash_signatures)
+    toks = toks.selectExpr("k", *[
+        f"md5(concat_ws(',', tok, '{g}')) AS h{g}"
+        for g in range((num_perms + 3) // 4)
+    ])
     mins = toks.groupBy("k").agg(*[
-        F.expr(f"min({slot[p]}) AS mh{p}") for p in range(num_perms)
+        F.expr(f"min(substring(h{p // 4}, {(p % 4) * 8 + 1}, 8)) AS mh{p}")
+        for p in range(num_perms)
     ])
     return mins.selectExpr(
         f"k AS {_bq(key)}",
@@ -660,15 +616,14 @@ def minhash_lsh_pairs(df: DataFrame, key: str = "doc_id",
                       text_col: str = "text", bands: int = LSH_BANDS,
                       num_perms: int = MINHASH_PERMS,
                       min_est_jaccard: float = 0.5,
-                      max_bucket: int = 256,
-                      hash_fn: str = "md5") -> DataFrame:
+                      max_bucket: int = 256) -> DataFrame:
     """Banded LSH over MinHash signatures: docs colliding in any band become
     candidate pairs; estimated Jaccard = fraction of matching signature slots.
     Buckets larger than `max_bucket` are dropped before the self-join — the
     skew guard that bounds worst-case pair blowup at scale (groupBy count +
     broadcast anti-join; see `_cap_hot_keys`)."""
     rows = num_perms // bands
-    sigs = minhash_signatures(df, key, text_col, num_perms, hash_fn=hash_fn)
+    sigs = minhash_signatures(df, key, text_col, num_perms)
     banded = sigs.selectExpr(
         f"{_bq(key)} AS k",
         "signature",

@@ -15,7 +15,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from .dedup import _bq, register_cache, release_caches  # shared registry
+from .dedup import (  # shared cache registry and bucket primitives
+    _bq, _bucket_pairs, _cap_hot_keys, register_cache, release_caches,
+)
 
 __all__ = [
     "cosine_knn", "label_centroid_norms", "kmeans_centroids", "ivf_assign",
@@ -193,27 +195,40 @@ def kmeans_centroids(emb: DataFrame, num_centroids: int = 8, iters: int = 2,
     return cents
 
 
-def _ivf_scores_arrow(emb: DataFrame, cent_rows, key: str,
-                      vec_col: str, cent_id_type) -> DataFrame:
-    """(key, centroid_id, raw cosine) scored rows as ONE Arrow stage
-    (r7 optimization): the centroid table is C-bounded by construction,
-    so its rows ship in the task closure and each batch scores against
-    the whole bank with j-ascending NumPy accumulations that replay the
-    JVM `cosine_col` fold EXACTLY — dot and both norm folds are
-    left-associative over j, sqrt is IEEE-correctly-rounded in both
-    runtimes, and the denominator multiplies norms before the divide in
-    the same order. Length-mismatched (vector, centroid) pairs emit
-    NULL, replicating zip_with's null-pad poisoning. Rounding to 6 dp
-    stays in Spark (HALF_UP). Bit-equality with the expression tier is
-    pinned by tests/test_similarity_kmeans.py."""
+def _ivf_scores_sql(emb: DataFrame, cents: DataFrame, key: str,
+                    vec_col: str) -> DataFrame:
+    """(key, centroid_id, sim) scored rows as native expressions: the
+    broadcast centroid table joined to every vector, one `cosine_col`
+    fold per pair, rounded to 6 dp."""
+    return emb.select(key, vec_col).join(F.broadcast(cents)).select(
+        key,
+        "centroid_id",
+        F.round(cosine_col(F.col(vec_col), F.col("cvec")), 6).alias("sim"),
+    )
+
+
+def _ivf_scores_arrow(emb: DataFrame, cents: DataFrame, key: str,
+                      vec_col: str) -> DataFrame:
+    """(key, centroid_id, sim) scored rows as ONE Arrow stage (r7
+    optimization): the centroid table is C-bounded by construction, so
+    it is collected and its rows ship in the task closure; each batch
+    scores against the whole bank with j-ascending NumPy accumulations
+    that replay the JVM `cosine_col` fold EXACTLY — dot and both norm
+    folds are left-associative over j, sqrt is IEEE-correctly-rounded in
+    both runtimes, and the denominator multiplies norms before the
+    divide in the same order. Length-mismatched (vector, centroid) pairs and NULL
+    vectors or centroids emit NULL, replicating zip_with's NULL
+    poisoning. Rounding to 6 dp stays in Spark (HALF_UP). Bit-equality
+    with `_ivf_scores_sql` is pinned by tests/test_similarity_kmeans.py."""
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.types import DoubleType  # noqa: PLC0415
 
-    kt = emb.schema[key].dataType
-    out_t = StructType([StructField("k", kt),
-                        StructField("centroid_id", cent_id_type),
+    out_t = StructType([StructField("k", emb.schema[key].dataType),
+                        StructField("centroid_id",
+                                    cents.schema["centroid_id"].dataType),
                         StructField("_raw", DoubleType())])
-    cents = [(cid, [float(x) for x in cv]) for cid, cv in cent_rows]
+    cents = [(cid, None if cv is None else [float(x) for x in cv])
+             for cid, cv in cents.collect()]
     cid_list = [cid for cid, _ in cents]
     n_cents = len(cents)
 
@@ -225,7 +240,8 @@ def _ivf_scores_arrow(emb: DataFrame, cent_rows, key: str,
         # the same double the JVM fold yields per pair)
         by_dim: dict = {}
         for pos, (_cid, cv) in enumerate(cents):
-            by_dim.setdefault(len(cv), []).append(pos)
+            if cv is not None:  # a NULL centroid scores NULL everywhere
+                by_dim.setdefault(len(cv), []).append(pos)
         banks = {}
         for dim, poss in by_dim.items():
             mat_c = np.asarray([cents[p][1] for p in poss],
@@ -277,15 +293,16 @@ def _ivf_scores_arrow(emb: DataFrame, cent_rows, key: str,
                 "centroid_id": pd.Series(cids, dtype="object"),
                 "_raw": pd.Series(raws, dtype="object")})
 
-    return emb.select(F.col(_bq(key)).alias("k"),
-                      F.col(_bq(vec_col)).alias("v")) \
+    raw = emb.select(F.col(_bq(key)).alias("k"),
+                     F.col(_bq(vec_col)).alias("v")) \
         .mapInPandas(run, schema=out_t)
+    return raw.select(F.col("k").alias(key), "centroid_id",
+                      F.round(F.col("_raw"), 6).alias("sim"))
 
 
 def ivf_assign(emb: DataFrame, num_centroids: int = 8, key: str = "vec_id",
                vec_col: str = "embedding",
-               centroids: DataFrame | None = None,
-               engine: str = "auto") -> DataFrame:
+               centroids: DataFrame | None = None) -> DataFrame:
     """Assign each vector to its nearest centroid by cosine. Default
     centroids are the vectors with key < num_centroids (deterministic seed
     choice, reproducible in the ANSI oracles); pass `centroids` (e.g. from
@@ -294,34 +311,16 @@ def ivf_assign(emb: DataFrame, num_centroids: int = 8, key: str = "vec_id",
     (sim desc, centroid_id asc) tie-break — partial-combines map-side, no
     window sort (plan pinned Window/Sort-free in tests/test_plans.py).
 
-    `engine`: "sql" = native expression scoring; "arrow" = one Arrow
-    stage computing the raw cosines with exact fold-order parity
-    (_ivf_scores_arrow; rounding and the argmax stay in Spark). "auto"
-    picks arrow for large seeded banks (C >= 32 — the n x C interpreted
-    fold chain dominates there; small banks and trained-centroid
-    DataFrames keep the native path, which also avoids collecting a
-    not-yet-materialized training plan)."""
+    Large seeded banks (C >= 32) score in one Arrow stage
+    (`_ivf_scores_arrow`): the n x C interpreted fold chain dominates
+    there. Small banks and trained-centroid DataFrames keep native
+    expression scoring (`_ivf_scores_sql`), which also avoids collecting
+    a not-yet-materialized training plan."""
     cents = centroids if centroids is not None else seed_centroids(
         emb, num_centroids, key, vec_col)
-    if engine == "auto":
-        engine = ("arrow"
-                  if centroids is None and num_centroids >= 32 else "sql")
-    if engine == "arrow":
-        cent_rows = [(r[0], list(r[1])) for r in cents.collect()]
-        raw = _ivf_scores_arrow(emb, cent_rows, key, vec_col,
-                                cents.schema["centroid_id"].dataType)
-        scored = raw.select(F.col("k").alias(key), "centroid_id",
-                            F.round(F.col("_raw"), 6).alias("sim"))
-    elif engine == "sql":
-        scored = emb.select(key, vec_col).join(F.broadcast(cents)).select(
-            key,
-            "centroid_id",
-            F.round(cosine_col(F.col(vec_col), F.col("cvec")), 6)
-            .alias("sim"),
-        )
-    else:
-        raise ValueError(f"unknown ivf_assign engine: {engine!r}")
-    return _argmax_centroid(scored, key, []).select(
+    score = (_ivf_scores_arrow if centroids is None and num_centroids >= 32
+             else _ivf_scores_sql)
+    return _argmax_centroid(score(emb, cents, key, vec_col), key, []).select(
         key, "centroid_id", F.col("sim").alias("centroid_sim"))
 
 
@@ -329,8 +328,7 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
                           num_centroids: int | None = None, key: str = "vec_id",
                           vec_col: str = "embedding",
                           n_hint: int | None = None,
-                          assign: DataFrame | None = None,
-                          pair_engine: str = "auto") -> DataFrame:
+                          assign: DataFrame | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, IVF-bucketed: vectors are
     assigned to their nearest centroid once, and only same-bucket pairs are
     scored — the self-join touches ~1/C^2 of the full cross product per
@@ -391,38 +389,30 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
     unit = _unit_vectors(emb, key, vec_col)
     tagged = unit.join(assign.select(key, "centroid_id"), key)
     tagged = register_cache(tagged.cache())
-    if pair_engine == "auto":
-        # grouped pair generation materializes one IVF bucket per Arrow
-        # group, so it needs (a) enough pair volume to amortize the
-        # Python stage — below ~10k vectors the streaming self-join is
-        # already sub-second (measured: +0.5 s at 2k vectors, -1.5 s at
-        # 20k), and (b) every bucket bounded — ONE tiny count aggregate
-        # over the (cached) assignment answers that exactly. The corpus
-        # size comes free from the IVF sizing pass when it ran; small
-        # corpora skip the bucket probe job entirely.
-        if n_known is not None and n_known < 10_000:
-            pair_engine = "join"
-        else:
-            row = (tagged.groupBy("centroid_id").count()
-                   .agg(F.max("count").alias("mx"),
-                        F.sum("count").alias("n")).first())
-            pair_engine = ("grouped"
-                           if (row.mx or 0) <= 4096
-                           and (row.n or 0) >= 10_000
-                           else "join")
-    if pair_engine == "grouped":
-        # the join path's INNER equi-join on centroid_id drops NULL-key
-        # rows (vectors no centroid could score, e.g. mismatched dims)
-        # and NULL uvecs never survive the threshold — filter both here
-        # so the grouped stage emits the identical pair set instead of
-        # collecting every unassigned vector into one NULL-key group
-        return _grouped_pair_cosines(
-            tagged.filter(F.col("centroid_id").isNotNull()
-                          & F.col("uvec").isNotNull())
-            .select(F.col(key).alias("k"), "uvec", "centroid_id"),
-            ["centroid_id"], threshold, dedup_pairs=False)
-    if pair_engine != "join":
-        raise ValueError(f"unknown pair_engine: {pair_engine!r}")
+    # grouped pair generation materializes one IVF bucket per Arrow
+    # group, so it needs (a) enough pair volume to amortize the Python
+    # stage — below ~10k vectors the streaming self-join is already
+    # sub-second (measured: +0.5 s at 2k vectors, -1.5 s at 20k), and
+    # (b) every bucket bounded — ONE tiny count aggregate over the
+    # (cached) assignment answers that exactly. The corpus size comes
+    # free from the IVF sizing pass when it ran; small corpora skip the
+    # bucket probe job entirely.
+    grouped = False
+    if n_known is None or n_known >= 10_000:
+        row = (tagged.groupBy("centroid_id").count()
+               .agg(F.max("count").alias("mx"),
+                    F.sum("count").alias("n")).first())
+        grouped = (row.mx or 0) <= 4096 and (row.n or 0) >= 10_000
+    if grouped:
+        return _grouped_pair_cosines(tagged, key, ["centroid_id"], threshold,
+                                     dedup_pairs=False)
+    return _ivf_join_pairs(tagged, key, threshold)
+
+
+def _ivf_join_pairs(tagged: DataFrame, key: str,
+                    threshold: float) -> DataFrame:
+    """Same-bucket pairs of a (key, uvec, centroid_id) table as a
+    self-join on centroid_id, verified by one dot-product fold per pair."""
     a = tagged.select(F.col(key).alias("vec_a"),
                       F.col("uvec").alias("ua"), "centroid_id")
     b = tagged.select(F.col(key).alias("vec_b"),
@@ -513,14 +503,11 @@ def plane_dot_sql(p: int, dim: int, element: str) -> str:
     coefficients. Both engines evaluate the identical addition order on
     identical doubles, so the sign test (>= 0) is bit-deterministic
     cross-engine — no rounding needed. `element` formats one 1-indexed
-    vector element access, e.g. 'cast(try_element_at(embedding, {i}) AS
-    double)' (Spark — try_: ANSI mode makes plain element_at RAISE on an
-    out-of-bounds index, which would crash the whole job on one short
-    vector; review-verified) or 'CAST(embedding[{i}] AS DOUBLE)' (DuckDB,
-    NULL past the end).
+    vector element access that yields NULL past the end, e.g.
+    'CAST(embedding[{i}] AS DOUBLE)' (DuckDB, the oracle) — the Spark
+    side replays this sum in `hyperplane_banded_buckets`.
 
-    Each term is coalesce'd to 0 IN BOTH ENGINES (generated from this one
-    function, so parity holds): a vector shorter than `dim` projects on
+    Each term is coalesce'd to 0: a vector shorter than `dim` projects on
     its actual components zero-padded instead of NULLing the whole dot —
     the review-flagged silent failure where every short vector landed in
     bucket 0 and the hot-bucket cap dropped the lot."""
@@ -541,19 +528,20 @@ def signature_sql(num_planes: int, dim: int, element: str) -> str:
         for p in range(num_planes))
 
 
-# above this many planes x dim terms the unrolled signature SQL stops being
-# viable: one projection expression hits JVM parse + Janino compile walls
-# (Janino's 64 KB method limit forces interpreted fallback well before real
-# embedding dims — 768 x 64 planes would be ~49k terms), so the batched
-# matmul tier takes over. The bench/oracle shape (32 x 64 = 2048) stays SQL
-# for bit-deterministic cross-engine signs.
+# up to this many planes x dim terms hyperplane_banded_buckets accumulates
+# the plane dots with the j-ascending loop, which is bit-identical to the
+# oracle's unrolled signature_sql sum, so the oracle shape (32 x 64 = 2048)
+# keeps cross-engine signs. Past it the batched matmul takes over: at real
+# dims it is faster (hyperplane_lsh_pairs at 768 x 64 on 2000 vectors,
+# 4-core host, 8 interleaved pairs: 1.65 s median vs 1.74 s for the loop,
+# matmul faster in 6 of 8; identical buckets).
 HYPERPLANE_SQL_TERM_LIMIT = 4096
 
 
 def _plane_matrix(num_planes: int, dim: int):
     """The ±1 plane matrix as float64 — SAME md5-parity entries as the
-    unrolled SQL (plane_sign), so both tiers project against identical
-    planes."""
+    unrolled SQL (plane_sign), so Spark and the oracle project against
+    identical planes."""
     import numpy as np  # noqa: PLC0415
 
     return np.array([[plane_sign(p, j) for j in range(dim)]
@@ -567,7 +555,7 @@ def _corpus_dim(emb: DataFrame, vec_col: str) -> tuple[int, int, int]:
     dim on different runs and silently truncated the longer vectors).
     The scan reads only array lengths and runs once per call; the
     operator is multi-pass anyway. The row count rides along for free and
-    drives the pair-engine density dial (r7)."""
+    drives the pair-stage density choice (r7)."""
     row = emb.agg(F.min(F.size(_bq(vec_col))).alias("lo"),
                   F.max(F.size(_bq(vec_col))).alias("hi"),
                   F.count("*").alias("n")).first()
@@ -577,8 +565,8 @@ def _corpus_dim(emb: DataFrame, vec_col: str) -> tuple[int, int, int]:
     return row.lo, row.hi, row.n
 
 
-def _grouped_pair_cosines(tagged: DataFrame, group_cols: list[str],
-                          threshold: float,
+def _grouped_pair_cosines(tagged: DataFrame, key: str,
+                          group_cols: list[str], threshold: float,
                           dedup_pairs: bool = True) -> DataFrame:
     """In-bucket candidate pairs + exact-cosine verify as ONE grouped
     Arrow stage (r7 optimization): per (bucket) group of unit vectors,
@@ -598,13 +586,24 @@ def _grouped_pair_cosines(tagged: DataFrame, group_cols: list[str],
     NULL-poisons those dots and the threshold filter drops them, so the
     output sets match on mixed-dim corpora too.
 
+    Rows with a NULL group key or NULL uvec are dropped first: the join
+    paths' INNER equi-joins drop NULL keys (vectors no centroid could
+    score, e.g. mismatched dims) and NULL-poisoned dots never pass the
+    threshold, so the pair sets match instead of one NULL-key group
+    collecting every unassigned vector.
+
     Scale guard: callers only route here when every group is bounded
     (hyperplane buckets are `_cap_hot_keys`-capped; the IVF caller checks
     its max bucket size first), because applyInPandas materializes one
-    group per call. `tagged` must carry (group_cols..., k, uvec)."""
+    group per call. `tagged` must carry (key, uvec, group_cols...)."""
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.types import DoubleType  # noqa: PLC0415
 
+    keep = F.col("uvec").isNotNull()
+    for g in group_cols:
+        keep &= F.col(g).isNotNull()
+    tagged = tagged.filter(keep).select(F.col(_bq(key)).alias("k"), "uvec",
+                                        *group_cols)
     kt = tagged.schema["k"].dataType
     out_schema = StructType([StructField("vec_a", kt),
                              StructField("vec_b", kt),
@@ -660,55 +659,32 @@ def _grouped_pair_cosines(tagged: DataFrame, group_cols: list[str],
 
 
 def hyperplane_banded_buckets(emb: DataFrame, num_planes: int, bands: int,
-                              dim: int, key: str, vec_col: str,
-                              engine: str = "auto") -> DataFrame:
-    """(k, band, bucket) banded sign-projection buckets, two tiers:
+                              dim: int, key: str, vec_col: str) -> DataFrame:
+    """(k, band, bucket) banded sign-projection buckets, computed in one
+    Arrow-batched pandas UDF. The plane dots take one of two forms,
+    chosen from num_planes x dim:
 
-    - "sql": the planes x dim ±element terms unrolled into ONE whole-stage
-      codegen expression — bit-deterministic cross-engine (the DuckDB
-      oracle unrolls the identical sum), but with a JVM-parse/Janino
-      compile wall at real embedding dims.
-    - "loop": the r7 default inside the SQL tier's term envelope — one
-      Arrow batch per task, accumulating the plane dots with a
-      j-ascending NumPy loop (`acc += v[:, j] * signs_j`, signs ±1.0)
-      that replays the unrolled SQL's left-associative IEEE sequence
-      EXACTLY (±1.0 multiplication is a sign flip; x + (-y) == x - y),
-      so its sign bits — and therefore every bucket — are BIT-IDENTICAL
-      to the sql tier (pinned by
-      tests/test_similarity_kmeans.py::test_hyperplane_sql_and_loop_tiers_identical)
-      at a fraction of the cost (the 2048-term projection was the
-      Janino-compile/interpretation hotspot).
-    - "pandas": one batched NumPy sign(V @ P.T) matmul per Arrow batch —
-      the scale tier for real dims (768+), same md5-parity plane matrix.
-      Per-band buckets are packed directly from the sign bits, so 64-plane
-      signatures never round-trip through a signed BIGINT.
+    - up to HYPERPLANE_SQL_TERM_LIMIT: a j-ascending NumPy loop
+      (`acc += v[:, j] * signs_j`, signs ±1.0) that replays the
+      left-associative sum of `signature_sql` EXACTLY (±1.0
+      multiplication is a sign flip; x + (-y) == x - y), so its sign
+      bits — and therefore every bucket — are BIT-IDENTICAL to the
+      DuckDB oracle running the same generated SQL (pinned by
+      tests/test_similarity_kmeans.py::test_hyperplane_loop_tier_matches_duckdb_signature_sql).
+    - past it: one batched NumPy sign(V @ P.T) matmul per Arrow batch —
+      the scale form for real dims (768+), same md5-parity plane matrix.
+      It agrees with the loop except where a plane dot lands within
+      float addition-order noise of exactly 0 (left-assoc sum vs
+      pairwise matmul) — measure-zero for real embeddings.
 
-    "auto" picks "loop" within HYPERPLANE_SQL_TERM_LIMIT and "pandas"
-    past it. loop==sql exactly; pandas agrees except where a plane dot
-    lands within float addition-order noise of exactly 0 (left-assoc
-    sum vs pairwise matmul) — measure-zero for real embeddings."""
+    Per-band buckets are packed directly from the sign bits, so 64-plane
+    signatures never round-trip through a signed BIGINT."""
     rpb = num_planes // bands
     if rpb > 62:
-        # per-band buckets pack into a signed BIGINT in both tiers
+        # per-band buckets pack into a signed BIGINT
         raise ValueError(
             f"planes per band = {rpb} overflows the 63-bit bucket key: "
             "use more bands (or fewer planes)")
-    mask = (1 << rpb) - 1
-    if engine == "auto":
-        engine = ("loop" if num_planes * dim <= HYPERPLANE_SQL_TERM_LIMIT
-                  else "pandas")
-    if engine == "sql":
-        sig = signature_sql(
-            num_planes, dim,
-            f"cast(try_element_at({_bq(vec_col)}, {{i}}) AS double)")
-        sigs = emb.selectExpr(f"{_bq(key)} AS k", f"({sig}) AS sig")
-        return sigs.selectExpr(
-            "k",
-            f"posexplode(transform(sequence(0, {bands - 1}), "
-            f"b -> shiftright(sig, b * {rpb}) & {mask})) AS (band, bucket)",
-        ).select("k", "band", "bucket")
-    if engine not in ("pandas", "loop"):
-        raise ValueError(f"unknown hyperplane engine: {engine!r}")
 
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
@@ -716,18 +692,18 @@ def hyperplane_banded_buckets(emb: DataFrame, num_planes: int, bands: int,
 
     plane_t = _plane_matrix(num_planes, dim).T  # (dim, planes)
     weights = 1 << np.arange(rpb, dtype=np.int64)  # bit weights within a band
-    exact = engine == "loop"
+    exact = num_planes * dim <= HYPERPLANE_SQL_TERM_LIMIT
 
     def _buckets(vs):
         # vectors arrive as ndarray/list cells; vectors shorter than the
-        # plane matrix zero-pad — IDENTICAL semantics to the SQL tier's
-        # try_element_at + coalesce(…, 0.0), so the two tiers can't
-        # diverge on a mixed-dim corpus (review finding; mixed corpora
-        # also require an explicit dim at the API boundary)
+        # plane matrix zero-pad — IDENTICAL semantics to the oracle's
+        # out-of-range NULL + coalesce(…, 0.0), so a mixed-dim corpus
+        # buckets the same in both (mixed corpora also require an
+        # explicit dim at the API boundary)
         mat = np.zeros((len(vs), dim), dtype=np.float64)
         for i, v in enumerate(vs):
             if v is None:
-                # the sql tier coalesces every element of a NULL cell to
+                # the oracle coalesces every element of a NULL cell to
                 # 0.0 and buckets the row like a zero vector — keep the
                 # row as the zero-filled default instead of crashing
                 continue
@@ -735,10 +711,10 @@ def hyperplane_banded_buckets(emb: DataFrame, num_planes: int, bands: int,
             n = min(a.shape[0], dim)
             mat[i, :n] = a[:n]
         if exact:
-            # j-ascending accumulation == the unrolled SQL's
+            # j-ascending accumulation == signature_sql's
             # left-associative sum, term for term (±1.0 products are
             # exact sign flips; the zero-pad adds exact 0.0 like
-            # coalesce) — sign bits bit-identical to the sql tier
+            # coalesce) — sign bits bit-identical to the oracle
             acc = np.zeros((mat.shape[0], num_planes), dtype=np.float64)
             for j in range(dim):
                 acc += mat[:, j:j + 1] * plane_t[j]
@@ -749,7 +725,7 @@ def hyperplane_banded_buckets(emb: DataFrame, num_planes: int, bands: int,
                 for b in range(bands)]
         # int64 end-to-end (ADVICE round-5: an int32 cast here silently
         # wrapped buckets negative at rpb >= 32 — e.g. 64 planes / 2
-        # bands — and diverged from the SQL tier's BIGINT buckets)
+        # bands — and diverged from the oracle's BIGINT buckets)
         return pd.Series(list(np.stack(cols, axis=1)))
 
     # the module's `from __future__ import annotations` would stringify
@@ -769,37 +745,44 @@ def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
                          bands: int = HYPERPLANE_BANDS,
                          dim: int | None = None, key: str = "vec_id",
                          vec_col: str = "embedding",
-                         max_bucket: int = 256,
-                         engine: str = "auto",
-                         pair_engine: str = "auto") -> DataFrame:
+                         max_bucket: int = 256) -> DataFrame:
     """Embedding near-dup pairs via banded random-hyperplane LSH: vectors
     colliding in any band of their sign-projection signature become
     candidates; candidates are verified by exact cosine >= threshold.
 
     `dim=None` derives the projection dim from an exact min/max size
     aggregate over the corpus — a mixed-dim corpus must pass `dim`
-    explicitly (shorter vectors zero-pad identically in both tiers;
-    longer ones project on their first `dim` components). An explicit
-    `dim` beyond the corpus max raises instead of silently collapsing
-    every vector into bucket 0.
+    explicitly (shorter vectors zero-pad; longer ones project on their
+    first `dim` components). An explicit `dim` beyond the corpus max
+    raises instead of silently collapsing every vector into bucket 0.
 
     Scale shape mirrors the text-LSH family: signatures come from
-    `hyperplane_banded_buckets` (whole-stage-codegen unrolled sums at
-    oracle dims, ONE batched NumPy matmul per Arrow batch past
-    HYPERPLANE_SQL_TERM_LIMIT — no per-row Python either way), the banded
-    explode carries `bands` ints per VECTOR on the shuffle, hot buckets
-    are capped BEFORE the in-bucket pair generation buffers anything
-    (`_cap_hot_keys`), and the verify stage unit-normalizes once per
-    vector so each surviving pair costs one dot-product fold. Recall/cost
-    dial: more planes = fewer false candidates; more bands = higher
-    recall. Sizing at corpus scale: buckets per band = 2^(planes/bands),
-    so pick planes/bands such that corpus_size / 2^(planes/bands) stays
-    under max_bucket — the defaults (32/4 -> 256 buckets/band) suit
-    10^4-10^5 vectors; a 10^12 corpus wants 64 planes x 4 bands (65k
-    buckets) plus a larger cap — real-dim 768 x 64-plane signatures run
-    on the matmul tier, which has no compile wall."""
-    from .dedup import _cap_hot_keys  # noqa: PLC0415
+    `hyperplane_banded_buckets` (one vectorized Arrow pass; exact
+    left-assoc loop at oracle dims, ONE batched NumPy matmul per batch
+    past HYPERPLANE_SQL_TERM_LIMIT — no per-row Python either way), the
+    banded explode carries `bands` ints per VECTOR on the shuffle, hot
+    buckets are capped BEFORE the in-bucket pair generation buffers
+    anything (`_cap_hot_keys`), and the verify stage unit-normalizes once
+    per vector so each surviving pair costs one dot-product fold.
+    Recall/cost dial: more planes = fewer false candidates; more bands =
+    higher recall. Sizing at corpus scale: buckets per band =
+    2^(planes/bands), so pick planes/bands such that corpus_size /
+    2^(planes/bands) stays under max_bucket — the defaults (32/4 -> 256
+    buckets/band) suit 10^4-10^5 vectors; a 10^12 corpus wants 64 planes
+    x 4 bands (65k buckets) plus a larger cap — real-dim 768 x 64-plane
+    signatures take the matmul form, which has no compile wall.
 
+    Pair stage, chosen from bucket density: with B = 2^(planes/bands)
+    buckets per band, the expected bucket holds n/B vectors. DENSE
+    buckets (n/B >= 8) mean many pairs per vector — the grouped Arrow
+    stage (`_grouped_pair_cosines`) moves each unit vector once per band
+    and replaces the interpreted collect_list/nested-transform explode +
+    distinct + two joins + per-pair fold with one NumPy pass per bucket
+    (bit-identical; group size bounded by max_bucket). SPARSE buckets
+    (e.g. 64-plane/16-bit bands at 10^4-10^5 vectors) mean candidates
+    are rare — shuffling every vector per band would dwarf the tiny pair
+    set, so the id-only candidate join (`_hyperplane_join_pairs`) stays
+    cheaper."""
     lo, hi, n = _corpus_dim(emb, vec_col)
     if dim is None:
         if lo != hi:
@@ -813,48 +796,24 @@ def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
             f"hyperplane dim {dim} exceeds corpus embedding dim "
             f"{hi}; pass dim<={hi} or dim=None to derive")
     banded = hyperplane_banded_buckets(emb, num_planes, bands, dim,
-                                       key, vec_col, engine=engine)
+                                       key, vec_col)
     capped = _cap_hot_keys(banded, ["band", "bucket"], max_bucket)
+    # cached: joined on both pair sides (or once per band, grouped)
     unit = register_cache(_unit_vectors(emb, key, vec_col).cache())
-    # pair-engine density dial (r7): with B = 2^(planes/bands) buckets
-    # per band, the expected bucket holds n/B vectors. DENSE buckets
-    # (n/B >= 8) mean many pairs per vector — the grouped Arrow stage
-    # (_grouped_pair_cosines) moves each unit vector once per band and
-    # replaces the interpreted collect_list/nested-transform explode +
-    # distinct + two joins + per-pair fold with one NumPy pass per
-    # bucket (bit-identical; group size bounded by max_bucket). SPARSE
-    # buckets (e.g. 64-plane/16-bit bands at 10^4-10^5 vectors) mean
-    # candidates are rare — shuffling every vector per band would dwarf
-    # the tiny pair set, so the id-only candidate join stays cheaper.
-    rpb = num_planes // bands
-    if pair_engine == "auto":
-        pair_engine = "grouped" if n >= (1 << rpb) * 8 else "join"
-    if pair_engine == "grouped":
-        tagged = capped.join(unit.withColumnRenamed(key, "k"), "k") \
-            if key != "k" else capped.join(unit, "k")
-        # NULL uvecs (a NULL embedding survives _unit_vectors as NULL)
-        # contribute no surviving pair on the join path (NULL-poisoned
-        # dots fail the threshold); drop them here so the grouped stage
-        # matches exactly instead of crashing on len(None)
-        tagged = tagged.filter(F.col("uvec").isNotNull())
-        return _grouped_pair_cosines(tagged, ["band", "bucket"], threshold)
-    if pair_engine != "join":
-        raise ValueError(f"unknown pair_engine: {pair_engine!r}")
-    buckets = (
-        capped.groupBy("band", "bucket")
-        .agg(F.collect_list("k").alias("ks"))
-        .filter(F.size("ks") >= 2)
-    )
-    cand = buckets.select(
-        F.explode(F.flatten(F.transform(
-            F.col("ks"),
-            lambda x: F.transform(
-                F.filter(F.col("ks"), lambda y: y > x),
-                lambda y: F.struct(x.alias("vec_a"), y.alias("vec_b")),
-            ),
-        ))).alias("p")
-    ).select("p.vec_a", "p.vec_b").distinct()
-    # cached: joined on both pair sides
+    if n >= (1 << (num_planes // bands)) * 8:
+        return _grouped_pair_cosines(
+            capped.join(unit.withColumnRenamed(key, "k"), "k"), "k",
+            ["band", "bucket"], threshold)
+    return _hyperplane_join_pairs(capped, unit, key, threshold)
+
+
+def _hyperplane_join_pairs(capped: DataFrame, unit: DataFrame, key: str,
+                           threshold: float) -> DataFrame:
+    """Pairs of (k, band, bucket) rows sharing a bucket, as an id-only
+    candidate set (`_bucket_pairs` + distinct) joined to the (key, uvec)
+    table on both sides and verified by one dot-product fold per pair."""
+    cand = _bucket_pairs(capped, ["band", "bucket"], "vec_a",
+                         "vec_b").distinct()
     return (
         cand.join(unit.select(F.col(key).alias("vec_a"),
                               F.col("uvec").alias("ua")), "vec_a")

@@ -125,15 +125,15 @@ def main() -> None:
 
     def hyperplane_matmul_768():
         """Bench-only entry (round-5 verdict #3): the hyperplane LSH MATMUL
-        tier at real embedding dims — 768 x 64 planes = 49k terms, past the
-        SQL tier's Janino compile wall, so `engine=auto` selects the
-        batched NumPy sign(V @ P.T) pandas tier. The corpus is the
-        embeddings table tiled x12 (cosine is tiling-invariant, so the
-        near-dup structure survives). Correctness for this tier is pinned
-        by the pure-NumPy reference parity test
-        (tests/test_similarity_kmeans.py), not a DuckDB oracle — float
-        matmul is not bit-reproducible in SQL, which is exactly why the
-        tier exists."""
+        form at real embedding dims — 768 x 64 planes = 49k terms, past
+        HYPERPLANE_SQL_TERM_LIMIT, so hyperplane_banded_buckets computes
+        the signs with one batched NumPy sign(V @ P.T) per Arrow batch.
+        The corpus is the embeddings table tiled x12 (cosine is
+        tiling-invariant, so the near-dup structure survives).
+        Correctness for this form is pinned by the pure-NumPy reference
+        parity test (tests/test_similarity_kmeans.py), not a DuckDB
+        oracle — a matmul's pairwise summation order is not the
+        oracle's left-associative sum."""
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
             spark.sparkContext.defaultParallelism, "vec_id")
         emb768 = emb.select(

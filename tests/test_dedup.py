@@ -40,9 +40,9 @@ def test_simhash_token_order_and_dup_invariant(spark):
     assert out[1] == out[2]
 
 
-def test_minhash_md5_and_xxhash64_find_same_pairs(spark):
-    """Hash choice is orthogonal to LSH semantics: both variants recover the
-    identical-document pair with est_jaccard 1.0."""
+def test_minhash_lsh_pairs_identical_docs(spark):
+    """Banded LSH over the md5 permutations recovers the
+    identical-document pair with est_jaccard 1.0 and nothing else."""
     base = "w%d " * 30
     rows = [
         (1, base % tuple(range(30))),
@@ -50,10 +50,9 @@ def test_minhash_md5_and_xxhash64_find_same_pairs(spark):
         (3, base % tuple(range(100, 130))),
     ]
     d = _docs(spark, rows)
-    for fn in ("md5", "xxhash64"):
-        got = {(r.doc_a, r.doc_b): r.est_jaccard
-               for r in dedup.minhash_lsh_pairs(d, hash_fn=fn).collect()}
-        assert got == {(1, 2): 1.0}, fn
+    got = {(r.doc_a, r.doc_b): r.est_jaccard
+           for r in dedup.minhash_lsh_pairs(d).collect()}
+    assert got == {(1, 2): 1.0}
 
 
 def test_hot_bucket_cap_drops_mega_buckets(spark):
@@ -66,12 +65,6 @@ def test_hot_bucket_cap_drops_mega_buckets(spark):
     assert dedup.shingle_pairs(d, max_bucket=5).count() == 0
     # with a generous cap the 10 identical docs pair up fully: C(10,2)
     assert dedup.shingle_pairs(d, max_bucket=64).count() == 45
-
-
-def test_minhash_bad_hash_fn_raises(spark):
-    d = _docs(spark, [(1, "a b c d")])
-    with pytest.raises(ValueError):
-        dedup.minhash_signatures(d, hash_fn="sha9000").collect()
 
 
 def test_exact_dedup_groups(spark):
@@ -391,8 +384,9 @@ def test_url_blocklist_suffix_semantics(spark):
 
 
 def test_minhash_signature_engines_identical(spark):
-    """r7 pin: the Arrow-batched minhash tier must emit byte-identical
-    signatures to the native-expression tier — including whitespace
+    """r7 pin: the Arrow-batched minhash_signatures must emit
+    byte-identical signatures to the native-expression reference
+    _minhash_signatures_sql — including whitespace
     edges (tabs/newlines/vertical tab, leading separators, unicode
     words) and the fewer-than-n-words row-drop."""
     rows = [
@@ -407,9 +401,9 @@ def test_minhash_signature_engines_identical(spark):
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     sql_rows = sorted((r.doc_id, tuple(r.signature)) for r in
-                      dedup.minhash_signatures(d, engine="sql").collect())
+                      dedup._minhash_signatures_sql(d).collect())
     pd_rows = sorted((r.doc_id, tuple(r.signature)) for r in
-                     dedup.minhash_signatures(d, engine="pandas").collect())
+                     dedup.minhash_signatures(d).collect())
     assert sql_rows == pd_rows
     assert {k for k, _ in sql_rows} == {1, 2, 6, 7, 8}
 
@@ -429,9 +423,25 @@ def test_shingle_stream_engines_identical(spark):
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     for n in (3, 8):
-        got = {}
-        for eng in ("sql", "pandas"):
-            pairs = dedup.shingle_pairs(d, n=n, min_shared=1, engine=eng)
-            got[eng] = sorted(tuple(r) for r in pairs.collect())
-            dedup.release_caches()
-        assert got["sql"] == got["pandas"], f"n={n}"
+        sql = sorted(tuple(r) for r in dedup._shingle_digest_stream_sql(
+            d, "doc_id", "text", n).collect())
+        arrow = sorted(tuple(r) for r in dedup._shingle_digest_stream_pandas(
+            d, "doc_id", "text", n).collect())
+        assert sql == arrow and sql, f"n={n}"
+
+
+def test_operators_take_no_tier_dials():
+    """Tiers are chosen from the input, never by the caller: no function
+    in the dedup or similarity operator modules may grow an engine /
+    pair_engine / hash_fn parameter again."""
+    import inspect
+
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import similarity
+
+    for mod in (dedup, similarity):
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if fn.__module__ != mod.__name__:
+                continue
+            params = set(inspect.signature(fn).parameters)
+            assert not params & {"engine", "pair_engine", "hash_fn"}, \
+                f"{mod.__name__}.{name}"

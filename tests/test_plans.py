@@ -140,11 +140,11 @@ def test_kmeans_training_plan_is_window_free(spark):
 
 
 def test_hyperplane_signatures_no_per_row_python_no_cartesian(spark):
-    """r7: the default signature tier is the vectorized Arrow "loop"
-    stage (bit-identical to the unrolled SQL sums — pinned separately);
-    the plan must contain exactly ONE vectorized Arrow eval for it,
-    never a row-at-a-time Python node, and the banded self-bucketing
-    must not be a cartesian. The sql tier stays fully JVM-side."""
+    """r7: signatures come from the vectorized Arrow "loop" stage
+    (bit-identical to the oracle's unrolled SQL sums — pinned
+    separately); the plan must contain at most ONE vectorized Arrow eval
+    for it, never a row-at-a-time Python node, and the banded
+    self-bucketing must not be a cartesian."""
     import re
 
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import (
@@ -157,11 +157,38 @@ def test_hyperplane_signatures_no_per_row_python_no_cartesian(spark):
     assert "CartesianProduct" not in plan
     assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) <= 1
     dedup.release_caches()
-    plan_sql = _plan(similarity.hyperplane_lsh_pairs(
-        emb, dim=64, engine="sql", pair_engine="join"))
-    assert "ArrowEvalPython" not in plan_sql
-    assert "BatchEvalPython" not in plan_sql
-    assert "MapInPandas" not in plan_sql
+
+
+def test_tier_selection_points_follow_the_input(spark):
+    """Each operator picks its tier from its input, so every selection
+    point is pinned through the plan it yields: the shingle digest
+    stream turns Arrow at n >= 5, IVF scoring at a seeded bank of
+    C >= 32, and the hyperplane pair stage turns grouped when buckets
+    are dense (n >= 8 x 2^(planes/bands) vectors)."""
+    import re
+
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import (
+        dedup, similarity,
+    )
+
+    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    assert "MapInPandas" not in _plan(dedup.shingle_pairs(d, n=4))
+    assert len(re.findall(r"^\(\d+\) MapInPandas",
+                          _plan(dedup.shingle_pairs(d, n=5)), re.M)) == 1
+    dedup.release_caches()
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    assert "MapInPandas" not in _plan(similarity.ivf_assign(emb, 8))
+    assert len(re.findall(r"^\(\d+\) MapInPandas",
+                          _plan(similarity.ivf_assign(emb, 40)), re.M)) == 1
+
+    n = emb.count()
+    assert n >= 8 * 2 ** (8 // 4)  # dense at 8 planes / 4 bands
+    assert "FlatMapGroupsInPandas" in _plan(similarity.hyperplane_lsh_pairs(
+        emb, dim=64, num_planes=8, bands=4))
+    assert n < 8 * 2 ** (32 // 4)  # sparse at the 32 / 4 default
+    assert "FlatMapGroupsInPandas" not in _plan(
+        similarity.hyperplane_lsh_pairs(emb, dim=64))
     dedup.release_caches()
 
 

@@ -212,8 +212,8 @@ def test_hyperplane_pandas_tier_matches_numpy_reference(spark):
 def test_hyperplane_pandas_tier_wide_band_no_overflow(spark):
     """ADVICE round-5 regression: 64 planes / 2 bands packs 32 sign bits
     per bucket — an int32 bucket column silently wrapped NEGATIVE past
-    bit 31 and diverged from the SQL tier's BIGINT buckets. The pandas
-    tier must emit int64 buckets that match the NumPy reference, and
+    bit 31 and diverged from the oracle's BIGINT buckets. The matmul
+    form must emit int64 buckets that match the NumPy reference, and
     rpb > 62 must fail loudly instead of overflowing BIGINT."""
     import numpy as np
     import pytest
@@ -229,8 +229,9 @@ def test_hyperplane_pandas_tier_wide_band_no_overflow(spark):
         rows.append((i, [float(x) for x in v]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
+    assert planes * dim > similarity.HYPERPLANE_SQL_TERM_LIMIT  # matmul form
     banded = similarity.hyperplane_banded_buckets(
-        emb, planes, bands, dim, "vec_id", "embedding", engine="pandas")
+        emb, planes, bands, dim, "vec_id", "embedding")
     got = banded.collect()
     assert banded.schema["bucket"].dataType.simpleString() == "bigint"
     assert all(r.bucket >= 0 for r in got)
@@ -245,7 +246,7 @@ def test_hyperplane_pandas_tier_wide_band_no_overflow(spark):
     assert {(r.k, r.band, r.bucket) for r in got} == ref
     with pytest.raises(ValueError, match="overflows the 63-bit bucket"):
         similarity.hyperplane_banded_buckets(
-            emb, 64, 1, dim, "vec_id", "embedding", engine="pandas")
+            emb, 64, 1, dim, "vec_id", "embedding")
     similarity.release_caches()
 
 
@@ -311,12 +312,13 @@ def test_hyperplane_mixed_dim_corpus_policy(spark):
 
 
 def test_pair_engines_bit_identical(spark):
-    """r7 pin: the grouped Arrow pair stage must emit EXACTLY the join
-    path's (vec_a, vec_b, cos_sim) rows — the NumPy accumulation replays
-    the JVM fold's left-associative IEEE sequence, so even the 6-dp
-    rounding boundaries cannot diverge. Pinned for both bucketing
-    families (banded hyperplane LSH and IVF), on a corpus with mixed
-    dims so the NULL-poisoned-pair drop semantics match too."""
+    """r7 pin: the grouped Arrow pair stage (_grouped_pair_cosines) must
+    emit EXACTLY the join path's (vec_a, vec_b, cos_sim) rows on the same
+    tagged input — the NumPy accumulation replays the JVM fold's
+    left-associative IEEE sequence, so even the 6-dp rounding
+    boundaries cannot diverge. Pinned for both bucketing families
+    (banded hyperplane LSH and IVF), on a corpus with mixed dims and a
+    NULL embedding so the NULL-poisoned-pair drop semantics match too."""
     import random
 
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import (
@@ -332,34 +334,40 @@ def test_pair_engines_bit_identical(spark):
             rows.append((1000 + i,
                          [x + rng.uniform(-0.05, 0.05) for x in base]))
     rows.append((5000, [1.0, 2.0]))  # short vector: mixed-dim corpus
-    rows.append((5001, None))          # NULL embedding: engines must agree
+    rows.append((5001, None))          # NULL embedding: paths must agree
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    unit = similarity._unit_vectors(emb, "vec_id", "embedding")
 
-    def run(fn, pe):
-        got = sorted((r.vec_a, r.vec_b, r.cos_sim) for r in fn(pe).collect())
-        dedup.release_caches()
-        return got
+    def run(df):
+        return sorted((r.vec_a, r.vec_b, r.cos_sim) for r in df.collect())
 
-    hp_join = run(lambda pe: similarity.hyperplane_lsh_pairs(
-        emb, threshold=0.30, dim=8, pair_engine=pe), "join")
-    hp_grp = run(lambda pe: similarity.hyperplane_lsh_pairs(
-        emb, threshold=0.30, dim=8, pair_engine=pe), "grouped")
+    capped = dedup._cap_hot_keys(similarity.hyperplane_banded_buckets(
+        emb, 32, 4, 8, "vec_id", "embedding"), ["band", "bucket"], 256)
+    hp_join = run(similarity._hyperplane_join_pairs(
+        capped, unit, "vec_id", 0.30))
+    hp_grp = run(similarity._grouped_pair_cosines(
+        capped.join(unit.withColumnRenamed("vec_id", "k"), "k"), "k",
+        ["band", "bucket"], 0.30))
     assert hp_join == hp_grp and len(hp_join) > 0
 
-    ivf_join = run(lambda pe: similarity.cosine_near_dup_pairs(
-        emb, threshold=0.30, pair_engine=pe), "join")
-    ivf_grp = run(lambda pe: similarity.cosine_near_dup_pairs(
-        emb, threshold=0.30, pair_engine=pe), "grouped")
+    tagged = unit.join(similarity.ivf_assign(emb, 8)
+                       .select("vec_id", "centroid_id"), "vec_id")
+    ivf_join = run(similarity._ivf_join_pairs(tagged, "vec_id", 0.30))
+    ivf_grp = run(similarity._grouped_pair_cosines(
+        tagged, "vec_id", ["centroid_id"], 0.30, dedup_pairs=False))
     assert ivf_join == ivf_grp and len(ivf_join) > 0
+    dedup.release_caches()
 
 
-def test_hyperplane_sql_and_loop_tiers_identical(spark):
-    """r7 pin: the Arrow "loop" signature tier replays the unrolled SQL
-    sum's left-associative IEEE sequence exactly, so every (k, band,
-    bucket) row must be bit-identical to the sql tier — including
-    zero-padded short vectors and adversarial values that sit near
-    sign boundaries."""
+def test_hyperplane_loop_tier_matches_duckdb_signature_sql(spark):
+    """r7 pin: the exact "loop" signature form replays the unrolled
+    signature_sql sum's left-associative IEEE sequence, so every (k,
+    band, bucket) row must be bit-identical to DuckDB running the
+    oracle's generated SQL — including zero-padded short vectors, a
+    NULL cell, and adversarial values that sit near sign boundaries."""
     import random
+
+    import duckdb
 
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import similarity
 
@@ -373,22 +381,36 @@ def test_hyperplane_sql_and_loop_tiers_identical(spark):
     rows.append((50_000, [0.0] * 16))                    # exact-zero dots
     rows.append((50_001, [1.0, -1.0] * 8))
     rows.append((50_002, [0.5, 0.25]))                   # short: zero-pad
-    rows.append((50_003, None))  # NULL cell: sql coalesces to the zero row
+    rows.append((50_003, None))  # NULL cell: coalesces to the zero row
+    planes, bands, dim = 32, 4, 16
+    assert planes * dim <= similarity.HYPERPLANE_SQL_TERM_LIMIT  # loop form
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {}
-    for eng in ("sql", "loop"):
-        b = similarity.hyperplane_banded_buckets(
-            emb, 32, 4, 16, "vec_id", "embedding", engine=eng)
-        got[eng] = sorted((r.k, r.band, r.bucket) for r in b.collect())
-    assert got["sql"] == got["loop"]
+    b = similarity.hyperplane_banded_buckets(
+        emb, planes, bands, dim, "vec_id", "embedding")
+    got = sorted((r.k, r.band, r.bucket) for r in b.collect())
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    sig = similarity.signature_sql(planes, dim,
+                                   "CAST(embedding[{i}] AS DOUBLE)")
+    rpb = planes // bands
+    ref = sorted((k, band, (s >> (band * rpb)) & ((1 << rpb) - 1))
+                 for k, s in con.execute(
+                     f"SELECT vec_id, ({sig}) FROM t").fetchall()
+                 for band in range(bands))
+    con.close()
+    assert got == ref
 
 
 def test_ivf_assign_engines_identical(spark):
-    """r7 pin: the Arrow scoring tier of ivf_assign must reproduce the
-    expression tier exactly — same rounded sims and argmax winners —
-    including length-mismatched vectors (NULL-poisoned sims); a
-    zero-norm vector must FAIL on both engines (the expression tier
-    raises DIVIDE_BY_ZERO under ANSI mode)."""
+    """r7 pin: the Arrow scorer of ivf_assign (_ivf_scores_arrow) must
+    reproduce the expression scorer (_ivf_scores_sql) exactly — same
+    rounded sims — including length-mismatched vectors and NULL
+    embeddings (NULL-poisoned sims) and a NULL SEED centroid, which
+    scores NULL against every vector; a zero-norm vector must FAIL on
+    both scorers (the expression tier raises DIVIDE_BY_ZERO under ANSI
+    mode)."""
     import random
 
     import pytest
@@ -397,19 +419,27 @@ def test_ivf_assign_engines_identical(spark):
 
     rng = random.Random(3)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(12)]) for i in range(200)]
+    rows[5] = (5, None)                # NULL seed centroid (vec_id < 40)
     rows.append((301, [1.0, 2.0]))     # length mismatch vs centroids
     rows.append((302, None))           # NULL embedding -> NULL sim row
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {}
-    for eng in ("sql", "arrow"):
-        got[eng] = sorted(
-            tuple(r) for r in
-            similarity.ivf_assign(emb, 40, engine=eng).collect())
-    assert got["sql"] == got["arrow"]
+
+    def scores(score, df):
+        cents = similarity.seed_centroids(df, 40)
+        return score(df, cents, "vec_id", "embedding")
+
+    got = {score: sorted(tuple(r) for r in scores(score, emb).collect())
+           for score in (similarity._ivf_scores_sql,
+                         similarity._ivf_scores_arrow)}
+    assert got[similarity._ivf_scores_sql] == \
+        got[similarity._ivf_scores_arrow]
+    assert len(got[similarity._ivf_scores_sql]) == len(rows) * 40
+    # C = 40 seeded picks the Arrow scorer; every vector still gets a row
+    assert similarity.ivf_assign(emb, 40).count() == len(rows)
 
     zero = spark.createDataFrame(
         [(i, [float(i == j) for j in range(8)]) for i in range(40)]
         + [(100, [0.0] * 8)], "vec_id long, embedding array<double>")
-    for eng in ("sql", "arrow"):
+    for score in (similarity._ivf_scores_sql, similarity._ivf_scores_arrow):
         with pytest.raises(Exception, match="[Dd]ivi"):
-            similarity.ivf_assign(zero, 40, engine=eng).collect()
+            scores(score, zero).collect()
