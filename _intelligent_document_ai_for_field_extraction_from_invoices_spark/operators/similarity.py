@@ -216,10 +216,11 @@ def _ivf_scores_arrow(emb: DataFrame, cents: DataFrame, key: str,
     that replay the JVM `cosine_col` fold EXACTLY — dot and both norm
     folds are left-associative over j, sqrt is IEEE-correctly-rounded in
     both runtimes, and the denominator multiplies norms before the
-    divide in the same order. Length-mismatched (vector, centroid) pairs and NULL
-    vectors or centroids emit NULL, replicating zip_with's NULL
-    poisoning. Rounding to 6 dp stays in Spark (HALF_UP). Bit-equality
-    with `_ivf_scores_sql` is pinned by tests/test_similarity_kmeans.py."""
+    divide in the same order. Length-mismatched (vector, centroid) pairs,
+    NULL vectors and NULL centroids (or ones with a NULL element) emit
+    NULL, replicating zip_with's NULL poisoning. Rounding to 6 dp stays
+    in Spark (HALF_UP). Bit-equality with `_ivf_scores_sql` is pinned by
+    tests/test_similarity_kmeans.py."""
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.types import DoubleType  # noqa: PLC0415
 
@@ -227,7 +228,8 @@ def _ivf_scores_arrow(emb: DataFrame, cents: DataFrame, key: str,
                         StructField("centroid_id",
                                     cents.schema["centroid_id"].dataType),
                         StructField("_raw", DoubleType())])
-    cents = [(cid, None if cv is None else [float(x) for x in cv])
+    cents = [(cid, None if cv is None or None in cv
+              else [float(x) for x in cv])
              for cid, cv in cents.collect()]
     cid_list = [cid for cid, _ in cents]
     n_cents = len(cents)

@@ -73,7 +73,9 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
+import unicodedata
 import urllib.parse
 import uuid
 
@@ -144,6 +146,21 @@ def _pvalue(v) -> str:
     if isinstance(v, str):
         return v
     raise TypeError(f"unsupported partition predicate value: {v!r}")
+
+
+def _uri_path(path: str) -> str:
+    """`path` as Spark's input_file_name() spells it after the scheme —
+    Hadoop's `Path(path).toUri().getRawPath()`, i.e. java.net.URI path
+    quoting: URI-legal characters ('+' included) stay, other ASCII is
+    %XX-escaped (space as %20, '%' as %25), and non-ASCII stays raw unless
+    it is a Unicode space or control."""
+    def esc(m):
+        c = m.group()
+        if c.isascii() or unicodedata.category(c) in ("Zs", "Zl", "Zp", "Cc"):
+            return urllib.parse.quote(c, safe="")
+        return c
+
+    return re.sub(r"[^A-Za-z0-9\-_.!~*'():@&=+$,;/]", esc, path)
 
 
 _RANGE_OPS = {">=", "<=", ">", "<"}
@@ -1437,6 +1454,58 @@ class Catalog:
                 F, df, k, _normalize_stats_pred(spec)))
         return df
 
+    def _commit_delta(self, table: str, since: int,
+                      until: int) -> list[tuple[str, int, str | None]]:
+        """The data files ADDED by the commits in `(since, until]`, as
+        (absolute path, version, txn): the one commit-delta rule behind
+        `read_incremental` and the catalog_cdc stream. `compact` adds
+        nothing; `overwrite` is accepted only as table creation; any other
+        operation removes rows and raises ValueError; a vacuum-expired
+        version raises FileNotFoundError. An append added the files of its
+        entries the parent does not list, minus the files of the parent's
+        entries it no longer lists (`_maybe_merge` folds those into its new
+        manifest). Appends never remove files, so the rule is exact, and
+        only new and folded-away manifests are opened, each once. A legacy
+        entry (manifest None, inline rows) is parent state if the parent
+        has one."""
+        if not 0 <= since <= until:
+            raise ValueError(f"need 0 <= since ({since}) <= until ({until})")
+        opened: dict[str | None, set[str]] = {}
+
+        def files(entries) -> set[str]:
+            out: set[str] = set()
+            for e in entries:
+                key = e.get("manifest")
+                if key is None or key not in opened:  # None: inline rows
+                    opened[key] = {r["path"] for r in self._read_manifest(e)}
+                out |= opened[key]
+            return out
+
+        prev = self._snap(table, since) if since else None
+        delta: list[tuple[str, int, str | None]] = []
+        for v in range(since + 1, until + 1):
+            snap = self._snap(table, v)
+            op = snap.get("operation")
+            if op != "compact":
+                if op != "append" and not (op == "overwrite"
+                                           and prev is None):
+                    raise ValueError(
+                        f"version {v} of {table!r} is a '{op}' commit, "
+                        "which removes rows — an added-rows feed cannot "
+                        "express it; re-read the table (or restart the "
+                        "stream from a fresh sinceversion) instead")
+                parent = {e.get("manifest"): e
+                          for e in (prev["manifests"] if prev else [])}
+                child = {e.get("manifest") for e in snap["manifests"]}
+                added = files(e for e in snap["manifests"]
+                              if e.get("manifest") not in parent)
+                added -= files(e for k, e in parent.items()
+                               if k not in child)
+                delta.extend((os.path.abspath(p), v, snap.get("txn"))
+                             for p in sorted(added))
+            prev = snap
+        return delta
+
     def read_incremental(self, spark: SparkSession, table: str,
                          since_version: int,
                          until_version: int | None = None) -> DataFrame:
@@ -1447,92 +1516,43 @@ class Catalog:
         consumer catch up on a table without re-reading it. `since_version
         = 0` streams the full history from table creation.
 
-        Semantics per commit operation: `append` contributes its NEW
-        manifest entries' files (manifest files are immutable and appends
-        keep the parent's entries untouched, so the entry-path diff is
-        exact and opens only the delta's manifests — O(new entries), not
-        O(table)); `compact` is logically a no-op and contributes nothing;
-        `overwrite` and `rollback` REMOVE rows, which an added-rows feed
-        cannot express — they raise ValueError so a consumer can fall back
-        to a full re-read instead of silently missing deletions. A
-        vacuum-expired version inside the range raises FileNotFoundError
-        (the delta is no longer reconstructible; re-read instead).
-
-        Scale shape: the range walk is metadata-only (one version json per
-        commit + only the NEW manifests), the whole delta reads as ONE
-        parquet relation under the until-snapshot's recorded schema (plan
-        size independent of the commit count — no per-commit union), and
-        the file->commit tag map joins via a broadcast on the normalized
-        input file name."""
+        Which files each commit added is `_commit_delta`'s rule: compact
+        adds nothing, an overwrite/rollback in range raises ValueError (fall
+        back to a full re-read), a vacuum-expired version FileNotFoundError.
+        The delta reads as ONE parquet relation under the until-snapshot's
+        recorded schema (no per-commit union); the file->commit tag map
+        joins by broadcast on the file name as input_file_name() spells it
+        (`_uri_path`), and a row whose file has no tag fails the query."""
         from pyspark.sql import functions as F  # noqa: PLC0415
 
         until = (until_version if until_version is not None
                  else self._current_version(table))
-        if since_version < 0 or since_version > until:
-            raise ValueError(
-                f"read_incremental: need 0 <= since ({since_version}) "
-                f"<= until ({until})")
+        fmap = self._commit_delta(table, since_version, until)
         snap_u = self._snap(table, until) if until else None
         schema = None
         if snap_u and snap_u.get("schema"):
             from pyspark.sql.types import StructType  # noqa: PLC0415
 
             schema = StructType.fromJson(json.loads(snap_u["schema"]))
-
-        def _entry_keys(snap: dict | None) -> set:
-            if snap is None:
-                return set()
-            return {e.get("manifest") for e in snap["manifests"]}
-
-        def _empty() -> DataFrame:
-            if schema is not None:
-                base = spark.createDataFrame([], schema)
-            else:
-                base = spark.range(0).drop("id")
-            return (base
-                    .withColumn("_commit_version",
-                                F.lit(None).cast("int"))
-                    .withColumn("_commit_txn",
-                                F.lit(None).cast("string")))
-
-        if since_version == until:
-            return _empty()
-        prev = self._snap(table, since_version) if since_version else None
-        fmap: list[tuple[str, int, str | None]] = []
-        for v in range(since_version + 1, until + 1):
-            snap = self._snap(table, v)
-            op = snap.get("operation")
-            if op == "compact":
-                prev = snap
-                continue
-            if op != "append" and not (op == "overwrite"
-                                       and prev is None):
-                raise ValueError(
-                    f"read_incremental: version {v} of {table!r} is a "
-                    f"'{op}' commit, which removes rows — an added-rows "
-                    "feed cannot express it; re-read the table instead")
-            seen = _entry_keys(prev)
-            for e in snap["manifests"]:
-                # manifest==None only on upgraded legacy snapshots; such
-                # an entry can only be PARENT state (appends write real
-                # manifest files), so the None key in `seen` handles it
-                if e.get("manifest") in seen:
-                    continue
-                for r in self._read_manifest(e):
-                    fmap.append((os.path.abspath(r["path"]), v,
-                                 snap.get("txn")))
-            prev = snap
         if not fmap:
-            return _empty()
+            base = (spark.createDataFrame([], schema) if schema is not None
+                    else spark.range(0).drop("id"))
+            return base.select(
+                "*", F.lit(None).cast("int").alias("_commit_version"),
+                F.lit(None).cast("string").alias("_commit_txn"))
         reader = spark.read.schema(schema) if schema is not None \
             else spark.read
         df = reader.parquet(*sorted(p for p, _, _ in fmap))
         tags = spark.createDataFrame(
-            fmap, "_path string, _commit_version int, _commit_txn string")
-        norm = F.url_decode(
-            F.regexp_replace(F.input_file_name(), "^[a-z]+:/+", "/"))
-        return (df.withColumn("_path", norm)
-                .join(F.broadcast(tags), "_path")
+            [(_uri_path(p), v, txn) for p, v, txn in fmap],
+            "_path string, _commit_version int, _commit_txn string")
+        path = F.regexp_replace(F.input_file_name(), "^[a-z]+:/+", "/")
+        untagged = F.raise_error(F.concat(
+            F.lit("read_incremental: no commit tag for "), F.col("_path")))
+        return (df.withColumn("_path", path)
+                .join(F.broadcast(tags), "_path", "left")
+                .withColumn("_commit_version",
+                            F.coalesce("_commit_version", untagged))
                 .drop("_path"))
 
     @staticmethod

@@ -12,10 +12,9 @@ Built on PySpark 4's Python DataSource API (pyspark.sql.datasource — a
 public, documented extension point). Batches are yielded as Arrow
 RecordBatches, so rows never materialize through Python objects.
 
-Semantics (mirroring read_incremental):
-- `append` commits contribute their NEW manifest entries' files
-  (manifest files are immutable; the entry-path diff opens only the
-  delta's manifests — O(new entries) metadata per batch).
+Semantics (one rule shared with read_incremental, `Catalog._commit_delta`):
+- `append` commits contribute the data files they added (data files are
+  diffed against the parent, so a manifest merge never re-delivers rows).
 - `compact` commits are logically no-ops and contribute nothing.
 - `overwrite`/`rollback` REMOVE rows — the stream fails loudly instead
   of silently missing deletions (restart with a fresh `sinceversion`
@@ -37,7 +36,6 @@ StreamingQuery progress events.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -91,33 +89,9 @@ class CatalogCdcStreamReader(DataSourceStreamReader):
                 Catalog(self._root)._current_version(self._table)}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        cat = Catalog(self._root)
-        a, b = int(start["version"]), int(end["version"])
-        prev = cat._snap(self._table, a) if a else None
-        out: list[InputPartition] = []
-        for v in range(a + 1, b + 1):
-            snap = cat._snap(self._table, v)
-            op = snap.get("operation")
-            if op == "compact":
-                prev = snap
-                continue
-            if op != "append" and not (op == "overwrite"
-                                       and prev is None):
-                raise ValueError(
-                    f"catalog_cdc: version {v} of {self._table!r} is a "
-                    f"'{op}' commit, which removes rows — an append feed "
-                    "cannot express it; restart the stream with a fresh "
-                    "sinceversion")
-            seen = {e.get("manifest")
-                    for e in (prev["manifests"] if prev else [])}
-            for e in snap["manifests"]:
-                if e.get("manifest") in seen:
-                    continue
-                for r in cat._read_manifest(e):
-                    out.append(_FileSlice(os.path.abspath(r["path"]), v,
-                                          snap.get("txn")))
-            prev = snap
-        return out
+        delta = Catalog(self._root)._commit_delta(
+            self._table, int(start["version"]), int(end["version"]))
+        return [_FileSlice(path, v, txn) for path, v, txn in delta]
 
     def read(self, partition: _FileSlice):
         # executor-side: one parquet file -> Arrow batches + commit tags;

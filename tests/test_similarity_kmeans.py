@@ -407,10 +407,10 @@ def test_ivf_assign_engines_identical(spark):
     """r7 pin: the Arrow scorer of ivf_assign (_ivf_scores_arrow) must
     reproduce the expression scorer (_ivf_scores_sql) exactly — same
     rounded sims — including length-mismatched vectors and NULL
-    embeddings (NULL-poisoned sims) and a NULL SEED centroid, which
-    scores NULL against every vector; a zero-norm vector must FAIL on
-    both scorers (the expression tier raises DIVIDE_BY_ZERO under ANSI
-    mode)."""
+    embeddings (NULL-poisoned sims) and a NULL SEED centroid or one with
+    a NULL element, which scores NULL against every vector; a zero-norm
+    vector must FAIL on both scorers (the expression tier raises
+    DIVIDE_BY_ZERO under ANSI mode)."""
     import random
 
     import pytest
@@ -420,6 +420,7 @@ def test_ivf_assign_engines_identical(spark):
     rng = random.Random(3)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(12)]) for i in range(200)]
     rows[5] = (5, None)                # NULL seed centroid (vec_id < 40)
+    rows[6][1][3] = None               # NULL element in a seed centroid
     rows.append((301, [1.0, 2.0]))     # length mismatch vs centroids
     rows.append((302, None))           # NULL embedding -> NULL sim row
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")

@@ -808,10 +808,14 @@ def test_commit_crash_injection_invariants(spark, tmp_path):
 # -- incremental (CDC-style) reads ------------------------------------------
 
 
-def test_read_incremental_appends_tagged_by_commit(spark, tmp_path):
+def test_read_incremental_appends_tagged_by_commit(spark, tmp_path,
+                                                  monkeypatch):
     """(since, until] append deltas come back exactly once, tagged with
     the committing version + txn; since=0 streams the full history;
-    since==until (and polling an absent table) is an empty feed."""
+    since==until (and polling an absent table) is an empty feed; a row
+    whose file name matches no commit tag fails the read."""
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources import tables as T
+
     cat = Catalog(str(tmp_path))
     assert cat.read_incremental(spark, "t", 0).count() == 0  # pre-creation
     v1 = cat.overwrite("t", spark.range(3).withColumn("v", F.col("id")))
@@ -831,6 +835,23 @@ def test_read_incremental_appends_tagged_by_commit(spark, tmp_path):
     assert cat.read_incremental(spark, "t", v3, v3).count() == 0
     with pytest.raises(ValueError):
         cat.read_incremental(spark, "t", v3 + 1)
+    monkeypatch.setattr(T, "_uri_path", lambda p: p + "#")
+    with pytest.raises(Exception, match="no commit tag"):
+        cat.read_incremental(spark, "t", v1).collect()
+
+
+def test_uri_path_matches_hadoop_spelling(spark):
+    """read_incremental tags rows by matching input_file_name() against
+    `_uri_path`, so it must spell every path exactly as Hadoop's
+    Path.toUri().getRawPath() does: '+' kept, space/'%'/'#' escaped,
+    non-ASCII raw except Unicode spaces and controls."""
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources import tables as T
+
+    odd = " +%#?[]{}^`|\\\"<>;,=&$@:!~*'()\t\x7fé\u00a0\x85\u2028中😀"
+    hadoop = spark._jvm.org.apache.hadoop.fs.Path
+    for c in odd:
+        p = f"/cat/a{c}b/part-0.parquet"
+        assert T._uri_path(p) == hadoop(p).toUri().getRawPath(), repr(c)
 
 
 def test_read_incremental_skips_compact_rejects_removals(spark, tmp_path):
@@ -853,53 +874,85 @@ def test_read_incremental_skips_compact_rejects_removals(spark, tmp_path):
         cat.read_incremental(spark, "t", v4, v5)
 
 
-def test_read_incremental_random_histories_match_model(spark, tmp_path):
-    """Model-based check: random append/compact histories -> every
-    (since, until) window's incremental read equals the model's 'rows
-    added by appends in range', tagged with the right commit version;
-    windows crossing an overwrite raise."""
+@pytest.mark.parametrize("root", ["plain", "x+y z%25"],
+                         ids=["plain", "plus_space_pct"])
+def test_read_incremental_random_histories_match_model(spark, tmp_path,
+                                                       monkeypatch, root):
+    """Model-based check: a random append/compact history long enough to
+    merge manifests (MERGE_MIN + 2 appends in a row) -> every (since,
+    until) window's incremental read AND the catalog_cdc reader's file
+    slices equal the model's 'rows added by appends in range', each row
+    once, tagged with its commit version and txn — also under a catalog
+    root whose name Spark's file URIs spell differently ('+', space, '%').
+    An append-only window opens only the manifests that are new in it or
+    that its merges folded away, each once."""
     import random
 
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources import tables as T
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.streaming.cdc_source import (
+        CatalogCdcDataSource,
+    )
+
     rng = random.Random(20260817)
-    next_id = [0]
-
-    def fresh_rows(n):
-        ids = list(range(next_id[0], next_id[0] + n))
-        next_id[0] += n
-        return ids
-
-    cat = Catalog(str(tmp_path))
-    # model: version -> (op, ids-added)
-    history = {}
-    v = cat.overwrite("t", spark.range(0, 4).withColumn(
-        "v", F.col("id")))
-    history[v] = ("overwrite", list(range(4)))
-    next_id[0] = 4
-    for step in range(8):
-        op = rng.choice(["append", "append", "append", "compact"])
+    cat = Catalog(str(tmp_path / root))
+    # model: version -> (op, ids added, txn)
+    history = {cat.overwrite("t", spark.range(0, 4).withColumn(
+        "v", F.col("id"))): ("overwrite", list(range(4)), None)}
+    next_id = 4
+    plan = ([rng.choice(["append", "compact"]) for _ in range(3)]
+            + ["append"] * (T.MERGE_MIN + 2) + ["compact"]
+            + [rng.choice(["append", "append", "compact"]) for _ in range(3)])
+    for step, op in enumerate(plan):
         if op == "append":
-            ids = fresh_rows(rng.randint(1, 5))
+            ids = list(range(next_id, next_id + rng.randint(1, 5)))
+            next_id += len(ids)
             df = spark.createDataFrame([(i, i) for i in ids],
                                        "id long, v long")
             v = cat.append("t", df, txn=f"s{step}")
-            history[v] = ("append", ids)
+            history[v] = ("append", ids, f"s{step}")
         else:
             cv = cat.compact(spark, "t")["version"]
             if cv is not None:  # no-op compact (already right-sized)
-                history[cv] = ("compact", [])
-    versions = sorted(history)
-    for _ in range(12):
-        a, b = sorted(rng.sample(versions, 2))
-        window_ops = [history[x][0] for x in versions if a < x <= b]
-        if "overwrite" in window_ops:
-            with pytest.raises(ValueError):
-                cat.read_incremental(spark, "t", a, b).collect()
-            continue
-        expect = {}
-        for x in versions:
-            if a < x <= b and history[x][0] == "append":
-                for i in history[x][1]:
-                    expect[i] = x
-        got = {r.id: r._commit_version
-               for r in cat.read_incremental(spark, "t", a, b).collect()}
+                history[cv] = ("compact", [], None)
+    versions = [0] + sorted(history)
+    manifests = {0: set()} | {
+        x: {e["manifest"] for e in cat._snap("t", x)["manifests"]}
+        for x in versions[1:]}
+    merges = [x for x in versions[2:] if history[x][0] == "append"
+              and len(manifests[x]) <= len(manifests[x - 1])]
+    assert merges  # the history really folded manifests
+
+    opened = []
+    read_manifest = Catalog._read_manifest
+
+    def counted_read_manifest(self, entry):
+        opened.append(entry["manifest"])
+        return read_manifest(self, entry)
+
+    monkeypatch.setattr(Catalog, "_read_manifest", counted_read_manifest)
+    source = CatalogCdcDataSource({"path": cat.root, "table": "t"})
+    reader = source.streamReader(source.schema())
+    m = merges[0]
+    windows = [(0, versions[-1]), (m - 1, m), (m - 2, m + 1)] + [
+        tuple(sorted(rng.sample(versions, 2))) for _ in range(12)]
+    for a, b in windows:
+        expect = sorted((i, x, history[x][2]) for x in versions
+                        if a < x <= b and history[x][0] != "compact"
+                        for i in history[x][1])
+        opened.clear()
+        delta = cat.read_incremental(spark, "t", a, b)
+        if all(history[x][0] == "append" for x in versions if a < x <= b):
+            touched = set().union(*(manifests[x] for x in versions
+                                    if a <= x <= b))
+            assert sorted(opened) == sorted(
+                touched - (manifests[a] & manifests[b])), (a, b)
+        got = sorted((r.id, r._commit_version, r._commit_txn)
+                     for r in delta.collect())
         assert got == expect, (a, b)
+        slices = reader.partitions({"version": a}, {"version": b})
+        assert len({s.path for s in slices}) == len(slices), (a, b)
+        streamed = sorted(
+            row for s in slices for batch in reader.read(s)
+            for row in zip(*(batch.column(c).to_pylist() for c in
+                             ("id", "_commit_version", "_commit_txn"))))
+        assert streamed == expect, (a, b)
