@@ -6,10 +6,13 @@
 - SimHash: 64-bit sign-aggregated token hashes — fully native exprs
   (explode tokens -> 64 conditional sums; no Python in the hot path)
 
-All shuffle keys are digests (uniform — no skew); small sides broadcast.
-At 100 TB the shingle index is the big shuffle: keys are md5 digests so the
-hash partitioning is balanced by construction, and frequent-shingle hubs are
-capped (`max_bucket`) exactly like LSH implementations cap hot buckets.
+Every bucket -> pairs step (shingle index, MinHash and SimHash bands, and
+the two embedding families in similarity.py) is one primitive,
+`_self_join_pairs`: an equi self-join on the bucket key that carries an
+optional payload to the caller's verify expression. Hot buckets are capped
+(`max_bucket`) before that join, exactly like LSH implementations cap them;
+at 100 TB the shingle index is the big shuffle, and its md5-digest keys
+hash-partition evenly by construction.
 
 The cap itself is skew-safe: over-cap keys are found with a map-side-combined
 ``groupBy().count()`` and removed via a broadcast anti-join — never with an
@@ -196,25 +199,31 @@ def _shingle_digest_stream_pandas(df: DataFrame, key: str | None,
         .mapInPandas(run, schema=f"k {kt}, sh string")
 
 
-def _bucket_pairs(df: DataFrame, group_cols: list[str], a: str,
-                  b: str) -> DataFrame:
-    """(a, b) id pairs with a < b for every two `k` values sharing a
-    group: one `collect_list` per group, then a native nested-transform
-    upper-triangle explode. The caller bounds the group size first
-    (`_cap_hot_keys`), so the collect_list never buffers a hot key."""
-    buckets = (
-        df.groupBy(*group_cols).agg(F.collect_list("k").alias("ks"))
-        .filter(F.size("ks") >= 2)
+def _self_join_pairs(df: DataFrame, k: str, group_cols: list[str],
+                     payload: str | None = None) -> DataFrame:
+    """(a, b) for every two rows of `df` that share all `group_cols`, with
+    a < b on column `k` — plus (pa, pb), each side's `payload` column,
+    when one is given. One equi-join on the group columns: the pairs
+    stream out of the join, and a payload rides along without buffering
+    a group. Callers bound hot groups first (`_cap_hot_keys`) and own the
+    verify expression, the threshold and any cross-band distinct."""
+    def side(s: str, c: str):
+        return F.col(f"{s}.{_bq(c)}")
+
+    cols = [side("l", k).alias("a"), side("r", k).alias("b")]
+    if payload is not None:
+        cols += [side("l", payload).alias("pa"),
+                 side("r", payload).alias("pb")]
+    # a < b as a filter, not a join condition: Spark then tests it
+    # before the caller's verify expression, so the verify runs on each
+    # unordered pair once instead of on every ordered one
+    return (
+        df.alias("l")
+        .join(df.alias("r"), [side("l", g) == side("r", g)
+                              for g in group_cols])
+        .filter(side("l", k) < side("r", k))
+        .select(*cols)
     )
-    return buckets.select(
-        F.explode(F.flatten(F.transform(
-            F.col("ks"),
-            lambda x: F.transform(
-                F.filter(F.col("ks"), lambda y: y > x),
-                lambda y: F.struct(x.alias(a), y.alias(b)),
-            ),
-        ))).alias("p")
-    ).select(f"p.{a}", f"p.{b}")
 
 
 def shingle_pairs(df: DataFrame, key: str = "doc_id", text_col: str = "text",
@@ -222,12 +231,11 @@ def shingle_pairs(df: DataFrame, key: str = "doc_id", text_col: str = "text",
                   max_bucket: int = 64) -> DataFrame:
     """Candidate near-dup pairs sharing >= min_shared distinct n-gram shingles.
 
-    Inverted index WITHOUT a self-join: after the hot-shingle cap, each
-    bucket holds <= max_bucket doc ids, so the pair set is generated
-    in-bucket from one `collect_list` (nested array transforms, native) —
-    one full shuffle of the shingle stream instead of two join sides, and
-    no reliance on caching the stream. The cap (`_cap_hot_keys`) is what
-    makes the collect_list safe: bucket size is bounded BEFORE buffering.
+    Inverted index as a self-join (`_self_join_pairs`) on the shingle
+    digest, counted per pair: the hot-shingle cap (`_cap_hot_keys`)
+    drops shingles shared by more than max_bucket docs first, so no
+    bucket contributes more than max_bucket^2/2 pairs, and the cap's
+    cache lets both join sides read the stream once.
 
     The digest stream's tier follows from `n`: the interpreted zip_with
     chain costs ~(n-1) array passes per doc, so long shingles (n >= 5)
@@ -239,8 +247,9 @@ def shingle_pairs(df: DataFrame, key: str = "doc_id", text_col: str = "text",
               else _shingle_digest_stream_sql)
     capped = _cap_hot_keys(stream(df, key, text_col, n), ["sh"], max_bucket)
     return (
-        _bucket_pairs(capped, ["sh"], "doc_a", "doc_b")
-        .groupBy("doc_a", "doc_b").agg(F.count("*").alias("n_shared"))
+        _self_join_pairs(capped, "k", ["sh"])
+        .groupBy(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
+        .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
 
@@ -634,19 +643,16 @@ def minhash_lsh_pairs(df: DataFrame, key: str = "doc_id",
     # _cap_hot_keys caches its input, so both self-join sides reuse the
     # banded signature pipeline rather than recomputing it
     banded = _cap_hot_keys(banded, ["band", "bucket"], max_bucket)
-    a, b = banded.alias("a"), banded.alias("b")
     matches = F.size(F.filter(
-        F.zip_with(F.col("a.signature"), F.col("b.signature"),
-                   lambda x, y: x == y), lambda v: v
+        F.zip_with(F.col("pa"), F.col("pb"), lambda x, y: x == y),
+        lambda v: v
     ))
     # est_jaccard is a pure function of the pair, so filtering BEFORE the
     # dropDuplicates shuffle is equivalent — and the dedup then only carries
     # surviving pairs instead of every band collision
     return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.k") < F.col("b.k")))
-        .select(F.col("a.k").alias("doc_a"), F.col("b.k").alias("doc_b"),
+        _self_join_pairs(banded, "k", ["band", "bucket"], "signature")
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"),
                 F.round(matches / F.lit(num_perms), 4).alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= min_est_jaccard)
         .dropDuplicates(["doc_a", "doc_b"])
@@ -725,15 +731,12 @@ def simhash_near_dups(df: DataFrame, key: str = "doc_id",
         ])).alias("band", "bkey"),
     )
     banded = _cap_hot_keys(banded, ["band", "bkey"], max_bucket)
-    a, b = banded.alias("a"), banded.alias("b")
-    ham = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).cast("int")
+    ham = F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))).cast("int")
     # hamming is a pure function of the pair: filter before the dedup
     # shuffle so it only carries pairs that survive the threshold
     return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bkey") == F.col("b.bkey"))
-               & (F.col("a.k") < F.col("b.k")))
-        .select(F.col("a.k").alias("doc_a"), F.col("b.k").alias("doc_b"),
+        _self_join_pairs(banded, "k", ["band", "bkey"], "sh")
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"),
                 ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["doc_a", "doc_b"])

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from .dedup import (  # shared cache registry and bucket primitives
-    _bq, _bucket_pairs, _cap_hot_keys, register_cache, release_caches,
+    _bq, _cap_hot_keys, _self_join_pairs, register_cache, release_caches,
 )
 
 __all__ = [
@@ -326,6 +326,11 @@ def ivf_assign(emb: DataFrame, num_centroids: int = 8, key: str = "vec_id",
         key, "centroid_id", F.col("sim").alias("centroid_sim"))
 
 
+# the largest group `_grouped_pair_cosines` may take: applyInPandas holds a
+# whole group plus two m x m float64 buffers (2 x 128 MiB at 4096 rows)
+_GROUPED_MAX_ROWS = 4096
+
+
 def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
                           num_centroids: int | None = None, key: str = "vec_id",
                           vec_col: str = "embedding",
@@ -404,30 +409,13 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
         row = (tagged.groupBy("centroid_id").count()
                .agg(F.max("count").alias("mx"),
                     F.sum("count").alias("n")).first())
-        grouped = (row.mx or 0) <= 4096 and (row.n or 0) >= 10_000
+        grouped = ((row.mx or 0) <= _GROUPED_MAX_ROWS
+                   and (row.n or 0) >= 10_000)
     if grouped:
         return _grouped_pair_cosines(tagged, key, ["centroid_id"], threshold,
                                      dedup_pairs=False)
-    return _ivf_join_pairs(tagged, key, threshold)
-
-
-def _ivf_join_pairs(tagged: DataFrame, key: str,
-                    threshold: float) -> DataFrame:
-    """Same-bucket pairs of a (key, uvec, centroid_id) table as a
-    self-join on centroid_id, verified by one dot-product fold per pair."""
-    a = tagged.select(F.col(key).alias("vec_a"),
-                      F.col("uvec").alias("ua"), "centroid_id")
-    b = tagged.select(F.col(key).alias("vec_b"),
-                      F.col("uvec").alias("ub"), "centroid_id")
-    return (
-        a.join(b, ["centroid_id"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a", "vec_b",
-            F.round(_dot(F.col("ua"), F.col("ub")), 6).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    return _pair_cosines(
+        _self_join_pairs(tagged, key, ["centroid_id"], "uvec"), threshold)
 
 
 def ivf_ann_query(emb: DataFrame, query_vec_id: int, k: int = 5,
@@ -575,29 +563,32 @@ def _grouped_pair_cosines(tagged: DataFrame, key: str,
     emit every id-ordered pair with its raw dot product, then round /
     threshold-filter / cross-band dedup in Spark.
 
-    Replaces collect_list -> nested-transform pair explode -> distinct ->
-    two uvec joins -> per-pair `aggregate(zip_with(...))` fold — every
-    step of which is interpreted (higher-order functions have no codegen)
-    — with one NumPy pass per bucket. BIT-IDENTICAL results, argued and
-    test-pinned: the accumulation loops over vector components j in
-    ascending order (`acc += u_a[j] * u_b[j]` across the whole bucket at
-    once), which is the exact left-associative IEEE sequence the JVM fold
-    `((0.0 + a0*b0) + a1*b1) + ...` evaluates, products included; rounding
-    to 6 dp stays in Spark (F.round = HALF_UP; numpy rounds half-even).
+    The dense-bucket twin of the join tiers (`_pair_cosines`): where a
+    join moves both vectors of every candidate pair and folds each dot
+    with an interpreted `aggregate(zip_with(...))` (higher-order
+    functions have no codegen), this moves each vector once per group
+    and takes all of a group's dots in one NumPy pass. BIT-IDENTICAL
+    results, argued and test-pinned: the accumulation loops over vector
+    components j in ascending order (`acc += u_a[j] * u_b[j]` across the
+    whole bucket at once), which is the exact left-associative IEEE
+    sequence the JVM fold `((0.0 + a0*b0) + a1*b1) + ...` evaluates,
+    products included; rounding to 6 dp stays in Spark (F.round =
+    HALF_UP; numpy rounds half-even).
     Pairs whose vectors differ in length emit nothing — the JVM fold
     NULL-poisons those dots and the threshold filter drops them, so the
     output sets match on mixed-dim corpora too.
 
     Rows with a NULL group key or NULL uvec are dropped first: the join
-    paths' INNER equi-joins drop NULL keys (vectors no centroid could
+    tiers' INNER equi-joins drop NULL keys (vectors no centroid could
     score, e.g. mismatched dims) and NULL-poisoned dots never pass the
     threshold, so the pair sets match instead of one NULL-key group
     collecting every unassigned vector.
 
-    Scale guard: callers only route here when every group is bounded
-    (hyperplane buckets are `_cap_hot_keys`-capped; the IVF caller checks
-    its max bucket size first), because applyInPandas materializes one
-    group per call. `tagged` must carry (key, uvec, group_cols...)."""
+    Scale guard: callers only route here when no group exceeds
+    _GROUPED_MAX_ROWS (hyperplane: its `_cap_hot_keys` bound max_bucket
+    is at most that; IVF: its measured largest bucket), because
+    applyInPandas materializes one group per call. `tagged` must carry
+    (key, uvec, group_cols...)."""
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.types import DoubleType  # noqa: PLC0415
 
@@ -658,6 +649,18 @@ def _grouped_pair_cosines(tagged: DataFrame, key: str,
     # buckets — its dot is bit-identical each time, so a plain distinct
     # dedups exactly; single-membership schemes (IVF) skip the shuffle
     return out.distinct() if dedup_pairs else out
+
+
+def _pair_cosines(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(vec_a, vec_b, cos_sim) of (a, b, pa, pb) unit-vector pairs, one
+    dot-product fold per pair, kept at cos_sim >= threshold — the verify
+    of every join tier, row for row the same as `_grouped_pair_cosines`."""
+    return (
+        pairs.select(F.col("a").alias("vec_a"), F.col("b").alias("vec_b"),
+                     F.round(_dot(F.col("pa"), F.col("pb")), 6)
+                     .alias("cos_sim"))
+        .filter(F.col("cos_sim") >= threshold)
+    )
 
 
 def hyperplane_banded_buckets(emb: DataFrame, num_planes: int, bands: int,
@@ -763,9 +766,9 @@ def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
     left-assoc loop at oracle dims, ONE batched NumPy matmul per batch
     past HYPERPLANE_SQL_TERM_LIMIT — no per-row Python either way), the
     banded explode carries `bands` ints per VECTOR on the shuffle, hot
-    buckets are capped BEFORE the in-bucket pair generation buffers
-    anything (`_cap_hot_keys`), and the verify stage unit-normalizes once
-    per vector so each surviving pair costs one dot-product fold.
+    buckets are capped BEFORE the pair stage (`_cap_hot_keys`), and the
+    verify stage unit-normalizes once per vector so each candidate pair
+    costs one dot-product fold.
     Recall/cost dial: more planes = fewer false candidates; more bands =
     higher recall. Sizing at corpus scale: buckets per band =
     2^(planes/bands), so pick planes/bands such that corpus_size /
@@ -774,17 +777,17 @@ def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
     x 4 bands (65k buckets) plus a larger cap — real-dim 768 x 64-plane
     signatures take the matmul form, which has no compile wall.
 
-    Pair stage, chosen from bucket density: with B = 2^(planes/bands)
-    buckets per band, the expected bucket holds n/B vectors. DENSE
-    buckets (n/B >= 8) mean many pairs per vector — the grouped Arrow
-    stage (`_grouped_pair_cosines`) moves each unit vector once per band
-    and replaces the interpreted collect_list/nested-transform explode +
-    distinct + two joins + per-pair fold with one NumPy pass per bucket
-    (bit-identical; group size bounded by max_bucket). SPARSE buckets
-    (e.g. 64-plane/16-bit bands at 10^4-10^5 vectors) mean candidates
-    are rare — shuffling every vector per band would dwarf the tiny pair
-    set, so the id-only candidate join (`_hyperplane_join_pairs`) stays
-    cheaper."""
+    Pair stage, three tiers with the same rows, chosen from the expected
+    bucket fill n/B (B = 2^(planes/bands) buckets per band). A payload
+    self-join moves every unit vector once per band; id-only candidates
+    move two vectors per candidate, about n/B per vector per band. So
+    n/B < 1 (sparse) takes distinct id-only `_self_join_pairs` candidates
+    and joins in only their vectors; n/B >= 8 (dense) with max_bucket <=
+    _GROUPED_MAX_ROWS takes the grouped Arrow stage
+    (`_grouped_pair_cosines`, a bucket's dots in one NumPy pass); the
+    rest self-joins the capped buckets joined to the unit vectors
+    (`tagged`) with the vector as payload. The join tiers verify one dot
+    fold per candidate (`_pair_cosines`); all dedup across bands."""
     lo, hi, n = _corpus_dim(emb, vec_col)
     if dim is None:
         if lo != hi:
@@ -800,28 +803,17 @@ def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
     banded = hyperplane_banded_buckets(emb, num_planes, bands, dim,
                                        key, vec_col)
     capped = _cap_hot_keys(banded, ["band", "bucket"], max_bucket)
-    # cached: joined on both pair sides (or once per band, grouped)
+    # cached: joined on both pair sides (id-only) or into `tagged`
     unit = register_cache(_unit_vectors(emb, key, vec_col).cache())
-    if n >= (1 << (num_planes // bands)) * 8:
-        return _grouped_pair_cosines(
-            capped.join(unit.withColumnRenamed(key, "k"), "k"), "k",
-            ["band", "bucket"], threshold)
-    return _hyperplane_join_pairs(capped, unit, key, threshold)
-
-
-def _hyperplane_join_pairs(capped: DataFrame, unit: DataFrame, key: str,
-                           threshold: float) -> DataFrame:
-    """Pairs of (k, band, bucket) rows sharing a bucket, as an id-only
-    candidate set (`_bucket_pairs` + distinct) joined to the (key, uvec)
-    table on both sides and verified by one dot-product fold per pair."""
-    cand = _bucket_pairs(capped, ["band", "bucket"], "vec_a",
-                         "vec_b").distinct()
-    return (
-        cand.join(unit.select(F.col(key).alias("vec_a"),
-                              F.col("uvec").alias("ua")), "vec_a")
-        .join(unit.select(F.col(key).alias("vec_b"),
-                          F.col("uvec").alias("ub")), "vec_b")
-        .select("vec_a", "vec_b",
-                F.round(_dot(F.col("ua"), F.col("ub")), 6).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    fill = n / (1 << (num_planes // bands))
+    if fill < 1:
+        cand = _self_join_pairs(capped, "k", ["band", "bucket"]).distinct()
+        ua, ub = (unit.select(F.col(_bq(key)).alias(s),
+                              F.col("uvec").alias("p" + s)) for s in "ab")
+        return _pair_cosines(cand.join(ua, "a").join(ub, "b"), threshold)
+    tagged = capped.join(unit.withColumnRenamed(key, "k"), "k")
+    if fill >= 8 and max_bucket <= _GROUPED_MAX_ROWS:
+        return _grouped_pair_cosines(tagged, "k", ["band", "bucket"],
+                                     threshold)
+    return _pair_cosines(_self_join_pairs(tagged, "k", ["band", "bucket"],
+                                          "uvec"), threshold).distinct()

@@ -55,16 +55,20 @@ def test_minhash_lsh_pairs_identical_docs(spark):
     assert got == {(1, 2): 1.0}
 
 
-def test_hot_bucket_cap_drops_mega_buckets(spark):
+@pytest.mark.parametrize("pairs", [
+    dedup.shingle_pairs, dedup.minhash_lsh_pairs, dedup.simhash_near_dups,
+], ids=lambda f: f.__name__)
+def test_hot_bucket_cap_drops_mega_buckets(spark, pairs):
     """Keys above max_bucket vanish entirely (broadcast anti-join), matching
-    the groupBy-count oracle semantics."""
+    the groupBy-count oracle semantics — for each text family's own cap."""
     rows = [(i, "common shingle words repeated here") for i in range(10)]
     rows += [(100, "rare words only present once today")]
     d = _docs(spark, rows)
-    # every 3-shingle of the common text appears 10x > cap 5 -> no pairs
-    assert dedup.shingle_pairs(d, max_bucket=5).count() == 0
+    # every shingle / band key of the common text appears 10x > cap 5
+    assert pairs(d, max_bucket=5).count() == 0
     # with a generous cap the 10 identical docs pair up fully: C(10,2)
-    assert dedup.shingle_pairs(d, max_bucket=64).count() == 45
+    assert pairs(d, max_bucket=64).count() == 45
+    dedup.release_caches()
 
 
 def test_exact_dedup_groups(spark):

@@ -87,6 +87,7 @@ def test_no_cartesian_in_shingle_pairs(spark):
 
 @pytest.mark.parametrize("qname", [
     "q_ngram_jaccard_pairs", "q_minhash_lsh_pairs", "q_simhash_near_dups",
+    "q_hyperplane_lsh_near_dups",
 ])
 def test_hot_bucket_cap_is_not_a_window(spark, qname):
     """The hot-bucket skew cap must be a map-side-combined groupBy count +
@@ -98,6 +99,30 @@ def test_hot_bucket_cap_is_not_a_window(spark, qname):
     assert "LeftAnti" in plan
     # the over-cap key set is broadcast, not shuffled
     assert "BroadcastHashJoin" in plan
+
+
+@pytest.mark.parametrize("qname", [
+    "q_ngram_jaccard_pairs", "q_minhash_lsh_pairs", "q_simhash_near_dups",
+    "q_embedding_near_dups", "q_hyperplane_lsh_near_dups",
+])
+def test_pair_queries_emit_pairs_from_a_self_join(spark, qname):
+    """Every bucket -> pairs generator emits through the one self-join
+    primitive: no per-bucket collect_list and no Generate exploding an
+    in-bucket pair array (the explodes that remain emit one band key or
+    shingle digest per row)."""
+    import re
+
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import (
+        dedup,
+    )
+
+    plan = _plan(contract.QUERIES[qname](spark, SF_DIR))
+    assert "collect_list" not in plan
+    explodes = re.findall(r"^\(\d+\) Generate\nInput .*\nArguments: (.*)$",
+                          plan, re.M)
+    assert len(explodes) == len(re.findall(r"^\(\d+\) Generate$", plan, re.M))
+    assert not any("flatten(" in g for g in explodes)
+    dedup.release_caches()
 
 
 def test_simhash_is_fully_native(spark):
@@ -164,7 +189,8 @@ def test_tier_selection_points_follow_the_input(spark):
     point is pinned through the plan it yields: the shingle digest
     stream turns Arrow at n >= 5, IVF scoring at a seeded bank of
     C >= 32, and the hyperplane pair stage turns grouped when buckets
-    are dense (n >= 8 x 2^(planes/bands) vectors)."""
+    are dense (n >= 8 x 2^(planes/bands) vectors) and max_bucket keeps
+    every group within the grouped stage's bound."""
     import re
 
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import (
@@ -189,6 +215,10 @@ def test_tier_selection_points_follow_the_input(spark):
     assert n < 8 * 2 ** (32 // 4)  # sparse at the 32 / 4 default
     assert "FlatMapGroupsInPandas" not in _plan(
         similarity.hyperplane_lsh_pairs(emb, dim=64))
+    # dense, but a cap past the grouped stage's group bound keeps the join
+    assert "FlatMapGroupsInPandas" not in _plan(
+        similarity.hyperplane_lsh_pairs(emb, dim=64, num_planes=8, bands=4,
+                                        max_bucket=5000))
     dedup.release_caches()
 
 

@@ -313,12 +313,14 @@ def test_hyperplane_mixed_dim_corpus_policy(spark):
 
 def test_pair_engines_bit_identical(spark):
     """r7 pin: the grouped Arrow pair stage (_grouped_pair_cosines) must
-    emit EXACTLY the join path's (vec_a, vec_b, cos_sim) rows on the same
-    tagged input — the NumPy accumulation replays the JVM fold's
+    emit EXACTLY the join tier's (vec_a, vec_b, cos_sim) rows on the same
+    buckets — the NumPy accumulation replays the JVM fold's
     left-associative IEEE sequence, so even the 6-dp rounding
     boundaries cannot diverge. Pinned for both bucketing families
     (banded hyperplane LSH and IVF), on a corpus with mixed dims and a
-    NULL embedding so the NULL-poisoned-pair drop semantics match too."""
+    NULL embedding so the NULL-poisoned-pair drop semantics match too;
+    the join side is the public call, which this corpus routes to a join
+    tier (both hyperplane join tiers)."""
     import random
 
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import (
@@ -338,23 +340,29 @@ def test_pair_engines_bit_identical(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     unit = similarity._unit_vectors(emb, "vec_id", "embedding")
 
-    def run(df):
+    def run(df, grouped):
+        plan = str(df._jdf.queryExecution().executedPlan())
+        assert ("FlatMapGroupsInPandas" in plan) == grouped
         return sorted((r.vec_a, r.vec_b, r.cos_sim) for r in df.collect())
 
-    capped = dedup._cap_hot_keys(similarity.hyperplane_banded_buckets(
-        emb, 32, 4, 8, "vec_id", "embedding"), ["band", "bucket"], 256)
-    hp_join = run(similarity._hyperplane_join_pairs(
-        capped, unit, "vec_id", 0.30))
-    hp_grp = run(similarity._grouped_pair_cosines(
-        capped.join(unit.withColumnRenamed("vec_id", "k"), "k"), "k",
-        ["band", "bucket"], 0.30))
-    assert hp_join == hp_grp and len(hp_join) > 0
+    # ~536 vectors: 32 planes / 4 bands fill 256 buckets ~2 deep (payload
+    # self-join tier), 40 / 4 fill 1024 ~0.5 deep (id-only tier)
+    for planes in (32, 40):
+        hp_join = run(similarity.hyperplane_lsh_pairs(
+            emb, 0.30, num_planes=planes, bands=4, dim=8, max_bucket=256),
+            False)
+        capped = dedup._cap_hot_keys(similarity.hyperplane_banded_buckets(
+            emb, planes, 4, 8, "vec_id", "embedding"), ["band", "bucket"], 256)
+        hp_grp = run(similarity._grouped_pair_cosines(
+            capped.join(unit.withColumnRenamed("vec_id", "k"), "k"), "k",
+            ["band", "bucket"], 0.30), True)
+        assert hp_join == hp_grp and len(hp_join) > 0
 
+    ivf_join = run(similarity.cosine_near_dup_pairs(emb, 0.30, 8), False)
     tagged = unit.join(similarity.ivf_assign(emb, 8)
                        .select("vec_id", "centroid_id"), "vec_id")
-    ivf_join = run(similarity._ivf_join_pairs(tagged, "vec_id", 0.30))
     ivf_grp = run(similarity._grouped_pair_cosines(
-        tagged, "vec_id", ["centroid_id"], 0.30, dedup_pairs=False))
+        tagged, "vec_id", ["centroid_id"], 0.30, dedup_pairs=False), True)
     assert ivf_join == ivf_grp and len(ivf_join) > 0
     dedup.release_caches()
 
