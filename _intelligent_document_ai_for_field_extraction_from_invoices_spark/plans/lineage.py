@@ -48,6 +48,24 @@ def with_warc_day(pages: DataFrame) -> DataFrame | None:
         WARC_DAY_COL, F.date_format("warc_ts", "yyyy-MM-dd"))
 
 
+def day_stamped(pages: DataFrame, catalog: Catalog,
+                table: str) -> DataFrame | None:
+    """`with_warc_day(pages)` when `table` takes the day-partitioned
+    layout, else None. The one resume guard of run_extraction and
+    streaming.extract_stream: a table written by the pre-day-layout
+    pipeline has no warc_day column, and mixing partitioned and
+    unpartitioned files would make day-pruned reads silently drop the old
+    rows (old files read warc_day=NULL), so such a table keeps its
+    unpartitioned layout. Reads the current snapshot once."""
+    dayed = with_warc_day(pages)
+    if dayed is None:
+        return None
+    cur = catalog._read_current(table)
+    if cur is None or f'"{WARC_DAY_COL}"' in (cur.get("schema") or ""):
+        return dayed
+    return None
+
+
 def stamp_part_id(pages: DataFrame, num_partitions: int) -> DataFrame:
     return pages.withColumn(
         "part_id",
@@ -107,17 +125,8 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
     # me one day of one crawl" — a manifest-pruned scan instead of a full
     # table scan); warc_day rides through the extraction UDF as a
     # passthrough column so no join-back shuffle is needed
-    dayed = with_warc_day(pages)
+    dayed = day_stamped(pages, catalog, RESULTS_TABLE)
     partition_results = dayed is not None
-    if partition_results and catalog.exists(RESULTS_TABLE):
-        # resume guard (same as streaming.extract_stream's): a results table
-        # written by the pre-day-layout pipeline has no warc_day column, and
-        # mixing partitioned and unpartitioned files would make day-pruned
-        # reads silently drop the old rows (read() samples schema from one
-        # file -> old rows surface warc_day=NULL). Match the existing layout.
-        schema = (catalog._read_current(RESULTS_TABLE) or {}).get("schema") \
-            or ""
-        partition_results = f'"{WARC_DAY_COL}"' in schema
     if partition_results:
         pages = dayed
 

@@ -56,17 +56,6 @@ fixed-width keys — the pipeline's partition columns. Python bool/int/None
 predicate values are normalized to Spark's cast-to-string form ('true', not
 'True'); floats raise (Java's Double.toString disagrees with Python repr —
 pass the string you partitioned with).
-
-Column statistics (`stats_where=` on read/scan_files — round 6): every
-commit records footer-derived min/max/null-count per primitive column in
-its manifest rows (Iceberg's write.metadata.metrics), merged into a
-per-manifest stats summary. The same predicate grammar then skips
-manifests and files on ANY stats-collected column — typed comparison
-(ints numerically, timestamps as instants), independent of the partition
-layout. This is the data-skipping tier under partition pruning: a
-`warc_ts >= X` or `doc_id between A and B` scan over a 10^12-row table
-opens only the files whose bounds overlap, and the typed residual row
-filter keeps results exact.
 """
 
 from __future__ import annotations
@@ -96,17 +85,6 @@ MERGE_MIN = 16
 SMALL_MANIFEST = 64
 # value summaries larger than this collapse to {min,max} bounds
 SUMMARY_MAX_VALUES = 16
-# per-file column-stats policy (Iceberg's write.metadata.metrics analogue):
-# footer-derived min/max/null-count for the first STATS_MAX_COLUMNS
-# primitive top-level columns; string bounds truncate to STATS_STR_BOUND
-# chars (lower = prefix, upper = prefix with last char incremented — both
-# remain VALID bounds, so skipping stays sound on arbitrarily long urls).
-# Commits staging more than STATS_DISTRIBUTE_MIN files collect footers in a
-# distributed Spark job instead of a driver loop — at cluster scale a large
-# compaction's metadata pass must not serialize through the driver.
-STATS_MAX_COLUMNS = 32
-STATS_STR_BOUND = 64
-STATS_DISTRIBUTE_MIN = 64
 # optimistic-concurrency rebase attempts before giving up. A retry is only
 # consumed when ANOTHER writer's commit landed, so N retries tolerate N
 # concurrent committers — not N time slices.
@@ -267,229 +245,6 @@ def _build_summary(rows: list[dict]) -> dict[str, dict]:
     return out
 
 
-# -- per-file column statistics (data skipping beyond partition pruning) ----
-#
-# File stats shape (JSON, per manifest row under "stats"):
-#   {col: {"nulls": int, "min": v, "max": v | null}}
-# "min" present iff the file has non-null values with encodable bounds; a
-# stats entry WITHOUT "min" is an all-null file for that column. "max" of
-# JSON null means "unbounded above" (a truncated string whose upper bound
-# could not be incremented). Columns with unencodable stats (binary, NaN
-# floats, unsupported types) are simply absent — absence always means
-# "cannot prune", never "no rows".
-
-
-class _UnsupportedStats(Exception):
-    """Raised by _stats_value for types the stats layer cannot soundly
-    bound (binary, NaN, exotic objects) — the column is then skipped."""
-
-
-def _stats_value(v):
-    """Encode a bound or predicate value into the JSON-safe, totally
-    ordered form stats comparisons run on. Timestamps normalize to naive
-    UTC isoformat — fixed-width date/time prefixes make the string order
-    equal the instant order, and normalizing tz-awareness keeps footer
-    values (often tz-aware UTC) comparable with naive predicate values."""
-    import datetime as _dt  # noqa: PLC0415
-
-    if isinstance(v, bool):
-        return v
-    if isinstance(v, int):
-        return v
-    if isinstance(v, float):
-        import math as _math  # noqa: PLC0415
-
-        if _math.isnan(v):
-            raise _UnsupportedStats("NaN bound")
-        return v
-    if isinstance(v, str):
-        return v
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is not None:
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return v.isoformat(sep="T")
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    raise _UnsupportedStats(f"unsupported stats type: {type(v).__name__}")
-
-
-def _upper_bound_str(s: str) -> str | None:
-    """Truncate-and-increment: a string <= STATS_STR_BOUND chars that is
-    >= every string prefixed by it, or None when no such bound exists
-    (all prefix chars already at the max code point)."""
-    if len(s) <= STATS_STR_BOUND:
-        return s
-    prefix = s[:STATS_STR_BOUND]
-    for i in range(len(prefix) - 1, -1, -1):
-        cp = ord(prefix[i])
-        if cp < 0x10FFFF:
-            return prefix[:i] + chr(cp + 1)
-    return None
-
-
-def _file_stats(path: str, columns: list[str] | None) -> dict:
-    """Footer-only per-file column stats: min/max/null-count per primitive
-    top-level column, merged across row groups. Never reads data pages.
-    Module-level (not a method) so the distributed collection path can
-    ship it to executors without closing over the Catalog."""
-    import pyarrow.parquet as pq  # noqa: PLC0415
-
-    md = pq.ParquetFile(path).metadata
-    fields = [md.schema.column(i).path for i in range(md.num_columns)]
-    want = [f for f in fields if "." not in f
-            and (columns is None or f in columns)][:STATS_MAX_COLUMNS]
-    idx = {f: fields.index(f) for f in want}
-    out: dict[str, dict] = {}
-    for col in want:
-        nulls = 0
-        nulls_known = True
-        lo = hi = None
-        have_rows = False
-        usable = True
-        for rg in range(md.num_row_groups):
-            c = md.row_group(rg).column(idx[col])
-            st = c.statistics
-            if st is None:
-                usable = False
-                break
-            if st.has_null_count:
-                nulls += st.null_count
-            else:
-                nulls_known = False
-            non_null = (c.num_values - st.null_count
-                        if st.has_null_count else None)
-            if non_null == 0:
-                continue  # all-null row group: no bounds to merge
-            if not st.has_min_max:
-                usable = False  # non-null values but no bounds: can't
-                break           # soundly skip this file on this column
-            try:
-                mn, mx = _stats_value(st.min), _stats_value(st.max)
-            except _UnsupportedStats:
-                usable = False
-                break
-            have_rows = True
-            lo = mn if lo is None or mn < lo else lo
-            hi = mx if hi is None or mx > hi else hi
-        if not usable:
-            continue
-        ent: dict = {}
-        if nulls_known:
-            ent["nulls"] = nulls
-        if have_rows:
-            ent["min"] = lo[:STATS_STR_BOUND] if isinstance(lo, str) else lo
-            ent["max"] = _upper_bound_str(hi) if isinstance(hi, str) else hi
-        elif not nulls_known:
-            continue  # nothing known at all: recording {} would read as
-            # "all-null", which is a SKIPPING decision — omit instead
-        out[col] = ent
-    return out
-
-
-def _build_stats_summary(rows: list[dict]) -> dict[str, dict]:
-    """Manifest-level merge of per-file stats: a column is summarized only
-    when EVERY file records it (else one stats-less file could hide rows
-    the summary would prune). Shape: {col: {"null": bool, "min"?, "max"?}}
-    — "max" of None again means unbounded above."""
-    if not rows or any("stats" not in r or r["stats"] is None for r in rows):
-        return {}
-    cols = set(rows[0]["stats"])
-    for r in rows[1:]:
-        cols &= set(r["stats"])
-    out: dict[str, dict] = {}
-    for c in sorted(cols):
-        ents = [r["stats"][c] for r in rows]
-        has_null = any("nulls" not in e or e["nulls"] > 0 for e in ents)
-        bounded = [e for e in ents if "min" in e]
-        ent: dict = {"null": has_null}
-        if bounded:
-            try:
-                ent["min"] = min(e["min"] for e in bounded)
-                maxes = [e["max"] for e in bounded]
-                ent["max"] = None if any(m is None for m in maxes) \
-                    else max(maxes)
-            except TypeError:
-                continue  # cross-file bound types disagree: a summary
-                # could mis-prune, so record nothing for the column
-        out[c] = ent
-    return out
-
-
-def _normalize_stats_pred(spec) -> tuple:
-    """Typed predicate for stats skipping: same op grammar as partition
-    `where`, but values stay TYPED (ints compare numerically, not as hive
-    strings) — encoded via _stats_value for bound comparisons while the
-    residual row filter uses the original value. None is only meaningful
-    under '=' / 'in' (IS NULL); ranges over None are rejected."""
-    def enc(v):
-        if v is None:
-            return None
-        try:
-            return _stats_value(v)
-        except _UnsupportedStats as e:
-            raise TypeError(f"unsupported stats predicate value: {e}") \
-                from None
-
-    if isinstance(spec, (tuple, list)):
-        op = spec[0]
-        if op == "in":
-            return ("in", [(enc(x), x) for x in spec[1]])
-        if op in ("=", "=="):
-            return ("=", enc(spec[1]), spec[1])
-        if op in _RANGE_OPS or op == "between":
-            vals = spec[1:]
-            if any(v is None for v in vals):
-                raise ValueError(f"stats predicate {op!r} over None")
-            if op == "between":
-                return ("between", enc(spec[1]), enc(spec[2]),
-                        spec[1], spec[2])
-            return (op, enc(spec[1]), spec[1])
-        raise ValueError(f"unknown stats predicate op: {op!r}")
-    return ("=", enc(spec), spec)
-
-
-def _stats_incomparable(col: str, e: TypeError):
-    return ValueError(
-        f"stats predicate on {col!r} does not compare with the recorded "
-        f"bounds (type mismatch: {e}); pass the column's own type")
-
-
-def _match_stats(col: str, pred: tuple, st: dict | None) -> bool:
-    """Can a file (or manifest) with the recorded stats contain a row
-    satisfying the predicate? Missing stats conservatively match. Works on
-    both shapes: file stats carry "nulls" (int, absent = unknown) and
-    summaries carry "null" (bool)."""
-    if st is None:
-        return True
-    has_null = st["null"] if "null" in st \
-        else ("nulls" not in st or st["nulls"] > 0)
-    has_rows = "min" in st
-    lo, hi = st.get("min"), st.get("max")
-    op = pred[0]
-    try:
-        if op == "=":
-            if pred[1] is None:
-                return has_null
-            return has_rows and lo <= pred[1] \
-                and (hi is None or pred[1] <= hi)
-        if op == "in":
-            return any(_match_stats(col, ("=", ev, v), st)
-                       for ev, v in pred[1])
-        if not has_rows:
-            return False  # null rows never satisfy a range predicate
-        if op == ">=":
-            return hi is None or hi >= pred[1]
-        if op == ">":
-            return hi is None or hi > pred[1]
-        if op == "<=":
-            return lo <= pred[1]
-        if op == "<":
-            return lo < pred[1]
-        return (hi is None or hi >= pred[1]) and lo <= pred[2]  # between
-    except TypeError as e:
-        raise _stats_incomparable(col, e) from None
-
-
 class Catalog:
     def __init__(self, root: str):
         # realpath at construction: a relative root would otherwise resolve
@@ -537,7 +292,6 @@ class Catalog:
             "txns": sorted({t for t in txns if t}),
             "op": op,
             "summary": _build_summary(rows),
-            "stats_summary": _build_stats_summary(rows),
         }
 
     def _read_manifest(self, entry: dict) -> list[dict]:
@@ -780,26 +534,19 @@ class Catalog:
 
     def _stage(self, table: str, df: DataFrame,
                partition_by: list[str] | None = None,
-               txn: str | None = None,
-               stats_columns: list[str] | None = None,
-               collect_stats: bool = True) -> list[dict]:
+               txn: str | None = None) -> list[dict]:
         """Write a staging commit; returns manifest rows
-        [{"path", "partition", "txn", "stats"}] parsed from the hive-style
+        [{"path", "partition", "txn"}] parsed from the hive-style
         directory layout. Partition columns are DUPLICATED into shadow
         `_p_<col>` dir keys so the data files keep the original column
         (snapshot reads use explicit file lists, which cannot recover
-        dir-encoded values the way a directory scan would).
-
-        Per-file column stats come from a footer-only metadata pass (no
-        data pages): a driver loop for small commits, a distributed Spark
-        job past STATS_DISTRIBUTE_MIN files — a 100k-file compaction's
-        stats pass must scale with the cluster, not the driver."""
+        dir-encoded values the way a directory scan would)."""
         stage_dir = os.path.join(self._tdir(table), "data", uuid.uuid4().hex)
-        # Spark's default INT96 timestamp encoding carries NO parquet
-        # column statistics (the physical type predates them); write
-        # TIMESTAMP_MICROS so warc_ts-style columns are stats-skippable.
-        # Scoped to this write and restored — the catalog must not leak
-        # config into the caller's session.
+        # Iceberg's spec stores timestamps as int64 microseconds, and
+        # parquet's INT96 (Spark's default) is deprecated; write
+        # TIMESTAMP_MICROS so the data files are what an Iceberg reader
+        # expects. Scoped to this write and restored — the catalog must
+        # not leak config into the caller's session.
         TS_KEY = "spark.sql.parquet.outputTimestampType"
         conf = df.sparkSession.conf
         ts_old = conf.get(TS_KEY)
@@ -838,35 +585,18 @@ class Catalog:
                         "txn": txn,
                     })
         rows.sort(key=lambda r: r["path"])
-        if collect_stats and rows:
-            paths = [r["path"] for r in rows]
-            if len(paths) >= STATS_DISTRIBUTE_MIN:
-                sc = df.sparkSession.sparkContext
-                cols = stats_columns
-                stats = dict(
-                    sc.parallelize(paths, max(1, len(paths) // 16))
-                    .map(lambda p: (p, _file_stats(p, cols)))
-                    .collect())
-            else:
-                stats = {p: _file_stats(p, stats_columns) for p in paths}
-            for r in rows:
-                r["stats"] = stats[r["path"]]
         return rows
 
     def overwrite(self, table: str, df: DataFrame,
                   partition_by: list[str] | None = None,
-                  txn: str | None = None,
-                  stats_columns: list[str] | None = None,
-                  collect_stats: bool = True) -> int:
+                  txn: str | None = None) -> int:
         """Replace the table's contents. `txn` tags the commit the same way
         append's does, so writers with replace semantics (e.g. an index
         rebuild) get the same exactly-once replay detection via txns().
         A commit conflict rebases and retries: replace semantics clobber
         whatever the concurrent writer committed by DESIGN (the overwrite
         serializes after it)."""
-        rows = self._stage(table, df, partition_by, txn=txn,
-                           stats_columns=stats_columns,
-                           collect_stats=collect_stats)
+        rows = self._stage(table, df, partition_by, txn=txn)
         entry = self._write_manifest(table, rows, [txn], op="overwrite")
 
         def build(cur):
@@ -904,9 +634,7 @@ class Catalog:
         return StructType(merged).json()
 
     def append(self, table: str, df: DataFrame, txn: str | None = None,
-               partition_by: list[str] | None = None,
-               stats_columns: list[str] | None = None,
-               collect_stats: bool = True) -> int:
+               partition_by: list[str] | None = None) -> int:
         """Append with an optional transaction tag. A multi-table writer tags
         every table's append with one txn id and commits a marker table last;
         `remove_orphan_appends` can then roll back appends whose txn never
@@ -925,9 +653,7 @@ class Catalog:
         append/compact won the version) rebases the manifest LIST against
         the fresh snapshot and retries — neither writer's rows are lost
         (Iceberg's optimistic append)."""
-        rows = self._stage(table, df, partition_by, txn=txn,
-                           stats_columns=stats_columns,
-                           collect_stats=collect_stats)
+        rows = self._stage(table, df, partition_by, txn=txn)
         entry = self._write_manifest(table, rows, [txn])
 
         def build(cur):
@@ -1360,28 +1086,20 @@ class Catalog:
         return n
 
     def scan_files(self, table: str, *, where: dict | None = None,
-                   stats_where: dict | None = None,
                    version: int | None = None) -> list[str]:
         """Snapshot file list after MANIFEST-LEVEL pruning — the Iceberg
         move, in two stages: (1) the manifest LIST's per-manifest value
-        summaries and column-stats summaries rule out whole manifests
-        without opening them; (2) surviving manifests' per-file partition
-        values and column min/max stats rule out files. Files without
-        recorded values/stats for a predicate column are conservatively
-        kept (pruning is an optimization; `read` applies the residual row
-        filter). `where` predicates hit PARTITION values (string-cast
-        compare, hive-null sentinel semantics); `stats_where` predicates
-        hit footer-derived column stats with TYPED comparison — ints
-        numerically, timestamps as instants — on any stats-collected
-        column, partitioned or not. `self.last_scan_stats` records how
-        much the scan pruned."""
+        summaries rule out whole manifests without opening them; (2)
+        surviving manifests' per-file partition values rule out files.
+        `where` predicates hit PARTITION values (string-cast compare,
+        hive-null sentinel semantics). Files without recorded values for a
+        predicate column are conservatively kept (pruning is an
+        optimization; `read` applies the residual row filter).
+        `self.last_scan_stats` records how much the scan pruned."""
         snap = self._snap(table, version)
         preds = {k: _normalize_pred(v) for k, v in (where or {}).items()}
-        spreds = {k: _normalize_stats_pred(v)
-                  for k, v in (stats_where or {}).items()}
         stats = {"manifests_total": len(snap["manifests"]),
-                 "manifests_opened": 0, "files_selected": 0,
-                 "files_skipped_by_stats": 0}
+                 "manifests_opened": 0, "files_selected": 0}
         files: list[str] = []
         for e in snap["manifests"]:
             summ = e.get("summary") or {}
@@ -1389,21 +1107,11 @@ class Catalog:
                     _match_summary(p, summ.get(c))
                     for c, p in preds.items()):
                 continue  # manifest pruned: never opened
-            ssumm = e.get("stats_summary") or {}
-            if spreds and not all(
-                    _match_stats(c, p, ssumm.get(c))
-                    for c, p in spreds.items()):
-                continue  # manifest pruned by column stats: never opened
             stats["manifests_opened"] += 1
             for r in self._read_manifest(e):
                 part = r.get("partition") or {}
                 if not all(_match_value(p, part.get(c))
                            for c, p in preds.items()):
-                    continue
-                fstats = r.get("stats") or {}
-                if not all(_match_stats(c, p, fstats.get(c))
-                           for c, p in spreds.items()):
-                    stats["files_skipped_by_stats"] += 1
                     continue
                 files.append(r["path"])
         stats["files_selected"] = len(files)
@@ -1412,13 +1120,10 @@ class Catalog:
 
     def read(self, spark: SparkSession, table: str,
              version: int | None = None,
-             where: dict | None = None,
-             stats_where: dict | None = None) -> DataFrame:
-        """Read a snapshot; `where=` (partition values) and `stats_where=`
-        (typed column min/max stats) prune at the manifest level (only
-        matching files are opened) and apply residual row filters for
-        exactness — stats skipping is sound-but-not-exact (a kept file may
-        still hold no matching rows), so the typed residual closes it.
+             where: dict | None = None) -> DataFrame:
+        """Read a snapshot; `where=` (partition values) prunes at the
+        manifest level (only matching files are opened) and applies a
+        residual row filter for exactness.
 
         The read uses the RECORDED snapshot schema (not a sampled file
         footer), so mixed-schema file sets read stably: after an additive
@@ -1433,8 +1138,7 @@ class Catalog:
             from pyspark.sql.types import StructType  # noqa: PLC0415
 
             schema = StructType.fromJson(json.loads(snap["schema"]))
-        files = self.scan_files(table, where=where,
-                                stats_where=stats_where, version=version)
+        files = self.scan_files(table, where=where, version=version)
         if not files:
             if not self._snap_files(snap):
                 raise ValueError(f"empty table: {table}")
@@ -1449,9 +1153,6 @@ class Catalog:
         df = reader.parquet(*files)
         for k, spec in (where or {}).items():
             df = df.filter(self._residual(F, df, k, _normalize_pred(spec)))
-        for k, spec in (stats_where or {}).items():
-            df = df.filter(self._stats_residual(
-                F, df, k, _normalize_stats_pred(spec)))
         return df
 
     def _commit_delta(self, table: str, since: int,
@@ -1581,28 +1282,3 @@ class Catalog:
         if op == "<":
             return c < pred[1]
         return (c >= pred[1]) & (c <= pred[2])  # between
-
-    @staticmethod
-    def _stats_residual(F, df: DataFrame, col: str, pred: tuple):
-        """Typed row filter paired with stats skipping: compares in the
-        COLUMN's type (no string cast — '9' vs '10' must order 9 < 10),
-        using the predicate's original Python values."""
-        c = df[col]
-        op = pred[0]
-        if op == "=":
-            return c.isNull() if pred[2] is None else c == F.lit(pred[2])
-        if op == "in":
-            vals = [orig for _enc, orig in pred[1] if orig is not None]
-            cond = c.isin(vals) if vals else F.lit(False)
-            if any(orig is None for _enc, orig in pred[1]):
-                cond = cond | c.isNull()
-            return cond
-        if op == ">=":
-            return c >= F.lit(pred[2])
-        if op == "<=":
-            return c <= F.lit(pred[2])
-        if op == ">":
-            return c > F.lit(pred[2])
-        if op == "<":
-            return c < F.lit(pred[2])
-        return (c >= F.lit(pred[3])) & (c <= F.lit(pred[4]))  # between

@@ -103,22 +103,14 @@ def stream_to_catalog(spark: SparkSession, pages_dir: str, catalog,
     at-least-once); the txn check makes the replay a no-op, upgrading the
     sink to exactly-once — the same marker discipline as the batch
     pipeline's checkpoint commit (plans/lineage.py). Returns the query."""
-    from ..plans.lineage import WARC_DAY_COL, with_warc_day  # noqa: PLC0415
+    from ..plans.lineage import WARC_DAY_COL, day_stamped  # noqa: PLC0415
 
     stream = _stream_reader(spark, pages_dir, files_per_trigger)
-    # same day-partitioned layout as the batch pipeline — ONE shared
-    # derivation (plans/lineage.with_warc_day) so streamed results prune
-    # identically under the report/read path
-    dayed = with_warc_day(stream)
+    # same day-partitioned layout and resume guard as the batch pipeline —
+    # ONE shared decision (plans/lineage.day_stamped) so streamed results
+    # prune identically under the report/read path
+    dayed = day_stamped(stream, catalog, table)
     partitioned = dayed is not None
-    if partitioned and catalog.exists(table):
-        # resume guard: a table written by the pre-day-layout sink has no
-        # warc_day column; mixing partitioned and unpartitioned files would
-        # make day-pruned reads drop the old rows (schema sampled from a
-        # new file -> old rows read warc_day=NULL). Match the existing
-        # layout instead.
-        schema = (catalog._read_current(table) or {}).get("schema") or ""
-        partitioned = f'"{WARC_DAY_COL}"' in schema
     passthrough = []
     if partitioned:
         stream = dayed.select("url", "html", WARC_DAY_COL)

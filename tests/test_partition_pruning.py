@@ -126,6 +126,10 @@ def test_range_and_in_predicates(spark, tmp_path):
     assert ids({"day": ("in", ["2025-01-02", "2025-01-05"])}) == exp_in
     exp_bt = sorted(i for i in range(45) if 3 <= i % 9 + 1 <= 4)
     assert ids({"day": ("between", "2025-01-03", "2025-01-04")}) == exp_bt
+    # a partition range combined with a predicate on an unpartitioned
+    # column: files without recorded values stay, the residual is exact
+    both = {"day": (">=", "2025-01-07"), "doc_id": ("in", [3, 6, 16, 40])}
+    assert ids(both) == [6, 16]
     # range prune really shrinks the file set
     assert len(cat.scan_files("t", where={"day": ("<", "2025-01-02")})) \
         < len(cat.scan_files("t"))
@@ -346,6 +350,43 @@ def test_reads_pre_manifest_list_snapshots(spark, tmp_path):
     assert cat.read(spark, "t").count() == 12
     assert "manifests" in cat._read_current("t")
 
+    # a table whose manifests still carry the per-file `stats` dicts and
+    # per-entry `stats_summary` of the retired column-stats tier reads,
+    # merges and feeds read_incremental with no migration: the keys are
+    # ignored
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources import tables as T
+
+    cat.append("s", df.repartition(2), partition_by=["lang"])
+    v1 = os.path.join(str(tmp_path), "s", "_meta", "v1.json")
+    with open(v1) as f:
+        snap = json.load(f)
+    for e in snap["manifests"]:
+        with open(e["manifest"]) as f:
+            rows = json.load(f)["files"]
+        for r in rows:
+            r["stats"] = {"doc_id": {"nulls": 0, "min": 0, "max": 9}}
+        with open(e["manifest"], "w") as f:
+            json.dump({"files": rows}, f)
+        e["stats_summary"] = {"doc_id": {"null": False, "min": 0, "max": 9}}
+    with open(v1, "w") as f:
+        json.dump(snap, f)
+
+    def ids(rows):
+        return sorted(r.doc_id for r in rows)
+
+    full_en = ids(r for r in cat.read(spark, "s").collect() if r.lang == "en")
+    assert ids(cat.read(spark, "s", where={"lang": "en"}).collect()) \
+        == full_en == [0, 2, 4, 6, 8]
+    for i in range(T.MERGE_MIN):
+        cat.append("s", spark.createDataFrame([(100 + i, "hi")],
+                                              "doc_id long, lang string"))
+    merged = cat._read_current("s")["manifests"]
+    assert len(merged) < T.MERGE_MIN
+    assert any("stats" in r for e in merged for r in cat._read_manifest(e))
+    whole = ids(cat.read(spark, "s").collect())
+    assert len(whole) == 10 + T.MERGE_MIN
+    assert ids(cat.read_incremental(spark, "s", 0).collect()) == whole
+
 
 def test_predicate_semantics_property(spark, tmp_path):
     """Property check: for a table whose partition values include the nasty
@@ -384,3 +425,46 @@ def test_predicate_semantics_property(spark, tmp_path):
     for where, want in cases:
         got = {r.doc_id for r in cat.read(spark, "t", where=where).collect()}
         assert got == want, (where, sorted(got), sorted(want))
+
+
+def test_commits_record_no_column_stats(spark, tmp_path):
+    """Manifest rows are {path, partition, txn} and manifest entries carry
+    no `stats_summary` after append (64 files), overwrite and compact; no
+    catalog entry point takes a stats knob; the data files keep their
+    TIMESTAMP_MICROS encoding and the session's timestamp setting."""
+    import inspect
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    ts_key = "spark.sql.parquet.outputTimestampType"
+    ts_before = spark.conf.get(ts_key)
+    cat = Catalog(str(tmp_path))
+
+    def check(n_files):
+        entries = cat._read_current("t")["manifests"]
+        assert not any("stats_summary" in e for e in entries)
+        rows = [r for e in entries for r in cat._read_manifest(e)]
+        assert all(set(r) == {"path", "partition", "txn"} for r in rows)
+        assert len(rows) == n_files
+        pf = pq.ParquetFile(rows[0]["path"])
+        ts = pf.schema.column(pf.schema.names.index("ts"))
+        assert ts.physical_type == "INT64"
+        assert spark.conf.get(ts_key) == ts_before
+
+    df = spark.range(0, 640).withColumn("ts", F.timestamp_seconds("id"))
+    cat.append("t", df.repartition(64), txn="a")
+    check(64)
+    cat.overwrite("t", df.repartition(4), txn="o")
+    check(4)
+    for i in range(3):
+        cat.append("t", df.limit(10).repartition(2), txn=f"a{i}")
+    assert cat.compact(spark, "t")["version"] is not None
+    check(1)
+    assert cat.read(spark, "t").count() == 640 + 30
+
+    for fn in (Catalog.read, Catalog.scan_files, Catalog.append,
+               Catalog.overwrite):
+        params = set(inspect.signature(fn).parameters)
+        assert not {p for p in params if p.startswith("stats_")}, fn
+        assert "collect_stats" not in params, fn

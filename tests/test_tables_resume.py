@@ -152,6 +152,27 @@ def test_resume_into_pre_day_layout_table(spark, pages, tmp_path):
     urls = [r.url for r in res.select("url").collect()]
     assert len(urls) == len(set(urls))  # no dropped or duplicated rows
 
+    # the streaming sink shares the guard: a day-carrying stream into a
+    # table first written without warc_ts keeps the unpartitioned layout
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.streaming import (
+        extract_stream,
+    )
+
+    pages_dir = str(tmp_path / "pages")
+    pages.write.parquet(pages_dir)
+    cat.append("streamed", res.limit(5))
+    q = extract_stream.stream_to_catalog(
+        spark, pages_dir, cat, "streamed", str(tmp_path / "ck"))
+    q.processAllAvailable()
+    q.stop()
+    q.awaitTermination(60)
+    streamed = cat.read(spark, "streamed")
+    assert "warc_day" not in streamed.columns
+    assert streamed.count() == 5 + pages.count()
+    assert all(r["partition"] is None
+               for e in cat._read_current("streamed")["manifests"]
+               for r in cat._read_manifest(e))
+
 
 def test_lineage_carries_measured_wall_ms(spark, pages, tmp_path):
     """A8: run_extraction records REAL per-partition extraction wall time
