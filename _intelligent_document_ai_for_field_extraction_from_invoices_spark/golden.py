@@ -120,7 +120,6 @@ _MONTHS = {
         "november december".split()
     )
 }
-_MONTH_ABBR = {m[:3]: n for m, n in _MONTHS.items()}
 
 # Shared-pattern discipline: the extractor pattern STRINGS below are reused
 # VERBATIM by the native relational twin (operators/nodes.py regexp_extract,
@@ -759,7 +758,6 @@ def assemble_body(nodes: list[dict]) -> tuple[str, int, int, float, int, int]:
 # ---------------------------------------------------------------------------
 
 _PDF_TJ_RE = re.compile(rb"\(((?:[^()\\]|\\.)*)\)\s*Tj")
-_PDF_UNESC = {b"\\(": b"(", b"\\)": b")", b"\\\\": b"\\"}
 
 
 def pdf_escape(s: str) -> str:

@@ -1,117 +1,12 @@
-"""Evaluation job (SURVEY §3.3 retarget of evaluate.py).
-
-One distributed pass: results JOIN golden on url (J1, broadcast-able) ->
-per-field correctness expressions (A5/A6 rules: fuzzy >= 0.9 for names, exact
-for dates, byte-equality for body — tolerance -> 0 is our gate) -> hash
-aggregations for P/R/F1, document-level accuracy, confidence distribution
-(A7), and error categorization (A10). All native expressions."""
+"""Run cost and throughput over committed lineage rows (SURVEY §3.3 retarget
+of evaluate.py's A8/A9 metrics): per-partition cost, run-level throughput
+and cost on the deterministic estimate tier, and measured throughput from
+the per-partition wall time. All native expressions."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.text import levenshtein_ratio
-
-FUZZY_NAME_THRESHOLD = 0.9  # ref evaluate.py:109-114
-
-
-def joined_eval(results: DataFrame, golden_df: DataFrame) -> DataFrame:
-    """results x golden with per-field boolean outcome columns."""
-    g = golden_df.select(
-        F.col("url"),
-        F.col("title").alias("g_title"),
-        F.col("byline").alias("g_byline"),
-        F.col("pub_date").alias("g_pub_date"),
-        F.col("body_text").alias("g_body_text"),
-    )
-    j = results.join(F.broadcast(g), "url", "left")
-
-    def outcome(pred, gold, match):
-        return (
-            F.when(pred.isNotNull() & gold.isNotNull() & match, "tp")
-            .when(pred.isNotNull() & (gold.isNull() | ~match), "fp")
-            .when(pred.isNull() & gold.isNotNull(), "fn")
-            .otherwise("tn")
-        )
-
-    title_match = levenshtein_ratio(F.col("title"), F.col("g_title")) >= FUZZY_NAME_THRESHOLD
-    byline_match = levenshtein_ratio(F.col("byline"), F.col("g_byline")) >= FUZZY_NAME_THRESHOLD
-    date_match = F.col("pub_date") == F.col("g_pub_date")
-    body_match = F.col("body_text") == F.col("g_body_text")  # byte-exact
-
-    return j.withColumns(
-        {
-            "o_title": outcome(F.col("title"), F.col("g_title"), title_match),
-            "o_byline": outcome(F.col("byline"), F.col("g_byline"), byline_match),
-            "o_pub_date": outcome(F.col("pub_date"), F.col("g_pub_date"), date_match),
-            "body_exact": F.coalesce(body_match, F.lit(False)),
-        }
-    )
-
-
-def field_prf(joined: DataFrame) -> DataFrame:
-    """Per-field precision/recall/F1 (A5, evaluate.py:233-347)."""
-    frames = []
-    for f in ("title", "byline", "pub_date"):
-        o = F.col(f"o_{f}")
-        agg = joined.agg(
-            F.lit(f).alias("field"),
-            F.sum(F.when(o == "tp", 1).otherwise(0)).alias("tp"),
-            F.sum(F.when(o == "fp", 1).otherwise(0)).alias("fp"),
-            F.sum(F.when(o == "fn", 1).otherwise(0)).alias("fn"),
-        )
-        frames.append(agg)
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    p = F.col("tp") / F.greatest(F.col("tp") + F.col("fp"), F.lit(1))
-    r = F.col("tp") / F.greatest(F.col("tp") + F.col("fn"), F.lit(1))
-    return out.withColumns(
-        {
-            "precision": F.round(p, 4),
-            "recall": F.round(r, 4),
-            "f1": F.round(2 * p * r / F.greatest(p + r, F.lit(1e-9)), 4),
-        }
-    )
-
-
-def document_accuracy(joined: DataFrame) -> DataFrame:
-    """Document-level accuracy (A6): all fields correct AND byte-exact body;
-    partially-correct = >= 2 of 4 checks (evaluate.py:154-206 scaled)."""
-    checks = (
-        F.when(F.col("o_title").isin("tp", "tn"), 1).otherwise(0)
-        + F.when(F.col("o_byline").isin("tp", "tn"), 1).otherwise(0)
-        + F.when(F.col("o_pub_date").isin("tp", "tn"), 1).otherwise(0)
-        + F.when(F.col("body_exact"), 1).otherwise(0)
-    )
-    per_doc = joined.withColumn("n_ok", checks)
-    return per_doc.agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.when(F.col("n_ok") == 4, 1).otherwise(0)).alias("fully_correct"),
-        F.sum(F.when(F.col("n_ok") >= 2, 1).otherwise(0)).alias("partially_correct"),
-        F.round(F.avg(F.when(F.col("n_ok") == 4, 1.0).otherwise(0.0)), 4)
-        .alias("doc_accuracy"),
-        F.round(F.avg(F.when(F.col("body_exact"), 1.0).otherwise(0.0)), 4)
-        .alias("body_byte_match_rate"),
-    )
-
-
-def confidence_distribution(results: DataFrame) -> DataFrame:
-    """A7 (evaluate.py:349-393): moments + exact median + tier/threshold
-    counts over overall_confidence."""
-    c = F.col("overall_confidence")
-    return results.agg(
-        F.round(F.avg(c), 4).alias("mean"),
-        F.round(F.expr("percentile(overall_confidence, 0.5)"), 4).alias("median"),
-        F.round(F.stddev(c), 4).alias("stdev"),
-        F.round(F.min(c), 4).alias("min"),
-        F.round(F.max(c), 4).alias("max"),
-        F.sum(F.when(c >= 0.85, 1).otherwise(0)).alias("n_high"),
-        F.sum(F.when((c >= 0.65) & (c < 0.85), 1).otherwise(0)).alias("n_medium"),
-        F.sum(F.when(c < 0.65, 1).otherwise(0)).alias("n_low"),
-    )
-
 
 CPU_RATE_PER_HOUR = 0.01  # ref cost model, executable.py:473-488
 # estimate tier for lineage rows without measured wall_ms: ~2 MB/s/core of
@@ -196,15 +91,3 @@ def performance_metrics(lineage_df: DataFrame) -> DataFrame:
         .alias("avg_ms_per_doc"),
     )
 
-
-def error_breakdown(results: DataFrame) -> DataFrame:
-    """A10 (evaluate.py:487-549): categorize error strings and count."""
-    cat = (
-        F.when(F.col("error_message").isNull(), "none")
-        .when(F.col("error_message") == "empty", "empty_input")
-        .when(F.col("error_message") == "oversize", "oversize")
-        .when(F.col("error_message").startswith("pdf_parse"), "pdf_parse")
-        .when(F.col("error_message").startswith("parse"), "parse")
-        .otherwise("other")
-    )
-    return results.groupBy(cat.alias("category")).agg(F.count("*").alias("n"))

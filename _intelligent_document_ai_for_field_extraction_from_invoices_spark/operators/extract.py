@@ -27,8 +27,6 @@ RESULTS_SCHEMA = (
     "body_span_len long, n_html_bytes long, part_id int"
 )
 
-RESULT_COLUMNS = [f.split()[0] for f in RESULTS_SCHEMA.split(", ")]
-
 
 def extract_pages(pages: DataFrame, *, num_partitions: int | None = None,
                   salted: bool = True,

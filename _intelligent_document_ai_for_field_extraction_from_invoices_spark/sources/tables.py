@@ -838,7 +838,7 @@ class Catalog:
         # pin the file list AND the data read to cur's version: a racing
         # append between these reads would otherwise leak rows into the
         # rewrite that the conflict rebase then double-counts
-        files = self.scan_files(table, version=cur["version"])
+        files = self._scan(cur, None)
         total = sum(os.path.getsize(f) for f in files)
         n_target = max(1, math.ceil(total / target_file_bytes))
         if len(files) <= n_target:
@@ -1096,7 +1096,11 @@ class Catalog:
         predicate column are conservatively kept (pruning is an
         optimization; `read` applies the residual row filter).
         `self.last_scan_stats` records how much the scan pruned."""
-        snap = self._snap(table, version)
+        return self._scan(self._snap(table, version), where)
+
+    def _scan(self, snap: dict, where: dict | None) -> list[str]:
+        """`scan_files` over an already resolved snapshot, so a caller that
+        also needs the snapshot's schema resolves it only once."""
         preds = {k: _normalize_pred(v) for k, v in (where or {}).items()}
         stats = {"manifests_total": len(snap["manifests"]),
                  "manifests_opened": 0, "files_selected": 0}
@@ -1138,9 +1142,11 @@ class Catalog:
             from pyspark.sql.types import StructType  # noqa: PLC0415
 
             schema = StructType.fromJson(json.loads(snap["schema"]))
-        files = self.scan_files(table, where=where, version=version)
+        files = self._scan(snap, where)
         if not files:
-            if not self._snap_files(snap):
+            # the manifest list's per-entry counts tell an empty table from
+            # a predicate that matched nothing without opening a manifest
+            if not any(e["n_files"] for e in snap["manifests"]):
                 raise ValueError(f"empty table: {table}")
             # a predicate matching zero partitions is a normal query
             # outcome: empty result with the table's schema (recorded, or
@@ -1158,17 +1164,16 @@ class Catalog:
     def _commit_delta(self, table: str, since: int,
                       until: int) -> list[tuple[str, int, str | None]]:
         """The data files ADDED by the commits in `(since, until]`, as
-        (absolute path, version, txn): the one commit-delta rule behind
-        `read_incremental` and the catalog_cdc stream. `compact` adds
-        nothing; `overwrite` is accepted only as table creation; any other
-        operation removes rows and raises ValueError; a vacuum-expired
-        version raises FileNotFoundError. An append added the files of its
-        entries the parent does not list, minus the files of the parent's
-        entries it no longer lists (`_maybe_merge` folds those into its new
-        manifest). Appends never remove files, so the rule is exact, and
-        only new and folded-away manifests are opened, each once. A legacy
-        entry (manifest None, inline rows) is parent state if the parent
-        has one."""
+        (absolute path, version, txn): the commit-delta rule behind
+        `read_incremental`. `compact` adds nothing; `overwrite` is accepted
+        only as table creation; any other operation removes rows and raises
+        ValueError; a vacuum-expired version raises FileNotFoundError. An
+        append added the files of its entries the parent does not list,
+        minus the files of the parent's entries it no longer lists
+        (`_maybe_merge` folds those into its new manifest). Appends never
+        remove files, so the rule is exact, and only new and folded-away
+        manifests are opened, each once. A legacy entry (manifest None,
+        inline rows) is parent state if the parent has one."""
         if not 0 <= since <= until:
             raise ValueError(f"need 0 <= since ({since}) <= until ({until})")
         opened: dict[str | None, set[str]] = {}
@@ -1193,8 +1198,7 @@ class Catalog:
                     raise ValueError(
                         f"version {v} of {table!r} is a '{op}' commit, "
                         "which removes rows — an added-rows feed cannot "
-                        "express it; re-read the table (or restart the "
-                        "stream from a fresh sinceversion) instead")
+                        "express it; re-read the table instead")
                 parent = {e.get("manifest"): e
                           for e in (prev["manifests"] if prev else [])}
                 child = {e.get("manifest") for e in snap["manifests"]}

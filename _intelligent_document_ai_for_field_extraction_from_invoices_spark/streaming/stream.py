@@ -1,10 +1,10 @@
-"""Structured Streaming variants of the batch operators.
+"""Structured Streaming tumbling-window counts.
 
 The reference has NO streaming operators (SURVEY §2.9 — its 'streaming' is a
-file iterator), so these are engine extensions: the same tumbling-window and
-extraction logic expressed over readStream, verified against the batch result
-in tests (memory sink + processAllAvailable drives a bounded parquet source
-to completion synchronously)."""
+file iterator), so this is an engine extension: the batch tumbling-window
+aggregation expressed over readStream, verified against the batch result in
+tests and by the q_stream_hourly_counts oracle (processAllAvailable drives a
+bounded parquet source to completion synchronously)."""
 
 from __future__ import annotations
 

@@ -20,19 +20,3 @@ def spark():
 def documents(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
 
-
-def drain_stream_to_memory(df, mode: str = "append"):
-    """Run a bounded streaming DataFrame to completion through a memory sink
-    and return the collected result as a batch DataFrame. TEST-ONLY: a
-    memory sink materializes every output row in the driver, which is why
-    this helper lives here and not in the library (round-2 verdict #5)."""
-    import uuid
-
-    spark = df.sparkSession
-    name = f"drain_{uuid.uuid4().hex[:8]}"
-    q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {name}")

@@ -1,15 +1,8 @@
-"""functions/text.py scalar ops + fallback-tier routing/merge + multimodal
-plumbing + streaming parity."""
+"""functions/text.py scalar ops + streaming parity."""
 
-import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from _intelligent_document_ai_for_field_extraction_from_invoices_spark.functions import text as tf
-from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import (
-    fallback,
-    multimodal,
-)
 from tests.conftest import SF_DIR
 
 
@@ -23,126 +16,6 @@ def test_pii_redaction(spark):
     assert "[EMAIL]" in got and "[PHONE]" in got
     assert "[PAN]" in got and "[ID]" in got
     assert "a@b.com" not in got
-
-
-def test_numeric_confusables(spark):
-    assert _one(spark, tf.fix_numeric_confusables(F.lit("1O5Z"))) == "1052"
-    # non-digit-like strings untouched (guarded translate, P9)
-    assert _one(spark, tf.fix_numeric_confusables(F.lit("Oslo"))) == "Oslo"
-
-
-def test_unit_scaling(spark):
-    assert _one(spark, tf.scale_by_unit(F.lit(2.0), F.lit("lakh"))) == 200000.0
-    assert _one(spark, tf.scale_by_unit(F.lit(2.0), F.lit("unknown"))) == 2.0
-
-
-def test_clean_name(spark):
-    cases = {
-        "M/s Acme Traders,": "Acme Traders",
-        "by John Smith ;": "John Smith",
-        "Acme pvt. ltd.": "Acme Pvt Ltd",
-        "  Widgets   LTD  ": "Widgets Ltd",
-    }
-    for raw, want in cases.items():
-        assert _one(spark, tf.clean_name(F.lit(raw))) == want
-
-
-def test_similarity_columns(spark):
-    r = _one(spark, tf.levenshtein_ratio(F.lit("kitten"), F.lit("sitting")))
-    assert r == round(1 - 3 / 7, 4)
-    j = _one(spark, tf.token_jaccard(F.lit("a b c"), F.lit("b c d")))
-    assert j == 0.5
-
-
-def test_token_sort_ratio_matches_pure_python(spark):
-    pairs = [("Acme News Ltd", "ltd acme news"), ("abc", "xyz"), ("", "")]
-    df = spark.createDataFrame(pairs, "a string, b string")
-    got = df.select(tf.token_sort_ratio("a", "b").alias("r")).collect()
-    for (a, b), row in zip(pairs, got):
-        assert row.r == tf.token_sort_ratio_py(a, b)
-    assert tf.token_sort_ratio_py("Acme News Ltd", "ltd acme news") == 1.0
-
-
-def test_nfkc_udf_matches_pure(spark):
-    vals = ["ﬁne ｔｅｘｔ", "a|b_c~d^e", None]
-    df = spark.createDataFrame([(v,) for v in vals], "s string")
-    got = [r.n for r in df.select(tf.nfkc_normalize("s").alias("n")).collect()]
-    assert got[0] == tf.nfkc_normalize_py(vals[0]) == "fine text"
-    assert got[1] == "abcde"
-    assert got[2] is None
-
-
-# ---------------------------------------------------------------------------
-
-
-def _results_df(spark, rows):
-    cols = ("url string, title string, byline string, pub_date string, "
-            "body_text string, title_conf double, byline_conf double, "
-            "date_conf double, overall_confidence double")
-    return spark.createDataFrame(rows, cols)
-
-
-def test_fallback_routing_predicate(spark):
-    rows = [
-        ("u1", "T", "B", "2024-01-01", "body", 0.9, 0.9, 0.9, 0.9),
-        ("u2", None, None, "2024-01-01", "body", None, None, 0.9, 0.8),  # 2 missing
-        ("u3", "T", "B", "2024-01-01", "body", 0.9, 0.9, 0.9, 0.5),      # low conf
-    ]
-    got = {r.url: r.use_fallback
-           for r in fallback.needs_fallback(_results_df(spark, rows)).collect()}
-    assert got == {"u1": False, "u2": True, "u3": True}
-
-
-def test_fallback_merge_semantics(spark):
-    prim = _results_df(spark, [
-        ("u1", "Same Title", None, "2024-01-01", "b", 0.6, None, 0.9, 0.7),
-        ("u2", "Primary", "P Author", None, "b", 0.5, 0.9, None, 0.7),
-    ])
-    fb = _results_df(spark, [
-        ("u1", "same title", "FB Author", "2024-01-01", "b", 0.7, 0.8, 0.9, 0.8),
-        ("u2", "Fallback", None, "2024-02-02", "b", 0.8, None, 0.6, 0.8),
-    ])
-    got = {r.url: r for r in fallback.merge_results(prim, fb).collect()}
-    # agreement (case-insensitive): keep primary, conf x1.25 capped
-    assert got["u1"].title == "Same Title"
-    assert got["u1"].title_conf == 0.75  # 0.6*1.25
-    # primary missing -> fallback at 0.9x
-    assert got["u1"].byline == "FB Author"
-    assert got["u1"].byline_conf == round(0.8 * 0.9, 4)
-    # disagreement -> higher-confidence side wins
-    assert got["u2"].title == "Fallback"
-    assert got["u2"].title_conf == 0.8
-    # fallback missing -> primary kept
-    assert got["u2"].byline == "P Author"
-    assert got["u2"].pub_date == "2024-02-02"
-
-
-# ---------------------------------------------------------------------------
-
-
-def test_multimodal_plumbing(spark):
-    assets = multimodal.synthetic_assets(spark, n=32)
-    feats = multimodal.extract_features(assets).collect()
-    assert len(feats) == 32
-    by_id = {r.asset_id: r for r in feats}
-    for r in feats:
-        assert len(r.feat) == 8
-        assert r.n_bytes > 0
-    # deterministic across runs
-    again = {r.asset_id: r for r in multimodal.extract_features(assets).collect()}
-    assert all(again[i].digest == by_id[i].digest for i in by_id)
-
-
-def test_multimodal_real_decoder_rejects_non_image_blobs(spark):
-    # synthetic_assets payloads are raw bytes, not PPM/BMP: the real
-    # decode tier (round 5 decodes uncompressed images for real) must
-    # fail loudly on them, not hand back garbage features
-    assets = multimodal.synthetic_assets(spark, n=2)
-    with pytest.raises(Exception, match="unrecognized image payload"):
-        multimodal.extract_features(assets, decoder="real").collect()
-
-
-# ---------------------------------------------------------------------------
 
 
 def test_streaming_hourly_matches_batch(spark):

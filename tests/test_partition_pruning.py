@@ -92,6 +92,87 @@ def test_fully_pruned_read_returns_empty_frame(spark, cat):
     assert set(got.columns) == {"doc_id", "lang", "text"}
 
 
+def test_read_resolves_current_snapshot_once(spark, cat, monkeypatch):
+    """A read takes its schema and its file list from ONE resolution of the
+    current snapshot."""
+    calls = []
+    read_current = Catalog._read_current
+
+    def counted(self, table):
+        calls.append(table)
+        return read_current(self, table)
+
+    monkeypatch.setattr(Catalog, "_read_current", counted)
+    for where in (None, {"lang": "en"}, {"lang": "fr"}):
+        calls.clear()
+        cat.read(spark, "docs", where=where)
+        assert calls == ["docs"], where
+
+
+def test_read_pairs_schema_and_files_of_one_version(spark, cat, monkeypatch):
+    """A schema-evolving append that commits right after a read resolved
+    the current snapshot must not leak its files into that read: the read
+    keeps the resolved version's schema AND rows."""
+    read_current = Catalog._read_current
+    raced = []
+
+    def racing(self, table):
+        snap = read_current(self, table)
+        if not raced:
+            raced.append(True)
+            self.append("docs", spark.createDataFrame(
+                [(1000, "en", "late", 0.5)],
+                "doc_id long, lang string, text string, score double"),
+                partition_by=["lang"])
+        return snap
+
+    monkeypatch.setattr(Catalog, "_read_current", racing)
+    got = cat.read(spark, "docs")
+    assert raced
+    assert got.columns == ["doc_id", "lang", "text"]
+    assert sorted(r.doc_id for r in got.collect()) == list(range(90))
+    monkeypatch.undo()
+    after = cat.read(spark, "docs")
+    assert after.columns == ["doc_id", "lang", "text", "score"]
+    assert after.count() == 91
+
+
+def test_zero_match_read_opens_no_manifest(spark, tmp_path, monkeypatch):
+    """A predicate that matches nothing on a multi-manifest table returns
+    the recorded schema with zero rows, deciding "empty table" vs "no
+    match" from the manifest list alone: manifest pruning holds on exactly
+    the query it prunes best (e.g. `report --day` for an absent day)."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    cat = Catalog(str(tmp_path))
+    for day in ("2025-01-01", "2025-01-02", "2025-01-03"):
+        cat.append("t", spark.createDataFrame(
+            [(i, day) for i in range(4)], "doc_id long, warc_day string"
+        ).coalesce(1), partition_by=["warc_day"])
+    snap = cat._read_current("t")
+    assert len(snap["manifests"]) == 3
+    schema = StructType.fromJson(json.loads(snap["schema"]))
+    cat.overwrite("e", spark.createDataFrame(
+        [], "doc_id long, warc_day string"), partition_by=["warc_day"])
+    opened = []
+    read_manifest = Catalog._read_manifest
+
+    def counted(self, entry):
+        opened.append(entry.get("manifest"))
+        return read_manifest(self, entry)
+
+    monkeypatch.setattr(Catalog, "_read_manifest", counted)
+    got = cat.read(spark, "t", where={"warc_day": "1999-01-01"})
+    assert got.count() == 0
+    assert got.schema == schema
+    assert opened == []
+    for where in (None, {"warc_day": "1999-01-01"}):
+        with pytest.raises(ValueError, match="empty table: e"):
+            cat.read(spark, "e", where=where)
+
+
 def test_rollback_preserves_partition_metadata(spark, tmp_path):
     """remove_orphan_appends' rollback commit must carry forward the
     surviving files' partition values, or pruning silently dies."""
@@ -343,6 +424,10 @@ def test_reads_pre_manifest_list_snapshots(spark, tmp_path):
         f.write("1")
 
     assert cat.read(spark, "t").count() == 10
+    # a zero-match read of a snapshot without a recorded schema takes its
+    # columns from one file footer
+    none = cat.read(spark, "t", where={"lang": "fr"})
+    assert none.count() == 0 and set(none.columns) == {"doc_id", "lang"}
     en = cat.scan_files("t", where={"lang": "en"})
     assert 0 < len(en) < len(cat.scan_files("t"))
     # appends on top of a legacy snapshot write the new layout and keep data

@@ -1,29 +1,19 @@
-"""Stateful streaming sessionization == batch sessionization."""
+"""Streaming extraction into the catalog: exactly once, byte-identical
+to batch extraction."""
 
-from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators.sessionize import (
-    session_counts,
-)
-from _intelligent_document_ai_for_field_extraction_from_invoices_spark.streaming.stateful import (
-    session_counts_stream,
-)
-from tests.conftest import SF_DIR
-
-
-def test_stateful_stream_matches_batch(spark):
-    got = {r.user_id: (r.n_sessions, r.n_events)
-           for r in session_counts_stream(spark, SF_DIR).collect()}
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    exp = {r.user_id: (r.n_sessions, r.n_events)
-           for r in session_counts(ev).collect()}
-    assert got == exp
+import os
 
 
 def test_streaming_extraction_byte_identity(spark, documents, tmp_path):
     """The flagship extraction operator runs UNCHANGED over readStream and
-    reproduces the batch result byte-for-byte (multi-micro-batch)."""
+    reproduces the batch result byte-for-byte (multi-micro-batch, no
+    restart)."""
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark import datagen
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators.extract import (
         extract_pages,
+    )
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources.tables import (
+        Catalog,
     )
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.streaming import (
         extract_stream,
@@ -31,150 +21,80 @@ def test_streaming_extraction_byte_identity(spark, documents, tmp_path):
 
     pages_dir = str(tmp_path / "pages")
     datagen.pages_from_documents(documents).repartition(6).write.parquet(pages_dir)
+    cat = Catalog(str(tmp_path / "cat"))
 
-    from tests.conftest import drain_stream_to_memory
+    q = extract_stream.stream_to_catalog(
+        spark, pages_dir, cat, "s", str(tmp_path / "ck"), files_per_trigger=2)
+    q.processAllAvailable()
+    q.stop()
+    q.awaitTermination(60)
 
+    assert len(cat.txns("s")) == 3  # 6 files, 2 per micro-batch
     batch = {r.url: (r.body_text, r.status)
              for r in extract_pages(spark.read.parquet(pages_dir)).collect()}
     streamed = {r.url: (r.body_text, r.status)
-                for r in drain_stream_to_memory(
-                    extract_stream.extraction_stream_df(
-                        spark, pages_dir, files_per_trigger=2)).collect()}
+                for r in cat.read(spark, "s").collect()}
     assert streamed == batch
     assert len(streamed) == 500
 
 
-def test_streaming_exact_dedup_first_seen_wins(spark, tmp_path):
-    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.streaming import (
-        extract_stream,
-    )
-
-    from tests.conftest import drain_stream_to_memory
-
-    docs_dir = str(tmp_path / "docs")
-    spark.createDataFrame(
-        [(1, "same text"), (2, "same text"), (3, "other text")],
-        "doc_id long, text string",
-    ).coalesce(1).write.parquet(docs_dir)
-    out = drain_stream_to_memory(
-        extract_stream.exact_dedup_stream_df(spark, docs_dir)).collect()
-    assert len(out) == 2
-    assert {r.text for r in out} == {"same text", "other text"}
-
-
-def test_streaming_dedup_watermark_bounds_state(spark, tmp_path):
-    """Watermarked streaming dedup (`dropDuplicatesWithinWatermark`):
-    a duplicate inside the watermark horizon is dropped; once the watermark
-    passes digest_event_time + horizon the digest is EVICTED from state, so
-    a much-later duplicate is re-emitted — bounded state is the contract.
-
-    Batches are forced file-by-file (maxFilesPerTrigger=1, mtime-ordered):
-      batch0: A(text X @10:00)                 -> emit; watermark -> 09:50
-      batch1: B(text X @10:05), C(other @12:00)-> B dropped (in state);
-                                                  C emitted; wm -> 11:50
-      batch2: D(text X @12:30) -> still dropped: Spark evicts expired state
-              at batch END, after matching input rows (X expired at 10:10
-              but is matched first); eviction then runs with wm 11:50
-      batch3: E(text X @12:35) -> state evicted, re-emitted
-    """
-    import os
-    import time
-
-    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.streaming import (
-        extract_stream,
-    )
-    from tests.conftest import drain_stream_to_memory
-
-    docs_dir = tmp_path / "docs"
-    docs_dir.mkdir()
-    batches = [
-        [(1, "text X", "2024-01-01 10:00:00")],
-        [(2, "text X", "2024-01-01 10:05:00"),
-         (3, "other", "2024-01-01 12:00:00")],
-        [(4, "text X", "2024-01-01 12:30:00")],
-        [(5, "text X", "2024-01-01 12:35:00")],
-    ]
-    import glob
-    import shutil
-
-    now = time.time()
-    for i, rows in enumerate(batches):
-        stage = str(tmp_path / f"stage{i}")
-        df = spark.createDataFrame(rows, "doc_id long, text string, ts string")
-        df.selectExpr("doc_id", "text", "cast(ts AS timestamp) AS ts") \
-            .coalesce(1).write.parquet(stage)
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        dst = str(docs_dir / f"b{i}.parquet")
-        shutil.copyfile(part, dst)
-        # file-source ordering is by modification time: pin it explicitly
-        os.utime(dst, (now + i, now + i))
-
-    streamed = extract_stream.exact_dedup_stream_df(
-        spark, str(docs_dir), event_time_col="ts",
-        watermark_horizon="10 minutes", files_per_trigger=1)
-    # glob the per-batch subdirs
-    out = drain_stream_to_memory(streamed.where("doc_id IS NOT NULL")).collect()
-    got = sorted(r.doc_id for r in out)
-    # 2 and 4 deduped; 5 re-emitted once the expired digest was evicted
-    assert got == [1, 3, 5], got
-
-
 def test_streaming_checkpoint_restart_exactly_once(spark, documents, tmp_path):
-    """Kill a checkpointed streaming extraction mid-run, restart with the
-    same checkpoint: every url appears exactly once in the sink (file-source
-    + checkpoint = exactly-once), byte-identical to batch."""
-    import time
-
+    """A restart that REPLAYS an already-committed micro-batch (its offsets
+    are logged but its checkpoint commit marker is lost, as after a crash
+    between the sink write and the marker) re-runs foreachBatch with the
+    same batch id; the txn tag turns that into a no-op, so the table keeps
+    every url exactly once and gains no snapshot."""
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark import datagen
-    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators.extract import (
-        extract_pages,
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources.tables import (
+        Catalog,
     )
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.streaming import (
         extract_stream,
     )
 
     pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    datagen.pages_from_documents(documents).repartition(8).write.parquet(pages_dir)
+    ckpt = str(tmp_path / "ck")
+    datagen.pages_from_documents(documents).repartition(2).write.parquet(pages_dir)
+    cat = Catalog(str(tmp_path / "cat"))
 
-    # phase 1: stop after at least one committed micro-batch (1 file each)
-    q = extract_stream.extraction_stream_query(
-        spark, pages_dir, out_dir, ckpt, files_per_trigger=1)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        done = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        if len(done) >= 2:
-            break
-        time.sleep(0.3)
+    q = extract_stream.stream_to_catalog(spark, pages_dir, cat, "s", ckpt)
+    q.processAllAvailable()
     q.stop()
     q.awaitTermination(60)
-    n_partial = spark.read.parquet(out_dir).count()
-    assert 0 < n_partial < 500  # genuinely mid-stream
+    assert cat.txns("s") == {"stream:s:0"}
+    n_snaps = len(cat.snapshots("s"))
+    before = sorted((r.url, r.body_text) for r in cat.read(spark, "s").collect())
+    assert len(before) == 500
 
-    # phase 2: restart with the same checkpoint; drain to completion
-    q2 = extract_stream.extraction_stream_query(
-        spark, pages_dir, out_dir, ckpt, files_per_trigger=3)
+    # the marker and its checksum sidecar, as if never written
+    commits = os.path.join(ckpt, "commits")
+    assert sorted(os.listdir(commits)) == [".0.crc", "0"]
+    for name in os.listdir(commits):
+        os.remove(os.path.join(commits, name))
+
+    q2 = extract_stream.stream_to_catalog(spark, pages_dir, cat, "s", ckpt)
     q2.processAllAvailable()
+    replayed = [p for p in q2.recentProgress
+                if p["batchId"] == 0 and p["numInputRows"] > 0]
     q2.stop()
     q2.awaitTermination(60)
-
-    got = {r.url: r.body_text
-           for r in spark.read.parquet(out_dir).collect()}
-    rows = spark.read.parquet(out_dir).count()
-    assert rows == len(got) == 500  # exactly once, no dup urls
-    batch = {r.url: r.body_text
-             for r in extract_pages(spark.read.parquet(pages_dir)).collect()}
-    assert got == batch
+    assert replayed  # batch 0 really ran again
+    assert len(cat.snapshots("s")) == n_snaps
+    after = sorted((r.url, r.body_text) for r in cat.read(spark, "s").collect())
+    assert after == before
 
 
 def test_stream_to_catalog_exactly_once(spark, documents, tmp_path):
     """Streaming extraction into the snapshot catalog: kill mid-run, restart
     with the same checkpoint — txn-tagged foreachBatch appends make any
-    replayed micro-batch a no-op, so the table has every url exactly once."""
+    replayed micro-batch a no-op, so the table has every url exactly once,
+    byte-identical to batch extraction of the same pages."""
     import time
 
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark import datagen
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators.extract import (
+        extract_pages,
+    )
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources.tables import (
         Catalog,
     )
@@ -209,6 +129,11 @@ def test_stream_to_catalog_exactly_once(spark, documents, tmp_path):
     rows = cat.read(spark, "stream_results").collect()
     urls = [r.url for r in rows]
     assert len(urls) == len(set(urls)) == 500
+    # the streamed operator is the batch operator: body text and status per
+    # url are byte-identical to extract_pages over the same pages
+    batch = {r.url: (r.body_text, r.status)
+             for r in extract_pages(spark.read.parquet(pages_dir)).collect()}
+    assert {r.url: (r.body_text, r.status) for r in rows} == batch
     # every committed snapshot carries a stream txn tag
     assert all(t.startswith("stream:stream_results:")
                for t in cat.txns("stream_results"))

@@ -1,81 +1,4 @@
-"""Window operators (J4/W3/W6), span IoU (F16/J5), currency (F8),
-JSON shaping roundtrip (F13/F14), cost model (A9)."""
-
-from pyspark.sql import functions as F
-
-from _intelligent_document_ai_for_field_extraction_from_invoices_spark.functions import text as tf
-from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import windows as wo
-
-
-def _nodes(spark, rows):
-    return spark.createDataFrame(
-        rows, "url string, node_idx int, text string")
-
-
-def test_merge_adjacent_pairs(spark):
-    df = _nodes(spark, [
-        ("u", 0, "Breaking News"),
-        ("u", 1, "Markets Rally Hard"),       # pair with 0 and 2
-        ("u", 2, "the lowercase body text continues here"),
-        ("u", 3, "Chapter Two"),
-        ("u", 5, "Not Adjacent"),              # gap: 3 then 5 -> no pair
-    ])
-    got = {r.node_idx: r.merged_text
-           for r in wo.merge_adjacent_pairs(df).collect()}
-    assert got == {0: "Breaking News Markets Rally Hard"}
-
-
-def test_section_window(spark):
-    df = _nodes(spark, [
-        ("u", i, t) for i, t in enumerate(
-            ["intro", "Specifications below", "a", "b", "c", "d", "far away"])
-    ])
-    got = sorted(r.node_idx
-                 for r in wo.section_window(df, "specifications", k=3).collect())
-    assert got == [1, 2, 3, 4]
-    assert wo.section_window(df, "absent-kw", k=3).count() == 0
-
-
-def test_nms_suppression(spark):
-    spans = spark.createDataFrame(
-        [("u", 0, 100, 0.9),   # kept (highest)
-         ("u", 10, 100, 0.8),  # IoU with first = 90/110 > 0.5 -> dropped
-         ("u", 200, 50, 0.7),  # disjoint -> kept
-         ("u", 205, 50, 0.6)], # IoU 45/55 > 0.5 -> dropped
-        "url string, span_start long, span_len long, score double")
-    got = sorted((r.span_start, r.score)
-                 for r in wo.suppress_overlapping_spans(spans).collect())
-    assert got == [(0, 0.9), (200, 0.7)]
-
-
-def test_span_iou_expression(spark):
-    df = spark.range(1)
-    v = df.select(wo.span_iou(F.lit(0), F.lit(100), F.lit(50), F.lit(100))
-                  .alias("iou")).first().iou
-    assert abs(v - 50 / 150) < 1e-12
-    z = df.select(wo.span_iou(F.lit(0), F.lit(10), F.lit(20), F.lit(10))
-                  .alias("iou")).first().iou
-    assert z == 0.0
-
-
-def test_currency_flag(spark):
-    df = spark.createDataFrame(
-        [("price ₹500",), ("USD 30",), ("no money here",)], "t string")
-    got = [r.c for r in df.select(tf.has_currency(F.col("t")).alias("c")).collect()]
-    assert got == [True, True, False]
-
-
-def test_json_roundtrip(spark):
-    res = spark.createDataFrame(
-        [("u1", "T", "B", "2024-01-01", 0.95, 0.9, 0.85, 0.91, "success")],
-        "url string, title string, byline string, pub_date string, "
-        "title_conf double, byline_conf double, date_conf double, "
-        "overall_confidence double, status string")
-    js = tf.results_to_json(res)
-    row = tf.parse_json_results(js).select("parsed.*").first()
-    assert row.title.value == "T" and row.title.confidence == 0.95
-    assert row.pub_date.value == "2024-01-01"
-    assert row.status == "success"
+"""Cost model over lineage rows (A9)."""
 
 
 def test_cost_metrics(spark):
