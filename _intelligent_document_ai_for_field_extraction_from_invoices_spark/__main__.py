@@ -681,7 +681,11 @@ def main(argv=None) -> None:
 
     p = sub.add_parser("extract", help="flagship extraction -> catalog")
     _add_common(p)
-    p.add_argument("--partitions", type=int, default=16)
+    p.add_argument("--partitions", type=int, default=16,
+                   help="checkpoint/resume granularity P: a crashed run "
+                        "re-extracts only its uncommitted partitions of "
+                        "the P url hashes (not the task count; extraction "
+                        "runs one task per core)")
     p.add_argument("--vacuum", action="store_true",
                    help="after the run, delete data files not referenced by"
                         " current snapshots (expired/rolled-back commits);"

@@ -21,6 +21,7 @@ ocr.py:624-639): rows, bytes in/out, blocks kept/dropped, parse failures.
 
 from __future__ import annotations
 
+import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,13 +75,12 @@ def stamp_part_id(pages: DataFrame, num_partitions: int) -> DataFrame:
     )
 
 
-def lineage_rows(results: DataFrame, run_id: str) -> DataFrame:
+def lineage_rows(results: DataFrame) -> DataFrame:
     # measured per-partition extraction wall time when the results carry the
     # per-doc wall_ms column (extract_pages(with_timings=True)); else null
     wall = (F.round(F.sum("wall_ms"), 3) if "wall_ms" in results.columns
             else F.lit(None).cast("double"))
     return results.groupBy("part_id").agg(
-        F.lit(run_id).alias("run_id"),
         wall.alias("wall_ms"),
         F.count("*").alias("n_rows"),
         F.sum("n_html_bytes").alias("bytes_in"),
@@ -89,7 +89,6 @@ def lineage_rows(results: DataFrame, run_id: str) -> DataFrame:
         F.sum("n_blocks_dropped").alias("blocks_dropped"),
         F.sum("parse_failures").alias("parse_failures"),
         F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias("n_failed"),
-        F.current_timestamp().alias("committed_at"),
     )
 
 
@@ -103,17 +102,18 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
                    run_id: str, num_partitions: int = 16,
                    fail_after_parts: int | None = None,
                    fail_before_checkpoint: bool = False) -> dict:
-    """One (possibly resumed) extraction run. `fail_after_parts` simulates a
-    crash after committing only a subset of partitions; `fail_before_checkpoint`
-    simulates a crash BETWEEN the results/lineage appends and the checkpoint
-    commit (the torn-transaction case — for resume tests).
+    """One (possibly resumed) extraction run; `num_partitions` is the resume
+    granularity P, not the task count (one Arrow task per core).
+    `fail_after_parts` simulates a crash after committing only a subset of
+    partitions; `fail_before_checkpoint` a crash BETWEEN the results/lineage
+    appends and the checkpoint commit (the torn-transaction case).
 
     All three appends carry one txn tag; the checkpoint append is the commit
     marker. On start, appends whose txn never reached the checkpoint are
     rolled back (metadata-only file-list surgery), so a torn run can never
     leave duplicate rows in the results table.
 
-    Returns counters {parts_done, parts_skipped, rows_written}."""
+    Returns {parts_done, parts_skipped, rows_written, parts_total}, always."""
     # reconcile torn transactions from crashed runs before planning the work
     live = catalog.txns(CHECKPOINT_TABLE) if catalog.exists(CHECKPOINT_TABLE) \
         else set()
@@ -132,7 +132,6 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
 
     stamped = stamp_part_id(pages, num_partitions)
     done = committed_parts(spark, catalog)
-    n_total_parts = num_partitions
     if done is not None:
         remaining = stamped.join(done, "part_id", "left_anti")
         n_done = done.count()
@@ -145,8 +144,10 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
     )
     if fail_after_parts is not None:
         part_ids = part_ids[:fail_after_parts]
+    stats = {"parts_done": len(part_ids), "parts_skipped": n_done,
+             "rows_written": 0, "parts_total": num_partitions}
     if not part_ids:
-        return {"parts_done": 0, "parts_skipped": n_done, "rows_written": 0}
+        return stats
 
     todo = remaining.filter(F.col("part_id").isin(part_ids))
     # group commit: extract all todo partitions in one distributed pass, the
@@ -159,7 +160,6 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
     results = (
         extract_pages(
             todo.select(*in_cols),
-            num_partitions=num_partitions,
             passthrough=passthrough,
             with_timings=True,  # A8: lineage carries measured wall_ms
         )
@@ -168,26 +168,26 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
         .withColumnRenamed("ckpt_part", "part_id")
     )
     results = results.cache()
-    rows_written = results.count()
-
-    txn = f"{run_id}:{uuid.uuid4().hex[:12]}"
-    catalog.append(RESULTS_TABLE, results, txn=txn,
-                   partition_by=["warc_day"] if partition_results else None)
-    catalog.append(LINEAGE_TABLE, lineage_rows(results, run_id), txn=txn,
-                   partition_by=["run_id"])
-    if fail_before_checkpoint:
+    try:
+        # one collect extracts (into the cache) and aggregates P lineage
+        # rows, parsed back from one JSON literal in one JVM task: no Python
+        # task (createDataFrame) and no per-value py4j call (F.lit)
+        per_part = lineage_rows(results)
+        parts = per_part.collect()
+        stats["rows_written"] = sum(r.n_rows for r in parts)
+        lin = spark.range(1, numPartitions=1).select(F.inline(F.from_json(
+            F.lit(json.dumps([r.asDict() for r in parts])),
+            f"array<{per_part.schema.simpleString()}>"))).select(
+            "part_id", F.lit(run_id).alias("run_id"), *per_part.columns[1:],
+            F.current_timestamp().alias("committed_at"))
+        txn = f"{run_id}:{uuid.uuid4().hex[:12]}"
+        catalog.append(RESULTS_TABLE, results, txn=txn,
+                       partition_by=["warc_day"] if partition_results else None)
+        catalog.append(LINEAGE_TABLE, lin, txn=txn, partition_by=["run_id"])
+        if fail_before_checkpoint:
+            raise RuntimeError("simulated crash before checkpoint commit")
+        catalog.append(CHECKPOINT_TABLE,
+                       lin.select("part_id", "run_id", "committed_at"), txn=txn)
+    finally:
         results.unpersist()
-        raise RuntimeError("simulated crash before checkpoint commit")
-    ckpt = (
-        results.select("part_id").distinct()
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("committed_at", F.current_timestamp())
-    )
-    catalog.append(CHECKPOINT_TABLE, ckpt, txn=txn)
-    results.unpersist()
-    return {
-        "parts_done": len(part_ids),
-        "parts_skipped": n_done,
-        "rows_written": rows_written,
-        "parts_total": n_total_parts,
-    }
+    return stats

@@ -555,7 +555,8 @@ class Catalog:
             if partition_by:
                 from pyspark.sql import functions as F  # noqa: PLC0415
 
-                shadowed = df.withColumns(
+                # hash-cluster by value: ~one file each (AQE splits big ones)
+                shadowed = df.hint("rebalance", *partition_by).withColumns(
                     {f"_p_{c}": F.col(c).cast("string")
                      for c in partition_by})
                 shadowed.write.partitionBy(
@@ -856,14 +857,14 @@ class Catalog:
         df = self.read(spark, table, version=cur["version"])
         if partition_by is None:
             df = df.repartition(n_target)
-        else:
-            # co-locate each partition value so its files merge (a value
-            # hashes to one task -> one right-sized file per value; a
-            # value too big for one task should instead raise
-            # target_file_bytes pressure via a salted repartition — out of
-            # scope for this maintenance pass and noted here)
-            df = df.repartition(max(n_target, 1), *partition_by)
-        rows = self._stage(table, df, partition_by)
+        # _stage splits a partition value past AQE's advisory size: use ours
+        ADV_KEY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        adv_old = spark.conf.get(ADV_KEY)
+        spark.conf.set(ADV_KEY, str(target_file_bytes))
+        try:
+            rows = self._stage(table, df, partition_by)
+        finally:
+            spark.conf.set(ADV_KEY, adv_old)
         entry = self._write_manifest(table, rows, [], op="compact")
         replaced = set(files)  # every file whose rows the rewrite holds
         entries = [entry]

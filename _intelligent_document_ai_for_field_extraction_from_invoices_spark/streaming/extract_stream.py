@@ -27,7 +27,6 @@ def _stream_reader(spark: SparkSession, data_dir: str,
 
 def stream_to_catalog(spark: SparkSession, pages_dir: str, catalog,
                       table: str, checkpoint_dir: str,
-                      num_partitions: int = 8,
                       files_per_trigger: int | None = None):
     """Streaming extraction into an Iceberg-style Catalog table, exactly
     once: each micro-batch is appended inside `foreachBatch` tagged with a
@@ -48,8 +47,7 @@ def stream_to_catalog(spark: SparkSession, pages_dir: str, catalog,
     if partitioned:
         stream = dayed.select("url", "html", WARC_DAY_COL)
         passthrough = [(WARC_DAY_COL, "string")]
-    results = extract_pages(stream, num_partitions=num_partitions,
-                            passthrough=passthrough)
+    results = extract_pages(stream, passthrough=passthrough)
 
     def write_batch(df, batch_id: int):
         txn = f"stream:{table}:{batch_id}"

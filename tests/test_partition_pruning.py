@@ -2,6 +2,8 @@
 gained in round 3: a reader with a partition predicate never opens
 non-matching files; row-level exactness comes from the residual filter."""
 
+import os
+
 import pytest
 
 from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources.tables import (
@@ -249,8 +251,6 @@ def test_metadata_bytes_per_append_stay_flat(spark, tmp_path):
     O(table files). 100 appends; the metadata bytes written by late
     appends must not exceed ~the early ones (small-manifest merging
     bounds the manifest list; merge commits themselves amortize)."""
-    import os
-
     cat = Catalog(str(tmp_path))
     meta = os.path.join(str(tmp_path), "t", "_meta")
 
@@ -300,8 +300,6 @@ def test_rollback_of_merged_mixed_txn_manifest(spark, tmp_path):
 def test_partitioned_vacuum_cleans_crc_and_empty_dirs(spark, tmp_path):
     """ADVICE regression: vacuum over a PARTITIONED append whose files
     partially expire must remove crc sidecars and emptied _p_* dirs."""
-    import os
-
     cat = Catalog(str(tmp_path))
     df = spark.createDataFrame(
         [(i, ["en", "hi"][i % 2]) for i in range(20)],
@@ -324,21 +322,27 @@ def test_partitioned_vacuum_cleans_crc_and_empty_dirs(spark, tmp_path):
     assert {r.lang for r in cat.read(spark, "t").collect()} == {"en"}
 
 
-def test_pipeline_writes_day_partitioned_results(spark, tmp_path):
-    """Prescription: the extraction pipeline CONSUMES pruning — results land
-    partitioned by warc_day and a day-slice read opens a strictly smaller
-    file set while matching the full-scan filter row-for-row."""
+def _three_day_pages(spark):
+    """144 pages spread over 3 crawl days (warc_ts = EPOCH + doc_id
+    minutes)."""
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark import datagen
-    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.plans import lineage
 
-    # 144 docs spread over 3 crawl days (warc_ts = EPOCH + doc_id minutes)
     docs = spark.createDataFrame(
         [(i * 30, f"day spread doc {i} " + "word " * 40, "en")
          for i in range(144)],
         "doc_id long, text string, lang string")
-    pages = datagen.pages_from_documents(docs)
+    return datagen.pages_from_documents(docs)
+
+
+def test_pipeline_writes_day_partitioned_results(spark, tmp_path):
+    """Prescription: the extraction pipeline CONSUMES pruning — results land
+    partitioned by warc_day and a day-slice read opens a strictly smaller
+    file set while matching the full-scan filter row-for-row."""
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.plans import lineage
+
     cat = Catalog(str(tmp_path))
-    lineage.run_extraction(spark, pages, cat, "run-days", num_partitions=8)
+    lineage.run_extraction(spark, _three_day_pages(spark), cat, "run-days",
+                           num_partitions=8)
 
     all_files = cat.scan_files(lineage.RESULTS_TABLE)
     day1 = cat.scan_files(lineage.RESULTS_TABLE,
@@ -353,6 +357,70 @@ def test_pipeline_writes_day_partitioned_results(spark, tmp_path):
     # lineage is partitioned by run_id too
     assert cat.scan_files(
         lineage.LINEAGE_TABLE, where={"run_id": "run-days"})
+
+
+def test_run_extraction_writes_one_results_file_per_day(spark, tmp_path):
+    """The checkpoint granularity P is not the write fan-out: P=8 resume
+    partitions over 3 crawl days commit 3 results files, not one per task
+    per day, and the checkpoint still records all 8 part_ids."""
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.plans import lineage
+
+    cat = Catalog(str(tmp_path))
+    stats = lineage.run_extraction(spark, _three_day_pages(spark), cat, "r",
+                                   num_partitions=8)
+    assert stats["parts_done"] == stats["parts_total"] == 8
+    files = cat.scan_files(lineage.RESULTS_TABLE)
+    assert len(files) == 3
+    assert len({os.path.dirname(f) for f in files}) == 3  # one per day dir
+    ckpt = cat.read(spark, lineage.CHECKPOINT_TABLE).collect()
+    assert sorted(r.part_id for r in ckpt) == list(range(8))
+
+
+def test_lineage_matches_committed_results(spark, tmp_path):
+    """The lineage rows parsed back from the collected aggregate equal an
+    aggregate over the committed results, and the checkpoint marks exactly
+    the lineage's partitions."""
+    from pyspark.sql import functions as F
+
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.plans import lineage
+
+    cat = Catalog(str(tmp_path))
+    stats = lineage.run_extraction(spark, _three_day_pages(spark), cat, "r",
+                                   num_partitions=8)
+    cols = ["n_rows", "bytes_in", "bytes_out", "blocks_kept",
+            "blocks_dropped", "parse_failures", "n_failed"]
+    res = cat.read(spark, lineage.RESULTS_TABLE)
+    want = {r.part_id: tuple(r[c] for c in cols) for r in
+            res.groupBy("part_id").agg(
+                F.count("*").alias("n_rows"),
+                F.sum("n_html_bytes").alias("bytes_in"),
+                F.sum(F.length("body_text")).alias("bytes_out"),
+                F.sum("n_blocks_kept").alias("blocks_kept"),
+                F.sum("n_blocks_dropped").alias("blocks_dropped"),
+                F.sum("parse_failures").alias("parse_failures"),
+                F.count_if(F.col("status") == "failed").alias("n_failed"),
+            ).collect()}
+    lin = cat.read(spark, lineage.LINEAGE_TABLE).collect()
+    assert {r.part_id: tuple(r[c] for c in cols) for r in lin} == want
+    assert len(lin) == len(want)
+    assert all(r.run_id == "r" and r.committed_at is not None for r in lin)
+    assert stats["rows_written"] == res.count()
+    ckpt = cat.read(spark, lineage.CHECKPOINT_TABLE).collect()
+    assert sorted(r.part_id for r in ckpt) == sorted(want)
+
+
+def test_partitioned_append_clusters_by_value(spark, tmp_path):
+    """A partitioned append writes about one file per partition value,
+    however many partitions the appended frame has."""
+    from pyspark.sql import functions as F
+
+    cat = Catalog(str(tmp_path))
+    df = spark.range(0, 320, numPartitions=16).withColumn(
+        "day", F.when(F.col("id") % 2 == 0, "2025-01-01")
+                .otherwise("2025-01-02"))
+    cat.append("t", df, partition_by=["day"])
+    assert len(cat.scan_files("t")) == 2
+    assert cat.read(spark, "t").count() == 320
 
 
 def test_empty_string_partition_values_not_lost(spark, tmp_path):
@@ -396,7 +464,6 @@ def test_reads_pre_manifest_list_snapshots(spark, tmp_path):
     to one synthetic manifest entry; the next commit writes the new
     layout."""
     import json
-    import os
 
     cat = Catalog(str(tmp_path))
     df = spark.createDataFrame(

@@ -56,7 +56,8 @@ def test_resume_after_partial_run(spark, pages, tmp_path):
 
     # a third run is a no-op
     s3 = lineage.run_extraction(spark, pages, cat, "run-3", num_partitions=8)
-    assert s3 == {"parts_done": 0, "parts_skipped": 8, "rows_written": 0}
+    assert s3 == {"parts_done": 0, "parts_skipped": 8, "rows_written": 0,
+                  "parts_total": 8}
 
     # lineage covers every partition exactly once
     lin = cat.read(spark, lineage.LINEAGE_TABLE)
@@ -128,6 +129,28 @@ def test_resume_after_torn_transaction(spark, pages, tmp_path):
     lin = cat.read(spark, lineage.LINEAGE_TABLE).collect()
     assert len(lin) == 8
     assert sorted({r.part_id for r in lin}) == list(range(8))
+
+
+def test_failed_commit_releases_results_cache(spark, pages, tmp_path,
+                                             monkeypatch):
+    """A commit that raises part-way (here the lineage append) must still
+    unpersist the cached results: a long-lived session would otherwise
+    keep every failed run's extraction output cached."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cache.isEmpty()
+    append = Catalog.append
+
+    def failing_append(self, table, df, *args, **kwargs):
+        if table == lineage.LINEAGE_TABLE:
+            raise OSError("lineage append failed")
+        return append(self, table, df, *args, **kwargs)
+
+    monkeypatch.setattr(Catalog, "append", failing_append)
+    with pytest.raises(OSError, match="lineage append failed"):
+        lineage.run_extraction(spark, pages, Catalog(str(tmp_path)), "r",
+                               num_partitions=4)
+    assert cache.isEmpty()
 
 
 def test_resume_into_pre_day_layout_table(spark, pages, tmp_path):
@@ -394,6 +417,31 @@ def test_compact_preserves_partition_layout_and_pruning(spark, tmp_path):
     st = cat.last_scan_stats
     assert st["files_selected"] < stats["files_after"]  # pruning pruned
     assert cat.read(spark, "t").count() == 60
+
+
+def test_partitioned_compact_sizes_files_by_target(spark, tmp_path):
+    """A partitioned compact sizes its files by target_file_bytes, not by
+    the session's AQE advisory size: a one-day table bigger than a small
+    advisory size compacts to one file, a second compact is a no-op, and
+    the session's setting is left as it was."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        cat = Catalog(str(tmp_path))
+        for b in range(4):
+            df = spark.range(b * 5000, (b + 1) * 5000).select(
+                "id", F.lit("2025-01-01").alias("day"),
+                F.sha2(F.col("id").cast("string"), 256).alias("pad"))
+            cat.append("t", df, txn=f"d:{b}", partition_by=["day"])
+        stats = cat.compact(spark, "t")
+        assert stats["version"] is not None and stats["files_after"] == 1
+        assert len(cat.scan_files("t")) == 1
+        assert cat.compact(spark, "t")["version"] is None
+        assert cat.read(spark, "t").count() == 20000
+        assert spark.conf.get(key) == "16k"
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_vacuum_removes_crc_sidecars_and_success_markers(spark, tmp_path):
