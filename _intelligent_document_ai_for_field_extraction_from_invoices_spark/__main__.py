@@ -113,12 +113,14 @@ def _emit(catalog: Catalog, table: str, df, run_id: str,
         rows = None  # replayed run id: already durably committed
     else:
         df = df.persist()
-        rows = df.count()  # persisted: the write below reuses the blocks
-        if mode == "overwrite":
-            catalog.overwrite(table, df, txn=txn)
-        else:
-            catalog.append(table, df, txn=txn)
-        df.unpersist()
+        try:
+            rows = df.count()  # persisted: the write below reuses the blocks
+            if mode == "overwrite":
+                catalog.overwrite(table, df, txn=txn)
+            else:
+                catalog.append(table, df, txn=txn)
+        finally:
+            df.unpersist()  # a raising commit must not leave it cached
     if release:
         dedup_ops.release_caches()
     return {"table": table, "rows_written": rows, "txn": txn}
@@ -537,6 +539,7 @@ def cmd_curate(spark, args) -> dict:
         # run's committed stage — resume must recompute it, never
         # silently consume the other run's survivor set
         replayed = _overwrite_replayed(cat, table, args.run_id)
+        n_keys = None
         if not replayed:
             survivors = curate_ops.run_stage(
                 stage, cur, benchmark=bench, quota=args.quota,
@@ -544,8 +547,9 @@ def cmd_curate(spark, args) -> dict:
                 max_dup_line_frac=args.max_dup_line_frac)
             # keys only: stage state is a survivor SET; overwrite keeps a
             # re-run with a new run id from unioning two runs' sets
-            _emit(cat, table, survivors.select("doc_id"), args.run_id,
-                  release=True, mode="overwrite")
+            n_keys = _emit(cat, table, survivors.select("doc_id"),
+                           args.run_id, release=True,
+                           mode="overwrite")["rows_written"]
         # read the COMMITTED keys back: the next stage starts from a leaf
         # plan (no cross-stage plan growth) and a resumed run starts from
         # durable state rather than recomputation
@@ -553,12 +557,15 @@ def cmd_curate(spark, args) -> dict:
         cur = docs.join(keys, "doc_id", "left_semi")
         stages_out[stage] = {"table": table, "txn": txn,
                              "replayed": replayed,
-                             "survivors": keys.count()}
-    _emit(cat, "docs_curated", cur, args.run_id, mode="overwrite")
+                             "survivors": keys.count() if replayed
+                             else n_keys}
+    final_rows = _emit(cat, "docs_curated", cur, args.run_id,
+                       mode="overwrite")["rows_written"]
     docs.unpersist()
+    if final_rows is None:  # replayed: count what the earlier run committed
+        final_rows = cat.read(spark, "docs_curated").count()
     return {"stages": stages_out, "order": todo,
-            "final_table": "docs_curated",
-            "final_rows": cat.read(spark, "docs_curated").count()}
+            "final_table": "docs_curated", "final_rows": final_rows}
 
 
 def cmd_sample(spark, args) -> dict:

@@ -43,10 +43,12 @@ _WS_RE = re.compile(WS_RUN)
 # graph shape converges without instrumenting Spark
 CC_LAST_STATS: dict = {}
 
-# connected_components: once contraction shrinks the quotient graph under
-# this many edges, its components are finished with a driver union-find
-# instead of further Spark rounds (a few MB of (id, id) rows collect; the
-# label TABLE never does). Module-level so tests can pin it (0 disables).
+# connected_components' driver union-find bound, in (id, id) rows (a few
+# MB to collect; the label TABLE never is): an input of at most this many
+# pairs is closed on the driver straight off one bounded collect, and a
+# larger graph is handed to the driver once contraction shrinks its
+# quotient under this many edges. Module-level so tests can pin it (0
+# disables both driver paths).
 UF_BREAK_MAX = 500_000
 
 # Scoped-cache registry: hot-path operators cache DataFrames that feed
@@ -775,6 +777,14 @@ def connected_components(pairs: DataFrame, key_a: str = "doc_a",
     edge list (the step after LSH at corpus scale — pairs say "these two are
     dups", components say "this is one document cluster, keep one copy").
 
+    Small graphs never reach Spark rounds: the projected (a, b) pairs are
+    persisted once and at most UF_BREAK_MAX + 1 of them collected. When
+    that collect is not cut short (and is non-empty), a driver union-find
+    over the raw pairs closes the components (min id = root, the same
+    fixpoint as the loop below) — no symmetrize, distinct or count job
+    first, canonical input or not. Otherwise the symmetrized edge set is
+    built from the same persisted pairs and the distributed loop runs.
+
     Hash-min with pointer jumping over a CONTRACTING edge set: every node
     starts labelled with its own id; each round (1) a node's label becomes
     the min over itself and its neighbours, (2) labels are re-pointed
@@ -850,7 +860,28 @@ def connected_components(pairs: DataFrame, key_a: str = "doc_a",
         return labels.select(F.col("node").alias(out_key),
                              F.col("comp").alias("component_id"))
 
-    e = pairs.select(F.col(key_a).alias("a"), F.col(key_b).alias("b"))
+    e = pairs.select(F.col(key_a).alias("a"), F.col(key_b).alias("b")) \
+        .persist()
+    head = e.limit(uf_break_max + 1).collect()
+    if 0 < len(head) <= uf_break_max:
+        # EARLY DRIVER PATH: the whole pair list fits the union-find
+        # collect bound, so contraction rounds would only shrink a graph
+        # that is collectable as-is — each round costs several
+        # scheduling-latency-bound jobs (joins, a count, leaf resets) that
+        # dwarf the work on graphs this small (a 400-doc curate chain's
+        # neardup stage collects ~600 pairs here). The union-find needs
+        # neither direction nor distinctness, so it runs on the raw pairs
+        # the bounded collect already holds: no symmetrize, distinct or
+        # count job. `driver_uf_edges` keeps its meaning, the symmetrized
+        # distinct edge count, counted here on the driver.
+        parent, _find0 = _union_find_min(head)
+        qt = e.schema["a"].dataType
+        labels = spark.createDataFrame(
+            [(x, _find0(x)) for x in list(parent)],
+            StructType([StructField("node", qt), StructField("comp", qt)]))
+        e.unpersist()
+        uf_edges = len({(a, b) for a, b in head} | {(b, a) for a, b in head})
+        return _finish(labels, 0, False, [uf_edges, 0])
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     # `pairs_canonical=True` declares the input DISTINCT with key_a < key_b
     # on every row — every LSH pair generator in this package emits exactly
@@ -860,27 +891,6 @@ def connected_components(pairs: DataFrame, key_a: str = "doc_a",
     # doubled the loop's first shuffle)
     edges0 = (sym if pairs_canonical else sym.distinct()).persist()
     n_edges = edges0.count()
-    if 0 < n_edges <= uf_break_max:
-        # EARLY DRIVER PATH (r7 optimization): the WHOLE symmetrized edge
-        # set already fits the union-find collect bound, so contraction
-        # rounds would only shrink a graph that is collectable as-is —
-        # each round costs several scheduling-latency-bound jobs (joins,
-        # a count, leaf resets) that dwarf the actual work on graphs this
-        # small (measured: the ~200-doc curate neardup stage spent ~5 s
-        # in round machinery for a few hundred edges). Collect once,
-        # close the components on the driver (min id = root — the exact
-        # fixpoint the loop converges to), return ONE driver-built label
-        # table. Past the bound (true corpus scale) the contraction loop
-        # below runs unchanged; UF_BREAK_MAX = 0 disables both driver
-        # paths (tests use it to exercise the distributed tail).
-        parent, _find0 = _union_find_min(edges0.collect())
-        qt = edges0.schema["a"].dataType
-        labels = spark.createDataFrame(
-            [(x, _find0(x)) for x in list(parent)],
-            StructType([StructField("node", qt), StructField("comp", qt)]))
-        edges0.unpersist()
-        uf_edges = n_edges
-        return _finish(labels, 0, False, [n_edges, 0])
     # leaf-reset BEFORE iterating: without it every round's logical plan
     # embeds compounding copies of the whole upstream pair pipeline (the
     # cache shortcuts execution but not plan analysis) — the analysis tree,
@@ -893,6 +903,7 @@ def connected_components(pairs: DataFrame, key_a: str = "doc_a",
     # count also materializes the leaf-reset edge cache)
     n_nodes = labels.count()
     edges0.unpersist()
+    e.unpersist()
     # LSH near-dup graphs are DENSE (near-cliques): edges outnumber nodes
     # by orders of magnitude (sf1 measurement: 1.9M symmetric edges over
     # 5k nodes). When the label table provably fits a broadcast (we know

@@ -23,9 +23,11 @@ from __future__ import annotations
 
 import json
 import uuid
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType, TimestampType
 
 from ..operators.extract import extract_pages
 from ..sources.tables import Catalog
@@ -171,15 +173,22 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
     try:
         # one collect extracts (into the cache) and aggregates P lineage
         # rows, parsed back from one JSON literal in one JVM task: no Python
-        # task (createDataFrame) and no per-value py4j call (F.lit)
+        # task (createDataFrame) and no per-value py4j call (F.lit). The
+        # commit time rides inside that literal too: a string literal is
+        # passed to generated code by reference, while current_timestamp()
+        # folds into an inlined long, i.e. new code for every run
         per_part = lineage_rows(results)
         parts = per_part.collect()
         stats["rows_written"] = sum(r.n_rows for r in parts)
+        committed_at = datetime.now(timezone.utc).isoformat()
+        schema = StructType(per_part.schema.fields
+                            + [StructField("committed_at", TimestampType())])
         lin = spark.range(1, numPartitions=1).select(F.inline(F.from_json(
-            F.lit(json.dumps([r.asDict() for r in parts])),
-            f"array<{per_part.schema.simpleString()}>"))).select(
+            F.lit(json.dumps([{**r.asDict(), "committed_at": committed_at}
+                              for r in parts])),
+            f"array<{schema.simpleString()}>"))).select(
             "part_id", F.lit(run_id).alias("run_id"), *per_part.columns[1:],
-            F.current_timestamp().alias("committed_at"))
+            "committed_at")
         txn = f"{run_id}:{uuid.uuid4().hex[:12]}"
         catalog.append(RESULTS_TABLE, results, txn=txn,
                        partition_by=["warc_day"] if partition_results else None)

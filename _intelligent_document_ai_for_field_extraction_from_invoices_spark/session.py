@@ -14,6 +14,14 @@ from pyspark.sql import SparkSession
 # stays well under worker memory (ref batch-size capping, vlm_fallback.py:93).
 ARROW_MAX_RECORDS = 256
 
+# whole-stage codegen classes kept per JVM. A curate chain uses ~100
+# distinct classes and run_extraction 40 (counted with CodegenMetrics on a
+# cache too big to evict); with Spark's default of 100, LRU evicted each
+# class before its next use and every repeated chain recompiled 96-97 of
+# them (~2 s of Janino). 1000 holds both working sets with room for the
+# other subcommands' plans in one session.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(app: str = "webtext-extraction", cores: str | int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -27,6 +35,8 @@ def get_spark(app: str = "webtext-extraction", cores: str | int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(ARROW_MAX_RECORDS))
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory",

@@ -842,18 +842,22 @@ class Catalog:
         files = self._scan(cur, None)
         total = sum(os.path.getsize(f) for f in files)
         n_target = max(1, math.ceil(total / target_file_bytes))
-        if len(files) <= n_target:
-            return {"files_before": len(files), "files_after": len(files),
-                    "version": None, "orphans_removed": n_orphans}
         # partition columns recorded for EVERY current file keep their
         # layout; a column only some files record cannot be trusted as a
         # table-level layout and is dropped from the rewrite
-        part_cols: set[str] | None = None
-        for e in cur["manifests"]:
-            for r in self._read_manifest(e):
-                cols = set((r.get("partition") or {}).keys())
-                part_cols = cols if part_cols is None else (part_cols & cols)
+        parts = [r.get("partition") or {} for e in cur["manifests"]
+                 for r in self._read_manifest(e)]
+        part_cols = set.intersection(*(set(p) for p in parts)) \
+            if parts else set()
         partition_by = sorted(part_cols) if part_cols else None
+        # a rewrite keeps at least one file per partition value, so a table
+        # already at that floor is compacted: rewriting it again would only
+        # add a snapshot holding the same files' worth of data
+        n_values = len({tuple(p[c] for c in partition_by) for p in parts}) \
+            if partition_by else 1
+        if len(files) <= max(n_target, n_values):
+            return {"files_before": len(files), "files_after": len(files),
+                    "version": None, "orphans_removed": n_orphans}
         df = self.read(spark, table, version=cur["version"])
         if partition_by is None:
             df = df.repartition(n_target)

@@ -33,3 +33,28 @@ def test_dedup_and_similarity_caches_are_released(spark):
 
 def test_release_caches_is_idempotent(spark):
     assert dedup.release_caches() == 0
+
+
+def test_cli_emit_releases_its_cache_when_the_commit_raises(spark, tmp_path,
+                                                            monkeypatch):
+    """The CLI's `_emit` persists the frame it commits; a commit that
+    raises must not leave that frame cached in the session."""
+    import pytest
+
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.__main__ import (
+        _emit,
+    )
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources.tables import (
+        Catalog,
+    )
+
+    cat = Catalog(str(tmp_path))
+
+    def fail(*_a, **_k):
+        raise OSError("commit failed")
+
+    monkeypatch.setattr(cat, "overwrite", fail)
+    baseline = set(_persistent_rdds(spark))
+    with pytest.raises(OSError, match="commit failed"):
+        _emit(cat, "t", spark.range(10), "r1", mode="overwrite")
+    assert set(_persistent_rdds(spark)) - baseline == set()

@@ -172,24 +172,77 @@ def test_cc_stats_record_fastpath_and_rounds(spark, monkeypatch):
     dedup.release_caches()
 
 
-def test_early_driver_uf_matches_distributed_labels(spark, monkeypatch):
-    """r7 early-path pin: on a mixed graph (chains + cliques + isolated
-    edges) the early driver union-find must produce EXACTLY the labels the
-    distributed contraction loop produces."""
+def _mixed_graph(spark):
     edges = (
         [(i, i + 1) for i in range(0, 20)]              # 21-node chain
         + [(a, b) for a in range(100, 106)
            for b in range(a + 1, 106)]                  # 6-clique
         + [(200, 201), (300, 350)]                      # isolated edges
     )
-    g = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    early = {(r.doc_id, r.component_id)
-             for r in dedup.connected_components(g).collect()}
+    return edges, spark.createDataFrame(edges, "doc_a long, doc_b long")
+
+
+def _labels(g, **kw):
+    got = {(r.doc_id, r.component_id)
+           for r in dedup.connected_components(g, **kw).collect()}
+    dedup.release_caches()
+    return got
+
+
+def test_early_driver_uf_matches_distributed_labels(spark, monkeypatch):
+    """r7 early-path pin: on a mixed graph (chains + cliques + isolated
+    edges) the early driver union-find must produce EXACTLY the labels the
+    distributed contraction loop produces."""
+    edges, g = _mixed_graph(spark)
+    early = _labels(g)
     assert dedup.CC_LAST_STATS["rounds"] == 0
     assert dedup.CC_LAST_STATS["driver_uf_edges"] == 2 * len(edges)
-    dedup.release_caches()
     monkeypatch.setattr(dedup, "UF_BREAK_MAX", 0)
-    dist = {(r.doc_id, r.component_id)
-            for r in dedup.connected_components(g).collect()}
-    assert early == dist
-    dedup.release_caches()
+    assert early == _labels(g)
+
+
+def test_early_driver_uf_matches_distributed_labels_canonical(spark,
+                                                              monkeypatch):
+    """The canonical twin of the test above: declared-canonical input takes
+    the same early driver path, with the same labels and edge count."""
+    edges, g = _mixed_graph(spark)
+    early = _labels(g, pairs_canonical=True)
+    assert dedup.CC_LAST_STATS["rounds"] == 0
+    assert dedup.CC_LAST_STATS["driver_uf_edges"] == 2 * len(edges)
+    monkeypatch.setattr(dedup, "UF_BREAK_MAX", 0)
+    assert early == _labels(g, pairs_canonical=True)
+
+
+def test_early_driver_uf_counts_symmetrized_distinct_edges(spark,
+                                                           monkeypatch):
+    """Non-canonical input (reversed duplicates, repeats, a self-loop): the
+    driver counts the edges the symmetrized distinct set would hold, and
+    the labels match the distributed loop's."""
+    edges, _ = _mixed_graph(spark)
+    messy = edges + [(b, a) for a, b in edges[:5]] + edges[-3:] + [(7, 7)]
+    g = spark.createDataFrame(messy, "doc_a long, doc_b long")
+    early = _labels(g)
+    assert dedup.CC_LAST_STATS["rounds"] == 0
+    assert dedup.CC_LAST_STATS["driver_uf_edges"] == 2 * len(edges) + 1
+    assert dedup.CC_LAST_STATS["edge_counts"] == [2 * len(edges) + 1, 0]
+    monkeypatch.setattr(dedup, "UF_BREAK_MAX", 0)
+    assert early == _labels(g)
+
+
+@pytest.mark.parametrize("canonical", [False, True])
+def test_pairs_past_uf_bound_take_distributed_path(spark, monkeypatch,
+                                                   canonical):
+    """More pairs than UF_BREAK_MAX: the bounded collect comes back cut
+    short, so the distributed loop runs (off the same persisted pairs) and
+    labels exactly as the early driver path does."""
+    edges, g = _mixed_graph(spark)
+    early = _labels(g, pairs_canonical=canonical)
+    monkeypatch.setattr(dedup, "UF_BREAK_MAX", len(edges) - 1)
+    before = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
+    dist = _labels(g, pairs_canonical=canonical)
+    st = dedup.CC_LAST_STATS
+    assert st["rounds"] >= 1
+    assert st["edge_counts"][0] == 2 * len(edges)
+    assert dist == early
+    after = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
+    assert after - before == set()

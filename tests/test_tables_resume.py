@@ -419,6 +419,27 @@ def test_compact_preserves_partition_layout_and_pruning(spark, tmp_path):
     assert cat.read(spark, "t").count() == 60
 
 
+def test_partitioned_compact_at_one_file_per_value_is_a_noop(spark, tmp_path):
+    """A rewrite keeps one file per partition value, so once a two-day
+    table is compacted to two files (more than its byte target of one),
+    further compacts must commit nothing rather than rewrite it again."""
+    cat = Catalog(str(tmp_path))
+    for b in range(6):
+        df = spark.range(b * 10, b * 10 + 10).withColumn(
+            "day", F.when(F.col("id") % 2 == 0, "2025-01-01")
+                    .otherwise("2025-01-02"))
+        cat.append("t", df, txn=f"d:{b}", partition_by=["day"])
+    stats = cat.compact(spark, "t")
+    assert stats["version"] is not None and stats["files_after"] == 2
+    n_snaps = len(cat.snapshots("t"))
+    for _ in range(2):
+        again = cat.compact(spark, "t")
+        assert again["version"] is None
+        assert again["files_before"] == again["files_after"] == 2
+    assert len(cat.snapshots("t")) == n_snaps
+    assert cat.read(spark, "t").count() == 60
+
+
 def test_partitioned_compact_sizes_files_by_target(spark, tmp_path):
     """A partitioned compact sizes its files by target_file_bytes, not by
     the session's AQE advisory size: a one-day table bigger than a small
