@@ -64,7 +64,7 @@ def day_stamped(pages: DataFrame, catalog: Catalog,
     if dayed is None:
         return None
     cur = catalog._read_current(table)
-    if cur is None or f'"{WARC_DAY_COL}"' in (cur.get("schema") or ""):
+    if cur is None or f'"{WARC_DAY_COL}"' in cur["schema"]:
         return dayed
     return None
 
@@ -117,11 +117,9 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
 
     Returns {parts_done, parts_skipped, rows_written, parts_total}, always."""
     # reconcile torn transactions from crashed runs before planning the work
-    live = catalog.txns(CHECKPOINT_TABLE) if catalog.exists(CHECKPOINT_TABLE) \
-        else set()
+    live = catalog.txns(CHECKPOINT_TABLE)
     for t in (RESULTS_TABLE, LINEAGE_TABLE):
-        if catalog.exists(t):
-            catalog.remove_orphan_appends(t, live)
+        catalog.remove_orphan_appends(t, live)
 
     # results land PARTITIONED by crawl day (the read users do daily: "give
     # me one day of one crawl" — a manifest-pruned scan instead of a full

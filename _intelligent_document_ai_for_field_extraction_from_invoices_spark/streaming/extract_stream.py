@@ -51,7 +51,7 @@ def stream_to_catalog(spark: SparkSession, pages_dir: str, catalog,
 
     def write_batch(df, batch_id: int):
         txn = f"stream:{table}:{batch_id}"
-        if catalog.exists(table) and txn in catalog.txns(table):
+        if txn in catalog.txns(table):
             return  # replayed micro-batch: already durably committed
         catalog.append(table, df, txn=txn,
                        partition_by=[WARC_DAY_COL] if partitioned else None)

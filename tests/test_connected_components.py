@@ -128,13 +128,24 @@ def test_components_match_union_find_on_random_graphs(spark):
         dedup.release_caches()
 
 
-def test_components_localcheckpoint_path_on_large_graph(spark):
+def test_components_localcheckpoint_path_on_large_graph(spark, monkeypatch):
     """250k nodes crosses collect_break_max, so the per-round leaf resets
     take the localCheckpoint tier instead of the driver round-trip — the
     path a 10^12-row corpus would live on. Star clusters of 10 converge on
-    the round-1 fast path; every node must be labelled with its hub."""
-    from pyspark.sql import functions as F
+    the round-1 fast path; every node must be labelled with its hub.
+    (UF_BREAK_MAX=0: 225k pairs would otherwise be closed by the early
+    driver union-find and never enter the loop.)"""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
+    monkeypatch.setattr(dedup, "UF_BREAK_MAX", 0)
+    calls = []
+    local_checkpoint = ClassicDataFrame.localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", counted)
     n = 250_000
     edges = spark.range(n).selectExpr(
         "id AS doc_a", "id - (id % 10) AS doc_b").filter("doc_a != doc_b")
@@ -144,6 +155,9 @@ def test_components_localcheckpoint_path_on_large_graph(spark):
         F.col("component_id") != F.col("doc_id") - (F.col("doc_id") % 10)
     ).count()
     assert wrong == 0
+    st = dedup.CC_LAST_STATS
+    assert st["rounds"] == 1 and st["fastpath"] is True
+    assert len(calls) >= 1
     dedup.release_caches()
 
 

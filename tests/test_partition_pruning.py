@@ -54,15 +54,17 @@ def test_mixed_partitioned_and_plain_appends(spark, cat):
 
 
 def test_vacuum_keeps_live_partitioned_files(spark, cat, tmp_path):
-    # expire the first partitioned snapshot by overwriting, then vacuum:
-    # live (current) partitioned files must survive the recursive GC walk
+    # supersede the partitioned snapshot with a tagged partitioned append
+    # that is then rolled back, and vacuum: the rolled-back files go, and
+    # the live (current) partitioned files survive the recursive GC walk
     sub = cat.read(spark, "docs", where={"lang": "zh"})
-    cat.overwrite("docs", sub, partition_by=["lang"])
+    cat.append("docs", sub, txn="torn", partition_by=["lang"])
+    assert cat.remove_orphan_appends("docs", live_txns=set()) > 0
     removed = cat.vacuum("docs", min_age_secs=0)
     assert removed > 0
     got = cat.read(spark, "docs").collect()
-    assert {r.lang for r in got} == {"zh"}
-    assert len(got) == 30
+    assert {r.lang for r in got} == {"en", "hi", "zh"}
+    assert len(got) == 90
 
 
 def test_escaped_partition_values_round_trip(spark, tmp_path):
@@ -156,7 +158,7 @@ def test_zero_match_read_opens_no_manifest(spark, tmp_path, monkeypatch):
     snap = cat._read_current("t")
     assert len(snap["manifests"]) == 3
     schema = StructType.fromJson(json.loads(snap["schema"]))
-    cat.overwrite("e", spark.createDataFrame(
+    cat.append("e", spark.createDataFrame(
         [], "doc_id long, warc_day string"), partition_by=["warc_day"])
     opened = []
     read_manifest = Catalog._read_manifest
@@ -299,16 +301,15 @@ def test_rollback_of_merged_mixed_txn_manifest(spark, tmp_path):
 
 def test_partitioned_vacuum_cleans_crc_and_empty_dirs(spark, tmp_path):
     """ADVICE regression: vacuum over a PARTITIONED append whose files
-    partially expire must remove crc sidecars and emptied _p_* dirs."""
+    expire must leave no crc sidecars or emptied _p_* dirs behind."""
     cat = Catalog(str(tmp_path))
     df = spark.createDataFrame(
         [(i, ["en", "hi"][i % 2]) for i in range(20)],
         "doc_id long, lang string")
     cat.append("t", df, partition_by=["lang"])
-    # drop the hi partition by overwriting with en only; the en files of the
-    # first staging dir expire but the staging dir itself had both
-    cat.overwrite("t", cat.read(spark, "t", where={"lang": "en"}),
-                  partition_by=["lang"])
+    # drop the hi partition by overwriting with en only: every file of the
+    # partitioned staging dir expires
+    cat.overwrite("t", cat.read(spark, "t", where={"lang": "en"}))
     removed = cat.vacuum("t", min_age_secs=0)
     assert removed > 0
     data_root = os.path.join(str(tmp_path), "t", "data")
@@ -458,56 +459,19 @@ def test_rollback_keeps_untagged_rows_in_merged_manifest(spark, tmp_path):
     assert cat.read(spark, "t").count() == 2  # the untagged rows survive
 
 
-def test_reads_pre_manifest_list_snapshots(spark, tmp_path):
-    """Review regression: catalogs written by the round-3 layout (full
-    "files" list in the snapshot) must stay readable — upgraded in memory
-    to one synthetic manifest entry; the next commit writes the new
-    layout."""
+def test_reads_ignore_retired_stats_keys(spark, tmp_path):
+    """A table whose manifests still carry the per-file `stats` dicts and
+    per-entry `stats_summary` of the retired column-stats tier reads,
+    merges and feeds read_incremental with no migration: readers ignore
+    keys they do not know."""
     import json
+
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources import tables as T
 
     cat = Catalog(str(tmp_path))
     df = spark.createDataFrame(
         [(i, ["en", "hi"][i % 2]) for i in range(10)],
         "doc_id long, lang string")
-    cat.append("t", df, partition_by=["lang"])
-    # rewrite the snapshot in the OLD layout
-    snap = cat._read_current("t")
-    files, parts = [], {}
-    for e in snap["manifests"]:
-        for r in cat._read_manifest(e):
-            files.append(r["path"])
-            if r.get("partition"):
-                parts[r["path"]] = r["partition"]
-    old = {"version": 1, "parent": None, "operation": "append",
-           "files": sorted(files), "added": sorted(files), "txn": "legacy",
-           "partitions": parts, "committed_at": 0.0}
-    meta = os.path.join(str(tmp_path), "t", "_meta")
-    for fn in os.listdir(meta):
-        if fn.startswith(("v", "m-")):
-            os.remove(os.path.join(meta, fn))
-    with open(os.path.join(meta, "v1.json"), "w") as f:
-        json.dump(old, f)
-    with open(os.path.join(meta, "_current"), "w") as f:
-        f.write("1")
-
-    assert cat.read(spark, "t").count() == 10
-    # a zero-match read of a snapshot without a recorded schema takes its
-    # columns from one file footer
-    none = cat.read(spark, "t", where={"lang": "fr"})
-    assert none.count() == 0 and set(none.columns) == {"doc_id", "lang"}
-    en = cat.scan_files("t", where={"lang": "en"})
-    assert 0 < len(en) < len(cat.scan_files("t"))
-    # appends on top of a legacy snapshot write the new layout and keep data
-    cat.append("t", df.limit(2))
-    assert cat.read(spark, "t").count() == 12
-    assert "manifests" in cat._read_current("t")
-
-    # a table whose manifests still carry the per-file `stats` dicts and
-    # per-entry `stats_summary` of the retired column-stats tier reads,
-    # merges and feeds read_incremental with no migration: the keys are
-    # ignored
-    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources import tables as T
-
     cat.append("s", df.repartition(2), partition_by=["lang"])
     v1 = os.path.join(str(tmp_path), "s", "_meta", "v1.json")
     with open(v1) as f:

@@ -105,3 +105,65 @@ def test_allow_list_names_existing_unreached_modules():
     modules, reached = _package_modules(), _reached()
     assert ALLOWED_UNREACHED <= modules
     assert not ALLOWED_UNREACHED & reached
+
+
+# Defaulted `Catalog` parameters no surface passes, kept on purpose.
+ALLOWED_UNPASSED = {
+    # tests observe read(where=)'s manifest pruning through scan_files; the
+    # scan stats are planned to come back with the file list instead
+    "scan_files.where",
+}
+
+
+def _catalog_defaults() -> dict[str, tuple[list[str], set[str]]]:
+    """Public `Catalog` method -> (its positional parameters after self,
+    its defaulted parameters), for every method with a defaulted one."""
+    path = os.path.join(ROOT, PKG, "sources", "tables.py")
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    cls = next(n for n in tree.body
+               if isinstance(n, ast.ClassDef) and n.name == "Catalog")
+    out = {}
+    for fn in cls.body:
+        if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+            continue
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        defaulted = {p.arg for p in pos[len(pos) - len(a.defaults):]}
+        defaulted |= {p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                      if d is not None}
+        if defaulted:
+            out[fn.name] = ([p.arg for p in pos[1:]], defaulted)
+    return out
+
+
+def _passed(methods: dict[str, tuple[list[str], set[str]]]) -> set[str]:
+    """`method.param` for every parameter some call `x.method(...)` in the
+    surface closure passes, by position or by name."""
+    files = [path for path, _ in _surface_files()]
+    files += [_module_file(m) for m in _reached() if m.startswith(PKG)]
+    out: set[str] = set()
+    for path in files:
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in methods):
+                continue
+            m = node.func.attr
+            n_pos = sum(not isinstance(x, ast.Starred) for x in node.args)
+            out.update(f"{m}.{p}" for p in methods[m][0][:n_pos])
+            out.update(f"{m}.{k.arg}" for k in node.keywords if k.arg)
+    return out
+
+
+def test_every_catalog_default_is_passed_by_a_surface():
+    methods = _catalog_defaults()
+    declared = {f"{m}.{p}" for m, (_, d) in methods.items() for p in d}
+    passed = _passed(methods)
+    unpassed = declared - passed - ALLOWED_UNPASSED
+    assert not unpassed, (
+        "defaulted Catalog parameters no surface passes (give each a "
+        f"surface caller or delete it): {sorted(unpassed)}")
+    assert ALLOWED_UNPASSED <= declared - passed

@@ -23,6 +23,48 @@ def test_catalog_overwrite_append_read(spark, tmp_path):
     assert ops == ["overwrite", "append"]
 
 
+def test_snapshots_carry_one_layout(spark, tmp_path):
+    """Every writer commits the one snapshot layout the reader accepts: a
+    manifest list, a schema and the cumulative all_txns set, each entry
+    with its manifest, file count, txns, op and partition summary. A
+    snapshot of any other shape — the round-3 file-list layout, or one
+    without all_txns — raises a ValueError naming its version."""
+    import json
+    import os
+
+    cat = Catalog(str(tmp_path))
+    for b in range(6):
+        cat.append("t", spark.range(b * 10, b * 10 + 10).coalesce(1),
+                   txn=f"s:{b}")
+    cat.append("t", spark.range(100, 103), txn="dead")
+    assert cat.remove_orphan_appends(
+        "t", live_txns={f"s:{b}" for b in range(6)}) > 0
+    assert cat.compact(spark, "t")["version"] is not None
+    cat.overwrite("t", spark.range(5), txn="ow")
+    snaps = cat.snapshots("t")
+    assert [s["operation"] for s in snaps] == \
+        ["append"] * 7 + ["rollback", "compact", "overwrite"]
+    for s in snaps:
+        assert {"manifests", "schema", "all_txns"} <= s.keys()
+        assert s["schema"]
+        for e in s["manifests"]:
+            assert {"manifest", "n_files", "txns", "op", "summary"} <= e.keys()
+
+    v = snaps[-1]["version"]
+    path = os.path.join(str(tmp_path), "t", "_meta", f"v{v}.json")
+    files = cat.scan_files("t")
+    round3 = {"version": v, "parent": v - 1, "operation": "overwrite",
+              "files": files, "added": files, "txn": "ow",
+              "partitions": {}, "committed_at": 0.0}
+    no_txns = {k: x for k, x in snaps[-1].items() if k != "all_txns"}
+    for bad in (round3, no_txns):
+        with open(path, "w") as f:
+            json.dump(bad, f)
+        for call in (lambda: cat.read(spark, "t"), lambda: cat.txns("t")):
+            with pytest.raises(ValueError, match=f"version {v} of table 't'"):
+                call()
+
+
 def test_overwrite_replaces_idempotently(spark, tmp_path):
     cat = Catalog(str(tmp_path))
     cat.overwrite("t", spark.range(10))
@@ -247,21 +289,32 @@ def test_vacuum_reclaims_expired_and_orphaned_files(spark, tmp_path):
     assert cat.vacuum("t", min_age_secs=0) == 0
 
 
-def test_txn_check_metadata_opens_stay_flat(spark, tmp_path):
+def test_txn_check_metadata_opens_stay_flat(spark, tmp_path, monkeypatch):
     """The exactly-once replay check (txns()) runs per streaming micro-batch
     and per CLI run; its metadata cost must be O(1) file opens no matter how
     many commits the table has seen — NOT a walk of every version json, let
     alone every manifest (the round-4 regression class). 200 commits stand
-    in for a stream's life; the committed txn set stays exact throughout."""
+    in for a stream's life; the committed txn set stays exact throughout.
+    Opens are counted by a module-level `open` shim on the table layer."""
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources import tables as T
+
+    opened = []
+
+    def counting_open(path, *args, **kwargs):
+        opened.append(path)
+        return open(path, *args, **kwargs)
+
+    monkeypatch.setattr(T, "open", counting_open, raising=False)
     cat = Catalog(str(tmp_path))
     df = spark.range(2)
     costs = []
     for b in range(200):
         txn = f"stream:t:{b}"
-        assert txn not in cat.txns("t") if cat.exists("t") else True
+        assert txn not in cat.txns("t")
         cat.append("t", df, txn=txn)
+        opened.clear()
         got = cat.txns("t")
-        costs.append(cat.last_txn_stats["meta_files_opened"])
+        costs.append(len(opened))
         assert got == {f"stream:t:{i}" for i in range(b + 1)}
     assert max(costs) == min(costs) == 2  # _current + current snapshot only
 
@@ -275,11 +328,11 @@ def test_txns_survive_version_expiry(spark, tmp_path):
     cat = Catalog(str(tmp_path))
     for b in range(30):
         cat.append("t", spark.range(2), txn=f"b:{b}")
-        cat.vacuum("t", keep_versions=2, min_age_secs=0)
+        cat.vacuum("t", min_age_secs=0)
     meta = os.path.join(str(tmp_path), "t", "_meta")
     n_versions = len([f for f in os.listdir(meta)
                       if f.startswith("v") and f.endswith(".json")])
-    assert n_versions <= 3  # keep_versions + current, never the full history
+    assert n_versions == 1  # the current snapshot, never the full history
     assert cat.txns("t") == {f"b:{i}" for i in range(30)}
     # history compaction: one line per expired version
     hist = os.path.join(meta, "_history.json")
@@ -295,8 +348,8 @@ def test_txns_survive_version_expiry(spark, tmp_path):
 
 def test_meta_dir_bounded_across_append_vacuum_cycles(spark, tmp_path):
     """100 append+vacuum cycles: the _meta file count must stay flat (the
-    round-4 layout kept every v<N>.json forever) and time travel within
-    keep_versions must still work."""
+    round-4 layout kept every v<N>.json forever); vacuum keeps the current
+    snapshot, and time travel to an expired version fails loudly."""
     import os
 
     cat = Catalog(str(tmp_path))
@@ -304,19 +357,19 @@ def test_meta_dir_bounded_across_append_vacuum_cycles(spark, tmp_path):
     meta = os.path.join(str(tmp_path), "t", "_meta")
     for b in range(100):
         cat.append("t", spark.range(1), txn=f"c:{b}")
-        cat.vacuum("t", keep_versions=3, min_age_secs=0)
+        cat.vacuum("t", min_age_secs=0)
         sizes.append(len(os.listdir(meta)))
     # bounded: steady state (the manifest-merge tiers take ~30 cycles to
     # fill) never exceeds a flat ceiling, and shows no growth trend over
     # the back half — the round-4 layout would be >100 version jsons alone
     assert max(sizes) < 40
     assert max(sizes[80:]) <= max(sizes[30:80])
-    # time travel within the retained window still resolves
+    # the current version is retained and reads; an expired one raises
     cur_v = cat._read_current("t")["version"]
-    retained = [s["version"] for s in cat.snapshots("t")]
-    assert cur_v in retained
-    assert cat.read(spark, "t", version=retained[-2]).count() == 99
-    assert cat.read(spark, "t").count() == 100
+    assert [s["version"] for s in cat.snapshots("t")] == [cur_v]
+    assert cat.read(spark, "t", version=cur_v).count() == 100
+    with pytest.raises(FileNotFoundError, match="not a committed snapshot"):
+        cat.read(spark, "t", version=cur_v - 1)
 
 
 def test_rollback_never_touches_overwrite_commits(spark, tmp_path):
@@ -473,7 +526,7 @@ def test_vacuum_removes_crc_sidecars_and_success_markers(spark, tmp_path):
 
     cat = Catalog(str(tmp_path))
     cat.overwrite("t", spark.range(10))
-    v1 = cat.snapshots("t", with_files=True)[-1]["files"]
+    v1 = cat.scan_files("t")
     cat.append("t", spark.range(10, 13))  # second staging dir, still live
     cat.overwrite("t", spark.range(5))    # everything before now expired
     cat.vacuum("t", min_age_secs=0)
@@ -558,7 +611,8 @@ def test_catalog_model_random_op_sequences(spark, tmp_path):
             model_rows = {i: (f"l{step}" if evolved else None) for i in ids}
             evolved = evolved  # overwrite re-records ITS schema
         elif op == "vacuum":
-            cat.vacuum("m", keep_versions=rng.choice([1, 2, 3]), min_age_secs=0)
+            rng.choice([1, 2, 3])  # keeps the seeded op sequence unchanged
+            cat.vacuum("m", min_age_secs=0)
         elif op == "compact":
             if cat.exists("m") and model_rows:
                 st = cat.compact(spark, "m")
@@ -648,10 +702,9 @@ def test_vacuum_age_gate_protects_inflight_commit(spark, tmp_path):
     assert os.path.exists(entry["manifest"])
     assert all(os.path.exists(r["path"]) for r in rows)
     # ...so the in-flight writer can still land its commit afterwards
-    cat._commit("t", (cat._read_current("t")["manifests"]) + [entry],
-                "append", 1, txn="inflight",
-                schema=cat._read_current("t").get("schema"),
-                all_txns=cat._parent_txns("t", cat._read_current("t")))
+    cur = cat._read_current("t")
+    cat._commit("t", cur["manifests"] + [entry], "append", 1, txn="inflight",
+                schema=cur["schema"], all_txns=cur["all_txns"])
     assert cat.read(spark, "t").count() == 10
     # a genuinely dead orphan (same shape, past the gate) is reclaimed
     dead = cat._stage("t", spark.range(200, 203), txn="dead")
