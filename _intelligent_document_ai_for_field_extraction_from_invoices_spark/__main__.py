@@ -519,46 +519,49 @@ def cmd_curate(spark, args) -> dict:
     stage with leaf-plan inputs, and a replayed run id is a per-stage
     no-op. The final survivors (full rows) land in `docs_curated`."""
     docs = _docs(spark, args).persist()
-    bench = (spark.read.parquet(args.benchmark) if args.benchmark
-             else docs.filter(F.col("doc_id") % args.benchmark_mod == 1))
-    cat = Catalog(args.output)
+    # a crashed stage must not leave the input cached in the session
     try:
-        todo = curate_ops.resolve_stages(args.stages)
-    except ValueError as e:
-        raise SystemExit(f"curate: {e}") from None
-    cur = docs
-    stages_out = {}
-    for stage in todo:
-        table = f"curate_{stage}"
-        txn = f"cli:{table}:{args.run_id}"
-        # current-snapshot replay check (review finding): a DIFFERENT
-        # run's later overwrite of this stage table invalidates this
-        # run's committed stage — resume must recompute it, never
-        # silently consume the other run's survivor set
-        replayed = _overwrite_replayed(cat, table, args.run_id)
-        n_keys = None
-        if not replayed:
-            survivors = curate_ops.run_stage(
-                stage, cur, benchmark=bench, quota=args.quota,
-                min_quality=args.min_quality,
-                max_dup_line_frac=args.max_dup_line_frac)
-            # keys only: stage state is a survivor SET; overwrite keeps a
-            # re-run with a new run id from unioning two runs' sets
-            n_keys = _emit(cat, table, survivors.select("doc_id"),
-                           args.run_id, release=True,
+        bench = (spark.read.parquet(args.benchmark) if args.benchmark
+                 else docs.filter(F.col("doc_id") % args.benchmark_mod == 1))
+        cat = Catalog(args.output)
+        try:
+            todo = curate_ops.resolve_stages(args.stages)
+        except ValueError as e:
+            raise SystemExit(f"curate: {e}") from None
+        cur = docs
+        stages_out = {}
+        for stage in todo:
+            table = f"curate_{stage}"
+            txn = f"cli:{table}:{args.run_id}"
+            # current-snapshot replay check (review finding): a DIFFERENT
+            # run's later overwrite of this stage table invalidates this
+            # run's committed stage — resume must recompute it, never
+            # silently consume the other run's survivor set
+            replayed = _overwrite_replayed(cat, table, args.run_id)
+            n_keys = None
+            if not replayed:
+                survivors = curate_ops.run_stage(
+                    stage, cur, benchmark=bench, quota=args.quota,
+                    min_quality=args.min_quality,
+                    max_dup_line_frac=args.max_dup_line_frac)
+                # keys only: stage state is a survivor SET; overwrite keeps a
+                # re-run with a new run id from unioning two runs' sets
+                n_keys = _emit(cat, table, survivors.select("doc_id"),
+                               args.run_id, release=True,
+                               mode="overwrite")["rows_written"]
+            # read the COMMITTED keys back: the next stage starts from a leaf
+            # plan (no cross-stage plan growth) and a resumed run starts from
+            # durable state rather than recomputation
+            keys = cat.read(spark, table)
+            cur = docs.join(keys, "doc_id", "left_semi")
+            stages_out[stage] = {"table": table, "txn": txn,
+                                 "replayed": replayed,
+                                 "survivors": keys.count() if replayed
+                                 else n_keys}
+        final_rows = _emit(cat, "docs_curated", cur, args.run_id,
                            mode="overwrite")["rows_written"]
-        # read the COMMITTED keys back: the next stage starts from a leaf
-        # plan (no cross-stage plan growth) and a resumed run starts from
-        # durable state rather than recomputation
-        keys = cat.read(spark, table)
-        cur = docs.join(keys, "doc_id", "left_semi")
-        stages_out[stage] = {"table": table, "txn": txn,
-                             "replayed": replayed,
-                             "survivors": keys.count() if replayed
-                             else n_keys}
-    final_rows = _emit(cat, "docs_curated", cur, args.run_id,
-                       mode="overwrite")["rows_written"]
-    docs.unpersist()
+    finally:
+        docs.unpersist()
     if final_rows is None:  # replayed: count what the earlier run committed
         final_rows = cat.read(spark, "docs_curated").count()
     return {"stages": stages_out, "order": todo,

@@ -905,8 +905,9 @@ def q_hyperplane_lsh_near_dups(spark, sf_dir):
                                            threshold=0.40, dim=64)
 
 
-def _hyperplane_oracle_sql(threshold: float = 0.40, dim: int = 64,
-                           max_bucket: int = 256) -> str:
+def _hyperplane_oracle_sql(
+        threshold: float = 0.40, dim: int = 64,
+        max_bucket: int = similarity.HYPERPLANE_MAX_BUCKET) -> str:
     planes, bands = similarity.HYPERPLANE_PLANES, similarity.HYPERPLANE_BANDS
     rpb = planes // bands
     sig = similarity.signature_sql(planes, dim,
@@ -941,7 +942,7 @@ def _hyperplane_oracle_sql(threshold: float = 0.40, dim: int = 64,
 
 def _minhash_oracle_sql(num_perms: int = dedup.MINHASH_PERMS,
                         bands: int = dedup.LSH_BANDS,
-                        max_bucket: int = 256,
+                        max_bucket: int = dedup.MINHASH_MAX_BUCKET,
                         min_est_jaccard: float = 0.25) -> str:
     """ANSI-SQL twin of dedup.minhash_lsh_pairs: 3-word
     shingle md5 digests -> per-permutation min of the p%4-th 8-hex-char
@@ -992,7 +993,8 @@ def _minhash_oracle_sql(num_perms: int = dedup.MINHASH_PERMS,
         WHERE est_jaccard >= {min_est_jaccard}"""
 
 
-def _simhash_oracle_sql(max_hamming: int = 8, max_bucket: int = 1024) -> str:
+def _simhash_oracle_sql(max_hamming: int = 8,
+                        max_bucket: int = dedup.SIMHASH_MAX_BUCKET) -> str:
     """ANSI-SQL twin of dedup.simhash_near_dups: token hash = first 16 hex
     chars of md5(token) big-endian; bit b of the doc simhash is the majority
     vote over distinct tokens; 4x16-bit banded self-join, hamming verify."""

@@ -27,8 +27,9 @@ import re
 from decimal import ROUND_HALF_UP, Decimal
 
 
-def round4(x: float, nd: int = 4) -> float:
-    """Round half-away-from-zero on the shortest decimal representation —
+def round4(x: float) -> float:
+    """Round to 4 decimals half-away-from-zero on the shortest decimal
+    representation —
     matches Spark's F.round (Java BigDecimal HALF_UP), NOT Python's banker's
     round(). Scores feed keep/argmax decisions, so golden and the native
     relational twin must round identically.
@@ -36,13 +37,13 @@ def round4(x: float, nd: int = 4) -> float:
     Fast path: plain floor arithmetic, exact whenever the scaled value is
     not within 1e-6 of a .5 tie (float error here is ~1e-12 relative); only
     near-ties pay for the Decimal shortest-repr computation."""
-    if nd == 4 and 0.0 <= x < 1e9:
+    if 0.0 <= x < 1e9:
         f = x * 10000.0
         frac = f - int(f)
         if not (0.499999 < frac < 0.500001):
             return int(f + 0.5) / 10000.0
-    q = Decimal(1).scaleb(-nd)
-    return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"),
+                                           rounding=ROUND_HALF_UP))
 
 # ---------------------------------------------------------------------------
 # Constants (all thresholds fixed; mirror reference semantics cited above)

@@ -13,7 +13,7 @@ contract.py q_curate_survivors):
                     keep each cluster's canonical member
   4. substrdup      ExactSubstr-style heavy-duplication drop (Lee et al.
                     2021): docs whose sliding-window digest-collision
-                    fraction clears `substr_heavy_frac` are removed —
+                    fraction reaches one half are removed —
                     after near-dup keep-one, which already removed the
                     whole-document-level copies that would otherwise make
                     every window of a surviving doc look duplicated
@@ -44,15 +44,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import dedup, textstats
-from .dedup import _bq
 
 # stage names in pinned execution order
 STAGE_ORDER = ["host_sample", "exact", "neardup", "substrdup",
                "decontaminate", "quality"]
-
-# observability: the last curate_survivors run's per-stage survivor counts
-# (only populated when with_stats=True — counting costs one job per stage)
-CURATE_LAST_STATS: dict = {}
 
 
 def resolve_stages(stages: list[str] | None) -> list[str]:
@@ -68,58 +63,46 @@ def resolve_stages(stages: list[str] | None) -> list[str]:
     return [s for s in STAGE_ORDER if s in stages]
 
 
-def exact_keep_first(docs: DataFrame, key: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    """Exact-duplicate keep-one: every doc whose key is the MIN of its
+def exact_keep_first(docs: DataFrame) -> DataFrame:
+    """Exact-duplicate keep-one: every doc whose doc_id is the MIN of its
     content-digest group survives. The winner rule is exactly
     `dedup.exact_dedup_groups`' canonical_id (single source of truth with
     its DuckDB oracle); one digest groupBy + one semi join, no window."""
-    winners = dedup.exact_dedup_groups(docs, key=key, text_col=text_col) \
-        .select(F.col("canonical_id").alias(key))
-    return docs.join(winners, key, "left_semi")
+    winners = dedup.exact_dedup_groups(docs) \
+        .select(F.col("canonical_id").alias("doc_id"))
+    return docs.join(winners, "doc_id", "left_semi")
 
 
-def neardup_keep_one(docs: DataFrame, key: str = "doc_id",
-                     text_col: str = "text", shingle_n: int = 3,
-                     min_shared: int = 2) -> DataFrame:
-    """Near-duplicate keep-one: shingle candidate pairs -> connected
-    components -> keep each cluster's canonical (smallest-key) member."""
-    pairs = dedup.shingle_pairs(docs, key=key, text_col=text_col,
-                                n=shingle_n, min_shared=min_shared)
-    comps = dedup.connected_components(pairs, out_key=key,
+def neardup_keep_one(docs: DataFrame) -> DataFrame:
+    """Near-duplicate keep-one: 3-word shingle candidate pairs sharing >= 2
+    shingles -> connected components -> keep each cluster's canonical
+    (smallest doc_id) member."""
+    pairs = dedup.shingle_pairs(docs)
+    comps = dedup.connected_components(pairs, out_key="doc_id",
                                        pairs_canonical=True)
-    return dedup.keep_canonical(docs, comps, key=key)
+    return dedup.keep_canonical(docs, comps)
 
 
-def substrdup_drop(docs: DataFrame, key: str = "doc_id",
-                   text_col: str = "text", window: int = 64,
-                   stride: int = 16,
-                   heavy_frac: float = 0.5) -> DataFrame:
+def substrdup_drop(docs: DataFrame) -> DataFrame:
     """ExactSubstr heavy-duplication drop: remove docs whose
-    `dedup.substring_dup_stats` dup_heavy flag fires (>= heavy_frac of
-    their sliding windows occur >= 2 times corpus-wide). The flag rule is
-    the operator's own exact-integer threshold — single source of truth
-    with its DuckDB oracle."""
-    stats = dedup.substring_dup_stats(docs, key=key, text_col=text_col,
-                                      window=window, stride=stride,
-                                      heavy_frac=heavy_frac)
-    keep = stats.filter(~F.col("dup_heavy")).select(_bq(key))
-    return docs.join(keep, key, "left_semi")
+    `dedup.substring_dup_stats` dup_heavy flag fires (>= half of their
+    64-char windows at stride 16 occur >= 2 times corpus-wide). The flag
+    rule is the operator's own exact-integer threshold — single source of
+    truth with its DuckDB oracle."""
+    stats = dedup.substring_dup_stats(docs)
+    keep = stats.filter(~F.col("dup_heavy")).select("doc_id")
+    return docs.join(keep, "doc_id", "left_semi")
 
 
-def decontaminate(docs: DataFrame, benchmark: DataFrame,
-                  key: str = "doc_id", text_col: str = "text",
-                  n: int = 8) -> DataFrame:
+def decontaminate(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Drop documents flagged by `contamination_flags` (any shared word
-    n-gram with the benchmark suite)."""
-    flags = dedup.contamination_flags(docs, benchmark, key=key,
-                                      text_col=text_col, n=n)
-    clean = flags.filter(~F.col("contaminated")).select(_bq(key))
-    return docs.join(clean, key, "left_semi")
+    8-gram with the benchmark suite)."""
+    flags = dedup.contamination_flags(docs, benchmark)
+    clean = flags.filter(~F.col("contaminated")).select("doc_id")
+    return docs.join(clean, "doc_id", "left_semi")
 
 
-def quality_filter(docs: DataFrame, key: str = "doc_id",
-                   text_col: str = "text", min_quality: float = 0.5,
+def quality_filter(docs: DataFrame, min_quality: float = 0.5,
                    max_dup_line_frac: float = 0.3) -> DataFrame:
     """Gopher-style quality gate: keep docs whose composite quality score
     clears `min_quality` AND whose duplicate-line fraction stays under
@@ -132,85 +115,57 @@ def quality_filter(docs: DataFrame, key: str = "doc_id",
     filter — the old shape ran the whole repetition_stats bigram
     pipeline (explode, two aggregates, a join) just to read this
     column."""
-    scored = textstats.with_quality_score(docs, text_col=text_col)
+    scored = textstats.with_quality_score(docs)
     return (
         scored.withColumn("dup_line_frac",
-                          textstats.dup_line_frac_col(F.col(_bq(text_col))))
+                          textstats.dup_line_frac_col(F.col("text")))
         .filter((F.col("quality_score") >= min_quality)
                 & (F.col("dup_line_frac") <= max_dup_line_frac))
     )
 
 
 def run_stage(stage: str, docs: DataFrame, benchmark: DataFrame | None = None,
-              key: str = "doc_id", text_col: str = "text",
-              host_col: str = "source", quota: int = 10,
-              shingle_n: int = 3, min_shared: int = 2,
-              contamination_n: int = 8, min_quality: float = 0.5,
-              max_dup_line_frac: float = 0.3,
-              substr_window: int = 64, substr_stride: int = 16,
-              substr_heavy_frac: float = 0.5) -> DataFrame:
+              quota: int = 10, min_quality: float = 0.5,
+              max_dup_line_frac: float = 0.3) -> DataFrame:
     """One named curation stage over `docs` (the previous stage's
     survivors). The CLI drives stages individually so each one commits to
     the catalog exactly-once per run id and a crashed pipeline resumes at
     the failed stage."""
     if stage == "host_sample":
-        return dedup.host_quota_sample(docs, host_col=host_col, key=key,
-                                       quota=quota)
+        return dedup.host_quota_sample(docs, quota=quota)
     if stage == "exact":
-        return exact_keep_first(docs, key=key, text_col=text_col)
+        return exact_keep_first(docs)
     if stage == "neardup":
-        return neardup_keep_one(docs, key=key, text_col=text_col,
-                                shingle_n=shingle_n, min_shared=min_shared)
+        return neardup_keep_one(docs)
     if stage == "substrdup":
-        return substrdup_drop(docs, key=key, text_col=text_col,
-                              window=substr_window, stride=substr_stride,
-                              heavy_frac=substr_heavy_frac)
+        return substrdup_drop(docs)
     if stage == "decontaminate":
         if benchmark is None:
             raise ValueError("the decontaminate stage needs a benchmark")
-        return decontaminate(docs, benchmark, key=key, text_col=text_col,
-                             n=contamination_n)
+        return decontaminate(docs, benchmark)
     if stage == "quality":
-        return quality_filter(docs, key=key, text_col=text_col,
-                              min_quality=min_quality,
+        return quality_filter(docs, min_quality=min_quality,
                               max_dup_line_frac=max_dup_line_frac)
     raise ValueError(f"unknown curate stage {stage!r} "
                      f"(choose from {STAGE_ORDER})")
 
 
 def curate_survivors(docs: DataFrame, benchmark: DataFrame,
-                     key: str = "doc_id", text_col: str = "text",
-                     host_col: str = "source", quota: int = 10,
-                     shingle_n: int = 3, min_shared: int = 2,
-                     contamination_n: int = 8, min_quality: float = 0.5,
-                     max_dup_line_frac: float = 0.3,
-                     substr_window: int = 64, substr_stride: int = 16,
-                     substr_heavy_frac: float = 0.5,
-                     stages: list[str] | None = None,
-                     with_stats: bool = False) -> DataFrame:
+                     quota: int = 10, min_quality: float = 0.5,
+                     max_dup_line_frac: float = 0.3) -> DataFrame:
     """Run the full curation chain in its pinned order and return the
-    surviving documents as (key, host, quality_score, dup_line_frac).
-    `stages` subsets the chain (order still pinned by STAGE_ORDER).
+    surviving documents as (doc_id, source, quality_score,
+    dup_line_frac).
 
     Deterministic end to end — every stage is (host quota: exact integer
     accept; exact/neardup: min-key winners; decontaminate: set
     membership; quality: fixed-weight score), so the composed survivor
-    set is engine-independent and the DuckDB oracle replays it exactly.
-    `with_stats=True` records per-stage survivor counts in
-    CURATE_LAST_STATS (one count job per stage)."""
-    todo = resolve_stages(stages)
-    counts: dict[str, int] = {}
+    set is engine-independent and the DuckDB oracle replays it exactly."""
     cur = docs
-    for stage in todo:
-        cur = run_stage(stage, cur, benchmark=benchmark, key=key,
-                        text_col=text_col, host_col=host_col, quota=quota,
-                        shingle_n=shingle_n, min_shared=min_shared,
-                        contamination_n=contamination_n,
+    for stage in STAGE_ORDER:
+        cur = run_stage(stage, cur, benchmark=benchmark, quota=quota,
                         min_quality=min_quality,
-                        max_dup_line_frac=max_dup_line_frac,
-                        substr_window=substr_window,
-                        substr_stride=substr_stride,
-                        substr_heavy_frac=substr_heavy_frac)
+                        max_dup_line_frac=max_dup_line_frac)
         # cache EVERY stage's survivor set (r7 optimization): each stage
         # references its input several times (substrdup touches it 3x,
         # decontaminate/quality 2-3x, keep-one join-backs 2x) and the
@@ -222,20 +177,4 @@ def curate_survivors(docs: DataFrame, benchmark: DataFrame,
         # the CLI path, which materializes each stage to the catalog
         # instead. All caches release via dedup.release_caches().
         cur = dedup.register_cache(cur.cache())
-        if with_stats:
-            counts[stage] = cur.count()
-    ran_quality = "quality" in todo
-    if not ran_quality:
-        # the output contract always carries the quality columns
-        cur = textstats.with_quality_score(cur, text_col=text_col) \
-            .withColumn("dup_line_frac",
-                        textstats.dup_line_frac_col(F.col(_bq(text_col))))
-    if with_stats:
-        CURATE_LAST_STATS.clear()
-        CURATE_LAST_STATS.update(stage_counts=counts, stages=todo)
-    return cur.select(
-        F.col(_bq(key)),
-        F.col(_bq(host_col)),
-        F.col("quality_score"),
-        F.col("dup_line_frac"),
-    )
+    return cur.select("doc_id", "source", "quality_score", "dup_line_frac")

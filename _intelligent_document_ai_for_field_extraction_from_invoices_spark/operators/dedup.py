@@ -10,9 +10,9 @@ Every bucket -> pairs step (shingle index, MinHash and SimHash bands, and
 the two embedding families in similarity.py) is one primitive,
 `_self_join_pairs`: an equi self-join on the bucket key that carries an
 optional payload to the caller's verify expression. Hot buckets are capped
-(`max_bucket`) before that join, exactly like LSH implementations cap them;
-at 100 TB the shingle index is the big shuffle, and its md5-digest keys
-hash-partition evenly by construction.
+(the `*_MAX_BUCKET` constants) before that join, exactly like LSH
+implementations cap them; at 100 TB the shingle index is the big shuffle,
+and its md5-digest keys hash-partition evenly by construction.
 
 The cap itself is skew-safe: over-cap keys are found with a map-side-combined
 ``groupBy().count()`` and removed via a broadcast anti-join — never with an
@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import re
 import threading
-import weakref
 from hashlib import md5
 
 from pyspark.sql import DataFrame
@@ -34,6 +33,13 @@ from .textstats import SPARK_SQL_WS_RUN, WS_RUN, word_ngrams
 
 MINHASH_PERMS = 16
 LSH_BANDS = 4  # 4 bands x 4 rows
+
+# Hot-bucket caps, one per pair family: a bucket (shingle digest, MinHash
+# band, SimHash band) holding more rows than this is dropped before the
+# self-join. Module-level so tests can pin them.
+SHINGLE_MAX_BUCKET = 64
+MINHASH_MAX_BUCKET = 256
+SIMHASH_MAX_BUCKET = 1024
 
 _WS_RE = re.compile(WS_RUN)
 
@@ -51,39 +57,31 @@ CC_LAST_STATS: dict = {}
 # disables both driver paths).
 UF_BREAK_MAX = 500_000
 
-# Scoped-cache registry: hot-path operators cache DataFrames that feed
-# multiple plan branches (self-join sides, count+anti-join). The registry
-# lets a long-lived session release them all once results are materialized
-# instead of pinning block-manager memory until LRU eviction. Keyed by the
-# owning SparkSession and lock-guarded (ADVICE round-3: a process-global
-# list let one pipeline's release_caches() unpersist another concurrently
-# running session's live caches — correctness survives via recompute, but
-# the perf contract silently breaks).
+# connected_components' contraction-round budget: a graph still holding
+# edges after this many rounds raises. Module-level so tests can pin it.
+CC_MAX_ITERS = 25
+
+# Cache registry: hot-path operators cache DataFrames that feed multiple
+# plan branches (self-join sides, count+anti-join). The registry lets a
+# long-lived session release them all once results are materialized
+# instead of pinning block-manager memory until LRU eviction.
 _CACHE_LOCK = threading.Lock()
-# weak keys: a session that ends without calling release_caches must not be
-# pinned (with its cached plans) in a module global for process lifetime
-_LIVE_CACHES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_LIVE_CACHES: list = []
 
 
 def register_cache(df: DataFrame) -> DataFrame:
     """Track a cached DataFrame for later `release_caches()`."""
     with _CACHE_LOCK:
-        _LIVE_CACHES.setdefault(df.sparkSession, []).append(df)
+        _LIVE_CACHES.append(df)
     return df
 
 
-def release_caches(spark=None) -> int:
-    """Unpersist registered caches and return how many were released.
-    Shared by dedup and similarity. With `spark` given, only that
-    session's caches are touched — concurrent pipelines on other sessions
-    keep theirs; with no argument every session's are released (the
-    single-session CLI/bench shape)."""
+def release_caches() -> int:
+    """Unpersist every registered cache and return how many were
+    released. Shared by dedup and similarity."""
     with _CACHE_LOCK:
-        if spark is None:
-            todo = [df for dfs in _LIVE_CACHES.values() for df in dfs]
-            _LIVE_CACHES.clear()
-        else:
-            todo = _LIVE_CACHES.pop(spark, [])
+        todo = list(_LIVE_CACHES)
+        _LIVE_CACHES.clear()
     n = 0
     for df in todo:
         try:
@@ -119,24 +117,24 @@ def _cap_hot_keys(df: DataFrame, key_cols: list[str],
     return df.join(F.broadcast(hot), key_cols, "left_anti")
 
 
-def exact_dedup_groups(df: DataFrame, key: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
-    """Exact-duplicate groups: digest -> canonical (min key) + copy count."""
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
+    """Exact-duplicate groups: digest -> canonical (min doc_id) + copy
+    count."""
     return (
-        df.select(F.col(_bq(key)), F.md5(F.col(_bq(text_col))).alias("digest"))
+        df.select("doc_id", F.md5(F.col("text")).alias("digest"))
         .groupBy("digest")
-        .agg(F.min(F.col(_bq(key))).alias("canonical_id"),
+        .agg(F.min("doc_id").alias("canonical_id"),
              F.count("*").alias("n_copies"))
     )
 
 
-def _shingles(text_col: str, n: int):
+def _shingles(n: int):
     """n-word shingles as md5 digests — native exprs built via the
     HOF-safe zip_with chain (textstats.word_ngrams): the old
     slice-inside-transform shape re-evaluated the split per ELEMENT
     (O(words^2) per doc — the documented Catalyst projection-collapse
     gotcha)."""
-    words = F.split(F.trim(F.col(_bq(text_col))), WS_RUN)
+    words = F.split(F.trim(F.col("text")), WS_RUN)
     return F.transform(word_ngrams(words, n), F.md5)
 
 
@@ -157,29 +155,28 @@ def _py_shingle_digests(text: str | None, n: int) -> list[str]:
     return list(seen)
 
 
-def _shingle_digest_stream_sql(df: DataFrame, key: str, text_col: str,
-                               n: int) -> DataFrame:
+def _shingle_digest_stream_sql(df: DataFrame, n: int) -> DataFrame:
     """(k, sh) stream of per-doc DISTINCT n-gram md5 digests as native
     expressions: the short-shingle tier of `shingle_pairs`."""
     return (
-        df.filter(F.size(F.split(F.trim(F.col(_bq(text_col))), WS_RUN)) >= n)
-        .select(F.col(_bq(key)).alias("k"),
-                F.explode(F.array_distinct(_shingles(text_col, n)))
+        df.filter(F.size(F.split(F.trim(F.col("text")), WS_RUN)) >= n)
+        .select(F.col("doc_id").alias("k"),
+                F.explode(F.array_distinct(_shingles(n)))
                 .alias("sh"))
     )
 
 
-def _shingle_digest_stream_pandas(df: DataFrame, key: str | None,
-                                  text_col: str, n: int) -> DataFrame:
+def _shingle_digest_stream_pandas(df: DataFrame, n: int,
+                                  keyed: bool = True) -> DataFrame:
     """(k, sh) stream of per-doc DISTINCT n-gram md5 digests — the
     Arrow-batched twin of `_shingle_digest_stream_sql` (r7 optimization):
     hashlib's C md5 over `_py_shingle_digests` replaces the interpreted
-    zip_with/transform/array_distinct chain. `key=None` emits the bare
+    zip_with/transform/array_distinct chain. `keyed=False` emits the bare
     `sh` column. Pinned equal to the expression stream by
     tests/test_dedup.py."""
     import pandas as pd  # noqa: PLC0415
 
-    kt = df.schema[key].dataType.simpleString() if key is not None else None
+    kt = df.schema["doc_id"].dataType.simpleString() if keyed else None
 
     def run(batches):
         for pdf in batches:
@@ -193,11 +190,10 @@ def _shingle_digest_stream_pandas(df: DataFrame, key: str | None,
                 out = {"k": pd.Series(ks, dtype="object"), **out}
             yield pd.DataFrame(out)
 
-    if key is None:
-        return df.select(F.col(_bq(text_col)).alias("t")) \
+    if not keyed:
+        return df.select(F.col("text").alias("t")) \
             .mapInPandas(run, schema="sh string")
-    return df.select(F.col(_bq(key)).alias("k"),
-                     F.col(_bq(text_col)).alias("t")) \
+    return df.select(F.col("doc_id").alias("k"), F.col("text").alias("t")) \
         .mapInPandas(run, schema=f"k {kt}, sh string")
 
 
@@ -210,7 +206,7 @@ def _self_join_pairs(df: DataFrame, k: str, group_cols: list[str],
     a group. Callers bound hot groups first (`_cap_hot_keys`) and own the
     verify expression, the threshold and any cross-band distinct."""
     def side(s: str, c: str):
-        return F.col(f"{s}.{_bq(c)}")
+        return F.col(f"{s}.{c}")
 
     cols = [side("l", k).alias("a"), side("r", k).alias("b")]
     if payload is not None:
@@ -228,16 +224,15 @@ def _self_join_pairs(df: DataFrame, k: str, group_cols: list[str],
     )
 
 
-def shingle_pairs(df: DataFrame, key: str = "doc_id", text_col: str = "text",
-                  n: int = 3, min_shared: int = 2,
-                  max_bucket: int = 64) -> DataFrame:
+def shingle_pairs(df: DataFrame, n: int = 3,
+                  min_shared: int = 2) -> DataFrame:
     """Candidate near-dup pairs sharing >= min_shared distinct n-gram shingles.
 
     Inverted index as a self-join (`_self_join_pairs`) on the shingle
     digest, counted per pair: the hot-shingle cap (`_cap_hot_keys`)
-    drops shingles shared by more than max_bucket docs first, so no
-    bucket contributes more than max_bucket^2/2 pairs, and the cap's
-    cache lets both join sides read the stream once.
+    drops shingles shared by more than SHINGLE_MAX_BUCKET docs first, so
+    no bucket contributes more than SHINGLE_MAX_BUCKET^2/2 pairs, and the
+    cap's cache lets both join sides read the stream once.
 
     The digest stream's tier follows from `n`: the interpreted zip_with
     chain costs ~(n-1) array passes per doc, so long shingles (n >= 5)
@@ -247,7 +242,7 @@ def shingle_pairs(df: DataFrame, key: str = "doc_id", text_col: str = "text",
     census)."""
     stream = (_shingle_digest_stream_pandas if n >= 5
               else _shingle_digest_stream_sql)
-    capped = _cap_hot_keys(stream(df, key, text_col, n), ["sh"], max_bucket)
+    capped = _cap_hot_keys(stream(df, n), ["sh"], SHINGLE_MAX_BUCKET)
     return (
         _self_join_pairs(capped, "k", ["sh"])
         .groupBy(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
@@ -257,7 +252,6 @@ def shingle_pairs(df: DataFrame, key: str = "doc_id", text_col: str = "text",
 
 
 def host_quota_sample(docs: DataFrame, host_col: str = "source",
-                      key: str = "doc_id",
                       quota: int = 10) -> DataFrame:
     """Per-host quota downsampling (the C4/RefinedWeb host-balancing move:
     a handful of giant hosts dominate a raw crawl, so each host is
@@ -275,8 +269,8 @@ def host_quota_sample(docs: DataFrame, host_col: str = "source",
     corpus against it (AQE broadcasts the count table when it fits), one
     narrow filter; expected kept size is sum(min(quota, count)) without
     any sort, window, or per-host top-N buffering."""
-    cnts = docs.groupBy(_bq(host_col)).agg(F.count("*").alias("_cnt"))
-    u = F.conv(F.substring(F.md5(F.col(_bq(key)).cast("string")), 1, 8),
+    cnts = docs.groupBy(host_col).agg(F.count("*").alias("_cnt"))
+    u = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                16, 10).cast("long")
     return (
         docs.join(cnts, host_col)
@@ -286,12 +280,11 @@ def host_quota_sample(docs: DataFrame, host_col: str = "source",
 
 
 def paragraph_dedup(docs: DataFrame, key: str = "doc_id",
-                    text_col: str = "text",
-                    sep: str = "\n") -> DataFrame:
+                    text_col: str = "text") -> DataFrame:
     """Cross-corpus exact PARAGRAPH dedup (the FineWeb/Gopher boilerplate
     move: repeated nav/footer/legal paragraphs are dropped corpus-wide,
     keeping each distinct paragraph's FIRST occurrence): documents are
-    split on `sep`, every occurrence of a duplicated paragraph except the
+    split on newlines, every occurrence of a duplicated paragraph except the
     one with the smallest (doc, position) survives, and each document's
     text is reassembled in original order. Output: one row per input doc
     with `clean_text`, `n_kept`, `n_dropped`.
@@ -307,17 +300,12 @@ def paragraph_dedup(docs: DataFrame, key: str = "doc_id",
     (pos, text) structs, never a sort of the whole corpus."""
     from pyspark.sql.types import IntegralType  # noqa: PLC0415
 
-    did = F.col(_bq(key))
-    # java.util.regex.Pattern.quote semantics: `sep` is a LITERAL
-    # separator, but F.split takes a Java regex — an unquoted '.' or '||'
-    # would corrupt the splits while array_join reassembles with the
-    # literal, and a sep CONTAINING \E would end a naive \Q...\E quote
-    # early (review findings; the replace splits and re-quotes embedded
-    # \E exactly like Pattern.quote does)
-    sep_rx = "\\Q" + sep.replace("\\E", "\\E\\\\E\\Q") + "\\E"
+    did = F.col(key)
+    # a newline is the same single character as a Java regex and as the
+    # array_join literal that reassembles the text
     paras = docs.select(
         did.alias("k"),
-        F.posexplode(F.split(F.col(_bq(text_col)), sep_rx)).alias("pos", "p"),
+        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "p"),
     )
     integral = isinstance(docs.schema[key].dataType, IntegralType)
     if integral:
@@ -354,11 +342,11 @@ def paragraph_dedup(docs: DataFrame, key: str = "doc_id",
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "p"))),
                 lambda s: s["p"],
-            ), sep).alias("clean_text"),
+            ), "\n").alias("clean_text"),
     )
     n_paras = docs.select(
         did.alias("k"),
-        F.size(F.split(F.col(_bq(text_col)), sep_rx)).alias("n_paras"))
+        F.size(F.split(F.col(text_col), "\n")).alias("n_paras"))
     return (
         n_paras.join(rebuilt, "k", "left")
         .select(
@@ -372,15 +360,13 @@ def paragraph_dedup(docs: DataFrame, key: str = "doc_id",
 
 
 def contamination_flags(docs: DataFrame, benchmark: DataFrame,
-                        key: str = "doc_id", text_col: str = "text",
-                        bench_text_col: str = "text",
-                        n: int = 8, min_hits: int = 1) -> DataFrame:
+                        n: int = 8) -> DataFrame:
     """Benchmark decontamination — the standard pretraining-data step
     (GPT-3 appendix C / Llama-style n-gram overlap): flag corpus documents
     whose word n-grams intersect an evaluation suite's n-grams, so
     training data can be filtered before a model memorizes its own test
     set. One row per corpus doc: distinct contaminated-shingle count +
-    the >= min_hits flag.
+    the any-hit flag.
 
     Scale shape: the benchmark side is tiny by construction (eval suites
     are 10^3-10^5 items vs 10^12 docs), so its distinct shingle set is
@@ -392,28 +378,26 @@ def contamination_flags(docs: DataFrame, benchmark: DataFrame,
     # digest streams via the Arrow-batched twin (r7 — byte-exact, see
     # _shingle_digest_stream_pandas); the bench side carries no key and
     # dedups corpus-wide in Spark as before
-    doc_sh = _shingle_digest_stream_pandas(docs, key, text_col, n)
-    bench_sh = _shingle_digest_stream_pandas(
-        benchmark, None, bench_text_col, n).distinct()
+    doc_sh = _shingle_digest_stream_pandas(docs, n)
+    bench_sh = _shingle_digest_stream_pandas(benchmark, n,
+                                             keyed=False).distinct()
     hits = (
         doc_sh.join(F.broadcast(bench_sh), "sh")
         .groupBy("k").agg(F.count("*").alias("n_contaminated"))
     )
     n_col = F.coalesce(F.col("n_contaminated"), F.lit(0))
     return (
-        docs.select(F.col(_bq(key)))
-        .join(hits.withColumnRenamed("k", key), key, "left")
+        docs.select("doc_id")
+        .join(hits.withColumnRenamed("k", "doc_id"), "doc_id", "left")
         .select(
-            F.col(_bq(key)),
+            "doc_id",
             n_col.cast("long").alias("n_contaminated"),
-            (n_col >= min_hits).alias("contaminated"),
+            (n_col >= 1).alias("contaminated"),
         )
     )
 
 
-def substring_dup_stats(docs: DataFrame, key: str = "doc_id",
-                        text_col: str = "text",
-                        window: int = 64, stride: int = 16,
+def substring_dup_stats(docs: DataFrame, window: int = 64, stride: int = 16,
                         heavy_frac: float = 0.5) -> DataFrame:
     """Exact-substring duplication signals (the Lee et al. 2021
     "Deduplicating Training Data Makes Language Models Better" ExactSubstr
@@ -450,8 +434,8 @@ def substring_dup_stats(docs: DataFrame, key: str = "doc_id",
     count."""
     if stride < 1 or window < 1:
         raise ValueError("substring_dup_stats: window/stride must be >= 1")
-    did = F.col(_bq(key))
-    t = F.col(_bq(text_col))
+    did = F.col("doc_id")
+    t = F.col("text")
 
     def _wins(df_: DataFrame) -> DataFrame:
         return (
@@ -489,7 +473,7 @@ def substring_dup_stats(docs: DataFrame, key: str = "doc_id",
         docs.select(did.alias("k"), nw_proj.alias("n_windows"))
         .join(per_doc, "k", "left")
         .select(
-            F.col("k").alias(key),
+            F.col("k").alias("doc_id"),
             nw.alias("n_windows"),
             nd.alias("n_dup_windows"),
             F.round(nd / F.greatest(nw, F.lit(1)), 4)
@@ -500,13 +484,12 @@ def substring_dup_stats(docs: DataFrame, key: str = "doc_id",
     )
 
 
-def jaccard_pairs(df: DataFrame, pairs: DataFrame, key: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def jaccard_pairs(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Token-set Jaccard for candidate pairs (ref string-similarity fallback,
     evaluate.py:221-231: intersection/union of token sets)."""
     toks = register_cache(df.select(
-        F.col(_bq(key)).alias("k"),
-        F.array_distinct(F.split(F.trim(F.col(_bq(text_col))), WS_RUN)).alias("toks"),
+        F.col("doc_id").alias("k"),
+        F.array_distinct(F.split(F.trim(F.col("text")), WS_RUN)).alias("toks"),
     ).cache())  # joined twice (doc_a and doc_b sides); released via release_caches()
     j = (
         pairs.join(toks.withColumnRenamed("k", "doc_a")
@@ -522,20 +505,9 @@ def jaccard_pairs(df: DataFrame, pairs: DataFrame, key: str = "doc_id",
     )
 
 
-def _bq(name: str) -> str:
-    """Backtick-quote an identifier interpolated into a SQL-string
-    expression tree (ADVICE round-3: the JVM-parsed selectExpr formulation
-    would otherwise misparse column names with spaces/dots/hyphens that the
-    old F.col() form handled)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def minhash_signatures(df: DataFrame, key: str = "doc_id",
-                       text_col: str = "text",
-                       num_perms: int = MINHASH_PERMS,
-                       shingle_n: int = 3) -> DataFrame:
-    """MinHash signature per doc: min over its distinct n-word shingles of
-    perm_hash(shingle, seed_p) for each of `num_perms` seeded
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """MinHash signature per doc: min over its distinct 3-word shingles of
+    perm_hash(shingle, seed_p) for each of MINHASH_PERMS seeded
     permutations. Shingles (not unigrams) are the hashed features: unigram
     sets over a small vocabulary are near-identical across documents,
     which would collapse every LSH bucket into one giant skew bucket.
@@ -549,24 +521,24 @@ def minhash_signatures(df: DataFrame, key: str = "doc_id",
     Plan shape: ONE Arrow-batched mapInPandas pass computes each doc's
     permutation mins in-row with hashlib's C md5 (r7: no explode shuffle,
     no interpreted HOF chain — measured ~2x the expression tier at sf1).
-    Docs with fewer than shingle_n words emit no row. Pinned
+    Docs with fewer than 3 words emit no row. Pinned
     byte-identical to the native-expression reference
     `_minhash_signatures_sql` by
     tests/test_dedup.py::test_minhash_signature_engines_identical."""
     import pandas as pd  # noqa: PLC0415
 
-    kt = df.schema[key].dataType.simpleString()
-    groups = (num_perms + 3) // 4
-    slots = [(p // 4, (p % 4) * 8) for p in range(num_perms)]
+    kt = df.schema["doc_id"].dataType.simpleString()
+    groups = (MINHASH_PERMS + 3) // 4
+    slots = [(p // 4, (p % 4) * 8) for p in range(MINHASH_PERMS)]
 
     def run(batches):
         for pdf in batches:
             ks, sigs = [], []
             for k_, text in zip(pdf["k"], pdf["t"]):
-                digests = _py_shingle_digests(text, shingle_n)
+                digests = _py_shingle_digests(text, 3)
                 if not digests:
                     continue
-                mins = [None] * num_perms
+                mins = [None] * MINHASH_PERMS
                 for d in digests:
                     hs = [md5(f"{d},{gi}".encode()).hexdigest()
                           for gi in range(groups)]
@@ -583,68 +555,59 @@ def minhash_signatures(df: DataFrame, key: str = "doc_id",
                                 "signature": pd.Series(sigs,
                                                        dtype="object")})
 
-    out = df.select(F.col(_bq(key)).alias("k"),
-                    F.col(_bq(text_col)).alias("t")) \
+    out = df.select(F.col("doc_id").alias("k"), F.col("text").alias("t")) \
         .mapInPandas(run, schema=f"k {kt}, signature array<string>")
-    return out.withColumnRenamed("k", key)
+    return out.withColumnRenamed("k", "doc_id")
 
 
-def _minhash_signatures_sql(df: DataFrame, key: str = "doc_id",
-                            text_col: str = "text",
-                            num_perms: int = MINHASH_PERMS,
-                            shingle_n: int = 3) -> DataFrame:
+def _minhash_signatures_sql(df: DataFrame) -> DataFrame:
     """Native-expression reference for `minhash_signatures`: explode
     distinct shingles -> one md5 per seed group -> one min-aggregate per
     permutation. Kept as the test reference because it splits words with
     Spark's own WS_RUN regex (the DuckDB oracle's whitespace split keeps
     "z\\x0bw" as one word)."""
     toks = df.filter(
-        F.size(F.split(F.trim(F.col(_bq(text_col))), WS_RUN)) >= shingle_n
+        F.size(F.split(F.trim(F.col("text")), WS_RUN)) >= 3
     ).select(
-        F.col(_bq(key)).alias("k"),
-        F.explode(
-            F.array_distinct(_shingles(text_col, shingle_n))
-        ).alias("tok"),
+        F.col("doc_id").alias("k"),
+        F.explode(F.array_distinct(_shingles(3))).alias("tok"),
     )
     # per-permutation expressions are SQL strings parsed JVM-side:
     # building ~150 Column objects from Python costs ~1 s of py4j
     # round-trips per query (same lesson as simhash_signatures)
     toks = toks.selectExpr("k", *[
         f"md5(concat_ws(',', tok, '{g}')) AS h{g}"
-        for g in range((num_perms + 3) // 4)
+        for g in range((MINHASH_PERMS + 3) // 4)
     ])
     mins = toks.groupBy("k").agg(*[
         F.expr(f"min(substring(h{p // 4}, {(p % 4) * 8 + 1}, 8)) AS mh{p}")
-        for p in range(num_perms)
+        for p in range(MINHASH_PERMS)
     ])
     return mins.selectExpr(
-        f"k AS {_bq(key)}",
-        f"array({', '.join(f'mh{p}' for p in range(num_perms))}) AS signature",
+        "k AS doc_id",
+        f"array({', '.join(f'mh{p}' for p in range(MINHASH_PERMS))}) "
+        "AS signature",
     )
 
 
-def minhash_lsh_pairs(df: DataFrame, key: str = "doc_id",
-                      text_col: str = "text", bands: int = LSH_BANDS,
-                      num_perms: int = MINHASH_PERMS,
-                      min_est_jaccard: float = 0.5,
-                      max_bucket: int = 256) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame,
+                      min_est_jaccard: float = 0.5) -> DataFrame:
     """Banded LSH over MinHash signatures: docs colliding in any band become
     candidate pairs; estimated Jaccard = fraction of matching signature slots.
-    Buckets larger than `max_bucket` are dropped before the self-join — the
-    skew guard that bounds worst-case pair blowup at scale (groupBy count +
-    broadcast anti-join; see `_cap_hot_keys`)."""
-    rows = num_perms // bands
-    sigs = minhash_signatures(df, key, text_col, num_perms)
-    banded = sigs.selectExpr(
-        f"{_bq(key)} AS k",
+    Buckets larger than MINHASH_MAX_BUCKET are dropped before the
+    self-join — the skew guard that bounds worst-case pair blowup at scale
+    (groupBy count + broadcast anti-join; see `_cap_hot_keys`)."""
+    rows = MINHASH_PERMS // LSH_BANDS
+    banded = minhash_signatures(df).selectExpr(
+        "doc_id AS k",
         "signature",
-        f"posexplode(transform(sequence(0, {bands - 1}), "
+        f"posexplode(transform(sequence(0, {LSH_BANDS - 1}), "
         f"b -> md5(concat_ws(',', transform(slice(signature, b * {rows} + 1, "
         f"{rows}), x -> cast(x AS string)))))) AS (band, bucket)",
     )
     # _cap_hot_keys caches its input, so both self-join sides reuse the
     # banded signature pipeline rather than recomputing it
-    banded = _cap_hot_keys(banded, ["band", "bucket"], max_bucket)
+    banded = _cap_hot_keys(banded, ["band", "bucket"], MINHASH_MAX_BUCKET)
     matches = F.size(F.filter(
         F.zip_with(F.col("pa"), F.col("pb"), lambda x, y: x == y),
         lambda v: v
@@ -655,14 +618,14 @@ def minhash_lsh_pairs(df: DataFrame, key: str = "doc_id",
     return (
         _self_join_pairs(banded, "k", ["band", "bucket"], "signature")
         .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"),
-                F.round(matches / F.lit(num_perms), 4).alias("est_jaccard"))
+                F.round(matches / F.lit(MINHASH_PERMS), 4)
+                .alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= min_est_jaccard)
         .dropDuplicates(["doc_a", "doc_b"])
     )
 
 
-def simhash_signatures(df: DataFrame, key: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def simhash_signatures(df: DataFrame) -> DataFrame:
     """64-bit SimHash per doc, fully native (whole-stage codegen end to end).
 
     Token hash = first 16 hex chars of md5(token) read big-endian (hex char
@@ -682,9 +645,9 @@ def simhash_signatures(df: DataFrame, key: str = "doc_id",
     objects from Python costs 2-3 s of py4j round-trips per query — measured
     to dominate the whole sf0.1 query (the round-2 bench regression)."""
     toks = df.selectExpr(
-        f"{_bq(key)} AS k",
+        "doc_id AS k",
         "explode_outer(filter(array_distinct("
-        f"split(trim({_bq(text_col)}), '{SPARK_SQL_WS_RUN}')), x -> x != '')) AS tok",
+        f"split(trim(text), '{SPARK_SQL_WS_RUN}')), x -> x != '')) AS tok",
     )
     # two conv() calls per token, not 16: hex chars 1-15 -> bits 63..4
     # ("hi", < 2^60 so the signed long conv is exact), char 16 -> bits 3..0
@@ -710,21 +673,19 @@ def simhash_signatures(df: DataFrame, key: str = "doc_id",
     ) + (" + (CASE WHEN 2*s63 > cnt"
          " THEN -9223372036854775807L - 1L ELSE 0L END)")
     return agg.selectExpr(
-        f"k AS {_bq(key)}",
+        "k AS doc_id",
         f"coalesce({terms}, 0L) AS simhash",
     )
 
 
-def simhash_near_dups(df: DataFrame, key: str = "doc_id",
-                      text_col: str = "text", max_hamming: int = 8,
-                      max_bucket: int = 1024) -> DataFrame:
+def simhash_near_dups(df: DataFrame, max_hamming: int = 8) -> DataFrame:
     """SimHash near-dup pairs: band the 64-bit hash into 4×16-bit keys
     (pigeonhole: hamming<=3 guarantees a shared band; wider max_hamming is
     best-effort as in production SimHash dedup), then verify hamming.
-    Buckets larger than `max_bucket` are dropped before the self-join
-    (`_cap_hot_keys` — e.g. the simhash-0 bucket of empty docs)."""
-    sh = simhash_signatures(df, key, text_col).select(
-        F.col(_bq(key)).alias("k"), F.col("simhash").alias("sh"))
+    Buckets larger than SIMHASH_MAX_BUCKET are dropped before the
+    self-join (`_cap_hot_keys` — e.g. the simhash-0 bucket of empty docs)."""
+    sh = simhash_signatures(df).select(
+        F.col("doc_id").alias("k"), F.col("simhash").alias("sh"))
     banded = sh.select(
         "k", "sh",
         F.posexplode(F.array(*[
@@ -732,7 +693,7 @@ def simhash_near_dups(df: DataFrame, key: str = "doc_id",
             for i in range(4)
         ])).alias("band", "bkey"),
     )
-    banded = _cap_hot_keys(banded, ["band", "bkey"], max_bucket)
+    banded = _cap_hot_keys(banded, ["band", "bkey"], SIMHASH_MAX_BUCKET)
     ham = F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))).cast("int")
     # hamming is a pure function of the pair: filter before the dedup
     # shuffle so it only carries pairs that survive the threshold
@@ -771,7 +732,6 @@ def _union_find_min(rows):
 
 def connected_components(pairs: DataFrame, key_a: str = "doc_a",
                          key_b: str = "doc_b", out_key: str = "doc_id",
-                         max_iters: int = 25,
                          pairs_canonical: bool = False) -> DataFrame:
     """Near-duplicate CLUSTERING: connected components over a candidate-pair
     edge list (the step after LSH at corpus scale — pairs say "these two are
@@ -839,6 +799,7 @@ def connected_components(pairs: DataFrame, key_a: str = "doc_a",
     spark = pairs.sparkSession
     collect_break_max = 200_000
     uf_break_max = UF_BREAK_MAX
+    max_iters = CC_MAX_ITERS
     uf_edges = None
 
     def _leaf_reset(df: DataFrame, n_rows: int) -> DataFrame:
@@ -1047,7 +1008,7 @@ def connected_components(pairs: DataFrame, key_a: str = "doc_a",
         register_cache(edges)
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds "
-            "(pathological component diameter — raise max_iters)")
+            "(pathological component diameter — raise CC_MAX_ITERS)")
 
     # jump-only epilogue: contracted-away nodes may still point into a
     # label chain; double the pointers until no label moves. Stability is
@@ -1059,7 +1020,7 @@ def connected_components(pairs: DataFrame, key_a: str = "doc_a",
     # contraction loop's (review finding: sharing max_iters made a graph
     # that contracted empty on the last allowed round raise spuriously at
     # the fixpoint) — chains are at most `it` long and jumping doubles,
-    # so log2(it)+2 rounds always suffice; max_iters stays the user dial.
+    # so log2(it)+2 rounds always suffice.
     ep_budget = max(max_iters, it.bit_length() + 2)
     ep = 0
     while ep < ep_budget:
@@ -1093,7 +1054,7 @@ def connected_components(pairs: DataFrame, key_a: str = "doc_a",
     register_cache(labels)
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds "
-        "(pathological component diameter — raise max_iters)")
+        "(pathological component diameter — raise CC_MAX_ITERS)")
 
 
 def keep_canonical(df: DataFrame, components: DataFrame,
@@ -1102,19 +1063,18 @@ def keep_canonical(df: DataFrame, components: DataFrame,
     component's canonical (smallest-id) member; documents in no component
     pass through untouched. `components` is connected_components output."""
     losers = components.filter(
-        F.col(_bq(key)) != F.col("component_id")).select(F.col(_bq(key)))
+        F.col(key) != F.col("component_id")).select(F.col(key))
     return df.join(losers, key, "left_anti")
 
 
-def dedup_against(docs: DataFrame, seen: DataFrame, key: str = "doc_id",
-                  text_col: str = "text",
+def dedup_against(docs: DataFrame, seen: DataFrame,
                   seen_digest_col: str = "digest") -> DataFrame:
     """Incremental cross-snapshot exact dedup (the move every rolling
     crawl pipeline runs: dedupe THIS dump against every dump already
     ingested): flag each doc as novel iff its text md5 digest is absent
     from `seen`, the digest set of previously-ingested corpus snapshots
     (e.g. the `digest` column of a committed exact_dedup_groups table, or
-    a prior run's dedup_against output). Returns (key, digest,
+    a prior run's dedup_against output). Returns (doc_id, digest,
     is_novel) — the digest column is the row to fold back into the seen
     set for the NEXT snapshot.
 
@@ -1125,20 +1085,18 @@ def dedup_against(docs: DataFrame, seen: DataFrame, key: str = "doc_id",
     an undeduplicated history) and joined on uniform md5 keys, so AQE
     broadcasts it while it fits and degrades to a co-partitioned
     shuffle join beyond that. No window, no sort, no driver state."""
-    d = docs.select(F.col(_bq(key)),
-                    F.md5(F.col(_bq(text_col))).alias("digest"))
-    s = (seen.select(F.col(_bq(seen_digest_col)).alias("digest"))
+    d = docs.select("doc_id", F.md5(F.col("text")).alias("digest"))
+    s = (seen.select(F.col(seen_digest_col).alias("digest"))
          .distinct().withColumn("_seen", F.lit(1)))
     return (
         d.join(s, "digest", "left")
-        .select(F.col(_bq(key)), "digest",
+        .select("doc_id", "digest",
                 F.col("_seen").isNull().alias("is_novel"))
     )
 
 
 def url_blocklist_flags(docs: DataFrame, blocked_domains,
-                        key: str = "doc_id",
-                        url_col: str = "url") -> DataFrame:
+                        key: str = "doc_id") -> DataFrame:
     """UT1/C4-style domain blocklist filter: a doc is blocked iff its URL
     host, or ANY dot-suffix of it, appears in the blocklist — registrable-
     domain semantics without a PSL dependency (blocking 'example.com'
@@ -1165,8 +1123,8 @@ def url_blocklist_flags(docs: DataFrame, blocked_domains,
         bl = blocked_domains.select(
             F.lower(F.col("domain")).alias("domain"))
     host = F.lower(F.regexp_extract(
-        F.col(_bq(url_col)), r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#:]*)", 1))
-    base = docs.select(F.col(_bq(key)).alias("k"), host.alias("host"))
+        F.col("url"), r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#:]*)", 1))
+    base = docs.select(F.col(key).alias("k"), host.alias("host"))
     parts = F.split(F.col("host"), r"\.")
     sufs = F.transform(
         F.sequence(F.lit(0), F.size(parts) - 1),

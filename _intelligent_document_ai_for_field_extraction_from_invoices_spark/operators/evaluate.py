@@ -14,8 +14,7 @@ CPU_RATE_PER_HOUR = 0.01  # ref cost model, executable.py:473-488
 EST_BYTES_PER_SEC = 2_000_000.0
 
 
-def cost_metrics(lineage_df: DataFrame,
-                 rate_per_hour: float = CPU_RATE_PER_HOUR) -> DataFrame:
+def cost_metrics(lineage_df: DataFrame) -> DataFrame:
     """A9/F17 + A8: cost model over lineage rows — cost = processing seconds
     x hourly rate (ref executable.py:473-488). Seconds are MEASURED when the
     lineage carries wall_ms (run_extraction records real per-partition UDF
@@ -26,7 +25,7 @@ def cost_metrics(lineage_df: DataFrame,
         sec = F.coalesce(F.col("wall_ms") / 1000.0, est_sec)
     else:
         sec = est_sec
-    cost = F.round(sec / 3600.0 * rate_per_hour, 8)
+    cost = F.round(sec / 3600.0 * CPU_RATE_PER_HOUR, 8)
     return lineage_df.select(
         "part_id", "n_rows", "bytes_out", cost.alias("est_cost_usd")
     ).withColumn("cost_per_row_usd",
@@ -34,9 +33,7 @@ def cost_metrics(lineage_df: DataFrame,
                          / F.greatest(F.col("n_rows"), F.lit(1)), 10))
 
 
-def run_performance_summary(lineage_df: DataFrame,
-                            rate_per_hour: float = CPU_RATE_PER_HOUR
-                            ) -> DataFrame:
+def run_performance_summary(lineage_df: DataFrame) -> DataFrame:
     """A8 throughput + A9 cost at RUN granularity over committed lineage
     rows, on the deterministic estimate tier: every float op happens on
     exact integer TOTALS (sum of n_rows / bytes_out / n_failed), so the
@@ -60,7 +57,7 @@ def run_performance_summary(lineage_df: DataFrame,
         F.round(F.sum("n_rows") / sec_g, 2).alias("docs_per_cpu_sec"),
         F.round(F.sum("n_rows") / (sec_g / 3600.0), 0)
         .alias("docs_per_cpu_hour"),
-        F.round(sec / 3600.0 * rate_per_hour, 8).alias("est_cost_usd"),
+        F.round(sec / 3600.0 * CPU_RATE_PER_HOUR, 8).alias("est_cost_usd"),
     )
 
 

@@ -35,11 +35,10 @@ from pyspark.sql import functions as F
 from .textstats import bpe_token_count_col
 
 
-def pack_sequences(docs: DataFrame, key: str = "doc_id",
-                   text_col: str = "text", budget: int = 2048,
+def pack_sequences(docs: DataFrame, budget: int = 2048,
                    bucket_size: int = 4096) -> DataFrame:
     """Assign each document its context-window id under
-    concatenate-then-chop packing in ascending `key` order with
+    concatenate-then-chop packing in ascending doc_id order with
     `budget` tokens per window (BPE-ish token counts,
     textstats.bpe_token_count_col).
 
@@ -50,12 +49,12 @@ def pack_sequences(docs: DataFrame, key: str = "doc_id",
     if budget <= 0 or bucket_size <= 0:
         raise ValueError("budget and bucket_size must be positive")
     t = docs.select(
-        F.col(key),
-        bpe_token_count_col(F.col(text_col)).alias("n_tokens"),
-        (F.col(key) - (((F.col(key) % bucket_size) + bucket_size)
+        F.col("doc_id"),
+        bpe_token_count_col(F.col("text")).alias("n_tokens"),
+        (F.col("doc_id") - (((F.col("doc_id") % bucket_size) + bucket_size)
                        % bucket_size)).alias("_blo"),  # floor to bucket, neg-safe
     )
-    in_bucket = Window.partitionBy("_blo").orderBy(key) \
+    in_bucket = Window.partitionBy("_blo").orderBy("doc_id") \
         .rowsBetween(Window.unboundedPreceding, -1)
     t = t.withColumn(
         "_local_prev", F.coalesce(F.sum("n_tokens").over(in_bucket), F.lit(0)))
@@ -72,7 +71,7 @@ def pack_sequences(docs: DataFrame, key: str = "doc_id",
         t.join(offsets, "_blo")
         .withColumn("_prev", F.col("_off") + F.col("_local_prev"))
         .select(
-            F.col(key),
+            F.col("doc_id"),
             F.col("n_tokens"),
             F.expr(f"_prev div {budget}").alias("seq_id"),
             (F.col("_prev") % budget).alias("seq_offset"),

@@ -51,7 +51,7 @@ def _u32(key_col, salt: str):
                     1, 8), 16, 10).cast("long")
 
 
-def _guard_k(k, source_col: str):
+def _guard_k(k):
     """Overflow guard on a per-source k (decimal(38,0)): non-ANSI decimal
     arithmetic turns overflow into NULL, which would make the accept test
     silently drop rows — instead raise at evaluation time. NULL here can
@@ -60,15 +60,13 @@ def _guard_k(k, source_col: str):
     # str-typed literal: _K_MAX exceeds the JVM long that F.lit(int) maps to
     too_big = k.isNull() | (k > F.lit(str(_K_MAX)).cast("decimal(38,0)"))
     return F.when(too_big, F.raise_error(F.concat(
-        F.lit("mixture_sample: k for source '"), F.col(source_col),
+        F.lit("mixture_sample: k for source '"), F.col("source"),
         F.lit(f"' exceeds decimal(38,0) accept-test headroom ({_K_MAX}); "
               "reduce weight coprimality or pre-shard the corpus"),
     ))).otherwise(k)
 
 
-def mixture_sample(docs: DataFrame, weights: dict[str, int],
-                   key: str = "doc_id", source_col: str = "source",
-                   text_col: str = "text") -> DataFrame:
+def mixture_sample(docs: DataFrame, weights: dict[str, int]) -> DataFrame:
     """Sample `docs` so each source's expected TOKEN share is proportional
     to its integer weight (the domain-mixing move: post-sample tokens per
     source = w_s * min_t(T_t / w_t), i.e. the most-underrepresented source
@@ -115,31 +113,31 @@ def mixture_sample(docs: DataFrame, weights: dict[str, int],
             "mixture weights are too coprime: lcm(weights)/w exceeds "
             f"bigint (lcm={lcm}); use smaller or less-coprime weights")
     spark = docs.sparkSession
-    wdf = spark.createDataFrame(mults, f"{source_col} string, _mult long")
+    wdf = spark.createDataFrame(mults, "source string, _mult long")
 
-    t = docs.withColumn("_tok", token_count_col(F.col(text_col)))
+    t = docs.withColumn("_tok", token_count_col(F.col("text")))
     # k in DECIMAL(38,0) from the start: coprime-heavy weight sets make
     # L (and so _mult) combinatorially large, and a BIGINT _T * _mult
     # would overflow around 2^63 — under ANSI mode that kills the job.
     # The docstring's 38-digit headroom only holds if the MULTIPLY is
     # decimal too (oracle mirrors with HUGEINT).
     ks = (
-        t.join(F.broadcast(wdf), source_col)
-        .groupBy(source_col, "_mult")
+        t.join(F.broadcast(wdf), "source")
+        .groupBy("source", "_mult")
         .agg(F.sum("_tok").alias("_T"))
-        .select(source_col,
+        .select("source",
                 _guard_k((F.col("_T").cast("decimal(38,0)")
-                          * F.col("_mult")), source_col).alias("_k"))
+                          * F.col("_mult"))).alias("_k"))
     )
     # min over POSITIVE k only: a weighted source with zero corpus tokens
     # has k = 0, and letting it set kmin would silently empty the entire
     # sample; excluded, it keeps its (token-free) docs via u32 * 0 < kmin
     # while every token-bearing source stays proportional
     kmin = ks.filter(F.col("_k") > 0).agg(F.min("_k").alias("_kmin"))
-    u = _u32(F.col(key), ":mix")
+    u = _u32(F.col("doc_id"), ":mix")
     dec = "decimal(38,0)"
     return (
-        t.join(F.broadcast(ks), source_col)
+        t.join(F.broadcast(ks), "source")
         .crossJoin(F.broadcast(kmin))
         .filter(u.cast(dec) * F.col("_k")
                 < F.col("_kmin") * F.lit(_U32_SPAN).cast(dec))
@@ -148,8 +146,8 @@ def mixture_sample(docs: DataFrame, weights: dict[str, int],
     )
 
 
-def assign_splits(docs: DataFrame, splits: dict[str, int] | None = None,
-                  key: str = "doc_id") -> DataFrame:
+def assign_splits(docs: DataFrame,
+                  splits: dict[str, int] | None = None) -> DataFrame:
     """Attach a deterministic `split` column partitioning the corpus into
     named shards with integer proportions (default the classic
     18/1/1 = 90%/5%/5% train/val/test). Doc d lands in the shard whose
@@ -164,7 +162,7 @@ def assign_splits(docs: DataFrame, splits: dict[str, int] | None = None,
     if any((not isinstance(w, int)) or w <= 0 for w in splits.values()):
         raise ValueError("split proportions must be positive integers")
     total = sum(splits.values())
-    u = _u32(F.col(key), ":split")
+    u = _u32(F.col("doc_id"), ":split")
     scaled = u * F.lit(total)  # < 2^32 * S, fits BIGINT for sane S
     expr = None
     cum = 0
@@ -178,9 +176,7 @@ def assign_splits(docs: DataFrame, splits: dict[str, int] | None = None,
 
 
 def hashed_ngram_importance(docs: DataFrame, target: DataFrame,
-                            key: str = "doc_id", text_col: str = "text",
                             num_buckets: int = 8192,
-                            salt: str = ":dsir",
                             hash_fn: str = "md5") -> DataFrame:
     """DSIR-style importance score (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every raw-corpus
@@ -234,13 +230,13 @@ def hashed_ngram_importance(docs: DataFrame, target: DataFrame,
                          "(choose md5 or xxhash64)")
     from .textstats import WS_RUN, word_ngrams  # noqa: PLC0415
 
-    t = F.col(text_col)
+    t = F.col("text")
 
     def _bucket_of(g):
         if hash_fn == "md5":
-            return _u32(g, salt) % F.lit(num_buckets)
+            return _u32(g, ":dsir") % F.lit(num_buckets)
         # pmod: xxhash64 is a SIGNED long; % would emit negative buckets
-        return F.pmod(F.xxhash64(F.concat(g, F.lit(salt))),
+        return F.pmod(F.xxhash64(F.concat(g, F.lit(":dsir"))),
                       F.lit(num_buckets))
 
     def _buckets(df_: DataFrame) -> DataFrame:
@@ -248,7 +244,7 @@ def hashed_ngram_importance(docs: DataFrame, target: DataFrame,
         # (textstats.word_ngrams) — never slice-inside-transform
         words = F.filter(F.split(F.trim(t), WS_RUN), lambda w: w != "")
         return df_.select(
-            F.col(key).alias("k"),
+            F.col("doc_id").alias("k"),
             F.explode(F.concat(words, word_ngrams(words, 2))).alias("g"),
         ).select("k", _bucket_of(F.col("g")).alias("b"))
 
@@ -292,9 +288,9 @@ def hashed_ngram_importance(docs: DataFrame, target: DataFrame,
              F.sum("_lr_micro").alias("_s"))
     )
     return (
-        docs.select(F.col(key).alias("k")).join(scored, "k", "left")
+        docs.select(F.col("doc_id").alias("k")).join(scored, "k", "left")
         .select(
-            F.col("k").alias(key),
+            F.col("k").alias("doc_id"),
             F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
             F.round(F.col("_s") / (F.col("n_grams") * 1e6), 4)
             .alias("avg_log_ratio"),

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 SESSION_GAP_MIN = 30
 
 
-def _new_session_flag(gap_minutes: int):
+def _new_session_flag():
     """1 on the first event of a session, else 0 (lag over the per-user
     time order). Microsecond-exact epoch: ts is TIMESTAMP_NTZ; fractional
     seconds matter for the gap comparison, and the oracle uses epoch_us."""
@@ -20,29 +20,29 @@ def _new_session_flag(gap_minutes: int):
     ep = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
     gap_us = ep - F.lag(ep).over(w)
     return F.when(
-        gap_us.isNull() | (gap_us > gap_minutes * 60 * 1_000_000), F.lit(1)
+        gap_us.isNull() | (gap_us > SESSION_GAP_MIN * 60 * 1_000_000), F.lit(1)
     ).otherwise(F.lit(0))
 
 
-def sessionize(events: DataFrame, gap_minutes: int = SESSION_GAP_MIN) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Assign session ids per user: a new session starts when the gap from the
-    previous event exceeds `gap_minutes` (lag -> boundary flag -> running sum)."""
+    previous event exceeds SESSION_GAP_MIN minutes (lag -> boundary flag ->
+    running sum)."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return events.withColumn(
         "session_id",
-        F.sum(_new_session_flag(gap_minutes)).over(
+        F.sum(_new_session_flag()).over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
 
 
-def session_counts(events: DataFrame,
-                   gap_minutes: int = SESSION_GAP_MIN) -> DataFrame:
+def session_counts(events: DataFrame) -> DataFrame:
     """Per-user session/event counts. Skips sessionize's running-sum window:
     max(session_id) == sum of the boundary flags (the first event always
     flags 1), so one lag window + a hash aggregate replaces two window
     passes over every event — one full per-partition sort saved."""
-    flagged = events.withColumn("new_sess", _new_session_flag(gap_minutes))
+    flagged = events.withColumn("new_sess", _new_session_flag())
     return flagged.groupBy("user_id").agg(
         F.sum("new_sess").alias("n_sessions"),
         F.count("*").alias("n_events"),

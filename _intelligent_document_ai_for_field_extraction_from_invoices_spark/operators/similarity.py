@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from .dedup import (  # shared cache registry and bucket primitives
-    _bq, _cap_hot_keys, _self_join_pairs, register_cache, release_caches,
+    _cap_hot_keys, _self_join_pairs, register_cache, release_caches,
 )
 
 __all__ = [
@@ -41,21 +41,20 @@ def _unit_vectors(emb: DataFrame, key: str, vec_col: str) -> DataFrame:
     # sf1, vs ~2 s for this shape). array_repeat evaluates the norm
     # ONCE per row and zip_with divides elementwise against the
     # materialized copies; the emitted values are bit-identical.
-    v = F.col(_bq(vec_col))
+    v = F.col(vec_col)
     return emb.select(
-        F.col(_bq(key)),
+        F.col(key),
         F.zip_with(v, F.array_repeat(_norm(v), F.size(v)),
                    lambda x, n: x.cast("double") / n).alias("uvec"),
     )
 
 
-def seed_centroids(emb: DataFrame, num_centroids: int, key: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
-    """The deterministic seed-centroid choice (vectors with key <
+def seed_centroids(emb: DataFrame, num_centroids: int) -> DataFrame:
+    """The deterministic seed-centroid choice (vectors with vec_id <
     num_centroids) — reproducible in the ANSI oracles; the shared default
     for ivf_assign / ivf_ann_query and the CLI's --build-index."""
-    return emb.filter(F.col(key) < num_centroids).select(
-        F.col(key).alias("centroid_id"), F.col(vec_col).alias("cvec"))
+    return emb.filter(F.col("vec_id") < num_centroids).select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec"))
 
 
 def _dot(a, b):
@@ -104,29 +103,30 @@ def _argmax_centroid(scored: DataFrame, group_col: str, keep_cols: list[str]):
     )
 
 
-def cosine_knn(emb: DataFrame, query_vec_id: int, k: int = 10,
-               key: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_knn(emb: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
     """Brute-force cosine top-k vs one stored vector. The query side is a
-    1-row broadcast (no shuffle); ordering has an explicit key tie-break."""
-    q = emb.filter(F.col(key) == query_vec_id).select(
-        F.col(vec_col).alias("qvec")
+    1-row broadcast (no shuffle); ordering has an explicit vec_id
+    tie-break."""
+    q = emb.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("qvec")
     )
     return (
-        emb.filter(F.col(key) != query_vec_id)
+        emb.filter(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(q))
         .select(
-            key,
-            F.round(cosine_col(F.col(vec_col), F.col("qvec")), 6).alias("cos_sim"),
+            "vec_id",
+            F.round(cosine_col(F.col("embedding"), F.col("qvec")), 6)
+            .alias("cos_sim"),
         )
-        .orderBy(F.desc("cos_sim"), F.asc(key))
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def label_centroid_norms(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def label_centroid_norms(emb: DataFrame) -> DataFrame:
     """Per-label mean L2 norm — sanity aggregate over the vector column."""
     return (
-        emb.select("label", _norm(F.col(vec_col)).alias("norm"))
+        emb.select("label", _norm(F.col("embedding")).alias("norm"))
         .groupBy("label")
         .agg(
             F.count("*").alias("n_vectors"),
@@ -135,13 +135,12 @@ def label_centroid_norms(emb: DataFrame, vec_col: str = "embedding") -> DataFram
     )
 
 
-def kmeans_centroids(emb: DataFrame, num_centroids: int = 8, iters: int = 2,
-                     key: str = "vec_id", vec_col: str = "embedding",
-                     persist_iterations: bool = False) -> DataFrame:
+def kmeans_centroids(emb: DataFrame, num_centroids: int = 8,
+                     iters: int = 2) -> DataFrame:
     """Deterministic Lloyd k-means over the embedding column — the trained
     replacement for the seeded IVF centroids.
 
-    Everything is native DataFrame ops: init centroids = per-(key % k)
+    Everything is native DataFrame ops: init centroids = per-(vec_id % k)
     element-wise means (posexplode -> groupBy(cluster, pos) avg), each
     iteration broadcasts the k x dim centroid table, assigns by cosine with
     an explicit (sim desc, centroid_id asc) tie-break (`max_by` aggregate —
@@ -154,13 +153,13 @@ def kmeans_centroids(emb: DataFrame, num_centroids: int = 8, iters: int = 2,
 
     Per-iteration cost is one shuffle of n x dim (pos, val) rows — the
     standard distributed-k-means profile; k and dim are small so every
-    centroid table broadcast is trivial. With `persist_iterations` each
-    assignment is persisted (and the previous one released), so iteration
-    i+1's centroid scan does not re-run iterations 0..i's whole chain —
-    turn it on for iters > 2; off by default to keep short trainings
-    allocation-free."""
-    ex = emb.select(F.col(key).alias("k"), F.col(vec_col).alias("v"))
-    # init: element-wise mean per (key % num_centroids) bucket
+    centroid table broadcast is trivial. Past iters = 2 each assignment is
+    persisted (and the previous one released), so iteration i+1's centroid
+    scan does not re-run iterations 0..i's whole chain; shorter trainings
+    stay allocation-free."""
+    persist_iterations = iters > 2
+    ex = emb.select(F.col("vec_id").alias("k"), F.col("embedding").alias("v"))
+    # init: element-wise mean per (vec_id % num_centroids) bucket
     assigned = ex.select(
         (F.col("k") % num_centroids).cast("int").alias("cid"), "v")
     prev = None
@@ -295,18 +294,17 @@ def _ivf_scores_arrow(emb: DataFrame, cents: DataFrame, key: str,
                 "centroid_id": pd.Series(cids, dtype="object"),
                 "_raw": pd.Series(raws, dtype="object")})
 
-    raw = emb.select(F.col(_bq(key)).alias("k"),
-                     F.col(_bq(vec_col)).alias("v")) \
+    raw = emb.select(F.col(key).alias("k"),
+                     F.col(vec_col).alias("v")) \
         .mapInPandas(run, schema=out_t)
     return raw.select(F.col("k").alias(key), "centroid_id",
                       F.round(F.col("_raw"), 6).alias("sim"))
 
 
-def ivf_assign(emb: DataFrame, num_centroids: int = 8, key: str = "vec_id",
-               vec_col: str = "embedding",
+def ivf_assign(emb: DataFrame, num_centroids: int = 8,
                centroids: DataFrame | None = None) -> DataFrame:
     """Assign each vector to its nearest centroid by cosine. Default
-    centroids are the vectors with key < num_centroids (deterministic seed
+    centroids are the vectors with vec_id < num_centroids (deterministic seed
     choice, reproducible in the ANSI oracles); pass `centroids` (e.g. from
     `kmeans_centroids`) for trained buckets at scale. Centroid table is
     broadcast; argmax via a `max_by` aggregate with explicit
@@ -319,11 +317,12 @@ def ivf_assign(emb: DataFrame, num_centroids: int = 8, key: str = "vec_id",
     expression scoring (`_ivf_scores_sql`), which also avoids collecting
     a not-yet-materialized training plan."""
     cents = centroids if centroids is not None else seed_centroids(
-        emb, num_centroids, key, vec_col)
+        emb, num_centroids)
     score = (_ivf_scores_arrow if centroids is None and num_centroids >= 32
              else _ivf_scores_sql)
-    return _argmax_centroid(score(emb, cents, key, vec_col), key, []).select(
-        key, "centroid_id", F.col("sim").alias("centroid_sim"))
+    scored = score(emb, cents, "vec_id", "embedding")
+    return _argmax_centroid(scored, "vec_id", []).select(
+        "vec_id", "centroid_id", F.col("sim").alias("centroid_sim"))
 
 
 # the largest group `_grouped_pair_cosines` may take: applyInPandas holds a
@@ -332,8 +331,6 @@ _GROUPED_MAX_ROWS = 4096
 
 
 def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
-                          num_centroids: int | None = None, key: str = "vec_id",
-                          vec_col: str = "embedding",
                           n_hint: int | None = None,
                           assign: DataFrame | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, IVF-bucketed: vectors are
@@ -356,7 +353,7 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
       `similarity.release_caches()` (or dedup.release_caches(), shared
       registry) once results are materialized.
 
-    `num_centroids=None` sizes C to keep the average bucket ~250 vectors
+    The IVF sizes C to keep the average bucket ~250 vectors
     (C = max(8, n/250)): per-bucket pair work stays constant as the corpus
     grows, so total cost scales LINEARLY in n instead of quadratically —
     the standard IVF sizing discipline. At the oracle gate scales
@@ -373,7 +370,7 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
     e.g. the `ann --build-index` table read back from a catalog — and the
     full-corpus bucket-assignment pass is skipped entirely (CLI:
     `cc --method embedding --index`). Bucket granularity then comes from
-    the index, so num_centroids/n_hint are ignored. A STALE index is
+    the index, so n_hint is ignored. A STALE index is
     checked for, not silently tolerated: the same-bucket inner join would
     simply omit vectors missing from the assignment (they'd look
     unclustered, and a keep-one filter would keep every copy), so any
@@ -381,20 +378,18 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
     new vectors (one anti-join count; clustering is multi-pass anyway)."""
     n_known = n_hint
     if assign is None:
-        if num_centroids is None:
-            n_known = n_hint if n_hint is not None else emb.count()
-            num_centroids = max(8, n_known // 250)
-        assign = ivf_assign(emb, num_centroids, key, vec_col)
+        n_known = n_hint if n_hint is not None else emb.count()
+        assign = ivf_assign(emb, max(8, n_known // 250))
     else:
-        n_missing = emb.select(_bq(key)).join(
-            assign.select(_bq(key)), key, "left_anti").count()
+        n_missing = emb.select("vec_id").join(
+            assign.select("vec_id"), "vec_id", "left_anti").count()
         if n_missing:
             raise ValueError(
                 f"persisted assignment does not cover {n_missing} corpus "
                 "vectors (stale index?) — rebuild with ann --build-index "
                 "or drop --index to recompute")
-    unit = _unit_vectors(emb, key, vec_col)
-    tagged = unit.join(assign.select(key, "centroid_id"), key)
+    unit = _unit_vectors(emb, "vec_id", "embedding")
+    tagged = unit.join(assign.select("vec_id", "centroid_id"), "vec_id")
     tagged = register_cache(tagged.cache())
     # grouped pair generation materializes one IVF bucket per Arrow
     # group, so it needs (a) enough pair volume to amortize the Python
@@ -412,15 +407,14 @@ def cosine_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
         grouped = ((row.mx or 0) <= _GROUPED_MAX_ROWS
                    and (row.n or 0) >= 10_000)
     if grouped:
-        return _grouped_pair_cosines(tagged, key, ["centroid_id"], threshold,
-                                     dedup_pairs=False)
+        return _grouped_pair_cosines(tagged, "vec_id", ["centroid_id"],
+                                     threshold, dedup_pairs=False)
     return _pair_cosines(
-        _self_join_pairs(tagged, key, ["centroid_id"], "uvec"), threshold)
+        _self_join_pairs(tagged, "vec_id", ["centroid_id"], "uvec"), threshold)
 
 
 def ivf_ann_query(emb: DataFrame, query_vec_id: int, k: int = 5,
-                  num_centroids: int = 8, key: str = "vec_id",
-                  vec_col: str = "embedding",
+                  num_centroids: int = 8,
                   centroids: DataFrame | None = None,
                   num_probes: int = 1,
                   assign: DataFrame | None = None) -> DataFrame:
@@ -431,16 +425,17 @@ def ivf_ann_query(emb: DataFrame, query_vec_id: int, k: int = 5,
     explicit tie-breaks so results are deterministic.
 
     `assign` is the persisted-index path: pass a precomputed
-    (key, centroid_id) assignment (from `ivf_assign`, e.g. read back from a
+    (vec_id, centroid_id) assignment (from `ivf_assign`, e.g. read back from a
     catalog table — CLI `ann --build-index` / `--index`) and the full-corpus
     bucket-assignment pass is skipped entirely. That is the real ANN shape:
     the index is built once and probed many times; recomputing the
     assignment per query would scan all of a 10^12-row corpus each probe."""
     cents = centroids if centroids is not None else seed_centroids(
-        emb, num_centroids, key, vec_col)
+        emb, num_centroids)
     if assign is None:
-        assign = ivf_assign(emb, num_centroids, key, vec_col, centroids=cents)
-    q = emb.filter(F.col(key) == query_vec_id).select(F.col(vec_col).alias("qvec"))
+        assign = ivf_assign(emb, num_centroids, centroids=cents)
+    q = emb.filter(F.col("vec_id") == query_vec_id) \
+        .select(F.col("embedding").alias("qvec"))
     probed = (
         cents.crossJoin(F.broadcast(q))
         .select("centroid_id",
@@ -449,16 +444,18 @@ def ivf_ann_query(emb: DataFrame, query_vec_id: int, k: int = 5,
         .limit(num_probes)
         .select("centroid_id")
     )
-    bucket_members = assign.join(F.broadcast(probed), "centroid_id").select(key)
+    bucket_members = assign.join(F.broadcast(probed), "centroid_id") \
+        .select("vec_id")
     return (
-        emb.join(bucket_members, key)
-        .filter(F.col(key) != query_vec_id)
+        emb.join(bucket_members, "vec_id")
+        .filter(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(q))
         .select(
-            key,
-            F.round(cosine_col(F.col(vec_col), F.col("qvec")), 6).alias("cos_sim"),
+            "vec_id",
+            F.round(cosine_col(F.col("embedding"), F.col("qvec")), 6)
+            .alias("cos_sim"),
         )
-        .orderBy(F.desc("cos_sim"), F.asc(key))
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -476,6 +473,10 @@ def ivf_ann_query(emb: DataFrame, query_vec_id: int, k: int = 5,
 # More planes = fewer false candidates; more bands = higher recall.
 HYPERPLANE_PLANES = 32
 HYPERPLANE_BANDS = 4
+# hyperplane_lsh_pairs' hot-bucket cap; at most _GROUPED_MAX_ROWS, so a
+# capped bucket always fits the grouped Arrow stage. Module-level so tests
+# can pin it.
+HYPERPLANE_MAX_BUCKET = 256
 
 
 def plane_sign(p: int, j: int) -> int:
@@ -538,7 +539,7 @@ def _plane_matrix(num_planes: int, dim: int):
                      for p in range(num_planes)], dtype=np.float64)
 
 
-def _corpus_dim(emb: DataFrame, vec_col: str) -> tuple[int, int, int]:
+def _corpus_dim(emb: DataFrame) -> tuple[int, int, int]:
     """(min, max, count) vector size stats over the corpus — ONE exact
     narrow aggregate, not a sample (review finding: a limit(100) sample is
     partition-order dependent, so a mixed-dim corpus derived a different
@@ -546,12 +547,12 @@ def _corpus_dim(emb: DataFrame, vec_col: str) -> tuple[int, int, int]:
     The scan reads only array lengths and runs once per call; the
     operator is multi-pass anyway. The row count rides along for free and
     drives the pair-stage density choice (r7)."""
-    row = emb.agg(F.min(F.size(_bq(vec_col))).alias("lo"),
-                  F.max(F.size(_bq(vec_col))).alias("hi"),
+    row = emb.agg(F.min(F.size("embedding")).alias("lo"),
+                  F.max(F.size("embedding")).alias("hi"),
                   F.count("*").alias("n")).first()
     if row is None or row.hi is None or row.hi <= 0:
         raise ValueError("cannot derive embedding dim: empty corpus or "
-                         f"null/empty {vec_col!r} everywhere")
+                         "null/empty 'embedding' everywhere")
     return row.lo, row.hi, row.n
 
 
@@ -585,8 +586,9 @@ def _grouped_pair_cosines(tagged: DataFrame, key: str,
     collecting every unassigned vector.
 
     Scale guard: callers only route here when no group exceeds
-    _GROUPED_MAX_ROWS (hyperplane: its `_cap_hot_keys` bound max_bucket
-    is at most that; IVF: its measured largest bucket), because
+    _GROUPED_MAX_ROWS (hyperplane: its `_cap_hot_keys` bound
+    HYPERPLANE_MAX_BUCKET is at most that; IVF: its measured largest
+    bucket), because
     applyInPandas materializes one group per call. `tagged` must carry
     (key, uvec, group_cols...)."""
     import pandas as pd  # noqa: PLC0415
@@ -595,7 +597,7 @@ def _grouped_pair_cosines(tagged: DataFrame, key: str,
     keep = F.col("uvec").isNotNull()
     for g in group_cols:
         keep &= F.col(g).isNotNull()
-    tagged = tagged.filter(keep).select(F.col(_bq(key)).alias("k"), "uvec",
+    tagged = tagged.filter(keep).select(F.col(key).alias("k"), "uvec",
                                         *group_cols)
     kt = tagged.schema["k"].dataType
     out_schema = StructType([StructField("vec_a", kt),
@@ -740,17 +742,15 @@ def hyperplane_banded_buckets(emb: DataFrame, num_planes: int, bands: int,
     _buckets = pandas_udf(_buckets, "array<long>")
 
     return emb.select(
-        F.col(_bq(key)).alias("k"),
-        F.posexplode(_buckets(F.col(_bq(vec_col)))).alias("band", "bucket"),
+        F.col(key).alias("k"),
+        F.posexplode(_buckets(F.col(vec_col))).alias("band", "bucket"),
     )
 
 
 def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
                          num_planes: int = HYPERPLANE_PLANES,
                          bands: int = HYPERPLANE_BANDS,
-                         dim: int | None = None, key: str = "vec_id",
-                         vec_col: str = "embedding",
-                         max_bucket: int = 256) -> DataFrame:
+                         dim: int | None = None) -> DataFrame:
     """Embedding near-dup pairs via banded random-hyperplane LSH: vectors
     colliding in any band of their sign-projection signature become
     candidates; candidates are verified by exact cosine >= threshold.
@@ -772,9 +772,9 @@ def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
     Recall/cost dial: more planes = fewer false candidates; more bands =
     higher recall. Sizing at corpus scale: buckets per band =
     2^(planes/bands), so pick planes/bands such that corpus_size /
-    2^(planes/bands) stays under max_bucket — the defaults (32/4 -> 256
-    buckets/band) suit 10^4-10^5 vectors; a 10^12 corpus wants 64 planes
-    x 4 bands (65k buckets) plus a larger cap — real-dim 768 x 64-plane
+    2^(planes/bands) stays under HYPERPLANE_MAX_BUCKET — the defaults
+    (32/4 -> 256 buckets/band) suit 10^4-10^5 vectors; a 10^12 corpus
+    wants 64 planes x 4 bands (65k buckets) plus a larger cap — real-dim 768 x 64-plane
     signatures take the matmul form, which has no compile wall.
 
     Pair stage, three tiers with the same rows, chosen from the expected
@@ -782,13 +782,13 @@ def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
     self-join moves every unit vector once per band; id-only candidates
     move two vectors per candidate, about n/B per vector per band. So
     n/B < 1 (sparse) takes distinct id-only `_self_join_pairs` candidates
-    and joins in only their vectors; n/B >= 8 (dense) with max_bucket <=
-    _GROUPED_MAX_ROWS takes the grouped Arrow stage
+    and joins in only their vectors; n/B >= 8 (dense) takes the grouped
+    Arrow stage
     (`_grouped_pair_cosines`, a bucket's dots in one NumPy pass); the
     rest self-joins the capped buckets joined to the unit vectors
     (`tagged`) with the vector as payload. The join tiers verify one dot
     fold per candidate (`_pair_cosines`); all dedup across bands."""
-    lo, hi, n = _corpus_dim(emb, vec_col)
+    lo, hi, n = _corpus_dim(emb)
     if dim is None:
         if lo != hi:
             raise ValueError(
@@ -801,18 +801,18 @@ def hyperplane_lsh_pairs(emb: DataFrame, threshold: float = 0.40,
             f"hyperplane dim {dim} exceeds corpus embedding dim "
             f"{hi}; pass dim<={hi} or dim=None to derive")
     banded = hyperplane_banded_buckets(emb, num_planes, bands, dim,
-                                       key, vec_col)
-    capped = _cap_hot_keys(banded, ["band", "bucket"], max_bucket)
+                                       "vec_id", "embedding")
+    capped = _cap_hot_keys(banded, ["band", "bucket"], HYPERPLANE_MAX_BUCKET)
     # cached: joined on both pair sides (id-only) or into `tagged`
-    unit = register_cache(_unit_vectors(emb, key, vec_col).cache())
+    unit = register_cache(_unit_vectors(emb, "vec_id", "embedding").cache())
     fill = n / (1 << (num_planes // bands))
     if fill < 1:
         cand = _self_join_pairs(capped, "k", ["band", "bucket"]).distinct()
-        ua, ub = (unit.select(F.col(_bq(key)).alias(s),
+        ua, ub = (unit.select(F.col("vec_id").alias(s),
                               F.col("uvec").alias("p" + s)) for s in "ab")
         return _pair_cosines(cand.join(ua, "a").join(ub, "b"), threshold)
-    tagged = capped.join(unit.withColumnRenamed(key, "k"), "k")
-    if fill >= 8 and max_bucket <= _GROUPED_MAX_ROWS:
+    tagged = capped.join(unit.withColumnRenamed("vec_id", "k"), "k")
+    if fill >= 8:
         return _grouped_pair_cosines(tagged, "k", ["band", "bucket"],
                                      threshold)
     return _pair_cosines(_self_join_pairs(tagged, "k", ["band", "bucket"],

@@ -78,8 +78,8 @@ def bpe_token_count_col(text: Column) -> Column:
     return F.regexp_count(text, F.lit(BPE_PRETOKEN_PATTERN))
 
 
-def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
+def with_token_stats(df: DataFrame) -> DataFrame:
+    t = F.col("text")
     return df.withColumns(
         {
             "n_tokens": token_count_col(t),
@@ -98,11 +98,11 @@ def _script_count(t: Column, rng: str) -> Column:
     return F.length(t) - F.length(F.regexp_replace(t, f"[{rng}]", ""))
 
 
-def with_script_langid(df: DataFrame, text_col: str = "text",
-                       threshold: float = 0.3) -> DataFrame:
+def with_script_langid(df: DataFrame) -> DataFrame:
     """Script-ratio language ID (ref ocr.py:314-348: per-script char counting
     over a 200-char sample, >30% threshold ladder)."""
-    sample = F.substring(F.col(text_col), 1, 200)
+    threshold = 0.3
+    sample = F.substring(F.col("text"), 1, 200)
     n = F.greatest(F.length(sample), F.lit(1))
     cjk = _script_count(sample, CJK_RANGE) / n
     deva = _script_count(sample, DEVANAGARI_RANGE) / n
@@ -118,10 +118,10 @@ def with_script_langid(df: DataFrame, text_col: str = "text",
     )
 
 
-def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality_score(df: DataFrame) -> DataFrame:
     """Deterministic quality score: length band + stopword ratio + punctuation
     ratio (training-data quality filtering; weights fixed)."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_tok = F.greatest(token_count_col(t), F.lit(1))
     stop_alt = "|".join(STOPWORDS)
     n_stop = F.regexp_count(F.lower(t), F.lit(rf"\b(?:{stop_alt})\b"))
@@ -149,10 +149,10 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def normalized_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def normalized_fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprint: md5 over case/punct/whitespace-normalized text
     (near-dup canonicalization; md5 is portable to the DuckDB oracle)."""
-    t = F.col(text_col)
+    t = F.col("text")
     norm = F.trim(
         F.regexp_replace(
             F.regexp_replace(F.lower(t), "[^a-z0-9 ]", ""), " +", " "
@@ -179,10 +179,7 @@ BPE_MERGES: list[tuple[str, str]] = [
 ]
 
 
-def bpe_token_counts(df: DataFrame, key: str = "doc_id",
-                     text_col: str = "text",
-                     merges: list[tuple[str, str]] | None = None
-                     ) -> DataFrame:
+def bpe_token_counts(df: DataFrame) -> DataFrame:
     """TRUE BPE token counts per document (round-3 verdict #9) — the opt-in
     tier above the `n_bpe_tokens` pretokenizer proxy, for when the actual
     sub-word budget matters more than scan speed.
@@ -199,7 +196,6 @@ def bpe_token_counts(df: DataFrame, key: str = "doc_id",
     transfer for the text column)."""
     import re  # noqa: PLC0415
 
-    mg = list(merges or BPE_MERGES)
     ws_re = re.compile(f"[{WS_CHARS}]+")
 
     # asNondeterministic (it IS deterministic): the filter on the struct
@@ -217,7 +213,7 @@ def bpe_token_counts(df: DataFrame, key: str = "doc_id",
                     continue
                 nw += 1
                 t = " " + " ".join(w) + " "
-                for a, b in mg:
+                for a, b in BPE_MERGES:
                     t = t.replace(f" {a} {b} ", f" {a}{b} ")
                 # split on the SINGLE space separator, exactly like the
                 # oracle's string_split(trim(t), ' ') — bare str.split()
@@ -230,8 +226,8 @@ def bpe_token_counts(df: DataFrame, key: str = "doc_id",
 
     counts = _counts.asNondeterministic()
     return (
-        df.select(F.col(key), counts(F.col(text_col)).alias("c"))
-        .select(key, "c.*")
+        df.select("doc_id", counts(F.col("text")).alias("c"))
+        .select("doc_id", "c.*")
         .filter(F.col("n_words") > 0)  # oracle scope: docs with words
     )
 
@@ -292,9 +288,7 @@ def repetition_stats(df: DataFrame, key: str = "doc_id",
     )
 
 
-def bigram_logprob_score(df: DataFrame, key: str = "doc_id",
-                         text_col: str = "text",
-                         top_k: int = 50_000) -> DataFrame:
+def bigram_logprob_score(df: DataFrame, top_k: int = 50_000) -> DataFrame:
     """CCNet-style statistical quality score (Wenzek et al. 2019 §4.3 —
     perplexity under a corpus LM separates fluent text from gibberish):
     per document, the average negative log-probability of its word
@@ -324,9 +318,9 @@ def bigram_logprob_score(df: DataFrame, key: str = "doc_id",
     per-doc integer-sum aggregate. The only unbounded shuffle keys are
     the uniform bigram/doc hashes; the orderBy feeding the prune is a
     TakeOrderedAndProject bounded by top_k."""
-    t = F.col(text_col)
+    t = F.col("text")
     words = F.split(F.trim(t), WS_RUN)
-    occ = df.select(F.col(key),
+    occ = df.select(F.col("doc_id"),
                     F.explode(word_ngrams(words, 2)).alias("g"))
     cnt = occ.groupBy("g").agg(F.count("*").alias("n"))
     tot = cnt.agg(F.sum("n").alias("_N"), F.count("*").alias("_V"))
@@ -344,7 +338,7 @@ def bigram_logprob_score(df: DataFrame, key: str = "doc_id",
     scored = (
         occ.join(F.broadcast(lp), "g", "left")
         .crossJoin(F.broadcast(oov))
-        .groupBy(key)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_bigrams"),
             F.sum(F.coalesce("_lp_micro", "_lp0_micro")).alias("_s"),
@@ -353,9 +347,9 @@ def bigram_logprob_score(df: DataFrame, key: str = "doc_id",
         )
     )
     return (
-        df.select(F.col(key)).join(scored, key, "left")
+        df.select(F.col("doc_id")).join(scored, "doc_id", "left")
         .select(
-            F.col(key),
+            F.col("doc_id"),
             F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
             F.round(-F.col("_s") / (F.col("n_bigrams") * 1e6), 4)
             .alias("avg_nll"),
@@ -364,10 +358,8 @@ def bigram_logprob_score(df: DataFrame, key: str = "doc_id",
     )
 
 
-def perplexity_buckets(df: DataFrame, key: str = "doc_id",
-                       text_col: str = "text", top_k: int = 50_000,
-                       sample_rate: float = 1.0,
-                       salt: str = ":ppl") -> DataFrame:
+def perplexity_buckets(df: DataFrame, top_k: int = 50_000,
+                       sample_rate: float = 1.0) -> DataFrame:
     """CCNet head/middle/tail bucketing (Wenzek et al. 2019 §4.3): score
     every doc with the corpus bigram LM (`bigram_logprob_score`), compute
     the corpus's avg_nll TERCILE cutoffs, and tag each doc `head`
@@ -395,8 +387,7 @@ def perplexity_buckets(df: DataFrame, key: str = "doc_id",
     if not (0.0 < sample_rate <= 1.0):
         raise ValueError("perplexity_buckets: sample_rate must be in "
                          f"(0, 1], got {sample_rate}")
-    scored = bigram_logprob_score(df, key=key, text_col=text_col,
-                                  top_k=top_k)
+    scored = bigram_logprob_score(df, top_k=top_k)
     # scored feeds BOTH the tercile-cutoff aggregate and the final
     # bucketed projection — uncached, the whole two-pass LM scoring
     # pipeline (gram explode, LM build, broadcast lookup) would run
@@ -411,7 +402,7 @@ def perplexity_buckets(df: DataFrame, key: str = "doc_id",
 
         rate_scaled = int(round(sample_rate * _U32_SPAN))
         sample = sample.filter(
-            _u32(F.col(key), salt) < F.lit(rate_scaled))
+            _u32(F.col("doc_id"), ":ppl") < F.lit(rate_scaled))
     thr = sample.agg(F.percentile(
         "avg_nll",
         F.array(F.lit(1) / 3, F.lit(2) / 3)).alias("_t"))
@@ -423,13 +414,12 @@ def perplexity_buckets(df: DataFrame, key: str = "doc_id",
     )
     return (
         scored.crossJoin(F.broadcast(thr))
-        .select(F.col(key), "n_bigrams", "avg_nll",
+        .select(F.col("doc_id"), "n_bigrams", "avg_nll",
                 bucket.alias("ppl_bucket"))
     )
 
 
-def c4_line_filter(df: DataFrame, key: str = "doc_id",
-                   text_col: str = "text", min_words: int = 5,
+def c4_line_filter(df: DataFrame, min_words: int = 5,
                    min_lines: int = 3,
                    require_terminal_punct: bool = True) -> DataFrame:
     """C4-style line/page cleaning (Raffel et al. 2020 §2.2, the
@@ -438,7 +428,7 @@ def c4_line_filter(df: DataFrame, key: str = "doc_id",
     do not mention ``javascript``; rebuild the page from the kept lines;
     flag the PAGE as dropped when fewer than `min_lines` lines survive or
     the raw page contains ``lorem ipsum`` or a ``{`` (C4's
-    source-code/boilerplate tells). Returns (key, clean_text,
+    source-code/boilerplate tells). Returns (doc_id, clean_text,
     n_lines_kept, n_lines_dropped, page_kept) — filter on `page_kept`
     and write `clean_text` downstream.
 
@@ -449,7 +439,7 @@ def c4_line_filter(df: DataFrame, key: str = "doc_id",
     projection, so it composes anywhere in a plan at any scale; the
     DuckDB oracle (contract.py q_c4_line_filter) replays every predicate
     verbatim."""
-    t = F.col(text_col)
+    t = F.col("text")
     lines = F.split(t, "\n")
 
     def _keep(line):
@@ -464,7 +454,7 @@ def c4_line_filter(df: DataFrame, key: str = "doc_id",
                & ~F.lower(t).contains("lorem ipsum")
                & ~t.contains("{"))
     return df.select(
-        F.col(key),
+        F.col("doc_id"),
         F.array_join(kept, "\n").alias("clean_text"),
         F.size(kept).cast("long").alias("n_lines_kept"),
         (F.size(lines) - F.size(kept)).cast("long")
@@ -473,11 +463,9 @@ def c4_line_filter(df: DataFrame, key: str = "doc_id",
     )
 
 
-def ngram_repetition_fracs(df: DataFrame, key: str = "doc_id",
-                           text_col: str = "text",
-                           ns: tuple = (2, 3, 4)) -> DataFrame:
+def ngram_repetition_fracs(df: DataFrame) -> DataFrame:
     """The rest of the Gopher repetition family (Rae et al. 2021 §A1.1):
-    for each n in `ns`, the fraction of the document's characters claimed
+    for each n in 2, 3 and 4, the fraction of the document's characters claimed
     by its MOST FREQUENT word n-gram (count * len(gram) / len(doc)) —
     `top_{n}gram_char_frac` columns, 0.0 when the doc has no n-grams.
     Gopher drops docs above ~0.20/0.18/0.16 for n=2/3/4; callers filter.
@@ -497,24 +485,25 @@ def ngram_repetition_fracs(df: DataFrame, key: str = "doc_id",
     one row per distinct gram; the pivot is over the STATIC n list (no
     pivot-value inference job). All gram arrays come from the HOF-safe
     word_ngrams chain."""
-    t = F.col(text_col)
+    ns = (2, 3, 4)
+    t = F.col("text")
     words = F.split(F.trim(t), WS_RUN)
 
     occ = None
     for n in ns:
-        part = df.select(F.col(key), F.lit(n).alias("n"),
+        part = df.select(F.col("doc_id"), F.lit(n).alias("n"),
                          F.explode(word_ngrams(words, n)).alias("g"))
         occ = part if occ is None else occ.unionByName(part)
-    per = occ.groupBy(key, "n", "g").agg(F.count("*").alias("c"))
-    top = (per.groupBy(key, "n")
+    per = occ.groupBy("doc_id", "n", "g").agg(F.count("*").alias("c"))
+    top = (per.groupBy("doc_id", "n")
            .agg(F.max(F.struct("c", "g")).alias("t"))
-           .select(F.col(key), "n",
+           .select(F.col("doc_id"), "n",
                    (F.col("t.c") * F.length("t.g")).alias("chars")))
-    piv = top.groupBy(key).pivot("n", list(ns)).agg(F.first("chars"))
-    base = df.select(F.col(key),
+    piv = top.groupBy("doc_id").pivot("n", list(ns)).agg(F.first("chars"))
+    base = df.select(F.col("doc_id"),
                      F.greatest(F.length(t), F.lit(1)).alias("_d"))
-    return base.join(piv, key, "left").select(
-        F.col(key),
+    return base.join(piv, "doc_id", "left").select(
+        F.col("doc_id"),
         *[F.round(F.coalesce(F.col(f"`{n}`"), F.lit(0)) / F.col("_d"), 4)
           .alias(f"top_{n}gram_char_frac") for n in ns],
     )

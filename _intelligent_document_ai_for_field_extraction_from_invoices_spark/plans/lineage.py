@@ -101,14 +101,9 @@ def committed_parts(spark: SparkSession, catalog: Catalog) -> DataFrame | None:
 
 
 def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
-                   run_id: str, num_partitions: int = 16,
-                   fail_after_parts: int | None = None,
-                   fail_before_checkpoint: bool = False) -> dict:
+                   run_id: str, num_partitions: int = 16) -> dict:
     """One (possibly resumed) extraction run; `num_partitions` is the resume
     granularity P, not the task count (one Arrow task per core).
-    `fail_after_parts` simulates a crash after committing only a subset of
-    partitions; `fail_before_checkpoint` a crash BETWEEN the results/lineage
-    appends and the checkpoint commit (the torn-transaction case).
 
     All three appends carry one txn tag; the checkpoint append is the commit
     marker. On start, appends whose txn never reached the checkpoint are
@@ -142,8 +137,6 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
     part_ids = sorted(
         r.part_id for r in remaining.select("part_id").distinct().collect()
     )
-    if fail_after_parts is not None:
-        part_ids = part_ids[:fail_after_parts]
     stats = {"parts_done": len(part_ids), "parts_skipped": n_done,
              "rows_written": 0, "parts_total": num_partitions}
     if not part_ids:
@@ -191,8 +184,6 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
         catalog.append(RESULTS_TABLE, results, txn=txn,
                        partition_by=["warc_day"] if partition_results else None)
         catalog.append(LINEAGE_TABLE, lin, txn=txn, partition_by=["run_id"])
-        if fail_before_checkpoint:
-            raise RuntimeError("simulated crash before checkpoint commit")
         catalog.append(CHECKPOINT_TABLE,
                        lin.select("part_id", "run_id", "committed_at"), txn=txn)
     finally:

@@ -15,10 +15,10 @@ from pyspark.sql import functions as F
 DEFAULT_SALT = 1469598103  # fixed: determinism across runs
 
 
-def salted_repartition(df: DataFrame, num_partitions: int,
-                       key: str = "url", salt: int = DEFAULT_SALT) -> DataFrame:
-    """Hash-repartition on xxhash64(key, salt) — uniform over hosts, stable
-    across runs (resume-safe: a row's partition id is a pure function of key).
+def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
+    """Hash-repartition on xxhash64(url, DEFAULT_SALT) — uniform over hosts,
+    stable across runs (resume-safe: a row's partition id is a pure function
+    of the url).
 
     NOTE: the raw 64-bit hash is passed to repartition, which applies its own
     murmur3 + mod. Pre-modding to [0, P) here would feed only P distinct
@@ -26,5 +26,5 @@ def salted_repartition(df: DataFrame, num_partitions: int,
     partitions empty and others 2-3x overloaded (observed; caught by
     tests/test_cli_skew.py)."""
     return df.repartition(
-        num_partitions, F.xxhash64(F.col(key), F.lit(salt))
+        num_partitions, F.xxhash64(F.col("url"), F.lit(DEFAULT_SALT))
     )

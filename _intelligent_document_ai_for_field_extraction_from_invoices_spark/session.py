@@ -23,8 +23,8 @@ ARROW_MAX_RECORDS = 256
 CODEGEN_CACHE_ENTRIES = 1000
 
 
-def get_spark(app: str = "webtext-extraction", cores: str | int | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app: str = "webtext-extraction",
+              cores: str | int | None = None) -> SparkSession:
     cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "*")
     b = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -42,10 +42,8 @@ def get_spark(app: str = "webtext-extraction", cores: str | int | None = None,
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    if shuffle_partitions is None:
-        n = os.cpu_count() or 8 if cores in ("*", None) else int(cores)
-        shuffle_partitions = max(8, int(n))
-    b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    n = os.cpu_count() or 8 if cores in ("*", None) else int(cores)
+    b = b.config("spark.sql.shuffle.partitions", str(max(8, int(n))))
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

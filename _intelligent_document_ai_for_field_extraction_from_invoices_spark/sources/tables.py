@@ -875,6 +875,12 @@ class Catalog:
                 return time.time() - os.path.getmtime(path) > min_age_secs
             except OSError:
                 return False  # vanished underneath us — nothing to delete
+
+        def _mtime(p: str) -> float:
+            try:
+                return os.path.getmtime(p)
+            except OSError:
+                return time.time()
         # list the versions BEFORE resolving the current one, so no
         # version newer than the kept snapshot is ever a candidate
         snaps = self.snapshots(table)
@@ -904,49 +910,28 @@ class Catalog:
             parquets = [os.path.join(root, f)
                         for root, _dirs, fs in os.walk(sdir)
                         for f in fs if f.endswith(".parquet")]
-            live = [p for p in parquets if os.path.realpath(p) in keep]
-            if not live:
-                # whole staging commit unreferenced — but a commit IN
-                # FLIGHT (staged, not yet snapshot-linked) looks exactly
-                # like this, so only a staging dir past the age gate is
-                # an orphan (age = the newest write anywhere under it;
-                # files vanishing mid-walk — a concurrent vacuum's rmtree
-                # — read as age 0, i.e. skip this pass and let the next
-                # vacuum see the settled state)
-                def _mtime(p: str) -> float:
-                    try:
-                        return os.path.getmtime(p)
-                    except OSError:
-                        return time.time()
-                newest = max([_mtime(sdir)] +
-                             [_mtime(os.path.join(r, f))
-                              for r, _d, fs in os.walk(sdir) for f in fs])
-                if time.time() - newest <= min_age_secs:
-                    continue
-                import shutil  # noqa: PLC0415
+            if any(os.path.realpath(p) in keep for p in parquets):
+                # one `_stage` call's files share one txn and enter and
+                # leave snapshots together (rollback drops by txn, compact
+                # and overwrite replace whole file sets), so one live file
+                # means the whole staging dir is live
+                continue
+            # whole staging commit unreferenced — but a commit IN FLIGHT
+            # (staged, not yet snapshot-linked) looks exactly like this, so
+            # only a staging dir past the age gate is an orphan (age = the
+            # newest write anywhere under it; files vanishing mid-walk — a
+            # concurrent vacuum's rmtree — read as age 0, i.e. skip this
+            # pass and let the next vacuum see the settled state)
+            newest = max([_mtime(sdir)] +
+                         [_mtime(os.path.join(r, f))
+                          for r, _d, fs in os.walk(sdir) for f in fs])
+            if time.time() - newest <= min_age_secs:
+                continue
+            import shutil  # noqa: PLC0415
 
-                n += len(parquets)
-                shutil.rmtree(sdir, ignore_errors=True)  # a concurrent
-                # vacuum may have won the race for some files
-            else:
-                # `live` is non-empty here, so at least one parquet always
-                # stays and the _SUCCESS marker stays meaningful; the
-                # zero-files-left case is the rmtree branch above
-                for p in parquets:
-                    if os.path.realpath(p) not in keep:
-                        os.remove(p)
-                        # Hadoop checksum sidecar (.<name>.crc) would
-                        # otherwise accumulate as an orphan
-                        crc = os.path.join(os.path.dirname(p),
-                                           f".{os.path.basename(p)}.crc")
-                        if os.path.exists(crc):
-                            os.remove(crc)
-                        n += 1
-                # drop hive partition dirs emptied by the removals
-                # (bottom-up; never the stage root itself)
-                for root, _dirs, _fns in os.walk(sdir, topdown=False):
-                    if root != sdir and not os.listdir(root):
-                        os.rmdir(root)  # live check: walk caches listings
+            n += len(parquets)
+            # a concurrent vacuum may have won the race for some files
+            shutil.rmtree(sdir, ignore_errors=True)
         # expired manifests (metadata GC — the manifest list rewrites small
         # manifests on merge, and those originals are dead weight)
         meta = self._meta(table)

@@ -9,7 +9,6 @@ bounded parquet source to completion synchronously)."""
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,18 +24,14 @@ def _tmp_out() -> str:
     return d
 
 
-def hourly_event_counts_stream(spark: SparkSession, sf_dir: str,
-                               sink: str = "parquet",
-                               out_dir: str | None = None) -> DataFrame:
+def hourly_event_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window counts over a streaming read of the events table,
     driven to completion; returns the completed result as a DataFrame.
 
-    The default sink is DISTRIBUTED: each complete-mode batch snapshot is
-    overwritten to `out_dir` parquet via foreachBatch, and the result is
-    read back from there — the driver never materializes the output.
-    `sink="memory"` is an explicit opt-in for bounded tests/oracles only
-    (a memory sink collects every row driver-side; round-3 verdict #2 —
-    pointing the default at a real feed must not OOM the driver)."""
+    The sink is DISTRIBUTED: each complete-mode batch snapshot is
+    overwritten to a temporary parquet directory via foreachBatch, and the
+    result is read back from there — the driver never materializes the
+    output (a memory sink would collect every row driver-side)."""
     static = spark.read.parquet(f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(static.schema)
@@ -50,18 +45,7 @@ def hourly_event_counts_stream(spark: SparkSession, sf_dir: str,
         .agg(F.count("*").alias("n"),
              F.round(F.sum("value"), 2).alias("sum_value"))
     )
-    if sink == "memory":
-        name = f"hourly_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory").queryName(name).start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.sql(f"SELECT * FROM {name}")
-    out = out_dir or _tmp_out()
+    out = _tmp_out()
     q = (
         agg.writeStream.outputMode("complete")
         .option("checkpointLocation", f"{out}/_checkpoint")
@@ -75,6 +59,6 @@ def hourly_event_counts_stream(spark: SparkSession, sf_dir: str,
         q.stop()
     if not os.path.isdir(f"{out}/data"):
         # a source with zero batches never ran foreachBatch: return the
-        # empty result (the memory sink's behavior), don't crash the read
+        # empty result, don't crash the read
         return spark.createDataFrame([], agg.schema)
     return spark.read.parquet(f"{out}/data")

@@ -311,7 +311,8 @@ def test_cc_embedding_oversized_limit_still_finds_pairs(spark, tmp_path,
 
 
 def test_compact_reconciles_torn_transactions_before_folding(spark, tmp_path,
-                                                             capsys):
+                                                             capsys,
+                                                             monkeypatch):
     """Review regression (the critical compact finding): a crash between
     the results append and the checkpoint marker leaves orphan rows whose
     txn rollback is the ONLY thing preventing duplicates on resume.
@@ -322,16 +323,19 @@ def test_compact_reconciles_torn_transactions_before_folding(spark, tmp_path,
 
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark import datagen
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.plans import lineage
+    from tests.conftest import crash_before_checkpoint, first_parts
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(120)
     pages = datagen.pages_from_documents(docs)
     cat_dir = str(tmp_path / "cat")
     cat = Catalog(cat_dir)
-    lineage.run_extraction(spark, pages, cat, "r1", num_partitions=8,
-                           fail_after_parts=3)
-    with _pytest.raises(RuntimeError, match="simulated crash"):
-        lineage.run_extraction(spark, pages, cat, "r2", num_partitions=8,
-                               fail_before_checkpoint=True)
+    lineage.run_extraction(spark, first_parts(pages), cat, "r1",
+                           num_partitions=8)
+    with monkeypatch.context() as m:
+        crash_before_checkpoint(m)
+        with _pytest.raises(RuntimeError, match="simulated crash"):
+            lineage.run_extraction(spark, pages, cat, "r2",
+                                   num_partitions=8)
     # torn state committed; now compact the catalog via the CLI
     out = _run(capsys, "compact", "--catalog", cat_dir, "--vacuum")
     assert out["tables"]["extracted_text"]["orphans_removed"] > 0
@@ -415,9 +419,13 @@ def test_curate_resumes_at_failed_stage(spark, tmp_path, capsys,
         return real(stage, *a, **kw)
 
     monkeypatch.setattr(curate_ops, "run_stage", boom)
+    spark.catalog.clearCache()
     with pytest.raises(RuntimeError, match="simulated crash"):
         _run(capsys, "curate", "--input", sf, "--output", cat_dir,
              "--run-id", "c3")
+    # the crashed run leaves nothing cached in the session (its input
+    # would otherwise serve the next run from a stale materialization)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     monkeypatch.setattr(curate_ops, "run_stage", real)
     out = _run(capsys, "curate", "--input", sf, "--output", cat_dir,
                "--run-id", "c3")

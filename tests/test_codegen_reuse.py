@@ -12,6 +12,7 @@ import random
 
 from pyspark.sql import functions as F
 
+from _intelligent_document_ai_for_field_extraction_from_invoices_spark import __main__ as cli
 from _intelligent_document_ai_for_field_extraction_from_invoices_spark import datagen
 from _intelligent_document_ai_for_field_extraction_from_invoices_spark.__main__ import main
 from _intelligent_document_ai_for_field_extraction_from_invoices_spark.plans import lineage
@@ -35,19 +36,32 @@ def test_compile_counter_sees_new_code(spark):
     assert _compiles(spark) > before
 
 
-def test_second_curate_chain_compiles_nothing(spark, tmp_path, capsys):
+def test_second_curate_chain_compiles_nothing(spark, tmp_path, capsys,
+                                             monkeypatch):
     """The six curate stages (the `curate` subcommand), twice, each into
     a fresh catalog under its own run id: the second chain reuses every
-    class the first one compiled."""
+    class the first one compiled. A failure names the stage tables whose
+    commit compiled."""
+    emit, per_table = cli._emit, []
+
+    def counted_emit(catalog, table, df, *args, **kwargs):
+        before = _compiles(spark)
+        try:
+            return emit(catalog, table, df, *args, **kwargs)
+        finally:
+            per_table[-1][table] = _compiles(spark) - before
+
+    monkeypatch.setattr(cli, "_emit", counted_emit)
     compiles, finals = [], []
     for i in range(2):
+        per_table.append({})
         before = _compiles(spark)
         main(["curate", "--input", SF_DIR,
               "--output", str(tmp_path / f"cat{i}"), "--run-id", f"c{i}"])
         out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         compiles.append(_compiles(spark) - before)
         finals.append(out["final_rows"])
-    assert compiles[1] == 0, compiles
+    assert compiles[1] == 0, (compiles, per_table)
     assert finals[0] == finals[1] > 0
 
 

@@ -30,9 +30,10 @@ def test_components_converge_on_long_chain(spark, monkeypatch):
     (UF_BREAK_MAX=0 so the driver union-find doesn't close the tiny graph
     before the distributed rounds run.)"""
     monkeypatch.setattr(dedup, "UF_BREAK_MAX", 0)
+    monkeypatch.setattr(dedup, "CC_MAX_ITERS", 12)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "doc_a long, doc_b long")
-    got = dedup.connected_components(chain, max_iters=12).collect()
+    got = dedup.connected_components(chain).collect()
     assert {r.component_id for r in got} == {0}
     assert len(got) == 64
     dedup.release_caches()
@@ -42,21 +43,23 @@ def test_components_raise_instead_of_partial_labels(spark, monkeypatch):
     # the driver union-find would (correctly) close a tiny residual graph,
     # so disable it to exercise the distributed non-convergence guard
     monkeypatch.setattr(dedup, "UF_BREAK_MAX", 0)
+    monkeypatch.setattr(dedup, "CC_MAX_ITERS", 2)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "doc_a long, doc_b long")
     with pytest.raises(RuntimeError, match="converge"):
-        dedup.connected_components(chain, max_iters=2)
+        dedup.connected_components(chain)
     dedup.release_caches()
 
 
-def test_long_chain_closed_by_driver_union_find(spark):
-    # same 30-node chain, default bounds: the symmetrized edge set is
-    # already under UF_BREAK_MAX, so the r7 EARLY driver union-find
-    # closes it with zero Spark rounds — every node still lands in the
-    # single min-labelled component
+def test_long_chain_closed_by_driver_union_find(spark, monkeypatch):
+    # same 30-node chain and round budget, default UF_BREAK_MAX: the
+    # symmetrized edge set is already under it, so the r7 EARLY driver
+    # union-find closes it with zero Spark rounds — every node still
+    # lands in the single min-labelled component
+    monkeypatch.setattr(dedup, "CC_MAX_ITERS", 2)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "doc_a long, doc_b long")
-    comps = dedup.connected_components(chain, max_iters=2)
+    comps = dedup.connected_components(chain)
     rows = comps.collect()
     assert {r.component_id for r in rows} == {0}
     assert len(rows) == 31
@@ -85,7 +88,8 @@ def test_no_residual_caches_after_components(spark, graph):
 
 def test_components_empty_pair_set_returns_empty(spark):
     """sum() over zero rows is null — the convergence check must coalesce it
-    or an all-unique corpus spins max_iters and raises (review finding)."""
+    or an all-unique corpus spins CC_MAX_ITERS rounds and raises (review
+    finding)."""
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
     assert dedup.connected_components(empty).collect() == []
     dedup.release_caches()

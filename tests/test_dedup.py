@@ -55,19 +55,25 @@ def test_minhash_lsh_pairs_identical_docs(spark):
     assert got == {(1, 2): 1.0}
 
 
-@pytest.mark.parametrize("pairs", [
-    dedup.shingle_pairs, dedup.minhash_lsh_pairs, dedup.simhash_near_dups,
-], ids=lambda f: f.__name__)
-def test_hot_bucket_cap_drops_mega_buckets(spark, pairs):
-    """Keys above max_bucket vanish entirely (broadcast anti-join), matching
+@pytest.mark.parametrize("pairs, cap", [
+    pytest.param(f, cap, id=f.__name__) for f, cap in [
+        (dedup.shingle_pairs, "SHINGLE_MAX_BUCKET"),
+        (dedup.minhash_lsh_pairs, "MINHASH_MAX_BUCKET"),
+        (dedup.simhash_near_dups, "SIMHASH_MAX_BUCKET"),
+    ]
+])
+def test_hot_bucket_cap_drops_mega_buckets(spark, monkeypatch, pairs, cap):
+    """Keys above the cap vanish entirely (broadcast anti-join), matching
     the groupBy-count oracle semantics — for each text family's own cap."""
     rows = [(i, "common shingle words repeated here") for i in range(10)]
     rows += [(100, "rare words only present once today")]
     d = _docs(spark, rows)
     # every shingle / band key of the common text appears 10x > cap 5
-    assert pairs(d, max_bucket=5).count() == 0
+    monkeypatch.setattr(dedup, cap, 5)
+    assert pairs(d).count() == 0
     # with a generous cap the 10 identical docs pair up fully: C(10,2)
-    assert pairs(d, max_bucket=64).count() == 45
+    monkeypatch.setattr(dedup, cap, 64)
+    assert pairs(d).count() == 45
     dedup.release_caches()
 
 
@@ -76,26 +82,6 @@ def test_exact_dedup_groups(spark):
     got = {r.canonical_id: r.n_copies
            for r in dedup.exact_dedup_groups(d).collect()}
     assert got == {1: 2, 3: 1}
-
-
-def test_sql_string_paths_handle_quotable_column_names(spark):
-    """ADVICE regression: the JVM-parsed selectExpr formulations must
-    backtick-quote interpolated identifiers, or column names with spaces/
-    dots/hyphens fail or misparse."""
-    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import dedup as D
-
-    df = spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon zeta " * 3 + str(i % 4))
-         for i in range(12)],
-        ["doc id", "the.text"])
-    sigs = D.minhash_signatures(df, key="doc id", text_col="the.text")
-    assert sigs.columns == ["doc id", "signature"]
-    assert sigs.count() == 12
-    sh = D.simhash_signatures(df, key="doc id", text_col="the.text")
-    assert sh.count() == 12
-    pairs = D.minhash_lsh_pairs(df, key="doc id", text_col="the.text")
-    pairs.count()  # parses + runs
-    D.release_caches()
 
 
 def test_bpe_token_counts_engine_identity_adversarial(spark, tmp_path):
@@ -231,21 +217,6 @@ def test_host_quota_sample_balances_hot_hosts(spark):
     kept2 = {r.doc_id for r in dedup.host_quota_sample(
         docs.repartition(13, "doc_id"), quota=50).collect()}
     assert kept2 == {r.doc_id for r in kept}
-
-
-def test_paragraph_dedup_literal_separators(spark):
-    """Review regressions: the separator is LITERAL — regex metachars and
-    even a sep containing \\E must split/reassemble consistently
-    (Pattern.quote semantics)."""
-    for sep in (".", "||", "\\E."):
-        text = sep.join(["alpha", "beta", "alpha"])
-        docs = spark.createDataFrame(
-            [(1, text), (2, "alpha")], "doc_id long, text string")
-        got = {r.doc_id: r for r in
-               dedup.paragraph_dedup(docs, sep=sep).collect()}
-        assert got[1].clean_text == sep.join(["alpha", "beta"]), sep
-        assert got[1].n_dropped == 1
-        assert got[2].clean_text == ""  # duplicate of doc 1's winner
 
 
 def test_paragraph_dedup_matches_python_reference_on_random_corpora(spark):
@@ -428,9 +399,9 @@ def test_shingle_stream_engines_identical(spark):
     d = spark.createDataFrame(rows, "doc_id long, text string")
     for n in (3, 8):
         sql = sorted(tuple(r) for r in dedup._shingle_digest_stream_sql(
-            d, "doc_id", "text", n).collect())
+            d, n).collect())
         arrow = sorted(tuple(r) for r in dedup._shingle_digest_stream_pandas(
-            d, "doc_id", "text", n).collect())
+            d, n).collect())
         assert sql == arrow and sql, f"n={n}"
 
 

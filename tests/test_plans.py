@@ -189,8 +189,7 @@ def test_tier_selection_points_follow_the_input(spark):
     point is pinned through the plan it yields: the shingle digest
     stream turns Arrow at n >= 5, IVF scoring at a seeded bank of
     C >= 32, and the hyperplane pair stage turns grouped when buckets
-    are dense (n >= 8 x 2^(planes/bands) vectors) and max_bucket keeps
-    every group within the grouped stage's bound."""
+    are dense (n >= 8 x 2^(planes/bands) vectors)."""
     import re
 
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import (
@@ -215,10 +214,6 @@ def test_tier_selection_points_follow_the_input(spark):
     assert n < 8 * 2 ** (32 // 4)  # sparse at the 32 / 4 default
     assert "FlatMapGroupsInPandas" not in _plan(
         similarity.hyperplane_lsh_pairs(emb, dim=64))
-    # dense, but a cap past the grouped stage's group bound keeps the join
-    assert "FlatMapGroupsInPandas" not in _plan(
-        similarity.hyperplane_lsh_pairs(emb, dim=64, num_planes=8, bands=4,
-                                        max_bucket=5000))
     dedup.release_caches()
 
 

@@ -115,14 +115,14 @@ class TestMixtureSample:
         df = spark.createDataFrame([("s",)], "source string")
         over = F.lit(str(sampling._K_MAX + 1)).cast("decimal(38,0)")
         with pytest.raises(Exception, match="accept-test headroom"):
-            df.select(sampling._guard_k(over, "source")).collect()
+            df.select(sampling._guard_k(over)).collect()
         # a NULL k (an already-overflowed upstream multiply) raises too
         nul = F.lit(None).cast("decimal(38,0)")
         with pytest.raises(Exception, match="accept-test headroom"):
-            df.select(sampling._guard_k(nul, "source")).collect()
+            df.select(sampling._guard_k(nul)).collect()
         # and the boundary value passes through untouched
         ok = F.lit(str(sampling._K_MAX)).cast("decimal(38,0)")
-        got = df.select(sampling._guard_k(ok, "source").alias("k")).first()
+        got = df.select(sampling._guard_k(ok).alias("k")).first()
         assert int(got.k) == sampling._K_MAX
 
 

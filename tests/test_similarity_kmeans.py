@@ -67,18 +67,39 @@ def test_centroid_vectors_are_unit_scale_means(spark, clustered):
 
 
 def test_kmeans_persist_iterations_matches_and_releases(spark, clustered):
-    """iters=5 with persist_iterations: same centroids as the unpersisted
-    path (rounding makes both exact), recall holds (ANN top-k == brute
-    force on the separated fixture), and no cached blocks survive."""
-    base = sorted(map(tuple, sim.kmeans_centroids(
-        clustered, 3, iters=5).collect()))
+    """iters=5 persists every iteration (the iters > 2 rule): the result
+    is a collected leaf, its centroids equal the DuckDB oracle's replay of
+    the same Lloyd loop (rounding makes both exact), recall holds (ANN
+    top-k == brute force on the separated fixture), and no cached blocks
+    survive. iters=2 keeps the unpersisted plan."""
+    import duckdb
+
+    from _intelligent_document_ai_for_field_extraction_from_invoices_spark.contract import (
+        _kmeans_oracle_sql,
+    )
+
+    def plan(df):
+        return str(df._jdf.queryExecution().optimizedPlan())
+
+    assert "Aggregate" in plan(sim.kmeans_centroids(clustered, 3, iters=2))
     before = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
-    fast = sim.kmeans_centroids(clustered, 3, iters=5,
-                                persist_iterations=True)
-    got = sorted(map(tuple, fast.collect()))
-    assert got == base
+    fast = sim.kmeans_centroids(clustered, 3, iters=5)
+    assert "Aggregate" not in plan(fast)
+    got = sorted((r.centroid_id, tuple(r.cvec)) for r in fast.collect())
     after = set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
     assert after - before == set()  # every per-iteration persist released
+
+    # the oracle's centroid CTE c5 is the table its probe reads
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)",
+                    [(r.vec_id, list(r.embedding))
+                     for r in clustered.collect()])
+    loop = _kmeans_oracle_sql(num_centroids=3, iters=5).split(
+        ", assign AS (")[0]
+    want = sorted((cid, tuple(cv)) for cid, cv in con.sql(
+        f"{loop} SELECT centroid_id, cvec FROM c5").fetchall())
+    assert got == want
 
     ann = sim.ivf_ann_query(clustered, query_vec_id=0, k=5, centroids=fast)
     bf = sim.cosine_knn(clustered, query_vec_id=0, k=5)
@@ -349,8 +370,7 @@ def test_pair_engines_bit_identical(spark):
     # self-join tier), 40 / 4 fill 1024 ~0.5 deep (id-only tier)
     for planes in (32, 40):
         hp_join = run(similarity.hyperplane_lsh_pairs(
-            emb, 0.30, num_planes=planes, bands=4, dim=8, max_bucket=256),
-            False)
+            emb, 0.30, num_planes=planes, bands=4, dim=8), False)
         capped = dedup._cap_hot_keys(similarity.hyperplane_banded_buckets(
             emb, planes, 4, 8, "vec_id", "embedding"), ["band", "bucket"], 256)
         hp_grp = run(similarity._grouped_pair_cosines(
@@ -358,7 +378,8 @@ def test_pair_engines_bit_identical(spark):
             ["band", "bucket"], 0.30), True)
         assert hp_join == hp_grp and len(hp_join) > 0
 
-    ivf_join = run(similarity.cosine_near_dup_pairs(emb, 0.30, 8), False)
+    # ~536 vectors: the IVF sizes C = max(8, n // 250) = 8
+    ivf_join = run(similarity.cosine_near_dup_pairs(emb, 0.30), False)
     tagged = unit.join(similarity.ivf_assign(emb, 8)
                        .select("vec_id", "centroid_id"), "vec_id")
     ivf_grp = run(similarity._grouped_pair_cosines(

@@ -107,63 +107,94 @@ def test_allow_list_names_existing_unreached_modules():
     assert not ALLOWED_UNREACHED & reached
 
 
-# Defaulted `Catalog` parameters no surface passes, kept on purpose.
+# Defaulted public parameters no surface passes, kept on purpose:
+# "<module>.<function or Class.method>.<parameter>" (package prefix
+# dropped) -> why it stays.
 ALLOWED_UNPASSED = {
-    # tests observe read(where=)'s manifest pruning through scan_files; the
-    # scan stats are planned to come back with the file list instead
-    "scan_files.where",
+    "sources.tables.Catalog.scan_files.where":
+        "tests observe read(where=)'s manifest pruning through scan_files; "
+        "the scan stats are planned to come back with the file list",
+    "__main__.main.argv":
+        "the CLI entry point: `python -m` reads sys.argv, tests pass argv",
+    "streaming.extract_stream.stream_to_catalog.files_per_trigger":
+        "the file source's rate limit, a deployment setting of the stream",
 }
 
 
-def _catalog_defaults() -> dict[str, tuple[list[str], set[str]]]:
-    """Public `Catalog` method -> (its positional parameters after self,
-    its defaulted parameters), for every method with a defaulted one."""
-    path = os.path.join(ROOT, PKG, "sources", "tables.py")
-    with open(path) as f:
-        tree = ast.parse(f.read(), path)
-    cls = next(n for n in tree.body
-               if isinstance(n, ast.ClassDef) and n.name == "Catalog")
-    out = {}
-    for fn in cls.body:
-        if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
-            continue
+def _public_defaults() -> dict[str, list[tuple[str, list[str], set[str]]]]:
+    """Callable name -> [(qualified name, the parameters a positional
+    argument fills, the defaulted parameters)] for every public function
+    and public-class method of the package with a defaulted parameter."""
+    out: dict[str, list] = {}
+
+    def add(fn: ast.FunctionDef, qual: str, bound: bool) -> None:
         a = fn.args
         pos = a.posonlyargs + a.args
         defaulted = {p.arg for p in pos[len(pos) - len(a.defaults):]}
         defaulted |= {p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults)
                       if d is not None}
         if defaulted:
-            out[fn.name] = ([p.arg for p in pos[1:]], defaulted)
+            out.setdefault(fn.name, []).append(
+                (qual, [p.arg for p in pos[bound:]], defaulted))
+
+    for mod in _package_modules():
+        path = _module_file(mod)
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        short = mod[len(PKG) + 1:]
+        for node in tree.body:
+            if node.name.startswith("_") if hasattr(node, "name") else True:
+                continue
+            if isinstance(node, ast.FunctionDef):
+                add(node, f"{short}.{node.name}", False)
+            elif isinstance(node, ast.ClassDef):
+                for fn in node.body:
+                    if (isinstance(fn, ast.FunctionDef)
+                            and not fn.name.startswith("_")):
+                        static = any(isinstance(d, ast.Name)
+                                     and d.id == "staticmethod"
+                                     for d in fn.decorator_list)
+                        add(fn, f"{short}.{node.name}.{fn.name}", not static)
     return out
 
 
-def _passed(methods: dict[str, tuple[list[str], set[str]]]) -> set[str]:
-    """`method.param` for every parameter some call `x.method(...)` in the
-    surface closure passes, by position or by name."""
+def _unpassed() -> set[str]:
+    """`qualified.param` for every defaulted public parameter that no call
+    in the surface closure (the surface files and every package module they
+    reach) passes, by position or by name. A call is matched by the name it
+    calls (`f(...)` or `x.f(...)`), so a parameter counts as passed when any
+    callable of that name receives it."""
+    defs = _public_defaults()
     files = [path for path, _ in _surface_files()]
     files += [_module_file(m) for m in _reached() if m.startswith(PKG)]
-    out: set[str] = set()
+    passed: set[tuple[str, str]] = set()
     for path in files:
         with open(path) as f:
             tree = ast.parse(f.read(), path)
         for node in ast.walk(tree):
-            if not (isinstance(node, ast.Call)
-                    and isinstance(node.func, ast.Attribute)
-                    and node.func.attr in methods):
+            if not isinstance(node, ast.Call):
                 continue
-            m = node.func.attr
+            fn = node.func
+            name = (fn.id if isinstance(fn, ast.Name)
+                    else fn.attr if isinstance(fn, ast.Attribute) else None)
+            if name not in defs:
+                continue
             n_pos = sum(not isinstance(x, ast.Starred) for x in node.args)
-            out.update(f"{m}.{p}" for p in methods[m][0][:n_pos])
-            out.update(f"{m}.{k.arg}" for k in node.keywords if k.arg)
-    return out
+            for _, params, _ in defs[name]:
+                passed.update((name, p) for p in params[:n_pos])
+            passed.update((name, k.arg) for k in node.keywords if k.arg)
+    return {f"{qual}.{p}" for name, entries in defs.items()
+            for qual, _, defaulted in entries for p in defaulted
+            if (name, p) not in passed}
 
 
-def test_every_catalog_default_is_passed_by_a_surface():
-    methods = _catalog_defaults()
-    declared = {f"{m}.{p}" for m, (_, d) in methods.items() for p in d}
-    passed = _passed(methods)
-    unpassed = declared - passed - ALLOWED_UNPASSED
-    assert not unpassed, (
-        "defaulted Catalog parameters no surface passes (give each a "
-        f"surface caller or delete it): {sorted(unpassed)}")
-    assert ALLOWED_UNPASSED <= declared - passed
+def test_every_default_is_passed_by_a_surface():
+    unpassed = _unpassed()
+    stray = unpassed - set(ALLOWED_UNPASSED)
+    assert not stray, (
+        "defaulted public parameters no surface passes (give each a surface "
+        f"caller or delete it with the branches it selects): {sorted(stray)}")
+    assert set(ALLOWED_UNPASSED) <= unpassed, (
+        "allow-listed parameters a surface now passes (drop the entry): "
+        f"{sorted(set(ALLOWED_UNPASSED) - unpassed)}")
+    assert all(why.strip() for why in ALLOWED_UNPASSED.values())

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from _intelligent_document_ai_for_field_extraction_from_invoices_spark import datagen
 from _intelligent_document_ai_for_field_extraction_from_invoices_spark.plans import lineage
 from _intelligent_document_ai_for_field_extraction_from_invoices_spark.sources.tables import Catalog
+from tests.conftest import crash_before_checkpoint, first_parts
 
 
 def test_catalog_overwrite_append_read(spark, tmp_path):
@@ -86,8 +87,8 @@ def test_resume_after_partial_run(spark, pages, tmp_path):
             run_full.read(spark, lineage.RESULTS_TABLE).collect()}
 
     cat = Catalog(str(tmp_path / "resumed"))
-    s1 = lineage.run_extraction(spark, pages, cat, "run-1", num_partitions=8,
-                                fail_after_parts=3)  # simulated crash
+    s1 = lineage.run_extraction(spark, first_parts(pages), cat, "run-1",
+                                num_partitions=8)  # simulated crash
     assert s1["parts_done"] == 3
     s2 = lineage.run_extraction(spark, pages, cat, "run-2", num_partitions=8)
     assert s2["parts_skipped"] == 3
@@ -136,7 +137,7 @@ def test_lineage_metrics_shape(spark, pages, tmp_path):
     assert agg[0] > 0 and agg[1] > 0  # empty-flavor pages land as failed rows
 
 
-def test_resume_after_torn_transaction(spark, pages, tmp_path):
+def test_resume_after_torn_transaction(spark, pages, tmp_path, monkeypatch):
     """ADVICE regression: crash BETWEEN the results append and the checkpoint
     commit must not duplicate rows on resume — the orphaned results/lineage
     appends are rolled back (metadata-only) before the rerun re-extracts."""
@@ -147,12 +148,14 @@ def test_resume_after_torn_transaction(spark, pages, tmp_path):
 
     cat = Catalog(str(tmp_path / "torn"))
     # first: 3 partitions commit cleanly
-    lineage.run_extraction(spark, pages, cat, "run-1", num_partitions=8,
-                           fail_after_parts=3)
+    lineage.run_extraction(spark, first_parts(pages), cat, "run-1",
+                           num_partitions=8)
     # second: results+lineage appended for the remaining 5 parts, then crash
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        lineage.run_extraction(spark, pages, cat, "run-2", num_partitions=8,
-                               fail_before_checkpoint=True)
+    with monkeypatch.context() as m:
+        crash_before_checkpoint(m)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            lineage.run_extraction(spark, pages, cat, "run-2",
+                                   num_partitions=8)
     # torn state: all 8 parts' rows present but only 3 parts checkpointed —
     # a naive resume would re-extract 5 parts and duplicate their rows
     assert cat.read(spark, lineage.RESULTS_TABLE).count() == len(full)
@@ -202,8 +205,8 @@ def test_resume_into_pre_day_layout_table(spark, pages, tmp_path):
     day-pruned reads silently drop the old rows."""
     legacy_pages = pages.drop("warc_ts")  # pre-day pipeline had no crawl ts
     cat = Catalog(str(tmp_path))
-    lineage.run_extraction(spark, legacy_pages, cat, "run-old",
-                           num_partitions=8, fail_after_parts=3)
+    lineage.run_extraction(spark, first_parts(legacy_pages), cat, "run-old",
+                           num_partitions=8)
     assert "warc_day" not in cat.read(spark, lineage.RESULTS_TABLE).columns
 
     # resume with day-carrying pages: the guard must fall back to the
@@ -287,6 +290,46 @@ def test_vacuum_reclaims_expired_and_orphaned_files(spark, tmp_path):
     assert sorted(r.id for r in cat.read(spark, "t").collect()) == list(range(7))
     # vacuum is idempotent
     assert cat.vacuum("t", min_age_secs=0) == 0
+
+
+def test_staging_dirs_enter_and_leave_snapshots_whole(spark, tmp_path):
+    """Vacuum reclaims only whole staging dirs, which is right because one
+    `_stage` call's files share one txn and enter and leave snapshots
+    together: after partitioned appends, a torn-run rollback, compact and
+    overwrite, every staging dir under data/ is wholly referenced or wholly
+    unreferenced by the current snapshot."""
+    import os
+
+    cat = Catalog(str(tmp_path))
+    data_root = os.path.join(str(tmp_path), "t", "data")
+
+    def assert_whole():
+        cur = cat._read_current("t")
+        keep = {os.path.realpath(r["path"]) for e in cur["manifests"]
+                for r in cat._read_manifest(e)}
+        for stage in os.listdir(data_root):
+            files = [os.path.realpath(os.path.join(r, f))
+                     for r, _, fs in os.walk(os.path.join(data_root, stage))
+                     for f in fs if f.endswith(".parquet")]
+            assert len({f in keep for f in files}) <= 1, stage
+
+    def days(lo, hi):
+        return spark.range(lo, hi).withColumn(
+            "day", (F.col("id") % 3).cast("string"))
+
+    cat.append("t", days(0, 30), txn="a1", partition_by=["day"])
+    cat.append("t", days(30, 60), txn="a2", partition_by=["day"])
+    cat.append("t", days(60, 90), txn="torn", partition_by=["day"])
+    assert_whole()
+    cat.remove_orphan_appends("t", live_txns={"a1", "a2"})
+    assert_whole()
+    assert cat.compact(spark, "t")["files_after"] == 3
+    assert_whole()
+    cat.overwrite("t", cat.read(spark, "t").filter("id < 45"))
+    assert_whole()
+    assert cat.vacuum("t", min_age_secs=0) > 0
+    assert sorted(r.id for r in cat.read(spark, "t").collect()) == \
+        list(range(45))
 
 
 def test_txn_check_metadata_opens_stay_flat(spark, tmp_path, monkeypatch):
