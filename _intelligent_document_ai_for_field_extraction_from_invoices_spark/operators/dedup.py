@@ -54,7 +54,7 @@ CC_LAST_STATS: dict = {}
 # pairs is closed on the driver straight off one bounded collect, and a
 # larger graph is handed to the driver once contraction shrinks its
 # quotient under this many edges. Module-level so tests can pin it (0
-# disables both driver paths).
+# sends every non-empty input through the distributed rounds).
 UF_BREAK_MAX = 500_000
 
 # connected_components' contraction-round budget: a graph still holding
@@ -706,11 +706,11 @@ def simhash_near_dups(df: DataFrame, max_hamming: int = 8) -> DataFrame:
     )
 
 
-def _union_find_min(rows):
-    """Min-root union-find over (a, b) edge rows: returns the parent
-    map and the path-compressing find — the driver-side fixpoint both
-    the early path and the epilogue of connected_components collect
-    into (one implementation so the two stay in sync)."""
+def _driver_labels(spark, rows, dtype) -> DataFrame:
+    """(node, comp) labels from a driver min-root union-find over (a, b)
+    edge rows: each node's comp is its component's min id, the fixpoint
+    connected_components' distributed rounds converge to. Both driver
+    exits of connected_components label through this one function."""
     parent: dict = {}
 
     def find(x):
@@ -727,7 +727,19 @@ def _union_find_min(rows):
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    return parent, find
+    return spark.createDataFrame(
+        [(x, find(x)) for x in list(parent)],
+        StructType([StructField("node", dtype), StructField("comp", dtype)]))
+
+
+def _no_convergence(*cached: DataFrame):
+    """Raise connected_components' non-convergence error, registering
+    `cached` first so release_caches() frees them after the raise."""
+    for df in cached:
+        register_cache(df)
+    raise RuntimeError(
+        f"connected_components did not converge in {CC_MAX_ITERS} rounds "
+        "(pathological component diameter — raise CC_MAX_ITERS)")
 
 
 def connected_components(pairs: DataFrame, key_a: str = "doc_a",
@@ -736,14 +748,17 @@ def connected_components(pairs: DataFrame, key_a: str = "doc_a",
     """Near-duplicate CLUSTERING: connected components over a candidate-pair
     edge list (the step after LSH at corpus scale — pairs say "these two are
     dups", components say "this is one document cluster, keep one copy").
+    Every node is labelled with the min id of its component.
 
     Small graphs never reach Spark rounds: the projected (a, b) pairs are
     persisted once and at most UF_BREAK_MAX + 1 of them collected. When
-    that collect is not cut short (and is non-empty), a driver union-find
-    over the raw pairs closes the components (min id = root, the same
-    fixpoint as the loop below) — no symmetrize, distinct or count job
-    first, canonical input or not. Otherwise the symmetrized edge set is
-    built from the same persisted pairs and the distributed loop runs.
+    that collect is not cut short (the empty input included), a driver
+    union-find over the raw pairs closes the components — no symmetrize,
+    distinct or count job, canonical input or not. Otherwise the
+    symmetrized edge set is built from the same persisted pairs
+    (`pairs_canonical=True` declares every row distinct with a < b, so the
+    two halves cannot collide and the distinct is skipped) and the
+    distributed loop runs.
 
     Hash-min with pointer jumping over a CONTRACTING edge set: every node
     starts labelled with its own id; each round (1) a node's label becomes
@@ -751,67 +766,66 @@ def connected_components(pairs: DataFrame, key_a: str = "doc_a",
     through the label table itself (comp <- comp[comp], path compression),
     then (3) the edges are CONTRACTED through the fresh labels — each
     endpoint replaced by its component label, self-loops dropped,
-    duplicates merged (the round-4 verdict's algorithmic prescription;
-    the same quotient-graph move as alternating large-star/small-star).
-    Near-dup graphs are near-cliques, so round 1 collapses almost every
-    edge to a self-loop: subsequent rounds join a residual edge set
-    orders of magnitude smaller instead of ALL edges every round
-    (sf0.1 measurement: 112k edges -> 12 after one round). Contracted
-    endpoints are labels, which are themselves node ids, so the SAME
-    step+jump loop keeps working on the quotient graph while
-    contracted-away nodes chase their representatives through the jump.
+    duplicates merged (the quotient-graph move of alternating
+    large-star/small-star). Near-dup graphs are near-cliques, so round 1
+    collapses almost every edge to a self-loop and later rounds join a
+    residual edge set orders of magnitude smaller. Contracted endpoints
+    are labels, which are themselves node ids, so the same step+jump loop
+    keeps working on the quotient graph while contracted-away nodes chase
+    their representatives through the jump. The per-round contracted-edge
+    count is also the round's materialization barrier.
 
-    Termination: the edge set empty means every remaining dependency is
-    resolved — no aggregate-vs-last-round bookkeeping needed; the per-round
-    contracted-edge count() doubles as the round's materialization barrier
-    (the round-4 label-sum's job, now carrying information that SHRINKS
-    work instead of only detecting convergence). Because contracted-away
-    nodes may still hold a pointer into a chain (comp(a) = x with
-    comp(x) = m), an edge-free graph finishes with jump-only rounds —
-    comp <- comp[comp] until every freshly-jumped label is itself a root
-    — read off the SAME job as the jump via a third self-join arm, so the
-    common one-chain case finishes in a single epilogue round with no
-    confirmation pass. Raises if the rounds don't converge rather than
-    returning a silently-wrong partial labelling.
+    The loop hands over to the driver after the first round that leaves
+    at most UF_BREAK_MAX edges. If round 1 contracted every edge away,
+    each original edge already had equal endpoint labels, so the labels
+    are the fixpoint. Otherwise a driver union-find closes the residual
+    quotient edges, if any, and folds its roots back over the label table
+    with one broadcast join; contracted-away nodes may still point into a
+    label chain, so jump-only rounds (comp <- comp[comp]) follow until
+    every freshly jumped label is a root, read off the same job as the
+    jump. Chains are at most as long as the rounds run and jumping
+    doubles, so log2(rounds) + 2 jump rounds suffice; their budget is the
+    larger of that and CC_MAX_ITERS, so a graph that contracts empty on
+    the last allowed round still closes. Raises if either loop runs out
+    of rounds rather than returning a silently-wrong partial labelling.
 
-    Iterative-plan discipline (the part naive loops get wrong): each round
-    references the previous labels ~4-5x, so the LOGICAL plan compounds
-    ~5^rounds without a lineage break — labels and edges get a leaf-plan
-    reset EVERY round (the per-round count has already materialized their
-    caches, so the reset is pure plan surgery over cached data), exactly
-    why GraphFrames requires a checkpoint dir for its CC. The reset is a
+    Iterative-plan discipline: each round references the previous labels
+    ~4-5x, so the logical plan would compound ~5^rounds without a lineage
+    break — labels and edges get a leaf-plan reset every round (over
+    caches the round's count has already materialized), exactly why
+    GraphFrames requires a checkpoint dir for its CC. The reset is a
     driver round-trip while the table is small (`collect_break_max` rows
-    of two longs — cheap, and it leaves no checkpoint blocks behind, which
-    keeps the loop viable in a 1 GB driver), else `localCheckpoint()`
-    (blocks reclaimed by Spark's ContextCleaner once the result is
-    dropped). Persisted rounds are released as soon as superseded; the
-    final label table is registered for `release_caches()`. Per round: two
-    shuffle joins (edges x labels, labels x labels) + one min-aggregate +
-    the contraction join, all hash-partitioned on node id (uniform keys —
-    upstream pair generators cap hot buckets), with the contraction join
-    sized by the SHRINKING edge set.
+    of two longs; it leaves no checkpoint blocks behind, which keeps the
+    loop viable in a 1 GB driver and lets release_caches() free every
+    cache), else `localCheckpoint()` (blocks reclaimed by Spark's
+    ContextCleaner once the result is dropped). Superseded caches are
+    released at once; the final label table is registered for
+    `release_caches()`. While the node set fits `collect_break_max`,
+    every labels-side join is broadcast so the (dense) edge list is never
+    shuffled; past it the joins hash-partition on uniform node-id keys.
 
-    The reference has no graph step (single-doc pipeline); this extends the
-    LLM-data-pipeline suite (task brief: dedup as first-class). Deterministic
-    and oracle-reproducible: the fixpoint (component-min labels) is
-    engine-independent, so a DuckDB recursive CTE replicates it exactly
-    (contract.py q_neardup_components)."""
+    Deterministic and oracle-reproducible: the fixpoint (component-min
+    labels) is engine-independent, so a DuckDB recursive CTE replicates it
+    exactly (contract.py q_neardup_components). CC_LAST_STATS records the
+    run: `rounds`, `fastpath`, `edge_counts` (symmetrized distinct edges
+    entering each round, then 0) and, when a driver union-find closed
+    edges, `driver_uf_edges`."""
     spark = pairs.sparkSession
     collect_break_max = 200_000
-    uf_break_max = UF_BREAK_MAX
-    max_iters = CC_MAX_ITERS
-    uf_edges = None
 
-    def _leaf_reset(df: DataFrame, n_rows: int) -> DataFrame:
-        """Replace a DataFrame's plan with a materialized leaf. Driver
-        round-trip for small tables (no checkpoint blocks left behind —
-        keeps the loop viable in a 1 GB driver), localCheckpoint else."""
+    def _leaf_reset(df: DataFrame, n_rows: int, *spent: DataFrame):
+        """A persisted or checkpointed leaf holding df's rows; df and the
+        `spent` caches it was computed from are released."""
         if n_rows <= collect_break_max:
-            return spark.createDataFrame(df.collect(), df.schema)
-        return df.localCheckpoint(eager=True)
+            leaf = spark.createDataFrame(df.collect(), df.schema).persist()
+        else:
+            leaf = df.localCheckpoint(eager=True)
+        for x in (df, *spent):
+            x.unpersist()
+        return leaf
 
     def _finish(labels: DataFrame, rounds: int, fastpath: bool,
-                edge_counts: list) -> DataFrame:
+                edge_counts: list, uf_edges=None) -> DataFrame:
         CC_LAST_STATS.clear()
         CC_LAST_STATS.update(rounds=rounds, fastpath=fastpath,
                              edge_counts=edge_counts)
@@ -823,71 +837,35 @@ def connected_components(pairs: DataFrame, key_a: str = "doc_a",
 
     e = pairs.select(F.col(key_a).alias("a"), F.col(key_b).alias("b")) \
         .persist()
-    head = e.limit(uf_break_max + 1).collect()
-    if 0 < len(head) <= uf_break_max:
-        # EARLY DRIVER PATH: the whole pair list fits the union-find
-        # collect bound, so contraction rounds would only shrink a graph
-        # that is collectable as-is — each round costs several
-        # scheduling-latency-bound jobs (joins, a count, leaf resets) that
-        # dwarf the work on graphs this small (a 400-doc curate chain's
-        # neardup stage collects ~600 pairs here). The union-find needs
-        # neither direction nor distinctness, so it runs on the raw pairs
-        # the bounded collect already holds: no symmetrize, distinct or
-        # count job. `driver_uf_edges` keeps its meaning, the symmetrized
-        # distinct edge count, counted here on the driver.
-        parent, _find0 = _union_find_min(head)
-        qt = e.schema["a"].dataType
-        labels = spark.createDataFrame(
-            [(x, _find0(x)) for x in list(parent)],
-            StructType([StructField("node", qt), StructField("comp", qt)]))
+    qt = e.schema["a"].dataType
+    head = e.limit(UF_BREAK_MAX + 1).collect()
+    if len(head) <= UF_BREAK_MAX:
+        # the union-find needs neither direction nor distinctness;
+        # `driver_uf_edges` still counts the symmetrized distinct edges
         e.unpersist()
         uf_edges = len({(a, b) for a, b in head} | {(b, a) for a, b in head})
-        return _finish(labels, 0, False, [uf_edges, 0])
+        return _finish(_driver_labels(spark, head, qt), 0, False,
+                       [uf_edges, 0], uf_edges)
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # `pairs_canonical=True` declares the input DISTINCT with key_a < key_b
-    # on every row — every LSH pair generator in this package emits exactly
-    # that shape — which makes the symmetrized union distinct by
-    # construction (the a<b and a>b halves cannot collide), skipping a
-    # full shuffle+dedup of 2x the edge list (round-5 verdict #2: this
-    # doubled the loop's first shuffle)
     edges0 = (sym if pairs_canonical else sym.distinct()).persist()
     n_edges = edges0.count()
     # leaf-reset BEFORE iterating: without it every round's logical plan
-    # embeds compounding copies of the whole upstream pair pipeline (the
-    # cache shortcuts execution but not plan analysis) — the analysis tree,
-    # not the data, is what blows the driver heap
-    edges = register_cache(_leaf_reset(edges0, n_edges).cache())
+    # embeds the whole upstream pair pipeline (the cache shortcuts
+    # execution but not plan analysis)
+    edges = register_cache(_leaf_reset(edges0, n_edges, e))
     labels = (edges.select(F.col("a").alias("node")).distinct()
               .withColumn("comp", F.col("node")).persist())
-    # the node set never changes, so its size is loop-invariant — computed
-    # once for the leaf-reset size guard instead of once per round (this
-    # count also materializes the leaf-reset edge cache)
-    n_nodes = labels.count()
-    edges0.unpersist()
-    e.unpersist()
-    # LSH near-dup graphs are DENSE (near-cliques): edges outnumber nodes
-    # by orders of magnitude (sf1 measurement: 1.9M symmetric edges over
-    # 5k nodes). When the label table provably fits a broadcast (we know
-    # n_nodes exactly), hint every labels-side join so the big edge list
-    # is never shuffled — each round becomes map-side lookups over edges
-    # plus tiny aggregates. Past the threshold (true web scale) the joins
-    # fall back to hash-partitioned shuffles on uniform node-id keys.
+    n_nodes = labels.count()  # the node set is loop-invariant
     small = n_nodes <= collect_break_max
 
     def bcast(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
     edge_counts = [n_edges]
-    if n_edges == 0:
-        return _finish(labels, 0, False, edge_counts)
-    prev = labels
-    it = 0
-    while it < max_iters:
-        it += 1
+    for it in range(1, CC_MAX_ITERS + 1):
         if it == 1:
-            # round 1 labels are the identity (comp == node), so the
-            # edges-x-labels join would resolve comp[a] = a — read the
+            # round 1 labels are the identity (comp == node): read the
             # neighbour labels straight off the edge list and skip the
-            # loop's single biggest shuffle join on its biggest round
+            # loop's biggest shuffle join on its biggest round
             neigh = edges.select(F.col("b").alias("node"),
                                  F.col("a").alias("comp"))
         else:
@@ -923,115 +901,37 @@ def connected_components(pairs: DataFrame, key_a: str = "doc_a",
         )
         n_edges = contracted.count()
         edge_counts.append(n_edges)
-        edges.unpersist()
-        if prev is not None:
-            prev.unpersist()
-        # leaf-reset BOTH tables every round: the count above already
-        # materialized their caches, so the small-table reset is a driver
-        # round-trip over cached blocks (no recompute) and the big-table
-        # reset is one localCheckpoint pass. The contraction join
-        # references the fresh labels twice and the labels join references
-        # the previous round ~4x, so without per-round resets the logical
-        # plan compounds ~5^rounds — the analysis tree, not the data,
-        # OOMs the driver (GraphFrames checkpoints its CC every other
-        # round for exactly this reason).
-        broken_l = _leaf_reset(new_labels, n_nodes)
-        new_labels.unpersist()
-        new_labels = broken_l.persist() \
-            if n_nodes <= collect_break_max else broken_l
-        if 0 < n_edges <= uf_break_max:
-            # DRIVER EPILOGUE (round-6): once contraction has shrunk the
-            # quotient graph under the collect bound, spinning more Spark
-            # rounds is pure overhead — each costs joins, a count job and
-            # leaf resets to move a few hundred thousand longs. Collect
-            # the residual edges (<= uf_break_max rows of two ids, a few
-            # MB), finish the quotient components with a driver
-            # union-find (min id = root, exactly the fixpoint the loop
-            # converges to), and fold the root map back over the label
-            # table with ONE broadcast left join. Earlier-round pointer
-            # chains are untouched — the jump epilogue below still
-            # resolves them — but every residual-edge dependency is now
-            # closed, so this replaces an unbounded tail of contraction
-            # rounds with one narrow job. sf1 measurement: the 211k-edge
-            # quotient after round 1 took 2 more contraction rounds +
-            # epilogue (~8 s); the union-find path closes it in <1 s.
-            parent, _find = _union_find_min(contracted.collect())
-            mapping = [(q, _find(q)) for q in list(parent)]
-            mapping = [(q, r) for q, r in mapping if q != r]
-            contracted.unpersist()
-            qt = contracted.schema["a"].dataType
-            mdf = spark.createDataFrame(
-                mapping,
-                StructType([StructField("_q", qt), StructField("_r", qt)]))
-            lab = new_labels.alias("lab")
-            relabeled = lab.join(
-                F.broadcast(mdf), F.col("lab.comp") == F.col("_q"), "left"
-            ).select(
-                F.col("lab.node").alias("node"),
-                F.coalesce(F.col("_r"), F.col("lab.comp")).alias("comp"),
-            )
-            # materialize the relabel, then drop the pre-relabel cache —
-            # leaving it persisted leaks the block past release_caches()
-            broken_r = _leaf_reset(relabeled, n_nodes)
-            new_labels.unpersist()
-            new_labels = broken_r.persist() \
-                if n_nodes <= collect_break_max else broken_r
-            uf_edges = n_edges
-            edge_counts.append(0)
-            prev = labels = new_labels
-            edges = None
+        labels = _leaf_reset(new_labels, n_nodes, labels, edges)
+        if n_edges <= UF_BREAK_MAX:
             break
-        if n_edges > 0:
-            broken_e = _leaf_reset(contracted, n_edges)
-            contracted.unpersist()
-            contracted = broken_e.persist() \
-                if n_edges <= collect_break_max else broken_e
-        else:
-            contracted.unpersist()  # empty: never joined again
-        prev = labels = new_labels
-        edges = contracted
-        if n_edges == 0:
-            if it == 1:
-                # the ROUND-1 contraction runs over the original edges, so
-                # empty means every original edge already has equal
-                # endpoint labels: per component the labelling is uniform,
-                # and (labels being monotone node ids with the min keeping
-                # itself) that uniform value IS the component min — the
-                # fixpoint, provably, with no pointer chains to resolve.
-                # Near-clique LSH graphs land here, skipping the jump
-                # epilogue's two confirmation jobs entirely.
-                return _finish(labels, it, True, edge_counts)
-            break
+        edges = _leaf_reset(contracted, n_edges)
     else:
-        # release_caches() frees both after the raise
-        register_cache(labels)
-        register_cache(edges)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds "
-            "(pathological component diameter — raise CC_MAX_ITERS)")
+        _no_convergence(labels, edges)
+    residual = contracted.collect() if n_edges else []
+    contracted.unpersist()
+    if it == 1 and not residual:
+        return _finish(labels, it, True, edge_counts)
+    uf_edges = None
+    if residual:
+        uf_edges = n_edges
+        edge_counts.append(0)
+        lab = labels.alias("lab")
+        uf = _driver_labels(spark, residual, qt).alias("uf")
+        relabeled = lab.join(
+            F.broadcast(uf), F.col("lab.comp") == F.col("uf.node"), "left"
+        ).select(
+            F.col("lab.node").alias("node"),
+            F.coalesce(F.col("uf.comp"), F.col("lab.comp")).alias("comp"),
+        )
+        labels = _leaf_reset(relabeled, n_nodes, labels)
 
-    # jump-only epilogue: contracted-away nodes may still point into a
-    # label chain; double the pointers until no label moves. Stability is
-    # read off the SAME job as the jump — the join carries the old comp
-    # alongside the new one and a moved-count aggregate runs on the
-    # freshly persisted result, so a chain-free graph confirms in ONE
-    # epilogue round (the round-4 two-consecutive-sums scheme always paid
-    # a second confirmation round). The budget is INDEPENDENT of the
-    # contraction loop's (review finding: sharing max_iters made a graph
-    # that contracted empty on the last allowed round raise spuriously at
-    # the fixpoint) — chains are at most `it` long and jumping doubles,
-    # so log2(it)+2 rounds always suffice.
-    ep_budget = max(max_iters, it.bit_length() + 2)
-    ep = 0
-    while ep < ep_budget:
-        ep += 1
-        it += 1
-        # three arms of ONE self-join: st (node -> old comp), jm (the
-        # jump target), jm2 (the target's own comp). `unstable` asks
-        # whether the NEW label is already a root — if every node's new
-        # comp is a root, the next jump would be the identity, so THIS
-        # round's labels are the fixpoint and no confirmation round is
-        # needed (the moved-vs-last-round schemes always paid one).
+    # jump-only rounds. Three arms of ONE self-join: st (node -> old
+    # comp), jm (the jump target), jm2 (the target's own comp).
+    # `unstable` asks whether the NEW label is already a root — if every
+    # node's new comp is a root, the next jump would be the identity, so
+    # this round's labels are the fixpoint and no confirmation round runs.
+    ep_budget = max(CC_MAX_ITERS, it.bit_length() + 2)
+    for ep in range(1, ep_budget + 1):
         st, jm, jm2 = (labels.alias("st"), labels.alias("jm"),
                        labels.alias("jm2"))
         jumped = st.join(
@@ -1045,16 +945,10 @@ def connected_components(pairs: DataFrame, key_a: str = "doc_a",
         ).persist()
         n_unstable = jumped.agg(
             F.sum("unstable").alias("u")).first().u or 0
-        labels.unpersist()
-        broken = _leaf_reset(jumped.drop("unstable"), n_nodes)  # plan cut
-        jumped.unpersist()
-        labels = broken.persist() if n_nodes <= collect_break_max else broken
+        labels = _leaf_reset(jumped.drop("unstable"), n_nodes, jumped, labels)
         if n_unstable == 0:
-            return _finish(labels, it, False, edge_counts)
-    register_cache(labels)
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iters} rounds "
-        "(pathological component diameter — raise CC_MAX_ITERS)")
+            return _finish(labels, it + ep, False, edge_counts, uf_edges)
+    _no_convergence(labels)
 
 
 def keep_canonical(df: DataFrame, components: DataFrame,
@@ -1105,23 +999,19 @@ def url_blocklist_flags(docs: DataFrame, blocked_domains,
     blocked_domain is the alphabetically-first matching entry — a
     deterministic, auditable provenance tag.
 
-    `blocked_domains`: a DataFrame with a `domain` string column, or any
-    iterable of strings (config-scale lists). Entries are lowercased.
+    `blocked_domains`: an iterable of domain strings (config-scale
+    lists). Entries are lowercased.
 
     Scale shape: the host is a narrow regexp projection; each host
     explodes into at most its dot-label count of suffixes (bounded ~10,
     never corpus-scale fan-out); the blocklist joins broadcast (even a
     UT1-scale list of millions of domains is tens of MB); the only
     corpus shuffle is the per-doc min aggregate on uniform keys."""
-    if not isinstance(blocked_domains, DataFrame):
-        doms = sorted({str(x).lower() for x in blocked_domains})
-        if not doms:
-            raise ValueError("url_blocklist_flags: empty blocklist")
-        bl = docs.sparkSession.createDataFrame([(x,) for x in doms],
-                                               "domain string")
-    else:
-        bl = blocked_domains.select(
-            F.lower(F.col("domain")).alias("domain"))
+    doms = sorted({str(x).lower() for x in blocked_domains})
+    if not doms:
+        raise ValueError("url_blocklist_flags: empty blocklist")
+    bl = docs.sparkSession.createDataFrame([(x,) for x in doms],
+                                           "domain string")
     host = F.lower(F.regexp_extract(
         F.col("url"), r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#:]*)", 1))
     base = docs.select(F.col(key).alias("k"), host.alias("host"))

@@ -86,18 +86,24 @@ def test_no_residual_caches_after_components(spark, graph):
     assert after - before == set()
 
 
-def test_components_empty_pair_set_returns_empty(spark):
-    """sum() over zero rows is null — the convergence check must coalesce it
-    or an all-unique corpus spins CC_MAX_ITERS rounds and raises (review
-    finding)."""
+def test_components_empty_pair_set_returns_empty(spark, monkeypatch):
+    """An all-unique corpus has no pairs: it closes on the early driver
+    path at any bound, 0 included, with no rounds and no edges."""
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert dedup.connected_components(empty).collect() == []
-    dedup.release_caches()
+    for uf_break_max in (dedup.UF_BREAK_MAX, 0):
+        monkeypatch.setattr(dedup, "UF_BREAK_MAX", uf_break_max)
+        assert dedup.connected_components(empty).collect() == []
+        st = dedup.CC_LAST_STATS
+        assert st["rounds"] == 0 and st["edge_counts"] == [0, 0]
+        dedup.release_caches()
 
 
-def test_components_match_union_find_on_random_graphs(spark):
-    """Property: the distributed labelling equals a reference union-find on
-    seeded random graphs (mix of sparse chains and dense blobs)."""
+def test_components_match_union_find_on_random_graphs(spark, monkeypatch):
+    """Property: the labelling equals a reference union-find on seeded
+    random graphs (mix of sparse chains and dense blobs) on every path:
+    the early driver union-find (default UF_BREAK_MAX), the loop handing
+    its residual to the driver (a bound below the pair count) and the
+    loop with its jump epilogue alone (bound 0)."""
     import random
 
     def union_find(edges):
@@ -116,6 +122,7 @@ def test_components_match_union_find_on_random_graphs(spark):
                 parent[max(ra, rb)] = min(ra, rb)
         return {n: find(n) for n in parent}
 
+    default = dedup.UF_BREAK_MAX
     rng = random.Random(1234)
     for trial in range(3):
         n = rng.randint(30, 120)
@@ -126,10 +133,14 @@ def test_components_match_union_find_on_random_graphs(spark):
             continue
         expected = union_find(edges)
         df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got = {r.doc_id: r.component_id
-               for r in dedup.connected_components(df).collect()}
-        assert got == expected, f"trial {trial}"
-        dedup.release_caches()
+        for bound in (default, len(edges) - 1, 0):
+            monkeypatch.setattr(dedup, "UF_BREAK_MAX", bound)
+            got = {r.doc_id: r.component_id
+                   for r in dedup.connected_components(df).collect()}
+            assert got == expected, f"trial {trial}, bound {bound}"
+            st = dedup.CC_LAST_STATS
+            assert (st["rounds"] == 0) == (bound == default)
+            dedup.release_caches()
 
 
 def test_components_localcheckpoint_path_on_large_graph(spark, monkeypatch):
