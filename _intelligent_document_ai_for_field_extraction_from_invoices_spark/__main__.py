@@ -80,16 +80,6 @@ def _emb_n(spark, args) -> int:
     return min(n, args.limit) if args.limit is not None else n
 
 
-def _overwrite_replayed(catalog: Catalog, table: str, run_id: str) -> bool:
-    """Replay check for replace-semantics tables: this run's txn must be
-    the CURRENT snapshot's committer, not merely present in the cumulative
-    txn history — an overwrite by any later run invalidates (replaces) the
-    earlier run's output, so the earlier run must recompute on resume."""
-    txn = f"cli:{table}:{run_id}"
-    cur = catalog._read_current(table)  # None when the table doesn't exist
-    return cur is not None and cur.get("txn") == txn
-
-
 def _emit(catalog: Catalog, table: str, df, run_id: str,
           release: bool = True, mode: str = "append") -> dict:
     """Write a result table exactly-once per run id and return its stats.
@@ -98,18 +88,13 @@ def _emit(catalog: Catalog, table: str, df, run_id: str,
     --keep-one would otherwise re-run the whole iterative clustering).
     `mode="overwrite"` is for replace-semantics tables (the ANN index:
     a rebuild with a new run id must REPLACE the old index, not append a
-    second copy that fans out every later probe join). For overwrite
-    tables the replay check is CURRENT-SNAPSHOT txn equality, not
-    txn-history membership (review finding): after run r2 overwrote the
-    table, a resumed r1 must RECOMPUTE its state rather than silently
-    consume r2's — history says r1 committed once, but its output is
-    gone."""
+    second copy that fans out every later probe join). One replay check
+    serves both modes: an overwrite restarts the table's txn set
+    (Catalog.overwrite), so after run r2 overwrote the table a resumed r1
+    is no longer in it and RECOMPUTES its state rather than silently
+    consuming r2's."""
     txn = f"cli:{table}:{run_id}"
-    if mode == "overwrite":
-        replayed = _overwrite_replayed(catalog, table, run_id)
-    else:
-        replayed = txn in catalog.txns(table)
-    if replayed:
+    if txn in catalog.txns(table):
         rows = None  # replayed run id: already durably committed
     else:
         df = df.persist()
@@ -169,8 +154,8 @@ def cmd_report(spark, args) -> dict:
     """The daily read a real user runs against a committed extraction
     catalog: a day (or day-range) slice of the results table. The slice is
     MANIFEST-PRUNED — non-matching crawl days' files are never opened
-    (tables.py scan_files; results land partitioned by warc_day since
-    round 4) — and the emitted `scan` stats show exactly how much the
+    (tables.py scan_files; results are always partitioned by warc_day)
+    — and the emitted `scan` stats show exactly how much the
     prune skipped."""
     cat = Catalog(args.catalog)
     if args.internals and (args.day or args.since or args.until
@@ -359,7 +344,7 @@ def cmd_cc(spark, args) -> dict:
     unclustered rows). Text methods cluster the documents table on
     doc_id; embedding methods cluster the embeddings table on vec_id."""
     text_method = args.method in ("shingle", "minhash", "simhash")
-    if getattr(args, "index", None) and args.method != "embedding":
+    if args.index and args.method != "embedding":
         raise SystemExit("cc: --index applies to --method embedding only")
     if text_method:
         src = _docs(spark, args)
@@ -384,7 +369,7 @@ def cmd_cc(spark, args) -> dict:
         thr = args.min_cosine
         if args.method == "embedding":
             assign = None
-            if getattr(args, "index", None):
+            if args.index:
                 # persisted-index path: reuse the ann --build-index bucket
                 # assignment instead of recomputing the full-corpus
                 # centroid scan per clustering run
@@ -533,11 +518,11 @@ def cmd_curate(spark, args) -> dict:
         for stage in todo:
             table = f"curate_{stage}"
             txn = f"cli:{table}:{args.run_id}"
-            # current-snapshot replay check (review finding): a DIFFERENT
-            # run's later overwrite of this stage table invalidates this
-            # run's committed stage — resume must recompute it, never
-            # silently consume the other run's survivor set
-            replayed = _overwrite_replayed(cat, table, args.run_id)
+            # a DIFFERENT run's later overwrite of this stage table drops
+            # this run's txn from its txn set (Catalog.overwrite) — resume
+            # then recomputes the stage, never silently consuming the
+            # other run's survivor set
+            replayed = txn in cat.txns(table)
             n_keys = None
             if not replayed:
                 survivors = curate_ops.run_stage(

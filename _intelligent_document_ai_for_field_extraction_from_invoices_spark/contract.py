@@ -18,6 +18,7 @@ programmatically below (`_minhash_oracle_sql` / `_simhash_oracle_sql`).
 from __future__ import annotations
 
 import math
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,17 +38,37 @@ from .operators import (
 from .operators.extract import extract_pages
 from .plans import lineage
 from .sources.tables import Catalog
+from .streaming.stream import hourly_event_counts_stream, tmp_dir
 
 # ---------------------------------------------------------------------------
 # helpers
 # ---------------------------------------------------------------------------
 
-# keyed by the session object itself (not id(): a GC'd session's id can be
-# reused, which would hand a stale cached plan to a new session); bounded to
-# the most recent entry so a long-lived driver can't accumulate pinned
-# sessions/plans across many (session, sf_dir) combinations
+# per-(session, sf_dir) memos, keyed by the session object itself (not
+# id(): a GC'd session's id can be reused, which would hand a stale cached
+# plan to a new session); bounded so a long-lived driver can't accumulate
+# pinned sessions/plans/catalogs across many (session, sf_dir) combinations
+_MEMO_MAX = 2  # flagship + gate sf in one process is the usual peak
 _RESULTS_CACHE: dict[tuple[SparkSession, str], DataFrame] = {}
-_RESULTS_CACHE_MAX = 2  # flagship + gate sf in one process is the usual peak
+
+
+def _memo(memo: dict, key, build, evict):
+    """memo[key], built by `build()` on a miss. A miss first evicts the
+    OLDEST insertions past _MEMO_MAX through `evict(value)` (dict.popitem()
+    is LIFO and would evict the hottest entry while pinning the oldest
+    forever)."""
+    if key not in memo:
+        while len(memo) >= _MEMO_MAX:
+            evict(memo.pop(next(iter(memo))))
+        memo[key] = build()
+    return memo[key]
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:  # noqa: BLE001 — session may already be stopped
+        pass
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -84,24 +105,13 @@ def _emb_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 def extraction_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run (and cache) the full extraction pipeline over pages derived from
     the documents table; exposes doc_id parsed back from the url."""
-    key = (spark, sf_dir)
-    if key not in _RESULTS_CACHE:
-        while len(_RESULTS_CACHE) >= _RESULTS_CACHE_MAX:
-            # evict the OLDEST insertion (dict.popitem() is LIFO and would
-            # evict the hottest entry while pinning the oldest forever)
-            oldest = next(iter(_RESULTS_CACHE))
-            old = _RESULTS_CACHE.pop(oldest)
-            try:
-                old.unpersist()
-            except Exception:  # noqa: BLE001 — session may already be stopped
-                pass
-        docs = _t(spark, sf_dir, "documents")
-        pages = datagen.pages_from_documents(docs)
-        res = extract_pages(pages).withColumn(
+    def build() -> DataFrame:
+        pages = datagen.pages_from_documents(_t(spark, sf_dir, "documents"))
+        return extract_pages(pages).withColumn(
             "doc_id", F.regexp_extract("url", r"doc-(\d+)$", 1).cast("long")
-        )
-        _RESULTS_CACHE[key] = res.cache()
-    return _RESULTS_CACHE[key]
+        ).cache()
+
+    return _memo(_RESULTS_CACHE, (spark, sf_dir), build, _unpersist)
 
 
 _AUTHOR_SQL_CASE = "CASE doc_id % 8 " + " ".join(
@@ -196,11 +206,10 @@ def q_extract_blocks_kept(spark, sf_dir):
     )
 
 
-# one materialized pipeline catalog per (session, sf) — same keying AND the
-# same bound as _RESULTS_CACHE (evicting the oldest rmtrees its tmp dir, so
-# a long-lived driver can't accumulate materialized catalogs on disk)
+# one materialized pipeline catalog per (session, sf); evicting the oldest
+# rmtrees its tmp dir, so a long-lived driver can't accumulate materialized
+# catalogs on disk
 _PIPELINE_CATS: dict[tuple[SparkSession, str], Catalog] = {}
-_PIPELINE_CATS_MAX = 2
 
 
 def pipeline_catalog(spark: SparkSession, sf_dir: str) -> Catalog:
@@ -208,24 +217,14 @@ def pipeline_catalog(spark: SparkSession, sf_dir: str) -> Catalog:
     a committed, day-partitioned catalog table (plans/lineage.py), so
     contract queries can exercise the PRODUCTION read path — manifest-pruned
     scans over snapshot commits — not just in-memory DataFrames."""
-    key = (spark, sf_dir)
-    if key not in _PIPELINE_CATS:
-        import atexit  # noqa: PLC0415
-        import shutil  # noqa: PLC0415
-        import tempfile  # noqa: PLC0415
-
-        while len(_PIPELINE_CATS) >= _PIPELINE_CATS_MAX:
-            oldest = next(iter(_PIPELINE_CATS))
-            shutil.rmtree(_PIPELINE_CATS.pop(oldest).root,
-                          ignore_errors=True)
-        tmp = tempfile.mkdtemp(prefix="sparkgraft_contract_cat_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        cat = Catalog(tmp)
-        docs = _t(spark, sf_dir, "documents")
-        pages = datagen.pages_from_documents(docs)
+    def build() -> Catalog:
+        cat = Catalog(tmp_dir("sparkgraft_contract_cat_"))
+        pages = datagen.pages_from_documents(_t(spark, sf_dir, "documents"))
         lineage.run_extraction(spark, pages, cat, "contract-run")
-        _PIPELINE_CATS[key] = cat
-    return _PIPELINE_CATS[key]
+        return cat
+
+    return _memo(_PIPELINE_CATS, (spark, sf_dir), build,
+                 lambda cat: shutil.rmtree(cat.root, ignore_errors=True))
 
 
 # page timestamps are EPOCH_TS + doc_id minutes (datagen.warc_ts_for). The
@@ -846,8 +845,6 @@ def q_pii_redaction(spark, sf_dir):
 def q_stream_hourly_counts(spark, sf_dir):
     """Structured Streaming variant of q_hourly_event_counts (engine
     extension; the reference has no streaming operators, SURVEY §2.9)."""
-    from .streaming.stream import hourly_event_counts_stream  # noqa: PLC0415
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return hourly_event_counts_stream(spark, sf_dir)
 

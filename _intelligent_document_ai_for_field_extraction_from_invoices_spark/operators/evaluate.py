@@ -1,7 +1,8 @@
 """Run cost and throughput over committed lineage rows (SURVEY §3.3 retarget
-of evaluate.py's A8/A9 metrics): per-partition cost, run-level throughput
-and cost on the deterministic estimate tier, and measured throughput from
-the per-partition wall time. All native expressions."""
+of evaluate.py's A8/A9 metrics): per-partition cost and run-level
+throughput from the measured per-partition wall time (lineage wall_ms), and
+run-level throughput and cost on the deterministic estimate tier. All
+native expressions."""
 
 from __future__ import annotations
 
@@ -9,23 +10,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 CPU_RATE_PER_HOUR = 0.01  # ref cost model, executable.py:473-488
-# estimate tier for lineage rows without measured wall_ms: ~2 MB/s/core of
-# extracted text, measured on this pipeline's flagship
+# run_performance_summary's estimate tier: ~2 MB/s/core of extracted text,
+# measured on this pipeline's flagship
 EST_BYTES_PER_SEC = 2_000_000.0
 
 
 def cost_metrics(lineage_df: DataFrame) -> DataFrame:
     """A9/F17 + A8: cost model over lineage rows — cost = processing seconds
-    x hourly rate (ref executable.py:473-488). Seconds are MEASURED when the
-    lineage carries wall_ms (run_extraction records real per-partition UDF
-    wall time); the bytes-based estimate is only the fallback for lineage
-    written without timings."""
-    est_sec = F.col("bytes_out") / F.lit(EST_BYTES_PER_SEC)
-    if "wall_ms" in lineage_df.columns:
-        sec = F.coalesce(F.col("wall_ms") / 1000.0, est_sec)
-    else:
-        sec = est_sec
-    cost = F.round(sec / 3600.0 * CPU_RATE_PER_HOUR, 8)
+    x hourly rate (ref executable.py:473-488), over the MEASURED seconds
+    run_extraction records per partition (lineage wall_ms)."""
+    cost = F.round(F.col("wall_ms") / 1000.0 / 3600.0 * CPU_RATE_PER_HOUR, 8)
     return lineage_df.select(
         "part_id", "n_rows", "bytes_out", cost.alias("est_cost_usd")
     ).withColumn("cost_per_row_usd",
@@ -65,15 +59,7 @@ def performance_metrics(lineage_df: DataFrame) -> DataFrame:
     """A8: measured throughput from lineage wall_ms — the ref's runtime
     formulas (docs/hour = n / (sum proc_time / 3600), evaluate.py:443-446;
     pages/sec = 1 / mean(page_time), ocr.py:638) over real per-partition UDF
-    wall time rather than byte estimates. Lineage written without timings
-    (pre-wall_ms tables, or extract_pages without with_timings) falls back
-    to the byte estimate, like cost_metrics."""
-    if "wall_ms" in lineage_df.columns:
-        ms = F.coalesce(F.col("wall_ms"),
-                        F.col("bytes_out") / F.lit(2_000.0))
-    else:
-        ms = F.col("bytes_out") / F.lit(2_000.0)  # ~2 MB/s -> ms
-    lineage_df = lineage_df.withColumn("wall_ms", ms)
+    wall time rather than byte estimates."""
     sec = F.sum("wall_ms") / 1000.0
     return lineage_df.agg(
         F.sum("n_rows").alias("n_docs"),

@@ -7,11 +7,13 @@ plans/skew.py), so "which partitions are done" is stable across runs. A run:
   2. LEFT ANTI joins against the checkpoint table's committed part_ids
      (the reference's resume analogue: skip already-processed documents)
   3. extracts only the remaining partitions
-  4. appends results + one lineage row per partition + checkpoint rows,
-     each an atomic snapshot commit (sources/tables.py), all tagged with one
-     txn id; the checkpoint append is the transaction's commit marker, and
-     torn transactions (crash before the marker) are rolled back on the next
-     run by metadata-only file-list surgery (Catalog.remove_orphan_appends)
+  4. appends results (always partitioned by crawl day, warc_day) + one
+     lineage row per partition (with its measured wall_ms) + checkpoint
+     rows, each an atomic snapshot commit (sources/tables.py), all tagged
+     with one txn id; the checkpoint append is the transaction's commit
+     marker, and torn transactions (crash before the marker) are rolled
+     back on the next run by metadata-only file-list surgery
+     (Catalog.remove_orphan_appends)
 
 Re-running after a crash processes only missing partitions; re-running a
 complete run is a no-op — idempotence is tested in tests/test_tables_resume.py.
@@ -39,34 +41,18 @@ CHECKPOINT_TABLE = "checkpoint"
 WARC_DAY_COL = "warc_day"
 
 
-def with_warc_day(pages: DataFrame) -> DataFrame | None:
-    """Derive the crawl-day partition column, or None when the pages have
-    no warc_ts. ONE definition shared by the batch pipeline and
+def with_warc_day(pages: DataFrame) -> DataFrame:
+    """Derive the crawl-day partition column; pages without warc_ts raise
+    ValueError. ONE definition shared by the batch pipeline and
     streaming.extract_stream — the whole point of the shared layout is
     that batch and streamed results prune identically, which two
     independent date_format copies would silently break."""
     if "warc_ts" not in pages.columns:
-        return None
+        raise ValueError(
+            "pages need a warc_ts column: extraction results are "
+            f"partitioned by the crawl day ({WARC_DAY_COL}) derived from it")
     return pages.withColumn(
         WARC_DAY_COL, F.date_format("warc_ts", "yyyy-MM-dd"))
-
-
-def day_stamped(pages: DataFrame, catalog: Catalog,
-                table: str) -> DataFrame | None:
-    """`with_warc_day(pages)` when `table` takes the day-partitioned
-    layout, else None. The one resume guard of run_extraction and
-    streaming.extract_stream: a table written by the pre-day-layout
-    pipeline has no warc_day column, and mixing partitioned and
-    unpartitioned files would make day-pruned reads silently drop the old
-    rows (old files read warc_day=NULL), so such a table keeps its
-    unpartitioned layout. Reads the current snapshot once."""
-    dayed = with_warc_day(pages)
-    if dayed is None:
-        return None
-    cur = catalog._read_current(table)
-    if cur is None or f'"{WARC_DAY_COL}"' in cur["schema"]:
-        return dayed
-    return None
 
 
 def stamp_part_id(pages: DataFrame, num_partitions: int) -> DataFrame:
@@ -78,12 +64,10 @@ def stamp_part_id(pages: DataFrame, num_partitions: int) -> DataFrame:
 
 
 def lineage_rows(results: DataFrame) -> DataFrame:
-    # measured per-partition extraction wall time when the results carry the
-    # per-doc wall_ms column (extract_pages(with_timings=True)); else null
-    wall = (F.round(F.sum("wall_ms"), 3) if "wall_ms" in results.columns
-            else F.lit(None).cast("double"))
+    # measured per-partition extraction wall time from the per-doc wall_ms
+    # column (extract_pages(with_timings=True))
     return results.groupBy("part_id").agg(
-        wall.alias("wall_ms"),
+        F.round(F.sum("wall_ms"), 3).alias("wall_ms"),
         F.count("*").alias("n_rows"),
         F.sum("n_html_bytes").alias("bytes_in"),
         F.sum(F.length(F.col("body_text"))).alias("bytes_out"),
@@ -110,22 +94,19 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
     rolled back (metadata-only file-list surgery), so a torn run can never
     leave duplicate rows in the results table.
 
+    Pages without warc_ts raise ValueError before anything is committed.
+
     Returns {parts_done, parts_skipped, rows_written, parts_total}, always."""
+    # results land PARTITIONED by crawl day (the read users do daily: "give
+    # me one day of one crawl" — a manifest-pruned scan instead of a full
+    # table scan); warc_day rides through the extraction UDF as a
+    # passthrough column so no join-back shuffle is needed
+    stamped = stamp_part_id(with_warc_day(pages), num_partitions)
     # reconcile torn transactions from crashed runs before planning the work
     live = catalog.txns(CHECKPOINT_TABLE)
     for t in (RESULTS_TABLE, LINEAGE_TABLE):
         catalog.remove_orphan_appends(t, live)
 
-    # results land PARTITIONED by crawl day (the read users do daily: "give
-    # me one day of one crawl" — a manifest-pruned scan instead of a full
-    # table scan); warc_day rides through the extraction UDF as a
-    # passthrough column so no join-back shuffle is needed
-    dayed = day_stamped(pages, catalog, RESULTS_TABLE)
-    partition_results = dayed is not None
-    if partition_results:
-        pages = dayed
-
-    stamped = stamp_part_id(pages, num_partitions)
     done = committed_parts(spark, catalog)
     if done is not None:
         remaining = stamped.join(done, "part_id", "left_anti")
@@ -145,15 +126,11 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
     todo = remaining.filter(F.col("part_id").isin(part_ids))
     # group commit: extract all todo partitions in one distributed pass, the
     # stable checkpoint part_id rides through the UDF (no join-back shuffle)
-    passthrough = [("ckpt_part", "int")]
-    in_cols = ["url", "html", F.col("part_id").alias("ckpt_part")]
-    if partition_results:
-        passthrough.append(("warc_day", "string"))
-        in_cols.append(F.col("warc_day"))
     results = (
         extract_pages(
-            todo.select(*in_cols),
-            passthrough=passthrough,
+            todo.select("url", "html", F.col("part_id").alias("ckpt_part"),
+                        WARC_DAY_COL),
+            passthrough=[("ckpt_part", "int"), (WARC_DAY_COL, "string")],
             with_timings=True,  # A8: lineage carries measured wall_ms
         )
         .withColumn("run_id", F.lit(run_id))
@@ -182,7 +159,7 @@ def run_extraction(spark: SparkSession, pages: DataFrame, catalog: Catalog,
             "committed_at")
         txn = f"{run_id}:{uuid.uuid4().hex[:12]}"
         catalog.append(RESULTS_TABLE, results, txn=txn,
-                       partition_by=["warc_day"] if partition_results else None)
+                       partition_by=[WARC_DAY_COL])
         catalog.append(LINEAGE_TABLE, lin, txn=txn, partition_by=["run_id"])
         catalog.append(CHECKPOINT_TABLE,
                        lin.select("part_id", "run_id", "committed_at"), txn=txn)

@@ -42,7 +42,7 @@ def get_spark(app: str = "webtext-extraction",
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    n = (os.cpu_count() or 8) if cores in ("*", None) else int(cores)
+    n = (os.cpu_count() or 8) if cores == "*" else int(cores)
     b = b.config("spark.sql.shuffle.partitions", str(max(8, int(n))))
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -13,8 +13,11 @@ Metadata layout (Iceberg manifest-list shape):
   <table>/_meta/v<N>.json       SNAPSHOT: a manifest LIST — one small entry
                                 per live manifest (path, n_files, txn set,
                                 op, per-column partition-value summary) —
-                                plus the table schema and the cumulative
-                                set of every txn ever committed (all_txns).
+                                plus the table schema and the set of
+                                txns committed since the last overwrite
+                                (all_txns; an overwrite restarts it at its
+                                own txn, so it is the replay set txns()
+                                returns).
                                 Creating this file (atomic os.link,
                                 fail-if-exists) IS the commit point.
   <table>/_meta/_current        advisory version HINT (atomic os.replace);
@@ -374,8 +377,8 @@ class Catalog:
     def _load_snap(self, table: str, version: int) -> dict:
         """Open committed snapshot `version` — the one place snapshot
         metadata enters the program, so the one layout check: a v<N>.json
-        without the manifest list, the cumulative `all_txns` set or a
-        recorded schema raises ValueError naming the version. A missing
+        without the manifest list, the `all_txns` set or a recorded schema
+        raises ValueError naming the version. A missing
         file raises FileNotFoundError."""
         with open(os.path.join(self._meta(table), f"v{version}.json")) as f:
             snap = json.load(f)
@@ -399,10 +402,11 @@ class Catalog:
             "manifests": manifests,
             "txn": txn,
             "schema": schema,
-            # Iceberg-like cumulative txn summary: the CURRENT snapshot knows
-            # every txn tag ever committed, so the exactly-once replay check
-            # (txns()) is O(1) metadata file opens instead of walking every
-            # historical version json — which streaming calls per micro-batch
+            # Iceberg-like txn summary: the CURRENT snapshot knows every txn
+            # tag committed since the last overwrite, so the exactly-once
+            # replay check (txns()) is O(1) metadata file opens instead of
+            # walking every historical version json — which streaming calls
+            # per micro-batch
             "all_txns": sorted(set(all_txns) | ({txn} if txn else set())),
             "committed_at": time.time(),
         }
@@ -558,8 +562,12 @@ class Catalog:
     def overwrite(self, table: str, df: DataFrame,
                   txn: str | None = None) -> int:
         """Replace the table's contents. `txn` tags the commit the same way
-        append's does, so writers with replace semantics (e.g. an index
-        rebuild) get the same exactly-once replay detection via txns().
+        append's does, and the replaced history goes with the replaced
+        rows: the new snapshot's txn set is just {txn} (empty when
+        untagged). So a replace-semantics writer (an index rebuild, a
+        curate stage) replays exactly while its commit is the current
+        contents — `txn in txns(table)`, the same check append writers
+        use — and a later overwrite by another run makes it recompute.
         A commit conflict rebases and retries: replace semantics clobber
         whatever the concurrent writer committed by DESIGN (the overwrite
         serializes after it)."""
@@ -569,8 +577,7 @@ class Catalog:
         def build(cur):
             return dict(manifests=[entry], operation="overwrite",
                         parent=cur["version"] if cur else None, txn=txn,
-                        schema=df.schema.json(),
-                        all_txns=cur["all_txns"] if cur else [])
+                        schema=df.schema.json(), all_txns=[])
 
         return self._commit_rebased(table, build)
 
@@ -611,13 +618,26 @@ class Catalog:
         Schema evolution is additive: an appended frame may carry NEW
         columns (recorded nullable; readers see null for pre-evolution
         files via the recorded-schema read path); a type change on an
-        existing column raises.
+        existing column raises. A `partition_by` column the existing
+        table's recorded schema lacks raises ValueError before any file
+        is staged: the table's old files hold no such column, so mixing
+        them with partitioned files would make a pruned read silently drop
+        the old rows.
 
         Concurrent writers are safe: the staged files and the new
         manifest are parent-independent, so a commit conflict (another
         append/compact won the version) rebases the manifest LIST against
         the fresh snapshot and retries — neither writer's rows are lost
         (Iceberg's optimistic append)."""
+        cur = self._read_current(table) if partition_by else None
+        if cur is not None:
+            have = {f["name"] for f in json.loads(cur["schema"])["fields"]}
+            missing = [c for c in partition_by if c not in have]
+            if missing:
+                raise ValueError(
+                    f"cannot append to {table!r} partitioned by {missing}: "
+                    "the table's recorded schema has no such column, and "
+                    "pruned reads would drop its unpartitioned rows")
         rows = self._stage(table, df, partition_by, txn=txn)
         entry = self._write_manifest(table, rows, [txn])
 
@@ -634,12 +654,15 @@ class Catalog:
         return self._commit_rebased(table, build)
 
     def txns(self, table: str) -> set[str]:
-        """Transaction tags of all snapshots ever committed to `table` —
-        including ones whose version metadata vacuum has since expired;
-        empty for an absent table.
+        """Transaction tags committed to `table` since its last overwrite,
+        the overwrite's own tag included — also ones whose version metadata
+        vacuum has since expired; empty for an absent table. `txn in
+        txns(table)` is every writer's replay check: on an append-only
+        table it covers every tag ever committed, and on a replace-
+        semantics table it holds only for the current contents' committer.
 
         Two metadata file opens (the _current hint + the current
-        snapshot's cumulative `all_txns` set). This runs on EVERY streaming
+        snapshot's `all_txns` set). This runs on EVERY streaming
         micro-batch and CLI run as the exactly-once replay check, so it
         must not walk table history."""
         cur = self._read_current(table)
@@ -957,9 +980,9 @@ class Catalog:
                     except OSError:
                         pass
         # expired version jsons: every version but _current's, compacted to
-        # one history line each. Cumulative txn summaries ride in the
-        # CURRENT snapshot (all_txns), so expiry cannot break the
-        # exactly-once replay check for old txns.
+        # one history line each. The txn summary rides in the CURRENT
+        # snapshot (all_txns), so expiry cannot break the exactly-once
+        # replay check for old txns.
         # The age gate applies to version jsons too (review finding): a
         # concurrent reader lists _meta then opens each version file, and
         # expiring a just-superseded version under it would race the open;

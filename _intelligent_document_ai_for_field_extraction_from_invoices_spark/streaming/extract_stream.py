@@ -7,7 +7,7 @@ streaming plans, so per-url byte identity holds micro-batch by micro-batch.
 That composability — one operator definition, batch and stream — is the
 Spark-first payoff the reference's thread-pool file loop cannot express.
 `stream_to_catalog` is the one streaming sink: exactly-once catalog appends
-under the batch pipeline's day-partitioned layout."""
+under the batch pipeline's layout, always partitioned by crawl day."""
 
 from __future__ import annotations
 
@@ -34,27 +34,23 @@ def stream_to_catalog(spark: SparkSession, pages_dir: str, catalog,
     Streaming may RE-RUN a batch after a crash-restart (foreachBatch is
     at-least-once); the txn check makes the replay a no-op, upgrading the
     sink to exactly-once — the same marker discipline as the batch
-    pipeline's checkpoint commit (plans/lineage.py). Returns the query."""
-    from ..plans.lineage import WARC_DAY_COL, day_stamped  # noqa: PLC0415
+    pipeline's checkpoint commit (plans/lineage.py). Pages without
+    warc_ts raise ValueError before the query starts. Returns the query."""
+    from ..plans.lineage import WARC_DAY_COL, with_warc_day  # noqa: PLC0415
 
     stream = _stream_reader(spark, pages_dir, files_per_trigger)
-    # same day-partitioned layout and resume guard as the batch pipeline —
-    # ONE shared decision (plans/lineage.day_stamped) so streamed results
-    # prune identically under the report/read path
-    dayed = day_stamped(stream, catalog, table)
-    partitioned = dayed is not None
-    passthrough = []
-    if partitioned:
-        stream = dayed.select("url", "html", WARC_DAY_COL)
-        passthrough = [(WARC_DAY_COL, "string")]
-    results = extract_pages(stream, passthrough=passthrough)
+    # the batch pipeline's day-partitioned layout, from the ONE shared
+    # warc_day derivation (plans/lineage.with_warc_day), so streamed
+    # results prune identically under the report/read path
+    results = extract_pages(
+        with_warc_day(stream).select("url", "html", WARC_DAY_COL),
+        passthrough=[(WARC_DAY_COL, "string")])
 
     def write_batch(df, batch_id: int):
         txn = f"stream:{table}:{batch_id}"
         if txn in catalog.txns(table):
             return  # replayed micro-batch: already durably committed
-        catalog.append(table, df, txn=txn,
-                       partition_by=[WARC_DAY_COL] if partitioned else None)
+        catalog.append(table, df, txn=txn, partition_by=[WARC_DAY_COL])
 
     return (
         results.writeStream.foreachBatch(write_batch)

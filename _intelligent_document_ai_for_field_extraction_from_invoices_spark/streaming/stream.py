@@ -8,18 +8,18 @@ bounded parquet source to completion synchronously)."""
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _tmp_out() -> str:
-    import atexit  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    d = tempfile.mkdtemp(prefix="sparkgraft_stream_")
+def tmp_dir(prefix: str) -> str:
+    """A fresh temporary directory, removed when the interpreter exits."""
+    d = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
 
@@ -45,7 +45,7 @@ def hourly_event_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"),
              F.round(F.sum("value"), 2).alias("sum_value"))
     )
-    out = _tmp_out()
+    out = tmp_dir("sparkgraft_stream_")
     q = (
         agg.writeStream.outputMode("complete")
         .option("checkpointLocation", f"{out}/_checkpoint")

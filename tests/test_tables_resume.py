@@ -198,48 +198,54 @@ def test_failed_commit_releases_results_cache(spark, pages, tmp_path,
     assert cache.isEmpty()
 
 
-def test_resume_into_pre_day_layout_table(spark, pages, tmp_path):
-    """ADVICE regression: resuming into a results table written by the
-    pre-day-partitioned pipeline (no warc_day column) must match the
-    EXISTING layout — mixing files with and without warc_day would make
-    day-pruned reads silently drop the old rows."""
-    legacy_pages = pages.drop("warc_ts")  # pre-day pipeline had no crawl ts
-    cat = Catalog(str(tmp_path))
-    lineage.run_extraction(spark, first_parts(legacy_pages), cat, "run-old",
-                           num_partitions=8)
-    assert "warc_day" not in cat.read(spark, lineage.RESULTS_TABLE).columns
-
-    # resume with day-carrying pages: the guard must fall back to the
-    # legacy unpartitioned layout instead of mixing schemas
-    s2 = lineage.run_extraction(spark, pages, cat, "run-new",
-                                num_partitions=8)
-    assert s2["parts_done"] == 5 and s2["parts_skipped"] == 3
-    res = cat.read(spark, lineage.RESULTS_TABLE)
-    assert "warc_day" not in res.columns
-    assert res.count() == pages.count()
-    urls = [r.url for r in res.select("url").collect()]
-    assert len(urls) == len(set(urls))  # no dropped or duplicated rows
-
-    # the streaming sink shares the guard: a day-carrying stream into a
-    # table first written without warc_ts keeps the unpartitioned layout
+def test_pages_without_warc_ts_are_rejected(spark, pages, tmp_path):
+    """Results are always partitioned by crawl day, so pages without the
+    warc_ts it is derived from raise ValueError naming the column — in
+    the batch pipeline and in the streaming sink — and commit nothing."""
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.streaming import (
         extract_stream,
     )
 
+    no_ts = pages.drop("warc_ts")
+    cat = Catalog(str(tmp_path / "cat"))
+    lineage.run_extraction(spark, first_parts(pages), cat, "run-a",
+                           num_partitions=8)
+    versions = {t: [s["version"] for s in cat.snapshots(t)]
+                for t in (lineage.RESULTS_TABLE, lineage.LINEAGE_TABLE,
+                          lineage.CHECKPOINT_TABLE)}
+    with pytest.raises(ValueError, match="warc_ts"):
+        lineage.run_extraction(spark, no_ts, cat, "run-b", num_partitions=8)
+    assert {t: [s["version"] for s in cat.snapshots(t)]
+            for t in versions} == versions
+
     pages_dir = str(tmp_path / "pages")
-    pages.write.parquet(pages_dir)
-    cat.append("streamed", res.limit(5))
-    q = extract_stream.stream_to_catalog(
-        spark, pages_dir, cat, "streamed", str(tmp_path / "ck"))
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(60)
-    streamed = cat.read(spark, "streamed")
-    assert "warc_day" not in streamed.columns
-    assert streamed.count() == 5 + pages.count()
-    assert all(r["partition"] is None
-               for e in cat._read_current("streamed")["manifests"]
-               for r in cat._read_manifest(e))
+    no_ts.write.parquet(pages_dir)
+    with pytest.raises(ValueError, match="warc_ts"):
+        extract_stream.stream_to_catalog(
+            spark, pages_dir, cat, "streamed", str(tmp_path / "ck"))
+    assert not cat.exists("streamed")
+
+
+def test_partitioned_append_onto_unpartitioned_table_is_rejected(
+        spark, pages, tmp_path):
+    """A table whose recorded schema has no warc_day holds files without
+    it; appending day-partitioned files would make day-pruned reads drop
+    the old rows. The append raises before staging anything: the
+    snapshot and the data/ staging dirs are unchanged."""
+    import os
+
+    cat = Catalog(str(tmp_path))
+    cat.append("t", pages.select("url"), txn="old")
+    data = os.path.join(str(tmp_path), "t", "data")
+    stages = sorted(os.listdir(data))
+    snaps = cat.snapshots("t")
+    dayed = lineage.with_warc_day(pages).select("url", lineage.WARC_DAY_COL)
+    with pytest.raises(ValueError, match=lineage.WARC_DAY_COL):
+        cat.append("t", dayed, txn="new",
+                   partition_by=[lineage.WARC_DAY_COL])
+    assert cat.snapshots("t") == snaps
+    assert sorted(os.listdir(data)) == stages
+    assert cat.txns("t") == {"old"}
 
 
 def test_lineage_carries_measured_wall_ms(spark, pages, tmp_path):
@@ -387,6 +393,13 @@ def test_txns_survive_version_expiry(spark, tmp_path):
     assert len(os.listdir(meta)) < 40
     # current data unaffected
     assert cat.read(spark, "t").count() == 60
+    # an overwrite restarts the set at its own txn: the history it
+    # replaced goes with the rows
+    cat.overwrite("t", spark.range(3), txn="r1")
+    cat.append("t", spark.range(2), txn="x")
+    assert cat.txns("t") == {"r1", "x"}
+    cat.overwrite("t", spark.range(1), txn="r2")
+    assert cat.txns("t") == {"r2"}
 
 
 def test_meta_dir_bounded_across_append_vacuum_cycles(spark, tmp_path):
@@ -650,7 +663,7 @@ def test_catalog_model_random_op_sequences(spark, tmp_path):
             txn = f"ow{step}"
             cat.overwrite("m", _mkdf(ids, f"l{step}" if evolved else None),
                           txn=txn)
-            model_txns.add(txn)
+            model_txns = {txn}  # the replaced history goes with the rows
             model_rows = {i: (f"l{step}" if evolved else None) for i in ids}
             evolved = evolved  # overwrite re-records ITS schema
         elif op == "vacuum":
