@@ -20,8 +20,7 @@ LLM-data-pipeline operators, so the dedup suite runs without writing code:
     ... ann     --input DIR --output CAT --query-vec 1 [--k 5] [--probes 1]
                 [--kmeans]                    # IVF ANN over embeddings
 
-Legacy form (flags with no subcommand) still runs `extract`. Every
-subcommand writes its result to the output catalog (exactly-once txn tag
+Every subcommand writes its result to the output catalog (exactly-once txn tag
 per run id) and prints one summary JSON line.
 """
 
@@ -29,7 +28,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import sys
 
 from pyspark.sql import functions as F
 
@@ -182,6 +180,7 @@ def cmd_report(spark, args) -> dict:
                 "manifests": len(snaps[-1]["manifests"]),
                 "data_files": len(files),
                 "txns_committed": len(txns),
+                "partition_by": snaps[-1]["partition_by"],
                 "scan": dict(cat.last_scan_stats),
                 "meta_dir_files": len(_os.listdir(meta)),
             }
@@ -662,12 +661,6 @@ def cmd_ann(spark, args) -> dict:
 
 
 def main(argv=None) -> None:
-    argv = list(sys.argv[1:] if argv is None else argv)
-    # legacy flags-only invocation routes to `extract` — but bare -h/--help
-    # must still show the TOP-LEVEL help (the subcommand list)
-    if argv and argv[0].startswith("-") and argv[0] not in ("-h", "--help"):
-        argv = ["extract", *argv]
-
     ap = argparse.ArgumentParser(prog="webtext-extract")
     sub = ap.add_subparsers(dest="cmd", required=True)
 

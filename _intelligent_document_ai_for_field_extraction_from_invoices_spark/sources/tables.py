@@ -13,8 +13,11 @@ Metadata layout (Iceberg manifest-list shape):
   <table>/_meta/v<N>.json       SNAPSHOT: a manifest LIST — one small entry
                                 per live manifest (path, n_files, txn set,
                                 op, per-column partition-value summary) —
-                                plus the table schema and the set of
-                                txns committed since the last overwrite
+                                plus the table schema, its partition spec
+                                (partition_by: the column list every live
+                                file is partitioned by, [] when
+                                unpartitioned) and the set of txns
+                                committed since the last overwrite
                                 (all_txns; an overwrite restarts it at its
                                 own txn, so it is the replay set txns()
                                 returns).
@@ -25,7 +28,13 @@ Metadata layout (Iceberg manifest-list shape):
 
 This is the only layout the catalog reads: `_load_snap` is where snapshot
 metadata enters the program, and it rejects a v<N>.json without a manifest
-list, an all_txns set or a schema (ValueError naming the version).
+list, an all_txns set, a schema or a partition spec (ValueError naming the
+version).
+
+A table has one partition spec (Iceberg's partition spec): the first
+append sets it, `overwrite` resets it to [], and every other writer carries
+it forward. An append whose `partition_by` differs raises ValueError before
+staging a file, so every manifest records a value for every spec column.
 
 An append therefore writes O(new files) manifest bytes plus an O(#manifests)
 snapshot, and #manifests is kept bounded by merging small manifests on
@@ -53,17 +62,20 @@ exists. Every writer (append, overwrite, rollback, compact) commits through
 one retry loop, `_commit_rebased`: its staged files are parent-independent,
 so a lost race only recomputes the snapshot against the winner's.
 
-Partition predicates (`where=` on read/scan_files) accept:
-  {"lang": "en"}                          equality
-  {"lang": ("in", ["en", "hi"])}          membership
-  {"day": (">=", "2025-01-01")}           range (also <=, >, <)
+Partition predicates (`where=` on read/scan_files) name spec columns only
+(any other key raises ValueError) and accept:
+  {"lang": "en"}                                     equality
+  {"lang": None}                                     IS NULL
+  {"day": (">=", "2025-01-01")}                      inclusive bound (also <=)
   {"day": ("between", "2025-01-01", "2025-02-01")}   inclusive range
-Values compare as Spark STRING casts (manifest values always are): range
-predicates are lexicographic, which is correct for zero-padded dates and
-fixed-width keys — the pipeline's partition columns. Python bool/int/None
-predicate values are normalized to Spark's cast-to-string form ('true', not
-'True'); floats raise (Java's Double.toString disagrees with Python repr —
-pass the string you partitioned with).
+Each reduces to one inclusive string range (lo, hi), an end None when open;
+equality is (v, v). Any other op raises ValueError. Values compare as Spark
+STRING casts (manifest values always are): ranges are lexicographic, which
+is correct for zero-padded dates and fixed-width keys — the pipeline's
+partition columns. Python bool/int/None predicate values are normalized to
+Spark's cast-to-string form ('true', not 'True'); floats raise (Java's
+Double.toString disagrees with Python repr — pass the string you
+partitioned with).
 """
 
 from __future__ import annotations
@@ -151,98 +163,54 @@ def _uri_path(path: str) -> str:
     return re.sub(r"[^A-Za-z0-9\-_.!~*'():@&=+$,;/]", esc, path)
 
 
-_RANGE_OPS = {">=", "<=", ">", "<"}
+def _normalize_pred(spec) -> tuple[str | None, str | None] | None:
+    """Parse one `where` entry into an inclusive string range (lo, hi),
+    an end None when open, or None for IS NULL."""
+    if not isinstance(spec, (tuple, list)):
+        v = _pvalue(spec)
+        return None if v == HIVE_NULL else (v, v)
+    op, *bounds = spec
+    if (op, len(bounds)) not in ((">=", 1), ("<=", 1), ("between", 2)):
+        raise ValueError(f"unknown partition predicate: {spec!r}")
+    vals = [_pvalue(b) for b in bounds]
+    if HIVE_NULL in vals:
+        raise ValueError(f"a range bound cannot be None: {spec!r}")
+    return {">=": (vals[0], None), "<=": (None, vals[0])}.get(op, tuple(vals))
 
 
-def _normalize_pred(spec) -> tuple:
-    """Parse one `where` entry into a normalized predicate tuple."""
-    if isinstance(spec, (tuple, list)):
-        op = spec[0]
-        if op == "in":
-            return ("in", sorted({_pvalue(x) for x in spec[1]}))
-        if op in ("=", "=="):
-            return ("=", _pvalue(spec[1]))
-        if op in _RANGE_OPS:
-            return (op, _pvalue(spec[1]))
-        if op == "between":
-            return ("between", _pvalue(spec[1]), _pvalue(spec[2]))
-        raise ValueError(f"unknown partition predicate op: {op!r}")
-    return ("=", _pvalue(spec))
+def _match_value(pred, v: str) -> bool:
+    """Does one file's recorded partition value satisfy the predicate? The
+    hive sentinel dir holds BOTH null and empty-string rows, so a sentinel
+    file is kept for IS NULL and whenever '' lies in the range (pruning it
+    while the residual `c >= ''` would match is a silent row loss); null
+    rows themselves never satisfy a range."""
+    if pred is None:
+        return v == HIVE_NULL
+    lo, hi = pred
+    v = "" if v == HIVE_NULL else v
+    return (lo is None or lo <= v) and (hi is None or v <= hi)
 
 
-def _match_value(pred: tuple, v: str | None) -> bool:
-    """Does one file's recorded partition value satisfy the predicate?
-    Unknown values (file written without partition_by) conservatively
-    match — pruning is an optimization, the residual filter is exact.
-    The hive sentinel dir holds BOTH null and empty-string rows, so a
-    sentinel file must be kept whenever '' could satisfy the predicate
-    (review finding: pruning it while the residual `c == ''` / `c >= ''`
-    would match is a silent row loss)."""
-    if v is None:
-        return True
-    op = pred[0]
-    if op == "=":
-        return v == pred[1] or (v == HIVE_NULL and pred[1] == "")
-    if op == "in":
-        return v in pred[1] or (v == HIVE_NULL and "" in pred[1])
-    if v == HIVE_NULL:
-        v = ""  # the sentinel may hide '' rows; nulls themselves never
-        # satisfy a range (null string casts compare to null -> filtered)
-    if op == ">=":
-        return v >= pred[1]
-    if op == "<=":
-        return v <= pred[1]
-    if op == ">":
-        return v > pred[1]
-    if op == "<":
-        return v < pred[1]
-    return pred[1] <= v <= pred[2]  # between
-
-
-def _match_summary(pred: tuple, summ: dict | None) -> bool:
+def _match_summary(pred, summ: dict) -> bool:
     """Can ANY file in a manifest satisfy the predicate, judged from the
-    manifest-list value summary alone? None (column not recorded for every
-    file) conservatively keeps the manifest."""
-    if summ is None:
-        return True
+    manifest-list value summary alone?"""
     if "values" in summ:
         return any(_match_value(pred, v) for v in summ["values"])
     # bounds summary: {min, max} over non-null values, "null": True if any
-    has_null = summ.get("null", False)
-    lo, hi = summ.get("min"), summ.get("max")
-    op = pred[0]
-    if op == "=":
-        if pred[1] in (HIVE_NULL, ""):
-            return has_null
-        return lo is not None and lo <= pred[1] <= hi
-    if op == "in":
-        return any(_match_summary(("=", v), summ) for v in pred[1])
-    if has_null and _match_value(pred, HIVE_NULL):
-        return True  # sentinel files may hide '' rows the range matches
-    if lo is None:  # otherwise an all-null manifest never overlaps a range
+    if summ["null"] and _match_value(pred, HIVE_NULL):
+        return True  # sentinel files: null rows, or '' rows in the range
+    if pred is None or "min" not in summ:
         return False
-    if op == ">=":
-        return hi >= pred[1]
-    if op == "<=":
-        return lo <= pred[1]
-    if op == ">":
-        return hi > pred[1]
-    if op == "<":
-        return lo < pred[1]
-    return hi >= pred[1] and lo <= pred[2]  # between
+    lo, hi = pred
+    return (lo is None or lo <= summ["max"]) and \
+        (hi is None or summ["min"] <= hi)
 
 
-def _build_summary(rows: list[dict]) -> dict[str, dict]:
-    """Per-column partition-value summary for a manifest entry. A column is
-    summarized only when EVERY file in the manifest records it — otherwise
-    the column is omitted and predicates on it keep the manifest."""
-    if not rows:
-        return {}
-    cols = set(rows[0]["partition"] or {})
-    for r in rows[1:]:
-        cols &= set(r["partition"] or {})
+def _build_summary(rows: list[dict], spec: list[str]) -> dict[str, dict]:
+    """Per-column partition-value summary for a manifest entry: every spec
+    column, an empty manifest's too (no values, so it never matches)."""
     out: dict[str, dict] = {}
-    for c in sorted(cols):
+    for c in spec:
         vals = sorted({r["partition"][c] for r in rows})
         if len(vals) <= SUMMARY_MAX_VALUES:
             out[c] = {"values": vals}
@@ -280,11 +248,12 @@ class Catalog:
 
     # -- manifest plumbing --------------------------------------------------
     def _write_manifest(self, table: str, rows: list[dict],
-                        txns: list[str | None],
+                        txns: list[str | None], spec: list[str],
                         op: str = "append") -> dict:
         """Write one manifest file and return its manifest-LIST entry.
-        `rows` = [{"path": ..., "partition": {col: str} | None,
-                   "txn": str | None}]. `op` records the originating
+        `rows` = [{"path": ..., "partition": {col: str},
+                   "txn": str | None}], summarized over the table's
+        partition `spec`. `op` records the originating
         operation so rollback surgery can distinguish append commits
         (rollback candidates) from overwrite commits (replace semantics —
         e.g. an ANN index rebuild — never rolled back by txn absence)."""
@@ -298,14 +267,15 @@ class Catalog:
             "n_files": len(rows),
             "txns": sorted({t for t in txns if t}),
             "op": op,
-            "summary": _build_summary(rows),
+            "summary": _build_summary(rows, spec),
         }
 
     def _read_manifest(self, entry: dict) -> list[dict]:
         with open(entry["manifest"]) as f:
             return json.load(f)["files"]
 
-    def _maybe_merge(self, table: str, entries: list[dict]) -> list[dict]:
+    def _maybe_merge(self, table: str, entries: list[dict],
+                     spec: list[str]) -> list[dict]:
         """Fold accumulated small manifests into one (Iceberg's
         commit.manifest.min-count-to-merge) so the manifest list — and with
         it the snapshot json — stays bounded across unbounded appends."""
@@ -319,7 +289,7 @@ class Catalog:
         for e in small:
             rows.extend(self._read_manifest(e))
         merged = self._write_manifest(
-            table, rows, [t for e in small for t in e["txns"]])
+            table, rows, [t for e in small for t in e["txns"]], spec)
         small_ids = {id(e) for e in small}
         return [e for e in entries if id(e) not in small_ids] + [merged]
 
@@ -377,21 +347,22 @@ class Catalog:
     def _load_snap(self, table: str, version: int) -> dict:
         """Open committed snapshot `version` — the one place snapshot
         metadata enters the program, so the one layout check: a v<N>.json
-        without the manifest list, the `all_txns` set or a recorded schema
-        raises ValueError naming the version. A missing
+        without the manifest list, the `all_txns` set, a recorded schema or
+        a partition spec raises ValueError naming the version. A missing
         file raises FileNotFoundError."""
         with open(os.path.join(self._meta(table), f"v{version}.json")) as f:
             snap = json.load(f)
         if "manifests" not in snap or "all_txns" not in snap \
-                or snap.get("schema") is None:
+                or snap.get("schema") is None or "partition_by" not in snap:
             raise ValueError(
                 f"version {version} of table {table!r} is not a manifest-"
-                "list snapshot with all_txns and a schema")
+                "list snapshot with all_txns, a schema and a partition spec")
         return snap
 
     def _commit(self, table: str, manifests: list[dict], operation: str,
                 parent: int | None, txn: str | None = None, *,
-                schema: str, all_txns: list[str]) -> int:
+                schema: str, all_txns: list[str],
+                partition_by: list[str]) -> int:
         meta = self._meta(table)
         os.makedirs(meta, exist_ok=True)
         version = (parent or 0) + 1
@@ -402,6 +373,7 @@ class Catalog:
             "manifests": manifests,
             "txn": txn,
             "schema": schema,
+            "partition_by": partition_by,
             # Iceberg-like txn summary: the CURRENT snapshot knows every txn
             # tag committed since the last overwrite, so the exactly-once
             # replay check (txns()) is O(1) metadata file opens instead of
@@ -505,8 +477,7 @@ class Catalog:
                     # listing and the open — it was already historical
         return sorted(out, key=lambda s: s["version"])
 
-    def _stage(self, table: str, df: DataFrame,
-               partition_by: list[str] | None = None,
+    def _stage(self, table: str, df: DataFrame, partition_by: list[str],
                txn: str | None = None) -> list[dict]:
         """Write a staging commit; returns manifest rows
         [{"path", "partition", "txn"}] parsed from the hive-style
@@ -553,7 +524,7 @@ class Catalog:
                 if fn.endswith(".parquet"):
                     rows.append({
                         "path": os.path.join(root, fn),
-                        "partition": dict(pvals) if pvals else None,
+                        "partition": dict(pvals),
                         "txn": txn,
                     })
         rows.sort(key=lambda r: r["path"])
@@ -570,14 +541,16 @@ class Catalog:
         use — and a later overwrite by another run makes it recompute.
         A commit conflict rebases and retries: replace semantics clobber
         whatever the concurrent writer committed by DESIGN (the overwrite
-        serializes after it)."""
-        rows = self._stage(table, df, txn=txn)
-        entry = self._write_manifest(table, rows, [txn], op="overwrite")
+        serializes after it). The new contents are unpartitioned: the
+        partition spec resets to []."""
+        rows = self._stage(table, df, [], txn=txn)
+        entry = self._write_manifest(table, rows, [txn], [], op="overwrite")
 
         def build(cur):
             return dict(manifests=[entry], operation="overwrite",
                         parent=cur["version"] if cur else None, txn=txn,
-                        schema=df.schema.json(), all_txns=[])
+                        schema=df.schema.json(), all_txns=[],
+                        partition_by=[])
 
         return self._commit_rebased(table, build)
 
@@ -618,38 +591,41 @@ class Catalog:
         Schema evolution is additive: an appended frame may carry NEW
         columns (recorded nullable; readers see null for pre-evolution
         files via the recorded-schema read path); a type change on an
-        existing column raises. A `partition_by` column the existing
-        table's recorded schema lacks raises ValueError before any file
-        is staged: the table's old files hold no such column, so mixing
-        them with partitioned files would make a pruned read silently drop
-        the old rows.
+        existing column raises.
+
+        The first append sets the table's partition spec; a `partition_by`
+        that differs from it raises ValueError before any file is staged
+        (and again against the snapshot the commit rebases on), so every
+        live file records a value for every spec column.
 
         Concurrent writers are safe: the staged files and the new
         manifest are parent-independent, so a commit conflict (another
         append/compact won the version) rebases the manifest LIST against
         the fresh snapshot and retries — neither writer's rows are lost
         (Iceberg's optimistic append)."""
-        cur = self._read_current(table) if partition_by else None
-        if cur is not None:
-            have = {f["name"] for f in json.loads(cur["schema"])["fields"]}
-            missing = [c for c in partition_by if c not in have]
-            if missing:
+        spec = list(partition_by or [])
+
+        def check(cur):
+            if cur is not None and cur["partition_by"] != spec:
                 raise ValueError(
-                    f"cannot append to {table!r} partitioned by {missing}: "
-                    "the table's recorded schema has no such column, and "
-                    "pruned reads would drop its unpartitioned rows")
-        rows = self._stage(table, df, partition_by, txn=txn)
-        entry = self._write_manifest(table, rows, [txn])
+                    f"cannot append to {table!r} partitioned by {spec}: "
+                    f"the table is partitioned by {cur['partition_by']}")
+
+        check(self._read_current(table))
+        rows = self._stage(table, df, spec, txn=txn)
+        entry = self._write_manifest(table, rows, [txn], spec)
 
         def build(cur):
+            check(cur)
             entries = (list(cur["manifests"]) if cur else []) + [entry]
-            entries = self._maybe_merge(table, entries)
+            entries = self._maybe_merge(table, entries, spec)
             schema = (self._merge_schema(cur["schema"], df.schema)
                       if cur else df.schema.json())
             return dict(manifests=entries, operation="append",
                         parent=cur["version"] if cur else None, txn=txn,
                         schema=schema,
-                        all_txns=cur["all_txns"] if cur else [])
+                        all_txns=cur["all_txns"] if cur else [],
+                        partition_by=spec)
 
         return self._commit_rebased(table, build)
 
@@ -723,12 +699,14 @@ class Catalog:
                 n_removed += len(rows) - len(live_rows)
                 if live_rows:
                     keep_entries.append(self._write_manifest(
-                        table, live_rows, [r["txn"] for r in live_rows]))
+                        table, live_rows, [r["txn"] for r in live_rows],
+                        cur["partition_by"]))
             if not n_removed:
                 return None
             return dict(manifests=keep_entries, operation="rollback",
                         parent=cur["version"], schema=cur["schema"],
-                        all_txns=cur["all_txns"])
+                        all_txns=cur["all_txns"],
+                        partition_by=cur["partition_by"])
 
         return n_removed if self._commit_rebased(table, build) else 0
 
@@ -741,9 +719,9 @@ class Catalog:
         pays 10^5 footer opens per scan; compaction rewrites the SAME rows
         into ceil(bytes/target) files and commits one 'compact' snapshot.
 
-        Partition layout is preserved: the partition columns recorded for
-        every current file keep their hive-style directory encoding, so
-        manifest-level pruning works identically on the compacted table.
+        Partition layout is preserved: the rewrite is partitioned by the
+        snapshot's partition spec, so manifest-level pruning works
+        identically on the compacted table.
         The rewritten manifest is untagged ('compact' op, txn=None) —
         never a rollback candidate — while the snapshot chains `all_txns`
         forward, so exactly-once replay checks for already-committed
@@ -793,34 +771,28 @@ class Catalog:
         files = self._scan(cur, None)
         total = sum(os.path.getsize(f) for f in files)
         n_target = max(1, math.ceil(total / target_file_bytes))
-        # partition columns recorded for EVERY current file keep their
-        # layout; a column only some files record cannot be trusted as a
-        # table-level layout and is dropped from the rewrite
-        parts = [r["partition"] or {} for e in cur["manifests"]
-                 for r in self._read_manifest(e)]
-        part_cols = set.intersection(*(set(p) for p in parts)) \
-            if parts else set()
-        partition_by = sorted(part_cols) if part_cols else None
+        spec = cur["partition_by"]
         # a rewrite keeps at least one file per partition value, so a table
         # already at that floor is compacted: rewriting it again would only
         # add a snapshot holding the same files' worth of data
-        n_values = len({tuple(p[c] for c in partition_by) for p in parts}) \
-            if partition_by else 1
+        n_values = len({tuple(r["partition"][c] for c in spec)
+                        for e in cur["manifests"]
+                        for r in self._read_manifest(e)})
         if len(files) <= max(n_target, n_values):
             return {"files_before": len(files), "files_after": len(files),
                     "version": None, "orphans_removed": n_orphans}
         df = self.read(spark, table, version=cur["version"])
-        if partition_by is None:
+        if not spec:
             df = df.repartition(n_target)
         # _stage splits a partition value past AQE's advisory size: use ours
         ADV_KEY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
         adv_old = spark.conf.get(ADV_KEY)
         spark.conf.set(ADV_KEY, str(target_file_bytes))
         try:
-            rows = self._stage(table, df, partition_by)
+            rows = self._stage(table, df, spec)
         finally:
             spark.conf.set(ADV_KEY, adv_old)
-        entry = self._write_manifest(table, rows, [], op="compact")
+        entry = self._write_manifest(table, rows, [], spec, op="compact")
         replaced = set(files)  # every file whose rows the rewrite holds
         pinned = cur["version"]
 
@@ -829,7 +801,7 @@ class Catalog:
                 else self._rebase_compact(table, now, replaced)
             return dict(manifests=[entry] + rest, operation="compact",
                         parent=now["version"], schema=now["schema"],
-                        all_txns=now["all_txns"])
+                        all_txns=now["all_txns"], partition_by=spec)
 
         return {"files_before": len(files), "files_after": len(rows),
                 "version": self._commit_rebased(table, build),
@@ -860,7 +832,7 @@ class Catalog:
             elif others:
                 keep.append(self._write_manifest(
                     table, others, [r["txn"] for r in others],
-                    op=e["op"]))
+                    cur["partition_by"], op=e["op"]))
             # else: fully replaced — the compacted entry carries its rows
         if still_live != replaced:
             raise ConcurrentCommitError(
@@ -1016,9 +988,8 @@ class Catalog:
         summaries rule out whole manifests without opening them; (2)
         surviving manifests' per-file partition values rule out files.
         `where` predicates hit PARTITION values (string-cast compare,
-        hive-null sentinel semantics). Files without recorded values for a
-        predicate column are conservatively kept (pruning is an
-        optimization; `read` applies the residual row filter).
+        hive-null sentinel semantics); a key outside the table's partition
+        spec raises ValueError.
         `self.last_scan_stats` records how much the scan pruned."""
         return self._scan(self._snap(table, None), where)
 
@@ -1027,22 +998,21 @@ class Catalog:
         also needs the snapshot's schema (or an older version) resolves it
         only once."""
         preds = {k: _normalize_pred(v) for k, v in (where or {}).items()}
+        if not preds.keys() <= set(snap["partition_by"]):
+            raise ValueError(
+                f"where keys {sorted(preds)} are not all partition columns "
+                f"of the table (partitioned by {snap['partition_by']})")
         stats = {"manifests_total": len(snap["manifests"]),
                  "manifests_opened": 0, "files_selected": 0}
         files: list[str] = []
         for e in snap["manifests"]:
-            summ = e["summary"]
-            if preds and not all(
-                    _match_summary(p, summ.get(c))
-                    for c, p in preds.items()):
+            if not all(_match_summary(p, e["summary"][c])
+                       for c, p in preds.items()):
                 continue  # manifest pruned: never opened
             stats["manifests_opened"] += 1
-            for r in self._read_manifest(e):
-                part = r["partition"] or {}
-                if not all(_match_value(p, part.get(c))
-                           for c, p in preds.items()):
-                    continue
-                files.append(r["path"])
+            files.extend(r["path"] for r in self._read_manifest(e)
+                         if all(_match_value(p, r["partition"][c])
+                                for c, p in preds.items()))
         stats["files_selected"] = len(files)
         self.last_scan_stats = stats
         return sorted(files)
@@ -1070,8 +1040,8 @@ class Catalog:
             # outcome: empty result with the table's recorded schema
             return spark.createDataFrame([], schema)
         df = spark.read.schema(schema).parquet(*files)
-        for k, spec in (where or {}).items():
-            df = df.filter(self._residual(df, k, _normalize_pred(spec)))
+        for k, v in (where or {}).items():
+            df = df.filter(self._residual(df, k, _normalize_pred(v)))
         return df
 
     def _commit_delta(self, table: str, since: int,
@@ -1165,28 +1135,13 @@ class Catalog:
                 .drop("_path"))
 
     @staticmethod
-    def _residual(df: DataFrame, col: str, pred: tuple):
+    def _residual(df: DataFrame, col: str, pred):
         """Row-level filter, EXACT where the hive dir encoding is lossy:
         null and '' share the sentinel dir (so both files are opened), but
         here None matches only NULL rows and '' only empty-string rows."""
         c = df[col].cast("string")
-        op = pred[0]
-        if op == "=":
-            if pred[1] == HIVE_NULL:
-                return c.isNull()
-            return c == pred[1]
-        if op == "in":
-            non_null = [v for v in pred[1] if v != HIVE_NULL]
-            cond = c.isin(non_null) if non_null else F.lit(False)
-            if HIVE_NULL in pred[1]:
-                cond = cond | c.isNull()
-            return cond
-        if op == ">=":
-            return c >= pred[1]
-        if op == "<=":
-            return c <= pred[1]
-        if op == ">":
-            return c > pred[1]
-        if op == "<":
-            return c < pred[1]
-        return (c >= pred[1]) & (c <= pred[2])  # between
+        if pred is None:
+            return c.isNull()
+        lo, hi = pred
+        return (c >= lo if lo is not None else F.lit(True)) & \
+            (c <= hi if hi is not None else F.lit(True))

@@ -17,7 +17,7 @@ def test_cli_end_to_end(tmp_path):
     out = subprocess.run(
         [sys.executable, "-m",
          "_intelligent_document_ai_for_field_extraction_from_invoices_spark",
-         "--input", SF_DIR, "--output", str(tmp_path / "cat"),
+         "extract", "--input", SF_DIR, "--output", str(tmp_path / "cat"),
          "--limit", "120", "--partitions", "4", "--cores", "2"],
         capture_output=True, text=True, timeout=420, check=True,
         cwd="/root/repo",

@@ -60,13 +60,6 @@ def test_ann_kmeans_subcommand(spark, tmp_path, capsys):
     assert out["rows_written"] == 3
 
 
-def test_legacy_flags_only_invocation_still_extracts(spark, tmp_path, capsys):
-    out = _run(capsys, "--input", SF_DIR, "--output", str(tmp_path / "cat"),
-               "--limit", "40")
-    assert out["cmd"] == "extract"
-    assert out["documents"] == 40
-
-
 def test_cc_keep_one_writes_deduped_corpus(spark, tmp_path, capsys):
     cat_dir = str(tmp_path / "cat")
     out = _run(capsys, "cc", "--input", SF_DIR, "--output", cat_dir,
@@ -437,7 +430,8 @@ def test_curate_resumes_at_failed_stage(spark, tmp_path, capsys,
 
 def test_report_internals(spark, tmp_path, capsys):
     """Round-5 verdict #8: report --internals surfaces the catalog's scale
-    claims (manifest prune stats, bounded _meta)."""
+    claims (manifest prune stats, bounded _meta) and each table's recorded
+    partition spec."""
     cat_dir = str(tmp_path / "cat")
     _run(capsys, "dedup", "--input", SF_DIR, "--output", cat_dir,
          "--run-id", "t1")
@@ -446,6 +440,14 @@ def test_report_internals(spark, tmp_path, capsys):
     assert t["versions_retained"] == t["current_version"] == 1
     assert t["scan"]["files_selected"] == t["data_files"] > 0
     assert t["txns_committed"] == 1
+    assert t["partition_by"] == []
+    ext_dir = str(tmp_path / "ext")
+    _run(capsys, "extract", "--input", SF_DIR, "--output", ext_dir,
+         "--limit", "40", "--run-id", "e1")
+    out = _run(capsys, "report", "--catalog", ext_dir, "--internals")
+    assert {t: v["partition_by"] for t, v in out["internals"].items()} == {
+        "extracted_text": ["warc_day"], "lineage": ["run_id"],
+        "checkpoint": []}
 
 
 def test_cc_emits_contraction_stats(spark, tmp_path, capsys):

@@ -40,17 +40,42 @@ def test_manifest_prunes_file_set(spark, cat):
     assert all(recorded[f] == {"lang": "en"} for f in en_files)
 
 
-def test_mixed_partitioned_and_plain_appends(spark, cat):
+def test_mixed_partitioned_and_plain_appends(spark, cat, tmp_path):
+    """A table has one partition spec: a plain append onto a partitioned
+    table and a partitioned append onto an unpartitioned one raise a
+    ValueError naming both layouts before staging a file or committing a
+    snapshot; an append that loses the commit race to a writer of another
+    spec raises too, and so does a `where` on a column outside the spec."""
     extra = spark.createDataFrame(
         [(1000, "en", "late unpartitioned row")],
         "doc_id long, lang string, text string")
-    cat.append("docs", extra)  # no partition_by: file has no partition info
-    # unpartitioned files are conservatively kept under any predicate...
-    en = cat.read(spark, "docs", where={"lang": "en"}).collect()
-    assert 1000 in {r.doc_id for r in en}
-    # ...and the residual filter still drops non-matching rows from them
-    hi = cat.read(spark, "docs", where={"lang": "hi"}).collect()
-    assert 1000 not in {r.doc_id for r in hi}
+    cat.append("plain", extra)
+    for table, layout, msg in (
+            ("docs", None, r"by \[\]: the table is partitioned by \['lang"),
+            ("plain", ["lang"], r"by \['lang'\]: the table is .* by \[\]")):
+        data = os.path.join(str(tmp_path), table, "data")
+        stages, snaps = sorted(os.listdir(data)), cat.snapshots(table)
+        with pytest.raises(ValueError, match=msg):
+            cat.append(table, extra, partition_by=layout)
+        assert sorted(os.listdir(data)) == stages
+        assert cat.snapshots(table) == snaps
+    # the commit checks again against the snapshot it lands on: a writer
+    # that sets another spec while this append stages wins the race
+    other, stage = Catalog(str(tmp_path)), cat._stage
+
+    def racing_stage(table, df, spec, txn=None):
+        rows = stage(table, df, spec, txn=txn)
+        other.append(table, extra, partition_by=["lang"])
+        return rows
+
+    cat._stage = racing_stage
+    with pytest.raises(ValueError, match=r"by \[\]: the table is .* \['lang"):
+        cat.append("race", extra)
+    assert [s["partition_by"] for s in cat.snapshots("race")] == [["lang"]]
+    with pytest.raises(ValueError, match="not all partition columns"):
+        cat.read(spark, "docs", where={"lang": "en", "text": "text 3"})
+    with pytest.raises(ValueError, match="not all partition columns"):
+        cat.scan_files("plain", where={"lang": "en"})
 
 
 def test_vacuum_keeps_live_partitioned_files(spark, cat, tmp_path):
@@ -193,8 +218,9 @@ def test_rollback_preserves_partition_metadata(spark, tmp_path):
 
 
 def test_range_and_in_predicates(spark, tmp_path):
-    """Round-4 predicate forms: range / IN / between prune at the manifest
-    level and filter residually, string-ordered (zero-padded dates)."""
+    """Every predicate is one inclusive string range: >=, <= and between
+    prune at the manifest level and filter residually, string-ordered
+    (zero-padded dates). IN, > and < are not predicate forms: they raise."""
     cat = Catalog(str(tmp_path))
     df = spark.createDataFrame(
         [(i, f"2025-01-{i % 9 + 1:02d}") for i in range(45)],
@@ -207,17 +233,24 @@ def test_range_and_in_predicates(spark, tmp_path):
 
     exp_ge = sorted(i for i in range(45) if i % 9 + 1 >= 7)
     assert ids({"day": (">=", "2025-01-07")}) == exp_ge
-    exp_in = sorted(i for i in range(45) if i % 9 + 1 in (2, 5))
-    assert ids({"day": ("in", ["2025-01-02", "2025-01-05"])}) == exp_in
     exp_bt = sorted(i for i in range(45) if 3 <= i % 9 + 1 <= 4)
     assert ids({"day": ("between", "2025-01-03", "2025-01-04")}) == exp_bt
-    # a partition range combined with a predicate on an unpartitioned
-    # column: files without recorded values stay, the residual is exact
-    both = {"day": (">=", "2025-01-07"), "doc_id": ("in", [3, 6, 16, 40])}
-    assert ids(both) == [6, 16]
+    # equal bounds are equality; '' is below every value
+    exp_eq = sorted(i for i in range(45) if i % 9 + 1 == 5)
+    assert ids({"day": ("between", "2025-01-05", "2025-01-05")}) == exp_eq
+    assert ids({"day": "2025-01-05"}) == exp_eq
+    exp_lo = sorted(i for i in range(45) if i % 9 + 1 <= 2)
+    assert ids({"day": ("between", "", "2025-01-02")}) == exp_lo
     # range prune really shrinks the file set
-    assert len(cat.scan_files("t", where={"day": ("<", "2025-01-02")})) \
+    assert len(cat.scan_files("t", where={"day": ("<=", "2025-01-01")})) \
         < len(cat.scan_files("t"))
+    for bad in (("in", ["2025-01-02"]), (">", "2025-01-02"),
+                ("<", "2025-01-02"), ("=", "2025-01-02"),
+                ("between", "2025-01-02")):
+        with pytest.raises(ValueError, match="unknown partition predicate"):
+            cat.scan_files("t", where={"day": bad})
+    with pytest.raises(ValueError, match="cannot be None"):
+        cat.scan_files("t", where={"day": ("between", None, "2025-01-02")})
 
 
 def test_bool_predicate_coerces_to_spark_form(spark, tmp_path):
@@ -436,10 +469,13 @@ def test_empty_string_partition_values_not_lost(spark, tmp_path):
     assert {r.doc_id for r in got} == {1}  # exact: '' only, not null
     got_null = cat.read(spark, "t", where={"lang": None}).collect()
     assert {r.doc_id for r in got_null} == {3}  # exact: null only
-    got_ge = cat.read(spark, "t", where={"lang": ("<=", "en")}).collect()
-    assert {r.doc_id for r in got_ge} == {1, 2}  # '' <= 'en'; null drops
-    got_in = cat.read(spark, "t", where={"lang": ("in", ["", "en"])})
-    assert {r.doc_id for r in got_in.collect()} == {1, 2}
+    got_le = cat.read(spark, "t", where={"lang": ("<=", "en")}).collect()
+    assert {r.doc_id for r in got_le} == {1, 2}  # '' <= 'en'; null drops
+    for lo_hi, want in ((("", "en"), {1, 2}), (("", ""), {1})):
+        got = cat.read(spark, "t", where={"lang": ("between", *lo_hi)})
+        assert {r.doc_id for r in got.collect()} == want, lo_hi
+    with pytest.raises(ValueError, match="unknown partition predicate"):
+        cat.read(spark, "t", where={"lang": ("in", ["", "en"])})
 
 
 def test_rollback_keeps_untagged_rows_in_merged_manifest(spark, tmp_path):
@@ -495,7 +531,8 @@ def test_reads_ignore_retired_stats_keys(spark, tmp_path):
         == full_en == [0, 2, 4, 6, 8]
     for i in range(T.MERGE_MIN):
         cat.append("s", spark.createDataFrame([(100 + i, "hi")],
-                                              "doc_id long, lang string"))
+                                              "doc_id long, lang string"),
+                   partition_by=["lang"])
     merged = cat._read_current("s")["manifests"]
     assert len(merged) < T.MERGE_MIN
     assert any("stats" in r for e in merged for r in cat._read_manifest(e))
@@ -527,20 +564,24 @@ def test_predicate_semantics_property(spark, tmp_path):
         ({"lang": "a:b"}, expect(lambda v: v == "a:b")),
         ({"lang": "日本語"}, expect(lambda v: v == "日本語")),
         ({"lang": "x y"}, expect(lambda v: v == "x y")),
-        ({"lang": ("in", ["en", None, "10"])},
-         expect(lambda v: v in ("en", "10"))
-         | {i for i, v in rows if v is None}),
         ({"lang": (">=", "en")}, expect(lambda v: v >= "en")),
-        ({"lang": ("<", "en")}, expect(lambda v: v < "en")),
+        ({"lang": ("<=", "en")}, expect(lambda v: v <= "en")),
         ({"lang": ("<=", "")}, expect(lambda v: v <= "")),
         ({"lang": ("between", "0", "9")},
          expect(lambda v: "0" <= v <= "9")),  # lexicographic: '10' matches
-        ({"lang": ("in", [""])}, expect(lambda v: v == "")),
-        ({"lang": (">", "zh-Hant")}, expect(lambda v: v > "zh-Hant")),
+        ({"lang": ("between", "", "a:b")}, expect(lambda v: v <= "a:b")),
+        ({"lang": ("between", "", "")}, expect(lambda v: v == "")),
+        ({"lang": ("between", "x y", "x y")}, expect(lambda v: v == "x y")),
+        ({"lang": ("between", "日本語", "日本語")},
+         expect(lambda v: v == "日本語")),
+        ({"lang": (">=", "zh-Hant")}, expect(lambda v: v >= "zh-Hant")),
     ]
     for where, want in cases:
         got = {r.doc_id for r in cat.read(spark, "t", where=where).collect()}
         assert got == want, (where, sorted(got), sorted(want))
+    for bad in (("in", ["en", None]), (">", "zh-Hant"), ("<", "en")):
+        with pytest.raises(ValueError, match="unknown partition predicate"):
+            cat.read(spark, "t", where={"lang": bad})
 
 
 def test_commits_record_no_column_stats(spark, tmp_path):

@@ -26,10 +26,11 @@ def test_catalog_overwrite_append_read(spark, tmp_path):
 
 def test_snapshots_carry_one_layout(spark, tmp_path):
     """Every writer commits the one snapshot layout the reader accepts: a
-    manifest list, a schema and the cumulative all_txns set, each entry
-    with its manifest, file count, txns, op and partition summary. A
-    snapshot of any other shape — the round-3 file-list layout, or one
-    without all_txns — raises a ValueError naming its version."""
+    manifest list, a schema, the partition spec and the cumulative
+    all_txns set, each entry with its manifest, file count, txns, op and
+    partition summary. A snapshot of any other shape — the round-3
+    file-list layout, or one without all_txns or without partition_by —
+    raises a ValueError naming its version."""
     import json
     import os
 
@@ -46,7 +47,8 @@ def test_snapshots_carry_one_layout(spark, tmp_path):
     assert [s["operation"] for s in snaps] == \
         ["append"] * 7 + ["rollback", "compact", "overwrite"]
     for s in snaps:
-        assert {"manifests", "schema", "all_txns"} <= s.keys()
+        assert {"manifests", "schema", "all_txns", "partition_by"} \
+            <= s.keys()
         assert s["schema"]
         for e in s["manifests"]:
             assert {"manifest", "n_files", "txns", "op", "summary"} <= e.keys()
@@ -58,7 +60,8 @@ def test_snapshots_carry_one_layout(spark, tmp_path):
               "files": files, "added": files, "txn": "ow",
               "partitions": {}, "committed_at": 0.0}
     no_txns = {k: x for k, x in snaps[-1].items() if k != "all_txns"}
-    for bad in (round3, no_txns):
+    no_spec = {k: x for k, x in snaps[-1].items() if k != "partition_by"}
+    for bad in (round3, no_txns, no_spec):
         with open(path, "w") as f:
             json.dump(bad, f)
         for call in (lambda: cat.read(spark, "t"), lambda: cat.txns("t")):
@@ -528,6 +531,43 @@ def test_compact_preserves_partition_layout_and_pruning(spark, tmp_path):
     assert cat.read(spark, "t").count() == 60
 
 
+def test_partition_spec_survives_maintenance_and_resets_on_overwrite(
+        spark, tmp_path):
+    """The snapshot's partition spec is the first append's column list in
+    its order: rollback, compact and vacuum carry it forward, compacted
+    files nest their partition dirs in that order and prune on both
+    columns, and overwrite resets the spec to []."""
+    import os
+
+    cat = Catalog(str(tmp_path))
+    spec = ["lang", "day"]  # unsorted: compact must keep this order
+
+    def batch(b):
+        return spark.range(b * 10, b * 10 + 10).select(
+            "id", F.when(F.col("id") % 2 == 0, "zz").otherwise("en")
+            .alias("lang"), F.lit(f"2025-01-0{b % 2 + 1}").alias("day"))
+
+    for b in range(4):
+        cat.append("t", batch(b), txn=f"d:{b}", partition_by=spec)
+    cat.append("t", batch(4), txn="dead", partition_by=spec)
+    assert cat.remove_orphan_appends(
+        "t", live_txns={f"d:{b}" for b in range(4)}) > 0
+    assert cat.compact(spark, "t")["version"] is not None
+    assert cat.vacuum("t", min_age_secs=0) > 0
+    assert [s["partition_by"] for s in cat.snapshots("t")] == [spec]
+    for f in cat.scan_files("t"):
+        dirs = [d.split("=")[0] for d in f.split(os.sep) if "=" in d]
+        assert dirs == ["_p_lang", "_p_day"], f
+    got = cat.read(spark, "t", where={"lang": "en", "day": "2025-01-01"})
+    assert sorted(r.id for r in got.collect()) == \
+        [i for i in range(40) if i % 2 and i // 10 % 2 == 0]
+    assert cat.last_scan_stats["files_selected"] == 1
+    cat.overwrite("t", spark.range(3), txn="ow")
+    assert cat._read_current("t")["partition_by"] == []
+    cat.append("t", spark.range(3, 5))
+    assert cat.read(spark, "t").count() == 5
+
+
 def test_partitioned_compact_at_one_file_per_value_is_a_noop(spark, tmp_path):
     """A rewrite keeps one file per partition value, so once a two-day
     table is compacted to two files (more than its byte target of one),
@@ -749,8 +789,8 @@ def test_vacuum_age_gate_protects_inflight_commit(spark, tmp_path):
     cat = Catalog(str(tmp_path))
     cat.append("t", spark.range(5))
     # simulate the in-flight writer: stage data + manifest, no snapshot yet
-    rows = cat._stage("t", spark.range(100, 105), txn="inflight")
-    entry = cat._write_manifest("t", rows, ["inflight"])
+    rows = cat._stage("t", spark.range(100, 105), [], txn="inflight")
+    entry = cat._write_manifest("t", rows, ["inflight"], [])
     stage_dir = os.path.dirname(rows[0]["path"])
     while os.path.basename(os.path.dirname(stage_dir)) != "data":
         stage_dir = os.path.dirname(stage_dir)
@@ -760,11 +800,12 @@ def test_vacuum_age_gate_protects_inflight_commit(spark, tmp_path):
     # ...so the in-flight writer can still land its commit afterwards
     cur = cat._read_current("t")
     cat._commit("t", cur["manifests"] + [entry], "append", 1, txn="inflight",
-                schema=cur["schema"], all_txns=cur["all_txns"])
+                schema=cur["schema"], all_txns=cur["all_txns"],
+                partition_by=cur["partition_by"])
     assert cat.read(spark, "t").count() == 10
     # a genuinely dead orphan (same shape, past the gate) is reclaimed
-    dead = cat._stage("t", spark.range(200, 203), txn="dead")
-    dentry = cat._write_manifest("t", dead, ["dead"])
+    dead = cat._stage("t", spark.range(200, 203), [], txn="dead")
+    dentry = cat._write_manifest("t", dead, ["dead"], [])
     old = 10_000
     ddir = os.path.dirname(dead[0]["path"])
 
