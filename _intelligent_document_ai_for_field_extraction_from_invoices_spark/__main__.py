@@ -417,8 +417,7 @@ def cmd_paradedup(spark, args) -> dict:
     the per-url cleaned text lands in `paragraph_deduped`."""
     cat = Catalog(args.catalog)
     res = cat.read(spark, lineage.RESULTS_TABLE).select("url", "body_text")
-    cleaned = dedup_ops.paragraph_dedup(res, key="url",
-                                        text_col="body_text")
+    cleaned = dedup_ops.paragraph_dedup(res, key="url")
     return _emit(cat, "paragraph_deduped", cleaned, args.run_id)
 
 

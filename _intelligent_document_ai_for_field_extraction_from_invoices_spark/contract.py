@@ -254,10 +254,10 @@ def q_paragraph_dedup(spark, sf_dir):
     """Cross-corpus exact paragraph dedup (dedup.paragraph_dedup) over the
     extraction pipeline's body_text: every duplicated paragraph keeps only
     its first (doc, position) occurrence corpus-wide; texts reassemble in
-    order. The oracle replays the identical min-encoded-key fixpoint over
-    the mirrored body arithmetic."""
+    order. The oracle picks the same winners as a min over the encoded
+    key doc_id * 1e6 + position, over the mirrored body arithmetic."""
     res = extraction_results(spark, sf_dir).select("doc_id", "body_text")
-    return dedup.paragraph_dedup(res, key="doc_id", text_col="body_text")
+    return dedup.paragraph_dedup(res, key="doc_id")
 
 
 def q_repetition_stats(spark, sf_dir):
@@ -266,8 +266,7 @@ def q_repetition_stats(spark, sf_dir):
     top-bigram character fraction. The oracle replays the identical
     max-of-(count, gram) tie-break in SQL (QUALIFY row_number)."""
     res = extraction_results(spark, sf_dir).select("doc_id", "body_text")
-    return textstats.repetition_stats(res, key="doc_id",
-                                      text_col="body_text")
+    return textstats.repetition_stats(res)
 
 
 def q_substring_dedup(spark, sf_dir):
@@ -321,7 +320,7 @@ def q_host_quota_sample(spark, sf_dir):
     md5-uniform accept test — the oracle replays the identical arithmetic,
     so the SAMPLE ITSELF hash-matches, not just its size."""
     d = _t(spark, sf_dir, "documents")
-    return dedup.host_quota_sample(d, host_col="source", quota=10) \
+    return dedup.host_quota_sample(d, quota=10) \
         .select("doc_id", "source")
 
 
@@ -450,8 +449,7 @@ def q_curate_survivors(spark, sf_dir):
     semantics (not just each operator) are hash-pinned."""
     d = _docs_wide(spark, sf_dir)
     bench = d.filter(F.col("doc_id") % _BENCH_MOD == 1)
-    return curate.curate_survivors(d, bench, quota=10, min_quality=0.5,
-                                   max_dup_line_frac=0.3)
+    return curate.curate_survivors(d, bench)
 
 
 def q_lineage_perf(spark, sf_dir):
@@ -1260,7 +1258,7 @@ ORACLES: dict[str, str] = {
         FROM u""",
     "q_bigram_lm_score": _BIGRAM_SCORE_SQL,
     # same n-gram construction / argmax tie-break / char-frac rounding as
-    # textstats.ngram_repetition_fracs(ns=(2,3,4))
+    # textstats.ngram_repetition_fracs (n = 2, 3 and 4)
     "q_ngram_repetition": """
         WITH w AS (
           SELECT doc_id, length(text) AS dl,

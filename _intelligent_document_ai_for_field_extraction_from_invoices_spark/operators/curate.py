@@ -150,12 +150,11 @@ def run_stage(stage: str, docs: DataFrame, benchmark: DataFrame | None = None,
                      f"(choose from {STAGE_ORDER})")
 
 
-def curate_survivors(docs: DataFrame, benchmark: DataFrame,
-                     quota: int = 10, min_quality: float = 0.5,
-                     max_dup_line_frac: float = 0.3) -> DataFrame:
-    """Run the full curation chain in its pinned order and return the
-    surviving documents as (doc_id, source, quality_score,
-    dup_line_frac).
+def curate_survivors(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
+    """Run the full curation chain in its pinned order, each stage at
+    `run_stage`'s defaults (host quota 10, quality score >= 0.5,
+    duplicate-line fraction <= 0.3), and return the surviving documents as
+    (doc_id, source, quality_score, dup_line_frac).
 
     Deterministic end to end — every stage is (host quota: exact integer
     accept; exact/neardup: min-key winners; decontaminate: set
@@ -163,9 +162,7 @@ def curate_survivors(docs: DataFrame, benchmark: DataFrame,
     set is engine-independent and the DuckDB oracle replays it exactly."""
     cur = docs
     for stage in STAGE_ORDER:
-        cur = run_stage(stage, cur, benchmark=benchmark, quota=quota,
-                        min_quality=min_quality,
-                        max_dup_line_frac=max_dup_line_frac)
+        cur = run_stage(stage, cur, benchmark=benchmark)
         # cache EVERY stage's survivor set (r7 optimization): each stage
         # references its input several times (substrdup touches it 3x,
         # decontaminate/quality 2-3x, keep-one join-backs 2x) and the

@@ -251,8 +251,7 @@ def shingle_pairs(df: DataFrame, n: int = 3,
     )
 
 
-def host_quota_sample(docs: DataFrame, host_col: str = "source",
-                      quota: int = 10) -> DataFrame:
+def host_quota_sample(docs: DataFrame, quota: int = 10) -> DataFrame:
     """Per-host quota downsampling (the C4/RefinedWeb host-balancing move:
     a handful of giant hosts dominate a raw crawl, so each host is
     downsampled toward `quota` docs while small hosts pass untouched).
@@ -269,73 +268,47 @@ def host_quota_sample(docs: DataFrame, host_col: str = "source",
     corpus against it (AQE broadcasts the count table when it fits), one
     narrow filter; expected kept size is sum(min(quota, count)) without
     any sort, window, or per-host top-N buffering."""
-    cnts = docs.groupBy(host_col).agg(F.count("*").alias("_cnt"))
+    cnts = docs.groupBy("source").agg(F.count("*").alias("_cnt"))
     u = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                16, 10).cast("long")
     return (
-        docs.join(cnts, host_col)
+        docs.join(cnts, "source")
         .filter(u * F.col("_cnt") < F.lit(quota) * F.lit(1 << 32))
         .drop("_cnt")
     )
 
 
-def paragraph_dedup(docs: DataFrame, key: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """Cross-corpus exact PARAGRAPH dedup (the FineWeb/Gopher boilerplate
-    move: repeated nav/footer/legal paragraphs are dropped corpus-wide,
-    keeping each distinct paragraph's FIRST occurrence): documents are
-    split on newlines, every occurrence of a duplicated paragraph except the
-    one with the smallest (doc, position) survives, and each document's
-    text is reassembled in original order. Output: one row per input doc
-    with `clean_text`, `n_kept`, `n_dropped`.
+def paragraph_dedup(docs: DataFrame, key: str = "doc_id") -> DataFrame:
+    """Cross-corpus exact PARAGRAPH dedup over an extraction's `body_text`
+    (the FineWeb/Gopher boilerplate move: repeated nav/footer/legal
+    paragraphs are dropped corpus-wide, keeping each distinct paragraph's
+    FIRST occurrence): documents are split on newlines, every occurrence
+    of a duplicated paragraph except the one with the smallest
+    (key, position) is dropped, and each document's text is reassembled in
+    original order. Output: one row per input doc with `clean_text`,
+    `n_kept`, `n_dropped`.
 
-    Determinism: the winner per paragraph is a plain MIN aggregate
-    (map-side combine, no window/row_number) — over an encoded BIGINT key
-    (doc_id * 1e6 + position; positions are bounded by paragraph counts,
-    far under 1e6) for integer doc keys, which is what the ANSI oracle
-    replays; string keys (urls) take the equivalent min-over-(key, pos)
-    struct path. Scale shape: one shuffle keyed on the paragraph digest
-    (uniform), one join back on the winner key, one per-doc reassembly
-    aggregate; paragraph order is restored with array_sort over
-    (pos, text) structs, never a sort of the whole corpus."""
-    from pyspark.sql.types import IntegralType  # noqa: PLC0415
-
+    Determinism: the winner per paragraph is a plain MIN aggregate over
+    (key, position) structs (map-side combine, no window/row_number), for
+    integer doc ids and string urls alike; the ANSI oracle's min over the
+    encoded BIGINT doc_id * 1e6 + position picks the same winner. Scale
+    shape: one shuffle keyed on the paragraph digest (uniform), one join
+    back on the winner key, one per-doc reassembly aggregate; paragraph
+    order is restored with array_sort over (pos, text) structs, never a
+    sort of the whole corpus."""
     did = F.col(key)
     # a newline is the same single character as a Java regex and as the
     # array_join literal that reassembles the text
     paras = docs.select(
         did.alias("k"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "p"),
+        F.posexplode(F.split(F.col("body_text"), "\n")).alias("pos", "p"),
     )
-    integral = isinstance(docs.schema[key].dataType, IntegralType)
-    if integral:
-        # the encoding is only injective while 0 <= pos < 1e6 and the doc
-        # key is non-negative and far from BIGINT overflow — enforce at
-        # runtime instead of silently attributing a paragraph to the
-        # wrong (doc, pos) on adversarial inputs (review finding)
-        bad = (F.col("pos") >= 1_000_000) | (F.col("k") < 0) \
-            | (F.col("k") > (1 << 62) // 1_000_000)
-        paras = paras.withColumn(
-            "ekey",
-            F.when(bad, F.raise_error(F.format_string(
-                "paragraph_dedup encoded-key bounds exceeded "
-                "(key=%s pos=%s): need 0 <= key < 2^62/1e6 and fewer than "
-                "1e6 paragraphs per doc — use a string key for the "
-                "struct-min path", F.col("k"), F.col("pos"))).cast("long"))
-            .otherwise(F.col("k") * F.lit(1_000_000) + F.col("pos")))
-        winners = (
-            paras.groupBy(F.md5("p").alias("d"))
-            .agg(F.min("ekey").alias("ekey"))
-            .select("ekey")
-        )
-        kept = paras.join(winners, "ekey")
-    else:
-        winners = (
-            paras.groupBy(F.md5("p").alias("d"))
-            .agg(F.min(F.struct("k", "pos")).alias("w"))
-            .select(F.col("w.k").alias("k"), F.col("w.pos").alias("pos"))
-        )
-        kept = paras.join(winners, ["k", "pos"])
+    winners = (
+        paras.groupBy(F.md5("p").alias("d"))
+        .agg(F.min(F.struct("k", "pos")).alias("w"))
+        .select(F.col("w.k").alias("k"), F.col("w.pos").alias("pos"))
+    )
+    kept = paras.join(winners, ["k", "pos"])
     rebuilt = kept.groupBy("k").agg(
         F.count("*").alias("n_kept"),
         F.array_join(
@@ -346,7 +319,7 @@ def paragraph_dedup(docs: DataFrame, key: str = "doc_id",
     )
     n_paras = docs.select(
         did.alias("k"),
-        F.size(F.split(F.col(text_col), "\n")).alias("n_paras"))
+        F.size(F.split(F.col("body_text"), "\n")).alias("n_paras"))
     return (
         n_paras.join(rebuilt, "k", "left")
         .select(

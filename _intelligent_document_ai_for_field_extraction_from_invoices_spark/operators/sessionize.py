@@ -1,8 +1,9 @@
 """Ordered/window operators over the events table.
 
-Sessionization is the classic lag+cumsum pattern (SURVEY W1: the reference's
-line-grouping `normalizer.py:485-535` — group while the gap is small — is the
-same sessionization shape over y-coordinates instead of time)."""
+Sessionization is the classic lag + boundary-flag pattern (SURVEY W1: the
+reference's line-grouping `normalizer.py:485-535` — group while the gap is
+small — is the same sessionization shape over y-coordinates instead of
+time)."""
 
 from __future__ import annotations
 
@@ -24,24 +25,11 @@ def _new_session_flag():
     ).otherwise(F.lit(0))
 
 
-def sessionize(events: DataFrame) -> DataFrame:
-    """Assign session ids per user: a new session starts when the gap from the
-    previous event exceeds SESSION_GAP_MIN minutes (lag -> boundary flag ->
-    running sum)."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return events.withColumn(
-        "session_id",
-        F.sum(_new_session_flag()).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-
-
 def session_counts(events: DataFrame) -> DataFrame:
-    """Per-user session/event counts. Skips sessionize's running-sum window:
-    max(session_id) == sum of the boundary flags (the first event always
-    flags 1), so one lag window + a hash aggregate replaces two window
-    passes over every event — one full per-partition sort saved."""
+    """Per-user session/event counts: a session starts when the gap from
+    the user's previous event exceeds SESSION_GAP_MIN minutes, so the
+    session count is the sum of the boundary flags (the first event always
+    flags 1) — one lag window + a hash aggregate, no running-sum window."""
     flagged = events.withColumn("new_sess", _new_session_flag())
     return flagged.groupBy("user_id").agg(
         F.sum("new_sess").alias("n_sessions"),

@@ -243,49 +243,24 @@ def dup_line_frac_col(text: Column) -> Column:
         / F.greatest(F.size(lines), F.lit(1)), 4)
 
 
-def repetition_stats(df: DataFrame, key: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals (Rae et al. 2021 §A1.1 —
-    repetitious documents are low-quality training data): per document,
-    the fraction of duplicate LINES and the fraction of characters claimed
-    by the most frequent word 2-gram. High values flag boilerplate/spam
-    for the quality-filtering stage.
+    repetitious documents are low-quality training data) over an
+    extraction's `body_text`: per document, the fraction of duplicate
+    LINES and the fraction of characters claimed by the most frequent word
+    2-gram. High values flag boilerplate/spam for the quality-filtering
+    stage.
 
     Scale shape: dup_line_frac is a single narrow projection
-    (array_distinct on the split — no explode, no shuffle); the top-bigram
-    stage explodes word 2-grams once, counts per (doc, gram) with map-side
-    partial aggregation, and reduces per doc with ONE max-of-struct
-    aggregate — no window, deterministic tie-break (count, then gram,
-    lexicographically largest wins), reproducible in ANSI SQL."""
-    t = F.col(text_col)
-    base = df.select(
-        F.col(key),
-        dup_line_frac_col(t).alias("dup_line_frac"),
-        F.length(t).alias("n_chars_rep"),
-    )
-    words = F.split(F.trim(t), WS_RUN)
-    per_gram = (
-        df.select(F.col(key),
-                  F.explode(word_ngrams(words, 2)).alias("g"))
-        .groupBy(key, "g").agg(F.count("*").alias("n"))
-    )
-    top = (
-        per_gram.groupBy(key)
-        .agg(F.max(F.struct("n", "g")).alias("top"))
-        .select(key, F.col("top.n").alias("top_n"),
-                F.length("top.g").alias("top_len"))
-    )
-    return (
-        base.join(top, key, "left")
-        .select(
-            F.col(key),
-            F.col("dup_line_frac"),
-            F.round(
-                F.coalesce(F.col("top_n") * F.col("top_len"), F.lit(0))
-                / F.greatest(F.col("n_chars_rep"), F.lit(1)), 4
-            ).alias("top_bigram_char_frac"),
-        )
-    )
+    (array_distinct on the split — no explode, no shuffle) carried beside
+    the text into `_with_top_gram_fracs`, the top-n-gram aggregate that
+    `ngram_repetition_fracs` runs for n = 2, 3 and 4; the top-bigram
+    fraction is its n = 2 column."""
+    t = F.col("body_text")
+    return _with_top_gram_fracs(
+        df.select("doc_id", dup_line_frac_col(t).alias("dup_line_frac"), t),
+        "body_text", (2,),
+    ).withColumnRenamed("top_2gram_char_frac", "top_bigram_char_frac")
 
 
 def bigram_logprob_score(df: DataFrame, top_k: int = 50_000) -> DataFrame:
@@ -463,47 +438,54 @@ def c4_line_filter(df: DataFrame, min_words: int = 5,
     )
 
 
-def ngram_repetition_fracs(df: DataFrame) -> DataFrame:
-    """The rest of the Gopher repetition family (Rae et al. 2021 §A1.1):
-    for each n in 2, 3 and 4, the fraction of the document's characters claimed
-    by its MOST FREQUENT word n-gram (count * len(gram) / len(doc)) —
-    `top_{n}gram_char_frac` columns, 0.0 when the doc has no n-grams.
-    Gopher drops docs above ~0.20/0.18/0.16 for n=2/3/4; callers filter.
+def _with_top_gram_fracs(df: DataFrame, text_col: str,
+                         ns: tuple[int, ...]) -> DataFrame:
+    """`df` without `text_col`, plus for each n in `ns` the fraction of
+    the text's characters claimed by its MOST FREQUENT word n-gram
+    (count * len(gram) / len(text)) as `top_{n}gram_char_frac`, 0.0 when
+    the text has no n-grams. `df` is keyed by doc_id.
 
     Deterministic tie-break: highest count, then lexicographically
-    LARGEST gram (one max-of-struct aggregate — no window over the
-    corpus; the oracle replays it as QUALIFY row_number).
+    LARGEST gram (a max-of-struct aggregate — no window over the corpus;
+    the oracles replay it as QUALIFY row_number).
 
     Scale shape: one narrow explode pass per n, UNIONED into the single
-    map-side-combined (key, n, gram) count shuffle — the union re-scans
-    the (narrow, projection-only) doc text once per n but keeps every
+    map-side-combined (doc, n, gram) count shuffle — the union re-scans
+    the (narrow, projection-only) text once per n but keeps every
     per-element step in codegen; the earlier one-stream formulation
     tagged each gram with an interpreted struct-building transform that
     cost more than the extra scans (r7 measurement: 1.8 s vs 2.6 s at
-    sf1). Shuffle volume is identical (the same gram multiset feeds one
-    aggregate). The per-(key, n) argmax is a second small aggregate over
-    one row per distinct gram; the pivot is over the STATIC n list (no
-    pivot-value inference job). All gram arrays come from the HOF-safe
-    word_ngrams chain."""
-    ns = (2, 3, 4)
-    t = F.col("text")
+    sf1). The per-doc argmax of every n is ONE second aggregate over one
+    row per distinct gram, and the per-doc columns join back onto `df`'s
+    narrow projection. All gram arrays come from the HOF-safe word_ngrams
+    chain."""
+    t = F.col(text_col)
     words = F.split(F.trim(t), WS_RUN)
-
     occ = None
     for n in ns:
         part = df.select(F.col("doc_id"), F.lit(n).alias("n"),
                          F.explode(word_ngrams(words, n)).alias("g"))
         occ = part if occ is None else occ.unionByName(part)
-    per = occ.groupBy("doc_id", "n", "g").agg(F.count("*").alias("c"))
-    top = (per.groupBy("doc_id", "n")
-           .agg(F.max(F.struct("c", "g")).alias("t"))
-           .select(F.col("doc_id"), "n",
-                   (F.col("t.c") * F.length("t.g")).alias("chars")))
-    piv = top.groupBy("doc_id").pivot("n", list(ns)).agg(F.first("chars"))
-    base = df.select(F.col("doc_id"),
-                     F.greatest(F.length(t), F.lit(1)).alias("_d"))
-    return base.join(piv, "doc_id", "left").select(
-        F.col("doc_id"),
-        *[F.round(F.coalesce(F.col(f"`{n}`"), F.lit(0)) / F.col("_d"), 4)
+    top = (
+        occ.groupBy("doc_id", "n", "g").agg(F.count("*").alias("c"))
+        .groupBy("doc_id")
+        .agg(*[F.max(F.when(F.col("n") == n, F.struct("c", "g")))
+               .alias(f"_t{n}") for n in ns])
+    )
+    base = df.withColumn("_d", F.greatest(F.length(t), F.lit(1)))
+    return base.join(top, "doc_id", "left").select(
+        *[c for c in df.columns if c != text_col],
+        *[F.round(F.coalesce(F.col(f"_t{n}.c") * F.length(f"_t{n}.g"),
+                             F.lit(0)) / F.col("_d"), 4)
           .alias(f"top_{n}gram_char_frac") for n in ns],
     )
+
+
+def ngram_repetition_fracs(df: DataFrame) -> DataFrame:
+    """The rest of the Gopher repetition family (Rae et al. 2021 §A1.1):
+    for each n in 2, 3 and 4, the fraction of the document's characters
+    claimed by its most frequent word n-gram — `top_{n}gram_char_frac`
+    columns from `_with_top_gram_fracs`. Gopher drops docs above
+    ~0.20/0.18/0.16 for n=2/3/4; callers filter."""
+    return _with_top_gram_fracs(df.select("doc_id", "text"), "text",
+                                (2, 3, 4))

@@ -146,8 +146,9 @@ def test_contamination_flags_known_overlaps(spark):
 
 def test_paragraph_dedup_first_occurrence_wins(spark):
     """Cross-corpus paragraph dedup: duplicated paragraphs keep only their
-    first (doc, position) occurrence; texts reassemble in order; the
-    string-key (url) path picks identical winners to the integer path."""
+    first (doc, position) occurrence; texts reassemble in order; string
+    keys (urls) and negative integer keys pick the same winners as the
+    non-negative ids."""
     rows = [
         (1, "keep me\nSHARED FOOTER\nunique one"),
         (2, "SHARED FOOTER\nsecond doc text"),
@@ -155,7 +156,7 @@ def test_paragraph_dedup_first_occurrence_wins(spark):
         (4, "SHARED FOOTER"),          # everything dropped
         (5, "keep me too"),
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = spark.createDataFrame(rows, "doc_id long, body_text string")
     got = {r.doc_id: r for r in dedup.paragraph_dedup(docs).collect()}
     assert got[1].clean_text == "keep me\nSHARED FOOTER\nunique one"
     assert got[2].clean_text == "second doc text"
@@ -165,19 +166,29 @@ def test_paragraph_dedup_first_occurrence_wins(spark):
     assert got[5].clean_text == "keep me too"
     assert got[1].n_dropped == 0 and got[2].n_dropped == 1
 
-    # string-key path: urls ordered like the ids -> same winners
+    # urls ordered like the ids -> same winners
     sdocs = spark.createDataFrame(
-        [(f"u{i}", t) for i, t in rows], "url string, text string")
+        [(f"u{i}", t) for i, t in rows], "url string, body_text string")
     sgot = {r.url: r for r in
             dedup.paragraph_dedup(sdocs, key="url").collect()}
     for i, _ in rows:
         assert sgot[f"u{i}"].clean_text == got[i].clean_text
         assert sgot[f"u{i}"].n_dropped == got[i].n_dropped
 
+    # negative integer keys ordered like the ids -> same winners
+    ndocs = spark.createDataFrame(
+        [(i - 10, t) for i, t in rows], "doc_id long, body_text string")
+    ngot = {r.doc_id: r for r in dedup.paragraph_dedup(ndocs).collect()}
+    for i, _ in rows:
+        assert ngot[i - 10].clean_text == got[i].clean_text
+        assert ngot[i - 10].n_dropped == got[i].n_dropped
+
 
 def test_repetition_stats_gopher_signals(spark):
     """Gopher repetition signals: duplicate-line fraction and top-bigram
-    character fraction with the deterministic (count, gram) tie-break."""
+    character fraction with the deterministic (count, gram) tie-break; the
+    top-bigram fraction is ngram_repetition_fracs' top-2-gram fraction on
+    the same rows."""
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import textstats
 
     docs = spark.createDataFrame([
@@ -185,8 +196,13 @@ def test_repetition_stats_gopher_signals(spark):
         (2, "a b a b a b"),
         (3, "all words distinct here now"),
         (4, ""),
-    ], "doc_id long, text string")
+        (5, "x y z x y z x y\nx y z"),
+    ], "doc_id long, body_text string")
     got = {r.doc_id: r for r in textstats.repetition_stats(docs).collect()}
+    fracs = textstats.ngram_repetition_fracs(
+        docs.withColumnRenamed("body_text", "text")).collect()
+    assert {r.doc_id: r.top_bigram_char_frac for r in got.values()} == \
+        {r.doc_id: r.top_2gram_char_frac for r in fracs}
     assert got[1].dup_line_frac == 0.5  # 2 distinct of 4 lines
     # "a b" occurs 3x (len 3) over 11 chars -> 9/11
     assert got[2].dup_line_frac == 0.0
@@ -244,7 +260,7 @@ def test_paragraph_dedup_matches_python_reference_on_random_corpora(spark):
                 kept.append(p)
         expect[d] = ("\n".join(kept), len(kept), len(paras) - len(kept))
 
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = spark.createDataFrame(rows, "doc_id long, body_text string")
     got = {r.doc_id: (r.clean_text, r.n_kept, r.n_dropped)
            for r in dedup.paragraph_dedup(docs).collect()}
     assert got == expect

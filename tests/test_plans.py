@@ -259,7 +259,8 @@ def test_paragraph_dedup_is_window_free(spark):
     digest inside one task)."""
     from _intelligent_document_ai_for_field_extraction_from_invoices_spark.operators import dedup
 
-    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    d = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
+        .withColumnRenamed("text", "body_text")
     for key in ("doc_id", "url_key"):
         df = d if key == "doc_id" else d.withColumn(
             "url_key", F.concat(F.lit("u"), F.col("doc_id")))
